@@ -99,15 +99,16 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2.median).sum
     val totalMin = results.map(_._2.min).sum
-    // local profiling aid: full per-query dump to a file (never stdout — the
-    // driver parses the single contract line below)
+    // local profiling aid: full per-query dump to a file (never stdout,
+    // which carries only the contract lines below)
     sys.env.get("SPARK_GRAFT_BENCH_DUMP").foreach { path =>
       val full = results.sortBy(-_._2.median)
         .map { case (k, t) => f""""$k":[${t.median}%.3f,${t.min}%.3f]""" }
         .mkString("{", ",\n ", "}")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(path), full)
     }
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def names(qs: Iterable[String]) = qs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = names(failed)
     // Burst-adjudicating tripwire: any query whose min exceeds the prior
     // round's is a SUSPECT, re-timed ONCE at the very END of the run (the
     // quietest tail moment — all gates done, sentinel history known). A
@@ -125,9 +126,15 @@ object Bench {
           Some((System.nanoTime() - t0) / 1e9) }
         catch { case _: Throwable => None }
       })
-    val sentinelJson = (for (f <- sentinelFirst; w <- sentinelWorst) yield
-      s""""sentinel":{"first":${fmt(f)},"worst":${fmt(w)}},""").getOrElse("")
-    println(s"""{"metric":"total","value":${fmt(total)},"total_min":${fmt(totalMin)},"unit":"sec","n_queries":${results.size},"n_repeats":$repeats,"failed":$failedJson,"interference":$interference,$sentinelJson"queries":${span(_.median)},"queries_min":${span(_.min)},$regressions"sf":"$sfDir"}""")
+    val sentinel = (for (f <- sentinelFirst; w <- sentinelWorst) yield
+      s"""{"first":${fmt(f)},"worst":${fmt(w)}}""")
+    val sentinelJson = sentinel.map(s => s""""sentinel":$s,""").getOrElse("")
+    val totals = s""""metric":"total","value":${fmt(total)},"total_min":${fmt(totalMin)}"""
+    println(s"""{$totals,"unit":"sec","n_queries":${results.size},"n_repeats":$repeats,"failed":$failedJson,"interference":$interference,$sentinelJson"queries":${span(_.median)},"queries_min":${span(_.min)},$regressions"sf":"$sfDir"}""")
+    // compact summary as the LAST stdout line: the detailed line above no
+    // longer fits in a 2,000-character tail of the output, so this one
+    // carries the failure count and only the first few failed names
+    println(s"""{$totals,"n_queries":${results.size},"n_repeats":$repeats,"n_failed":${failed.size},"failed":${names(failed.take(5))},"interference":$interference,"sentinel":${sentinel.getOrElse("null")}}""")
     spark.stop()
   }
 

@@ -51,9 +51,10 @@ final class FlowContext(
   * Re-expresses the reference's execution planner (ExecutionGraph with
   * Output/Trigger/Dependency edges, server/libraries/td-objects/src/
   * execution/graph.rs:60-110; planning td-execution/src/planner.rs:20-55;
-  * transactions ta-execution/src/transaction.rs:24-90): a commit of table
-  * versions triggers downstream functions breadth-first, each run's outputs
-  * published atomically through the store's transaction marker.
+  * transactions ta-execution/src/transaction.rs:24-90): a trigger plans
+  * every function its commits reach and runs them in dependency order, each
+  * run's outputs published atomically through the store's transaction
+  * marker.
   */
 final class FlowEngine(val store: TableStore, spark: SparkSession) {
   private val functions = mutable.LinkedHashMap[String, FlowFunction]()
@@ -62,6 +63,12 @@ final class FlowEngine(val store: TableStore, spark: SparkSession) {
     require(!functions.contains(f.name), s"function ${f.name} already registered")
     functions(f.name) = f
   }
+
+  private def tables(f: FlowFunction, refs: Seq[String]): Seq[(String, String)] =
+    refs.map { s => val r = TableRef.parse(s, f.collection); (r.collection, r.table) }.distinct
+
+  private def outputTables(f: FlowFunction): Seq[(String, String)] =
+    f.outputs.map(f.collection -> _)
 
   /** Registered function by name (for manual re-runs at a chosen cutoff). */
   def fn(name: String): FlowFunction = functions(name)
@@ -174,29 +181,56 @@ final class FlowEngine(val store: TableStore, spark: SparkSession) {
     entries.map { case (t, _) => (f.collection, t) }
   }
 
-  /** Manual trigger: run `name`, then propagate to dependents breadth-first
-    * (each function runs at most once per execution, matching the planner's
-    * once-per-plan semantics). */
+  /** Manual trigger: run `name` and every function its commits reach, each
+    * at most once per execution (the planner's once-per-plan semantics).
+    * Returns the function names in run order. */
   def trigger(name: String): Seq[String] = {
     require(functions.contains(name),
       s"no registered function '$name' (registered: ${functions.keys.mkString(", ")})")
+    val order = plan(functions(name))
     val executionId = store.newId()
     val executionTs = System.currentTimeMillis() // the plan's triggered_on
-    val ran = mutable.LinkedHashSet[String]()
-    val queue = mutable.Queue[FlowFunction](functions(name))
+    order.foreach(f => runFunction(f, executionId, executionTs))
+    order.map(_.name)
+  }
+
+  /** Execution plan of a trigger: every function reachable from `root`
+    * through output → trigger edges, in an order where each function runs
+    * after every other in-plan function that writes a table it reads or is
+    * triggered by — so a join downstream of two paths of unequal length
+    * sees this execution's output of both (planner.rs:20-55). Ties keep
+    * breadth-first discovery order. A dependency cycle fails before any
+    * run, naming the functions it blocks. */
+  private def plan(root: FlowFunction): Seq[FlowFunction] = {
+    val reached = mutable.LinkedHashMap[String, FlowFunction](root.name -> root)
+    val queue = mutable.Queue[FlowFunction](root)
     while (queue.nonEmpty) {
       val f = queue.dequeue()
-      if (!ran.contains(f.name)) {
-        ran += f.name
-        val published = runFunction(f, executionId, executionTs)
-        published.foreach { case (coll, table) =>
-          dependents(coll, table).foreach { d =>
-            if (!ran.contains(d.name)) queue.enqueue(d)
-          }
-        }
+      for ((c, t) <- outputTables(f); d <- dependents(c, t)
+           if !reached.contains(d.name)) {
+        reached(d.name) = d
+        queue.enqueue(d)
       }
     }
-    ran.toSeq
+    val discovered = reached.values.toVector
+    val writers = discovered
+      .flatMap(f => outputTables(f).map(_ -> f.name)).groupMap(_._1)(_._2)
+    val waitsFor = discovered.map { f =>
+      val read = tables(f, f.inputs ++ f.triggerBy.getOrElse(Nil))
+      f.name -> (read.flatMap(writers.getOrElse(_, Nil)).toSet - f.name)
+    }.toMap
+    val done = mutable.LinkedHashMap[String, FlowFunction]()
+    def ready = discovered.find(f =>
+      !done.contains(f.name) && waitsFor(f.name).forall(done.contains))
+    var next = ready
+    while (next.isDefined) {
+      done(next.get.name) = next.get
+      next = ready
+    }
+    val blocked = discovered.filterNot(f => done.contains(f.name))
+    require(blocked.isEmpty, "dependency cycle in the trigger plan of " +
+      s"'${root.name}': ${blocked.map(_.name).mkString(", ")} cannot be ordered")
+    done.values.toSeq
   }
 }
 

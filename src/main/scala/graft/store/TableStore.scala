@@ -37,11 +37,10 @@ final case class VersionEntry(
     dataOf: Option[String] = None) {
   /** The version id whose data directory this entry reads. */
   def dataRef: String = dataOf.getOrElse(id)
-  def schema: Option[org.apache.spark.sql.types.StructType] = schemaB64.map { b =>
-    org.apache.spark.sql.types.DataType.fromJson(
-      new String(java.util.Base64.getDecoder.decode(b), StandardCharsets.UTF_8))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-  }
+  /** The staged schema, decoded once per distinct `schemaB64` text and
+    * shared (see [[TableStore.sharedSchema]]). */
+  def schema: Option[org.apache.spark.sql.types.StructType] =
+    schemaB64.map(TableStore.sharedSchema(_).decoded)
 }
 
 /** Versioned, transactional Parquet table store.
@@ -61,6 +60,25 @@ final case class VersionEntry(
   * works on any Hadoop FS URI; the log commit then needs an FS with atomic
   * rename (HDFS/ABFS) or a small DB, same as every table-format metadata
   * layer.
+  *
+  * Metadata index: each instance keeps an in-memory index per table, so a
+  * read pays for the log lines appended since its previous read, not for
+  * the whole history. The index relies on this contract:
+  *   - `_log.jsonl` and `_pruned.jsonl` are append-only, and each starts
+  *     with a line carrying a unique version id. A file that is replaced
+  *     (new file key or new first line, so a reused inode is caught) or
+  *     shrinks is re-read whole; an in-place rewrite that keeps the first
+  *     line at equal or greater length is not supported.
+  *   - Transaction markers are never deleted, so the marker cache is
+  *     positive-only: a transaction seen committed stays committed, and
+  *     only entries not yet known to be committed cost a `Files.exists`.
+  *   - Writers in other processes or other instances on the same root are
+  *     picked up on the next read ([[deleteTable]] drops its table's
+  *     index; another instance sees the replaced file).
+  * Memory: about 0.5 KB per cached log entry, 0.1 KB per pruned id and
+  * per transaction seen committed, a copy of each indexed file's first
+  * line, plus one shared copy of each distinct staged schema (text and
+  * decoded).
   */
 final class TableStore(val root: String, spark: SparkSession) {
   private def tableDir(coll: String, table: String): Path = {
@@ -74,12 +92,26 @@ final class TableStore(val root: String, spark: SparkSession) {
   def newId(): String = UuidV7.next(ThreadLocalRandom.current())
 
   // ---- metadata log ----
-  private def readLog(coll: String, table: String): Seq[VersionEntry] = {
-    val p = logPath(coll, table)
-    if (!Files.exists(p)) Seq.empty
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq
-      .filter(_.nonEmpty).map(parseEntry)
+  // per-table incremental indexes over `_log.jsonl` / `_pruned.jsonl`,
+  // keyed by file path (see the class doc for the contract)
+  private val logIndexes =
+    new java.util.concurrent.ConcurrentHashMap[Path, LogIndex[Vector[VersionEntry]]]()
+  private val prunedIndexes =
+    new java.util.concurrent.ConcurrentHashMap[Path, LogIndex[Set[String]]]()
+
+  private def indexed[S](indexes: java.util.concurrent.ConcurrentHashMap[Path, LogIndex[S]],
+      p: Path, empty: S, add: (S, String) => S): S = {
+    // no index for a file that does not exist: probes of absent tables
+    // (e.g. HTTP lookups of arbitrary names) must not grow the map
+    val ix = indexes.get(p)
+    if (ix != null) ix.read()
+    else if (!Files.exists(p)) empty
+    else indexes.computeIfAbsent(p, _ => new LogIndex(p, empty, add)).read()
   }
+
+  private def readLog(coll: String, table: String): Vector[VersionEntry] =
+    indexed(logIndexes, logPath(coll, table), Vector.empty[VersionEntry],
+      (es: Vector[VersionEntry], line: String) => es :+ parseEntry(line))
 
   // real JSON parse/render (Jackson ships with Spark) — a regex scrape
   // would mis-split the moment any string field carries an escaped quote
@@ -95,7 +127,7 @@ final class TableStore(val root: String, spark: SparkSession) {
     }
     VersionEntry(str("id"), str("execution"), str("transaction"),
       str("ts").toLong, str("schemaHash"), str("rows").toLong,
-      Option(n.get("schema")).map(_.asText()),
+      Option(n.get("schema")).map(s => TableStore.sharedSchema(s.asText()).b64),
       Option(n.get("dataOf")).map(_.asText()))
   }
 
@@ -120,6 +152,8 @@ final class TableStore(val root: String, spark: SparkSession) {
 
   // ---- transactions ----
   private def txnMarker(txid: String): Path = txnDir.resolve(s"$txid.json")
+  // transactions seen committed; positive-only, markers are never deleted
+  private val committed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   // staged version dirs awaiting their transaction's commit: txid → moves
   private val stagedMoves =
     scala.collection.mutable.Map.empty[String, List[(Path, Path)]]
@@ -138,8 +172,13 @@ final class TableStore(val root: String, spark: SparkSession) {
     val tmp = txnDir.resolve(s".$txid.tmp")
     Files.writeString(tmp, s"""{"txid":"$txid","status":"committed"}""")
     Files.move(tmp, txnMarker(txid), StandardCopyOption.ATOMIC_MOVE)
+    committed.add(txid)
   }
-  def isCommitted(txid: String): Boolean = Files.exists(txnMarker(txid))
+  def isCommitted(txid: String): Boolean = committed.contains(txid) || {
+    val c = Files.exists(txnMarker(txid))
+    if (c) committed.add(txid)
+    c
+  }
 
   /** Committed transaction ids, newest last (reference: apiserver.py
     * `/transactions` list). */
@@ -154,7 +193,18 @@ final class TableStore(val root: String, spark: SparkSession) {
     * trigger-time cutoff (epoch ms, inclusive): versions stamped after it
     * are invisible, so a function re-run against a past execution resolves
     * the same inputs the original plan saw (version_resolver.rs:29-37
-    * resolves every selector "at" the execution's `triggered_on`). */
+    * resolves every selector "at" the execution's `triggered_on`).
+    *
+    * Served from the table's in-memory index: one stat and one read of
+    * the first line each of `_log.jsonl` and `_pruned.jsonl` (the file's
+    * identity check), a parse of only the complete lines
+    * appended since the previous call (an unterminated last line is a
+    * write in progress, invisible until its newline lands), and a
+    * `Files.exists` only for entries not yet known to be committed.
+    * Contract (see the class doc): both files are append-only, a replaced
+    * or shrunk file is re-read whole, an in-place rewrite that keeps the
+    * first line at equal or greater length is not supported; the marker cache is positive-only;
+    * about 0.5 KB of memory per cached entry. */
   def versions(coll: String, table: String, asOf: Option[Long] = None): Seq[VersionEntry] = {
     val pruned = prunedIds(coll, table)
     readLog(coll, table).filter(e =>
@@ -166,12 +216,9 @@ final class TableStore(val root: String, spark: SparkSession) {
   private def prunedPath(coll: String, table: String): Path =
     tableDir(coll, table).resolve("_pruned.jsonl")
 
-  private def prunedIds(coll: String, table: String): Set[String] = {
-    val p = prunedPath(coll, table)
-    if (!Files.exists(p)) Set.empty
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .filter(_.nonEmpty).toSet
-  }
+  private def prunedIds(coll: String, table: String): Set[String] =
+    indexed(prunedIndexes, prunedPath(coll, table), Set.empty[String],
+      (ids: Set[String], line: String) => ids + line)
 
   /** Retention vacuum: physically delete all but the newest `keepLast`
     * committed versions of a table — the storage-lifecycle knob without
@@ -355,7 +402,7 @@ final class TableStore(val root: String, spark: SparkSession) {
       asOf: Option[Long] = None): Option[VersionEntry] = {
     val vs = versions(coll, table, asOf)
     v match {
-      case Version.Head(back)       => vs.reverse.lift(back)
+      case Version.Head(back)       => vs.lift(vs.length - 1 - back)
       case Version.Initial(forward) => vs.lift(forward)
       case Version.Fixed(id)        => vs.find(_.id == id)
     }
@@ -657,12 +704,15 @@ final class TableStore(val root: String, spark: SparkSession) {
   def listCollections(): Seq[String] = listDirs(Paths.get(root))
 
   /** Drop a table: data, version log, everything (reference:
-    * apiserver.py:936-944 table_delete). Returns false if absent. */
+    * apiserver.py:936-944 table_delete), and this instance's index of it.
+    * Returns false if absent. */
   def deleteTable(coll: String, table: String): Boolean = {
     val d = tableDir(coll, table)
     if (!Files.exists(d)) false
     else {
       TableStore.deleteTree(d)
+      logIndexes.remove(logPath(coll, table))
+      prunedIndexes.remove(prunedPath(coll, table))
       true
     }
   }
@@ -773,6 +823,26 @@ object TableStore {
     Using.resource(Files.walk(dir))(
       _.sorted(java.util.Comparator.reverseOrder())
         .forEach(p => Files.deleteIfExists(p)))
+
+  /** One distinct staged schema: its base64 text and the decoded type. */
+  private[store] final class SharedSchema(val b64: String) {
+    lazy val decoded: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.DataType.fromJson(
+        new String(java.util.Base64.getDecoder.decode(b64), StandardCharsets.UTF_8))
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+  }
+
+  // the most recently used distinct schemas; every log entry carries one,
+  // and a table's versions almost always share it
+  private val schemas = new java.util.LinkedHashMap[String, SharedSchema](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, SharedSchema]): Boolean =
+      size() > 256
+  }
+
+  /** The shared instance for a base64 schema text, so identical schemas
+    * across log entries hold one `String` and decode once. */
+  private[store] def sharedSchema(b64: String): SharedSchema =
+    schemas.synchronized(schemas.computeIfAbsent(b64, new SharedSchema(_)))
 
   /** Shared mapper for the version log (thread-safe after configuration). */
   private[graft] val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()

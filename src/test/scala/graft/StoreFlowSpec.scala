@@ -310,6 +310,46 @@ class StoreFlowSpec extends AnyFunSuite {
     assert(store.scan("c/ab").get.count() == 2)
   }
 
+  test("flow: a join after paths of unequal length reads this execution's outputs") {
+    // A→B→D and A→C→X→D: D must wait for X, not run on X's previous output
+    val store = freshStore()
+    val engine = new FlowEngine(store, spark)
+    import spark.implicits._
+    var gen = 0
+    val seen = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
+    def g(tf: TableFrame): Int = tf.df.select("g").head().getInt(0)
+    engine.publisher("A", "c", Seq("a")) { _ =>
+      gen += 1
+      Seq(TableFrame.fromRaw(Seq(gen).toDF("g")))
+    }
+    engine.transformer("B", "c", Seq("a"), Seq("b")) { ctx => Seq(ctx.input(0)) }
+    engine.transformer("C", "c", Seq("a"), Seq("cc")) { ctx => Seq(ctx.input(0)) }
+    engine.transformer("D", "c", Seq("b", "x"), Seq("d")) { ctx =>
+      seen += ((g(ctx.input(0)), g(ctx.input(1))))
+      Seq(ctx.input(1))
+    }
+    engine.transformer("X", "c", Seq("cc"), Seq("x")) { ctx => Seq(ctx.input(0)) }
+    assert(engine.trigger("A") == Seq("A", "B", "C", "X", "D"))
+    assert(engine.trigger("A") == Seq("A", "B", "C", "X", "D"))
+    assert(seen.toSeq == Seq((1, 1), (2, 2)))
+    assert(store.versions("c", "d").size == 2)
+  }
+
+  test("flow: a dependency cycle in the plan fails before any run") {
+    val store = freshStore()
+    val engine = new FlowEngine(store, spark)
+    import spark.implicits._
+    engine.publisher("P", "c", Seq("p")) { _ => Seq(TableFrame.fromRaw(Seq(1).toDF("v"))) }
+    // Q reads R's output, and R is triggered by Q's
+    engine.transformer("Q", "c", Seq("p", "r"), Seq("q"),
+      triggerBy = Some(Seq("p"))) { ctx => Seq(ctx.input(0)) }
+    engine.transformer("R", "c", Seq("q"), Seq("r")) { ctx => Seq(ctx.input(0)) }
+    val err = intercept[IllegalArgumentException](engine.trigger("P"))
+    assert(err.getMessage.contains("cycle") &&
+      err.getMessage.contains("Q, R"), err.getMessage)
+    assert(store.versions("c", "p").isEmpty, "nothing ran")
+  }
+
   test("flow: offsets persist between runs (incremental publisher)") {
     val store = freshStore()
     val engine = new FlowEngine(store, spark)

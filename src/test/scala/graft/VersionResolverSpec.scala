@@ -259,6 +259,135 @@ class VersionResolverSpec extends AnyFunSuite {
     }
   }
 
+  // ---- the store's incremental metadata index ----
+
+  test("index: a second store on the same root sees write, commit, restore, vacuum") {
+    val (s1, v) = seeded(3)
+    import spark.implicits._
+    val s2 = new TableStore(s1.root, spark)
+    assert(ids(s2.versions("c", "t")) == ids(v))
+    val v4 = s1.write("c", "t", Seq(4).toDF("v"))
+    assert(ids(s2.versions("c", "t")) == ids(v) :+ v4.id)
+    // an entry seen uncommitted becomes visible once its marker lands
+    val ctx = SysCtx.fresh().copy(version = s1.newId())
+    val v5 = s1.stageWrite("c", "t", Seq(5).toDF("v"), ctx)
+    assert(ids(s2.versions("c", "t")) == ids(v) :+ v4.id)
+    s1.commitTransaction(ctx.transaction)
+    assert(ids(s2.versions("c", "t")) == ids(v) :+ v4.id :+ v5.id)
+    val r = s1.restore("c", "t", "HEAD~1").get
+    assert(s2.resolveOne("c", "t", Version.Head(0)).get.id == r.id)
+    assert(s2.scan("c/t").get.df.select("v").head().getInt(0) == 4)
+    s1.vacuum("c", "t", keepLast = 2)
+    assert(ids(s2.versions("c", "t")) == Seq(v5.id, r.id))
+    assert(s2.resolveOne("c", "t", Version.Fixed(v(0).id)).isEmpty)
+  }
+
+  test("index: deleteTable then re-create shows only the new versions") {
+    val (s, _) = seeded(3)
+    import spark.implicits._
+    val other = new TableStore(s.root, spark)
+    assert(other.versions("c", "t").size == 3)
+    assert(s.deleteTable("c", "t"))
+    assert(s.versions("c", "t").isEmpty && other.versions("c", "t").isEmpty)
+    val n = s.write("c", "t", Seq(9).toDF("v"))
+    assert(ids(s.versions("c", "t")) == Seq(n.id))
+    assert(ids(other.versions("c", "t")) == Seq(n.id))
+    assert(other.scan("c/t").get.df.select("v").head().getInt(0) == 9)
+  }
+
+  test("index: a re-created table is seen even when its log reuses the old inode") {
+    // `other` reads, then reads nothing until the table was deleted and
+    // re-created with as many entries; the new log is then moved onto the
+    // old log's inode (kept alive by a hard link), as on a file system
+    // that reuses freed inode numbers, so file key and size both match
+    val (s, _) = seeded(3)
+    import spark.implicits._
+    val other = new TableStore(s.root, spark)
+    assert(other.versions("c", "t").size == 3)
+    val log = java.nio.file.Paths.get(s.root, "c", "t", "_log.jsonl")
+    val oldInode = java.nio.file.Paths.get(s.root, "old-log.jsonl")
+    Files.createLink(oldInode, log)
+    assert(s.deleteTable("c", "t"))
+    val n = (1 to 3).map { i =>
+      val ctx = SysCtx.fresh().copy(version = s.newId(),
+        timestamp = new java.sql.Timestamp(i * 1000L))
+      val e = s.stageWrite("c", "t", Seq(i + 10).toDF("v"), ctx)
+      s.commitTransaction(ctx.transaction)
+      e
+    }
+    Files.write(oldInode, Files.readAllBytes(log))
+    Files.move(oldInode, log, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    assert(ids(other.versions("c", "t")) == ids(n))
+    assert(other.scan("c/t").get.df.select("v").head().getInt(0) == 13)
+  }
+
+  test("index: an unterminated last log line is invisible until its newline lands") {
+    val (s, v) = seeded(2)
+    val log = java.nio.file.Paths.get(s.root, "c", "t", "_log.jsonl")
+    def append(text: String): Unit = Files.writeString(log, text,
+      java.nio.file.StandardOpenOption.APPEND)
+    val txid = s.newId()
+    s.commitTransaction(txid)
+    val e = VersionEntry(s.newId(), "exec", txid, 3000L, "h", 1L)
+    val line = s.renderEntry(e)
+    append(line.take(line.length / 2))
+    assert(ids(s.versions("c", "t")) == ids(v))
+    append(line.drop(line.length / 2))
+    assert(ids(s.versions("c", "t")) == ids(v))
+    append("\n")
+    assert(ids(s.versions("c", "t")) == ids(v) :+ e.id)
+    assert(ids(s.versions("c", "t")) == ids(v) :+ e.id, "visible exactly once")
+    // a complete line that does not parse is corruption: loud, every time
+    append("not json\n")
+    intercept[IllegalStateException](s.versions("c", "t"))
+    intercept[IllegalStateException](s.versions("c", "t"))
+  }
+
+  test("index: concurrent readers see histories that extend one another") {
+    val (s, _) = seeded(2)
+    import spark.implicits._
+    @volatile var writing = true
+    val pruned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val readers = (0 until 4).map { r =>
+      val histories = scala.collection.mutable.ArrayBuffer[Seq[String]]()
+      val errors = scala.collection.mutable.ArrayBuffer[Throwable]()
+      val t = new Thread(() => {
+        while (writing) {
+          try {
+            histories += ids(s.versions("c", "t"))
+            assert(s.schema("c/t").exists(_.fieldNames.contains("v")))
+            s.resolveOne("c", "t", Version.Head(r % 2))
+          } catch { case e: Throwable => errors += e }
+        }
+      })
+      t.start()
+      (t, histories, errors)
+    }
+    try {
+      (1 to 12).foreach { i =>
+        s.write("c", "t", Seq(i).toDF("v"))
+        if (i % 3 == 0) s.restore("c", "t", "HEAD~1")
+        if (i % 4 == 0) s.vacuum("c", "t", keepLast = 3).foreach(pruned.add)
+      }
+    } finally {
+      writing = false
+      readers.foreach(_._1.join())
+    }
+    val gone: Set[String] = pruned.toArray(Array.empty[String]).toSet
+    readers.foreach { case (_, histories, errors) =>
+      assert(errors.isEmpty, errors.headOption.map(_.toString))
+      assert(histories.nonEmpty)
+      histories.zip(histories.drop(1)).foreach { case (h1, h2) =>
+        val (s1, s2) = (h1.toSet, h2.toSet)
+        // nothing disappears unless pruned; what stays keeps its order;
+        // unpruned history only grows at the end
+        assert(h1.filterNot(s2).forall(gone), (h1, h2))
+        assert(h1.filter(s2) == h2.filter(s1), (h1, h2))
+        assert(h2.filterNot(gone).startsWith(h1.filterNot(gone)), (h1, h2))
+      }
+    }
+  }
+
   test("flow re-run at the original trigger time sees the original inputs") {
     val store = new TableStore(Files.createTempDirectory("graft-vr").toString, spark)
     val engine = new FlowEngine(store, spark)
