@@ -96,7 +96,9 @@ object Quantiles {
     * GROUP LIKE ANY OTHER (the Privacy family's NULL rule): the bounds
     * join is null-safe (`<=>`), so NULL-group rows clip against the NULL
     * group's own quantile window — the oracle states the same contract
-    * with IS NOT DISTINCT FROM. */
+    * with IS NOT DISTINCT FROM. Kept apart from [[winsorize]]: the bounds
+    * come from a keyed window with a hot-group fallback, not a
+    * range-shuffle rank. */
   def winsorizeByGroup(df: DataFrame, groupCol: String, valueCol: String,
       pLo: Double, pHi: Double, tiebreakers: Seq[String] = Nil,
       hotGroupThreshold: Long = 4000000L): DataFrame = {
@@ -169,7 +171,9 @@ object Quantiles {
     * spread over as many partitions as its size needs) — so ANY number of
     * simultaneously-huge groups rides one extra subplan, not one per
     * group. The collected hot-key list is O(n/threshold) driver metadata.
-    * Pass `Long.MaxValue` to force the single-pass window plan. */
+    * Pass `Long.MaxValue` to force the single-pass window plan. Kept
+    * apart from [[exactQuantiles]]: a keyed window with a hot-group
+    * fallback, against one range-shuffle rank. */
   def exactQuantilesByGroup(df: DataFrame, groupCol: String, valueCol: String,
       qs: Seq[Double], tiebreakers: Seq[String] = Nil,
       hotGroupThreshold: Long = 4000000L): DataFrame = {
@@ -274,25 +278,8 @@ object Quantiles {
     * once. Negative values are rejected (Gini is undefined there);
     * NULLs excluded. Output one row: (n, total, gini). */
   def gini(df: DataFrame, valueCol: String,
-      tiebreakers: Seq[String] = Nil): DataFrame = {
-    val scale = graft.pipeline.QualityModel.GradScale
-    def fixed(t: org.apache.spark.sql.Column) =
-      F.sum(F.floor(t * F.lit(scale) + F.lit(0.5d)).cast("decimal(38,0)"))
-    val x = F.col(valueCol).cast("double")
-    val clean = df.where(x.isNotNull && x >= 0.0d)
-    val ranked = ScalableRank.withRank(clean, valueCol, "$td.__rk",
-      method = "ordinal", tiebreakers = tiebreakers)
-    val agg = ranked.agg(F.count(F.lit(1)).as("n"),
-      fixed(x).as("td_s1"),
-      fixed(F.col("`$td.__rk`").cast("double") * x).as("td_s2"))
-    val nD = F.col("n").cast("double")
-    val s1 = F.col("td_s1").cast("double") / F.lit(scale)
-    val s2 = F.col("td_s2").cast("double") / F.lit(scale)
-    agg.select(F.col("n"), s1.as("total"),
-      F.when(F.col("n") > 0L && F.col("td_s1") > 0L,
-        ((F.lit(2.0d) * s2) / (nD * s1)) - ((nD + F.lit(1.0d)) / nD))
-        .as("gini"))
-  }
+      tiebreakers: Seq[String] = Nil): DataFrame =
+    giniImpl(df, valueCol, tiebreakers, keyCols = Nil)
 
   /** Per-group [[gini]]: within-group ranks from ONE composite-key
     * range shuffle ([[ScalableRank.withRankByGroup]] — any number of
@@ -300,28 +287,38 @@ object Quantiles {
     * keyed aggregation and the same stated finishing per row. Output:
     * (group, n, total, gini) ascending. */
   def giniByGroup(df: DataFrame, groupCol: String, valueCol: String,
-      tiebreakers: Seq[String] = Nil): DataFrame = {
+      tiebreakers: Seq[String] = Nil): DataFrame =
+    giniImpl(df, valueCol, tiebreakers, keyCols = Seq(groupCol))
+
+  /** `keyCols` is Nil (one global row) or the one group column (output
+    * `group`, cast to string, NULL groups dropped, ascending). */
+  private def giniImpl(df: DataFrame, valueCol: String,
+      tiebreakers: Seq[String], keyCols: Seq[String]): DataFrame = {
     val scale = graft.pipeline.QualityModel.GradScale
     def fixed(t: org.apache.spark.sql.Column) =
       F.sum(F.floor(t * F.lit(scale) + F.lit(0.5d)).cast("decimal(38,0)"))
+    val group = keyCols.map(_ => F.col("group"))
     val x = F.col(valueCol).cast("double")
-    val clean = df.where(x.isNotNull && x >= 0.0d &&
-      F.col(groupCol).isNotNull)
-    val ranked = ScalableRank.withRankByGroup(clean, groupCol, valueCol,
-      "$td.__rk", tiebreakers = tiebreakers)
+    val clean = df.where((Seq(x.isNotNull, x >= 0.0d) ++
+      keyCols.map(F.col(_).isNotNull)).reduce(_ && _))
+    val ranked =
+      if (keyCols.isEmpty) ScalableRank.withRank(clean, valueCol, "$td.__rk",
+        method = "ordinal", tiebreakers = tiebreakers)
+      else ScalableRank.withRankByGroup(clean, keyCols.head, valueCol,
+        "$td.__rk", tiebreakers = tiebreakers)
     val agg = ranked
-      .groupBy(F.col(groupCol).cast("string").as("group"))
+      .groupBy(keyCols.map(F.col(_).cast("string").as("group")): _*)
       .agg(F.count(F.lit(1)).as("n"),
         fixed(x).as("td_s1"),
         fixed(F.col("`$td.__rk`").cast("double") * x).as("td_s2"))
     val nD = F.col("n").cast("double")
     val s1 = F.col("td_s1").cast("double") / F.lit(scale)
     val s2 = F.col("td_s2").cast("double") / F.lit(scale)
-    agg.select(F.col("group"), F.col("n"), s1.as("total"),
+    val out = agg.select(group ++ Seq(F.col("n"), s1.as("total"),
       F.when(F.col("n") > 0L && F.col("td_s1") > 0L,
         ((F.lit(2.0d) * s2) / (nD * s1)) - ((nD + F.lit(1.0d)) / nD))
-        .as("gini"))
-      .orderBy(F.col("group").asc)
+        .as("gini")): _*)
+    if (keyCols.isEmpty) out else out.orderBy(F.col("group").asc)
   }
 
   /** Lorenz curve in `buckets` equi-depth slices: per slice the row

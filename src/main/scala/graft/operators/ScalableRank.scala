@@ -141,8 +141,8 @@ object ScalableRank {
     *    a partition, so the range partitioner keys on (group, key) alone
     *    (tiebreakers are ignored, as in [[withRank]]'s min) and offsets
     *    stay plain row counts — SQL rank continues from row positions.
-    *
-    * NULL group keys form one group (null-safe offset join). */
+    * NULL group keys form one group (null-safe offset join). Kept apart
+    * from [[withRank]]: different partitioning contracts (group first). */
   def withRankByGroup(df: DataFrame, groupCol: String, key: String,
       as: String = "rank", tiebreakers: Seq[String] = Nil,
       method: String = "ordinal"): DataFrame = {

@@ -466,71 +466,6 @@ object GraphRank {
       .orderBy(F.col("node").asc), deltas.toSeq)
   }
 
-  /** EXPERIMENTAL fused-norm HITS (the r14 measured arm, VERDICT r13
-    * #5): Kleinberg's ORIGINAL operation order — apply the I and O
-    * updates, THEN normalize both score vectors once per iteration —
-    * which lets the hub and authority L2 norms ride ONE two-column
-    * aggregation action (halving the driver round trips that make
-    * q_graph_hits volatile). The hub pass consumes the UNNORMALIZED
-    * authority iterate, so the fixed-point trajectory differs from
-    * [[hits]] (which normalizes between the two passes); both are
-    * faithful HITS formulations — converged directions agree, the
-    * per-iteration doubles do not. Kept package-private until/unless it
-    * replaces the gate; see PERF.md for the measurement. */
-  private[graft] def hitsFused(edges: DataFrame, srcCol: String,
-      dstCol: String, iters: Int = 5): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges
-      .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
-      .select(F.col(srcCol).cast("string").as("td_u"),
-        F.col(dstCol).cast("string").as("td_v"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val nodes = e.select(F.col("td_u").as("node"))
-      .union(e.select(F.col("td_v").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    nodes.count()
-
-    def sumPass(scores: DataFrame, joinKey: String, outKey: String) = {
-      val raw = e
-        .join(scores.withColumnRenamed("node", joinKey), joinKey)
-        .groupBy(F.col(outKey).as("node"))
-        .agg(F.sum(F.floor(F.col("score") * F.lit(GradScale) + F.lit(0.5d))
-          .cast("decimal(38,0)")).as("td_s"))
-      nodes.join(raw, Seq("node"), "left")
-        .select(F.col("node"),
-          (F.coalesce(F.col("td_s"), F.lit(0L)).cast("decimal(38,0)")
-            .cast("double") / F.lit(GradScale)).as("td_x"))
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    }
-
-    var hubs = nodes.select(F.col("node"), F.lit(1.0d).as("score"))
-    var auth = hubs
-    for (_ <- 0 until iters) {
-      val aU = sumPass(hubs, "td_u", "td_v")
-      val hU = sumPass(aU.withColumnRenamed("td_x", "score"), "td_v", "td_u")
-      // ONE action per iteration: both squared norms from the joined
-      // node-sized iterates (materializes both caches)
-      val r = aU.select(F.col("node"), F.col("td_x").as("td_ax"))
-        .join(hU.select(F.col("node"), F.col("td_x").as("td_hx")), "node")
-        .agg(
-          F.sum(F.floor((F.col("td_ax") * F.col("td_ax")) * F.lit(GradScale)
-            + F.lit(0.5d)).cast("decimal(38,0)")).as("qa"),
-          F.sum(F.floor((F.col("td_hx") * F.col("td_hx")) * F.lit(GradScale)
-            + F.lit(0.5d)).cast("decimal(38,0)")).as("qh"))
-        .head()
-      val na = math.sqrt(r.getDecimal(0).doubleValue() / GradScale)
-      val nh = math.sqrt(r.getDecimal(1).doubleValue() / GradScale)
-      require(na > 0.0d && nh > 0.0d, "HITS collapsed to the zero vector")
-      auth = aU.select(F.col("node"), (F.col("td_x") / F.lit(na)).as("score"))
-      hubs = hU.select(F.col("node"), (F.col("td_x") / F.lit(nh)).as("score"))
-    }
-    hubs.withColumnRenamed("score", "hub")
-      .join(auth.withColumnRenamed("score", "authority"), Seq("node"))
-      .select(F.col("node"), F.col("hub"), F.col("authority"))
-      .orderBy(F.col("node").asc)
-  }
-
   /** Synchronous label-propagation communities (Raghavan et al. 2007,
     * made DETERMINISTIC): every node starts as its own label; each
     * round every node adopts the label most frequent among its

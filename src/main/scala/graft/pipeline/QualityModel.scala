@@ -111,19 +111,13 @@ object QualityModel {
     df.withColumn(as,
       sigmoid(linear(weights, featureCols.map(c => F.col(c).cast("double")))))
 
-  /** Exact ROC AUC by rank statistics (Mann–Whitney with midrank tie
-    * handling): AUC = (Σ_{positives} avgrank − n⁺(n⁺+1)/2) / (n⁺·n⁻).
-    * Ranking rides [[graft.operators.ScalableRank]]'s range shuffle
-    * (min-rank; the midrank of a tie group is min + (cnt−1)/2), so no
-    * single task ever sorts the corpus, and every quantity before the
-    * final division is an exact integer or half-integer — one double
-    * division at the end, engine-portable. NULL scores/labels excluded.
-    * Output: one (n_pos, n_neg, auc) row. */
   /** Per-slice [[aucOf]] — the fairness/robustness read of a quality
     * model: the same midrank algebra per group (one composite range
     * shuffle via [[graft.operators.ScalableRank.withRankByGroup]], no
     * per-group jobs). Groups with only one class answer NULL auc
-    * honestly (0/0). Output: (group, n_pos, n_neg, auc) ascending. */
+    * honestly (0/0). Output: (group, n_pos, n_neg, auc) ascending.
+    * Kept apart from [[aucOf]]: one-class input gives a different result
+    * there (the global finishing division is not guarded). */
   def aucByGroup(df: DataFrame, groupCol: String, scoreCol: String,
       labelCol: String): DataFrame = {
     val y = F.col(labelCol).cast("int")
@@ -405,6 +399,14 @@ object QualityModel {
           F.col("n").cast("double")).as("brier"))
   }
 
+  /** Exact ROC AUC by rank statistics (Mann–Whitney with midrank tie
+    * handling): AUC = (Σ_{positives} avgrank − n⁺(n⁺+1)/2) / (n⁺·n⁻).
+    * Ranking rides [[graft.operators.ScalableRank]]'s range shuffle
+    * (min-rank; the midrank of a tie group is min + (cnt−1)/2), so no
+    * single task ever sorts the corpus, and every quantity before the
+    * final division is an exact integer or half-integer — one double
+    * division at the end, engine-portable. NULL scores/labels excluded.
+    * Output: one (n_pos, n_neg, auc) row. */
   def aucOf(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
     val y = F.col(labelCol).cast("int")
     val clean = df

@@ -140,7 +140,8 @@ object Report {
     * distinct-count sibling of [[mergeQuantileSketchesByGroup]], still
     * with zero data rescan. Deterministic (HLL register unions are
     * order-insensitive), so merged-vs-whole-corpus equality is exact.
-    * Output: (group, estimate). */
+    * Output: (group, estimate). Kept apart from [[mergeDistinctSketches]],
+    * which returns a driver-side `Long`, not a relation. */
   def mergeDistinctSketchesByGroup(sketches: DataFrame, groupCol: String,
       sketchCol: String = "sketch",
       allowDifferentLgK: Boolean = false): DataFrame =
@@ -265,32 +266,8 @@ object Report {
     * single-task collect of all sketches. Output: one
     * (counts, n, lo, hi, bins) row. */
   def mergeQuantileSketches(sketches: DataFrame,
-      countsCol: String = "counts"): DataFrame = {
-    requireGridStamp(sketches)
-    // elementwise exact addition in ONE aggregate (the long_vec_sum
-    // kernel); the grid guard rides the same aggregation lazily
-    // (raise_error at action time) — no per-cell explode (r17)
-    sketches.agg(
-        graft.expressions.VecAggs.longVecSum(F.col(countsCol)).as("td_sum"),
-        F.countDistinct(F.struct(F.col("lo"), F.col("hi"), F.col("bins"),
-          F.col("scale"))).as("td_g"),
-        F.first(F.col("lo")).as("lo"), F.first(F.col("hi")).as("hi"),
-        F.first(F.col("bins")).as("bins"),
-        F.first(F.col("scale")).as("scale"))
-      .select(
-        F.when(F.col("td_g") === 1, F.col("td_sum"))
-          .otherwise(F.raise_error(
-            F.when(F.col("td_g") === 0,
-                F.lit("cannot merge an empty set of quantile sketches"))
-              .otherwise(F.lit("cannot merge quantile sketches with " +
-                "different grids: more than one distinct " +
-                "(lo, hi, bins, scale) stamp in the input"))))
-          .as(countsCol),
-        F.col("lo"), F.col("hi"), F.col("bins"), F.col("scale"))
-      .withColumn("n", F.aggregate(F.col(countsCol), F.lit(0L), _ + _))
-      .select(F.col(countsCol), F.col("n"),
-        F.col("lo"), F.col("hi"), F.col("bins"), F.col("scale"))
-  }
+      countsCol: String = "counts"): DataFrame =
+    mergeQuantileImpl(sketches, countsCol, keyCols = Nil)
 
   /** The full sketch stamp: the (lo, hi, bins) grid plus the `scale`
     * marker ("linear" | "log") that keeps same-bounds grids over
@@ -311,25 +288,42 @@ object Report {
     * different grids. Output: one (group, counts, n, lo, hi, bins) row
     * per group. */
   def mergeQuantileSketchesByGroup(sketches: DataFrame, groupCol: String,
-      countsCol: String = "counts"): DataFrame = {
+      countsCol: String = "counts"): DataFrame =
+    mergeQuantileImpl(sketches, countsCol, keyCols = Seq(groupCol))
+
+  private def mergeQuantileImpl(sketches: DataFrame, countsCol: String,
+      keyCols: Seq[String]): DataFrame = {
     requireGridStamp(sketches)
-    val g = F.col(groupCol)
-    sketches.groupBy(g).agg(
+    val keys = keyCols.map(F.col)
+    // a global merge of zero rows still answers one row, so it names the
+    // empty input; a keyed merge names the group whose grids disagree
+    val mismatch =
+      if (keys.isEmpty)
+        F.when(F.col("td_g") === 0,
+            F.lit("cannot merge an empty set of quantile sketches"))
+          .otherwise(F.lit("cannot merge quantile sketches with " +
+            "different grids: more than one distinct " +
+            "(lo, hi, bins, scale) stamp in the input"))
+      else F.concat(F.lit("cannot merge quantile " +
+        "sketches with different grids in group ") +:
+        keys.map(_.cast("string")): _*)
+    // elementwise exact addition in ONE aggregate (the long_vec_sum
+    // kernel); the grid guard rides the same aggregation lazily
+    // (raise_error at action time) — no per-cell explode (r17)
+    sketches.groupBy(keys: _*).agg(
         graft.expressions.VecAggs.longVecSum(F.col(countsCol)).as("td_sum"),
         F.countDistinct(F.struct(F.col("lo"), F.col("hi"), F.col("bins"),
           F.col("scale"))).as("td_g"),
         F.first(F.col("lo")).as("lo"), F.first(F.col("hi")).as("hi"),
         F.first(F.col("bins")).as("bins"),
         F.first(F.col("scale")).as("scale"))
-      .select(g,
+      .select(keys ++ Seq(
         F.when(F.col("td_g") === 1, F.col("td_sum"))
-          .otherwise(F.raise_error(F.concat(F.lit("cannot merge quantile " +
-            "sketches with different grids in group "), g.cast("string"))))
-          .as(countsCol),
-        F.col("lo"), F.col("hi"), F.col("bins"), F.col("scale"))
+          .otherwise(F.raise_error(mismatch)).as(countsCol),
+        F.col("lo"), F.col("hi"), F.col("bins"), F.col("scale")): _*)
       .withColumn("n", F.aggregate(F.col(countsCol), F.lit(0L), _ + _))
-      .select(g, F.col(countsCol), F.col("n"),
-        F.col("lo"), F.col("hi"), F.col("bins"), F.col("scale"))
+      .select(keys ++ Seq(F.col(countsCol), F.col("n"),
+        F.col("lo"), F.col("hi"), F.col("bins"), F.col("scale")): _*)
   }
 
   /** Answer quantiles FROM a sketch: for each q, the lower edge of the
@@ -872,28 +866,8 @@ object Report {
     * arithmetic in IEEE doubles with a fixed operation order, so an
     * external engine states the identical bin function. Output:
     * (bin, lo, hi, n) for non-empty bins. */
-  def histogram(df: DataFrame, valueCol: String, bins: Int): DataFrame = {
-    require(bins >= 1, s"bins must be >= 1, got $bins")
-    val x = F.col(valueCol).cast("double")
-    val bounds = df.agg(F.min(x).as("$td.__mn"), F.max(x).as("$td.__mx"))
-    val mn = F.col("`$td.__mn`")
-    val mx = F.col("`$td.__mx`")
-    val bin = F.when(mx === mn, F.lit(0L)).otherwise(
-      F.least(F.lit((bins - 1).toLong),
-        F.floor((x - mn) * F.lit(bins.toDouble) / (mx - mn))))
-    // NULL values carry no bin: least() skips the NULL floor and would
-    // silently count them in the top bin — drop them before binning (the
-    // min/max bounds already ignore NULLs, so this is the matching rule)
-    df.where(x.isNotNull).crossJoin(F.broadcast(bounds))
-      .select(bin.as("bin"), mn, mx)
-      .groupBy(F.col("bin"), mn, mx)
-      .agg(F.count(F.lit(1)).as("n"))
-      .select(F.col("bin"),
-        (mn + F.col("bin").cast("double") * (mx - mn) / F.lit(bins.toDouble)).as("lo"),
-        (mn + (F.col("bin") + F.lit(1L)).cast("double") * (mx - mn) /
-          F.lit(bins.toDouble)).as("hi"),
-        F.col("n"))
-  }
+  def histogram(df: DataFrame, valueCol: String, bins: Int): DataFrame =
+    histogramImpl(df, valueCol, bins, keyCols = Nil)
 
   /** Per-group exact equi-width histograms — one [[histogram]] per slice
     * (language, source) over EACH GROUP'S OWN [min, max] range, the way
@@ -902,26 +876,37 @@ object Report {
     * binning stays row-local; one keyed count per (group, bin). Output:
     * (group, bin, lo, hi, n). */
   def histogramByGroup(df: DataFrame, groupCol: String, valueCol: String,
-      bins: Int): DataFrame = {
+      bins: Int): DataFrame =
+    histogramImpl(df, valueCol, bins, keyCols = Seq(groupCol))
+
+  private def histogramImpl(df: DataFrame, valueCol: String, bins: Int,
+      keyCols: Seq[String]): DataFrame = {
     require(bins >= 1, s"bins must be >= 1, got $bins")
+    val keys = keyCols.map(F.col)
     val x = F.col(valueCol).cast("double")
-    val bounds = df.groupBy(F.col(groupCol))
+    val bounds = df.groupBy(keys: _*)
       .agg(F.min(x).as("$td.__mn"), F.max(x).as("$td.__mx"))
     val mn = F.col("`$td.__mn`")
     val mx = F.col("`$td.__mx`")
     val bin = F.when(mx === mn, F.lit(0L)).otherwise(
       F.least(F.lit((bins - 1).toLong),
         F.floor((x - mn) * F.lit(bins.toDouble) / (mx - mn))))
-    // same NULL rule as [[histogram]]: a NULL value has no bin
-    df.where(x.isNotNull).join(F.broadcast(bounds), Seq(groupCol))
-      .select(F.col(groupCol), bin.as("bin"), mn, mx)
-      .groupBy(F.col(groupCol), F.col("bin"), mn, mx)
+    // NULL values carry no bin: least() skips the NULL floor and would
+    // silently count them in the top bin — drop them before binning (the
+    // min/max bounds already ignore NULLs, so this is the matching rule)
+    val rows = df.where(x.isNotNull)
+    val withBounds =
+      if (keyCols.isEmpty) rows.crossJoin(F.broadcast(bounds))
+      else rows.join(F.broadcast(bounds), keyCols)
+    withBounds
+      .select(keys ++ Seq(bin.as("bin"), mn, mx): _*)
+      .groupBy(keys ++ Seq(F.col("bin"), mn, mx): _*)
       .agg(F.count(F.lit(1)).as("n"))
-      .select(F.col(groupCol), F.col("bin"),
+      .select(keys ++ Seq(F.col("bin"),
         (mn + F.col("bin").cast("double") * (mx - mn) / F.lit(bins.toDouble)).as("lo"),
         (mn + (F.col("bin") + F.lit(1L)).cast("double") * (mx - mn) /
           F.lit(bins.toDouble)).as("hi"),
-        F.col("n"))
+        F.col("n")): _*)
   }
 
   /** EXACT corpus-to-corpus overlap at two granularities — the
@@ -1375,19 +1360,43 @@ object Report {
     * lexicographically first. Output (one row): n_variants, variant_a,
     * variant_b, n_a, n_b, mean_a, mean_b, var_a, var_b, t, dof. */
   def welchT(df: DataFrame, variantCol: String,
-      valueCol: String): DataFrame = {
+      valueCol: String): DataFrame =
+    welchTImpl(df, variantCol, valueCol, keyCols = Nil)
+
+  /** Per-slice [[welchT]] — the parametric face of the Simpson's-paradox
+    * check ([[mannWhitneyUByGroup]] is the rank face): did variant A's
+    * MEAN beat B's in every segment, or only in aggregate. One keyed
+    * fixed-point moments pass over (slice, variant) — never a per-slice
+    * job — then the bounded per-slice 2-struct fold with the identical
+    * finishing doubles as the single-slice operator. Slices with ≠2
+    * variants, n < 2 on either side, or zero standard error answer NULL
+    * t/dof honestly. Same |value| ≤ 2^21 fixed-point domain as
+    * [[welchT]]. Output: (group, n_variants, variant_a, variant_b, n_a,
+    * n_b, mean_a, mean_b, var_a, var_b, t, dof) ascending by group. */
+  def welchTByGroup(df: DataFrame, groupCol: String, variantCol: String,
+      valueCol: String): DataFrame =
+    welchTImpl(df, variantCol, valueCol, keyCols = Seq(groupCol))
+
+  /** `keyCols` is Nil (one global row) or the one slice column (output
+    * `group`, cast to string, NULL slices dropped, ascending). */
+  private def welchTImpl(df: DataFrame, variantCol: String,
+      valueCol: String, keyCols: Seq[String]): DataFrame = {
+    val slice = keyCols.map(F.col(_).cast("string"))
+    val group = keyCols.map(_ => F.col("group"))
     val v = F.col(variantCol).cast("string")
     val x = F.col(valueCol).cast("double")
     val fp = F.floor(x * F.lit(1048576.0d) + F.lit(0.5d))
     val fpp = F.floor((x * x) * F.lit(1048576.0d) + F.lit(0.5d))
-    val agg = df.where(v.isNotNull && x.isNotNull)
-      .groupBy(v.as("td_v"))
+    val agg = df.where((slice :+ v :+ x).map(_.isNotNull).reduce(_ && _))
+      .groupBy(slice.map(_.as("td_slice")) :+ v.as("td_v"): _*)
       .agg(F.count(F.lit(1)).as("td_n"),
         F.sum(fp.cast("decimal(38,0)")).as("td_sx"),
         F.sum(fpp.cast("decimal(38,0)")).as("td_sxx"))
-    val packed = agg.agg(F.sort_array(F.collect_list(F.struct(
-      F.col("td_v"), F.col("td_n"), F.col("td_sx"), F.col("td_sxx"))))
-      .as("td_l"))
+    val packed = agg
+      .groupBy(keyCols.map(_ => F.col("td_slice").as("group")): _*)
+      .agg(F.sort_array(F.collect_list(F.struct(
+        F.col("td_v"), F.col("td_n"), F.col("td_sx"), F.col("td_sxx"))))
+        .as("td_l"))
     val l = F.col("td_l")
     def fld(i: Int, f: String) = F.try_element_at(l, F.lit(i)).getField(f)
     def stats(i: Int): (Column, Column, Column) = {
@@ -1408,7 +1417,7 @@ object Report {
     val se2 = vna + vnb
     val ok = F.size(l) === 2 && fld(1, "td_n") >= 2L &&
       fld(2, "td_n") >= 2L && se2 > 0.0d
-    packed.select(
+    val out = packed.select(group ++ Seq(
       F.size(l).cast("long").as("n_variants"),
       fld(1, "td_v").as("variant_a"), fld(2, "td_v").as("variant_b"),
       fld(1, "td_n").as("n_a"), fld(2, "td_n").as("n_b"),
@@ -1417,65 +1426,8 @@ object Report {
       F.when(ok, (ma - mb) / F.sqrt(se2)).as("t"),
       F.when(ok, (se2 * se2) /
         ((vna * vna) / (naD - F.lit(1.0d)) +
-          (vnb * vnb) / (nbD - F.lit(1.0d)))).as("dof"))
-  }
-
-  /** Per-slice [[welchT]] — the parametric face of the Simpson's-paradox
-    * check ([[mannWhitneyUByGroup]] is the rank face): did variant A's
-    * MEAN beat B's in every segment, or only in aggregate. One keyed
-    * fixed-point moments pass over (slice, variant) — never a per-slice
-    * job — then the bounded per-slice 2-struct fold with the identical
-    * finishing doubles as the single-slice operator. Slices with ≠2
-    * variants, n < 2 on either side, or zero standard error answer NULL
-    * t/dof honestly. Same |value| ≤ 2^21 fixed-point domain as
-    * [[welchT]]. Output: (group, n_variants, variant_a, variant_b, n_a,
-    * n_b, mean_a, mean_b, var_a, var_b, t, dof) ascending by group. */
-  def welchTByGroup(df: DataFrame, groupCol: String, variantCol: String,
-      valueCol: String): DataFrame = {
-    val g = F.col(groupCol).cast("string")
-    val v = F.col(variantCol).cast("string")
-    val x = F.col(valueCol).cast("double")
-    val fp = F.floor(x * F.lit(1048576.0d) + F.lit(0.5d))
-    val fpp = F.floor((x * x) * F.lit(1048576.0d) + F.lit(0.5d))
-    val agg = df.where(g.isNotNull && v.isNotNull && x.isNotNull)
-      .groupBy(g.as("td_slice"), v.as("td_v"))
-      .agg(F.count(F.lit(1)).as("td_n"),
-        F.sum(fp.cast("decimal(38,0)")).as("td_sx"),
-        F.sum(fpp.cast("decimal(38,0)")).as("td_sxx"))
-    val packed = agg.groupBy(F.col("td_slice").as("group"))
-      .agg(F.sort_array(F.collect_list(F.struct(
-        F.col("td_v"), F.col("td_n"), F.col("td_sx"), F.col("td_sxx"))))
-        .as("td_l"))
-    val l = F.col("td_l")
-    def fld(i: Int, f: String) = F.try_element_at(l, F.lit(i)).getField(f)
-    def stats(i: Int): (Column, Column, Column) = {
-      val nD = fld(i, "td_n").cast("double")
-      val sx = fld(i, "td_sx").cast("double") / F.lit(1048576.0d)
-      val sxx = fld(i, "td_sxx").cast("double") / F.lit(1048576.0d)
-      val m = sx / nD
-      val s2 = F.when(fld(i, "td_n") >= 2L,
-        (sxx - nD * m * m) / (nD - F.lit(1.0d)))
-      (nD, m, s2)
-    }
-    val (naD, ma, s2a) = stats(1)
-    val (nbD, mb, s2b) = stats(2)
-    val vna = s2a / naD
-    val vnb = s2b / nbD
-    val se2 = vna + vnb
-    val ok = F.size(l) === 2 && fld(1, "td_n") >= 2L &&
-      fld(2, "td_n") >= 2L && se2 > 0.0d
-    packed.select(
-      F.col("group"),
-      F.size(l).cast("long").as("n_variants"),
-      fld(1, "td_v").as("variant_a"), fld(2, "td_v").as("variant_b"),
-      fld(1, "td_n").as("n_a"), fld(2, "td_n").as("n_b"),
-      ma.as("mean_a"), mb.as("mean_b"),
-      s2a.as("var_a"), s2b.as("var_b"),
-      F.when(ok, (ma - mb) / F.sqrt(se2)).as("t"),
-      F.when(ok, (se2 * se2) /
-        ((vna * vna) / (naD - F.lit(1.0d)) +
-          (vnb * vnb) / (nbD - F.lit(1.0d)))).as("dof"))
-      .orderBy(F.col("group").asc)
+          (vnb * vnb) / (nbD - F.lit(1.0d)))).as("dof")): _*)
+    if (keyCols.isEmpty) out else out.orderBy(F.col("group").asc)
   }
 
   /** Cliff's delta — the EFFECT SIZE companion of [[mannWhitneyU]]
@@ -1491,48 +1443,8 @@ object Report {
     * n_variants, variant_a, variant_b, n_a, n_b, u_a, delta,
     * magnitude. */
   def cliffsDelta(df: DataFrame, variantCol: String,
-      valueCol: String): DataFrame = {
-    val v = F.col(variantCol).cast("string")
-    val x = F.col(valueCol).cast("double")
-    val clean = df.where(v.isNotNull && x.isNotNull)
-      .select(v.as("td_g"), x.as("td_x"))
-    // rank + tie count in ONE pass (r17: the former groupBy(key)+join
-    // re-scanned the input lineage per statistic)
-    val withCnt = graft.operators.ScalableRank.withMinRankAndTies(
-      clean, "td_x", "td_rk", "td_c")
-    val perGroup = withCnt.groupBy(F.col("td_g"))
-      .agg(F.count(F.lit(1)).as("td_n"),
-        F.sum((F.lit(2L) * F.col("td_rk") + F.col("td_c") - 1L)
-          .cast("decimal(38,0)")).as("td_r2"))
-    val packed = perGroup.agg(F.sort_array(F.collect_list(F.struct(
-      F.col("td_g"), F.col("td_n"), F.col("td_r2")))).as("td_l"))
-    val l = F.col("td_l")
-    def fld(i: Int, f: String) = F.try_element_at(l, F.lit(i)).getField(f)
-    val na = fld(1, "td_n"); val nb = fld(2, "td_n")
-    // 2U_A exact: Σ2R_A − n_A(n_A+1); numerator 2U_A − n_A·n_B exact too
-    val u2a = fld(1, "td_r2") -
-      (na.cast("decimal(19,0)") * (na + 1L).cast("decimal(19,0)"))
-        .cast("decimal(38,0)")
-    val nab = (na.cast("decimal(19,0)") * nb.cast("decimal(19,0)"))
-      .cast("decimal(38,0)")
-    val delta = (u2a - nab).cast("double") / nab.cast("double")
-    val aDelta = F.abs(delta)
-    packed.select(
-      F.size(l).cast("long").as("n_variants"),
-      fld(1, "td_g").as("variant_a"), fld(2, "td_g").as("variant_b"),
-      na.as("n_a"), nb.as("n_b"),
-      // u_a only means "A's Mann-Whitney U" when exactly two variants
-      // exist — with 3+ the global min-ranks include the extra variants'
-      // rows and the statistic is cross-contaminated: answer NULL
-      F.when(F.size(l) === 2,
-        u2a.cast("double") / F.lit(2.0d)).as("u_a"),
-      F.when(F.size(l) === 2, delta).as("delta"),
-      F.when(F.size(l) === 2,
-        F.when(aDelta < 0.147d, "negligible")
-          .when(aDelta < 0.33d, "small")
-          .when(aDelta < 0.474d, "medium")
-          .otherwise("large")).as("magnitude"))
-  }
+      valueCol: String): DataFrame =
+    cliffsDeltaImpl(df, variantCol, valueCol, keyCols = Nil)
 
   /** Per-slice [[cliffsDelta]] — effect size PER SEGMENT next to
     * [[mannWhitneyUByGroup]]'s per-slice significance (a winning
@@ -1547,28 +1459,25 @@ object Report {
     * counts. Output: (group, n_variants, variant_a, variant_b, n_a,
     * n_b, u_a, delta, magnitude) ascending by group. */
   def cliffsDeltaByGroup(df: DataFrame, groupCol: String,
-      variantCol: String, valueCol: String): DataFrame = {
-    val g = F.col(groupCol).cast("string")
-    val v = F.col(variantCol).cast("string")
-    val x = F.col(valueCol).cast("double")
-    val clean = df.where(g.isNotNull && v.isNotNull && x.isNotNull)
-      .select(g.as("td_s"), v.as("td_g"), x.as("td_x"))
-    val ranked = graft.operators.ScalableRank.withRankByGroup(
-      clean, "td_s", "td_x", "td_rk", method = "min")
-    val withCnt = ranked.join(
-      clean.groupBy(F.col("td_s"), F.col("td_x"))
-        .agg(F.count(F.lit(1)).as("td_c")),
-      Seq("td_s", "td_x"))
-    val perGroup = withCnt.groupBy(F.col("td_s"), F.col("td_g"))
+      variantCol: String, valueCol: String): DataFrame =
+    cliffsDeltaImpl(df, variantCol, valueCol, keyCols = Seq(groupCol))
+
+  /** `keyCols` as in [[welchTImpl]]. */
+  private def cliffsDeltaImpl(df: DataFrame, variantCol: String,
+      valueCol: String, keyCols: Seq[String]): DataFrame = {
+    val withCnt = minRanksWithTies(df, variantCol, valueCol, keyCols)
+    val slice = keyCols.map(_ => F.col("td_s"))
+    val perGroup = withCnt.groupBy(slice :+ F.col("td_g"): _*)
       .agg(F.count(F.lit(1)).as("td_n"),
         F.sum((F.lit(2L) * F.col("td_rk") + F.col("td_c") - 1L)
           .cast("decimal(38,0)")).as("td_r2"))
-    val packed = perGroup.groupBy(F.col("td_s").as("group"))
+    val packed = perGroup.groupBy(slice.map(_.as("group")): _*)
       .agg(F.sort_array(F.collect_list(F.struct(
         F.col("td_g"), F.col("td_n"), F.col("td_r2")))).as("td_l"))
     val l = F.col("td_l")
     def fld(i: Int, f: String) = F.try_element_at(l, F.lit(i)).getField(f)
     val na = fld(1, "td_n"); val nb = fld(2, "td_n")
+    // 2U_A exact: Σ2R_A − n_A(n_A+1); numerator 2U_A − n_A·n_B exact too
     val u2a = fld(1, "td_r2") -
       (na.cast("decimal(19,0)") * (na + 1L).cast("decimal(19,0)"))
         .cast("decimal(38,0)")
@@ -1576,12 +1485,13 @@ object Report {
       .cast("decimal(38,0)")
     val delta = (u2a - nab).cast("double") / nab.cast("double")
     val aDelta = F.abs(delta)
-    packed.select(
-      F.col("group"),
+    val out = packed.select(keyCols.map(_ => F.col("group")) ++ Seq(
       F.size(l).cast("long").as("n_variants"),
       fld(1, "td_g").as("variant_a"), fld(2, "td_g").as("variant_b"),
       na.as("n_a"), nb.as("n_b"),
-      // the single-slice rule: u_a is only A's U with exactly 2 variants
+      // u_a only means "A's Mann-Whitney U" when exactly two variants
+      // exist — with 3+ the min-ranks include the extra variants' rows
+      // and the statistic is cross-contaminated: answer NULL
       F.when(F.size(l) === 2,
         u2a.cast("double") / F.lit(2.0d)).as("u_a"),
       F.when(F.size(l) === 2, delta).as("delta"),
@@ -1589,8 +1499,36 @@ object Report {
         F.when(aDelta < 0.147d, "negligible")
           .when(aDelta < 0.33d, "small")
           .when(aDelta < 0.474d, "medium")
-          .otherwise("large")).as("magnitude"))
-      .orderBy(F.col("group").asc)
+          .otherwise("large")).as("magnitude")): _*)
+    if (keyCols.isEmpty) out else out.orderBy(F.col("group").asc)
+  }
+
+  /** The rank step shared by [[cliffsDeltaImpl]] and [[mannWhitneyUImpl]]:
+    * non-NULL rows as (td_s?, td_g = variant, td_x = value) with the
+    * MIN-rank `td_rk` of td_x and its tie count `td_c`. Global: one
+    * range-shuffle pass. Per slice: ranks WITHIN each slice from one
+    * composite range shuffle, then per-(slice, value) counts joined back. */
+  private def minRanksWithTies(df: DataFrame, variantCol: String,
+      valueCol: String, keyCols: Seq[String]): DataFrame = {
+    val slice = keyCols.map(F.col(_).cast("string"))
+    val v = F.col(variantCol).cast("string")
+    val x = F.col(valueCol).cast("double")
+    val clean = df.where((slice :+ v :+ x).map(_.isNotNull).reduce(_ && _))
+      .select(slice.map(_.as("td_s")) ++ Seq(v.as("td_g"), x.as("td_x")): _*)
+    if (keyCols.isEmpty)
+      // rank + tie count in ONE pass (r17: the former groupBy(key)+join
+      // re-scanned the input lineage per statistic)
+      graft.operators.ScalableRank.withMinRankAndTies(
+        clean, "td_x", "td_rk", "td_c")
+    else
+      // method="min": the midrank identity 2·mid = 2·min + cnt − 1 needs
+      // MIN-ranks — row_number would split tie blocks arbitrarily across
+      // variants and desync from the oracle's rank()
+      graft.operators.ScalableRank.withRankByGroup(
+          clean, "td_s", "td_x", "td_rk", method = "min")
+        .join(clean.groupBy(F.col("td_s"), F.col("td_x"))
+            .agg(F.count(F.lit(1)).as("td_c")),
+          Seq("td_s", "td_x"))
   }
 
   /** Mann–Whitney U (Wilcoxon rank-sum) A/B test — the NONPARAMETRIC
@@ -1613,25 +1551,42 @@ object Report {
     * lexicographically first. Output (one row): n_variants, variant_a,
     * variant_b, n_a, n_b, u_a, u_b, tie_term, z. */
   def mannWhitneyU(df: DataFrame, variantCol: String,
-      valueCol: String): DataFrame = {
-    val v = F.col(variantCol).cast("string")
-    val x = F.col(valueCol).cast("double")
-    val clean = df.where(v.isNotNull && x.isNotNull)
-      .select(v.as("td_g"), x.as("td_x"))
-    val withCnt = graft.operators.ScalableRank.withMinRankAndTies(
-      clean, "td_x", "td_rk", "td_c")
+      valueCol: String): DataFrame =
+    mannWhitneyUImpl(df, variantCol, valueCol, keyCols = Nil)
+
+  /** Per-slice [[mannWhitneyU]] — the fairness/robustness face of the
+    * rank-sum test (did variant A beat B in EVERY segment, or only in
+    * aggregate — the Simpson's-paradox check an A/B readout needs):
+    * the same midrank algebra per slice through ONE composite range
+    * shuffle ([[graft.operators.ScalableRank.withRankByGroup]] on the
+    * slice key — ranks are computed WITHIN each slice, as running the
+    * two-sample test per slice requires; no per-slice jobs), per-value
+    * counts keyed by (slice, value), then the bounded per-slice
+    * 2-struct fold. Slices with ≠2 variants or all-tied values answer
+    * NULL z honestly. Output: (group, n_variants, variant_a, variant_b,
+    * n_a, n_b, u_a, u_b, tie_term, z) ascending by group. */
+  def mannWhitneyUByGroup(df: DataFrame, groupCol: String,
+      variantCol: String, valueCol: String): DataFrame =
+    mannWhitneyUImpl(df, variantCol, valueCol, keyCols = Seq(groupCol))
+
+  /** `keyCols` as in [[welchTImpl]]. */
+  private def mannWhitneyUImpl(df: DataFrame, variantCol: String,
+      valueCol: String, keyCols: Seq[String]): DataFrame = {
+    val withCnt = minRanksWithTies(df, variantCol, valueCol, keyCols)
+    val slice = keyCols.map(_ => F.col("td_s"))
     // one keyed pass: per group the size, Σ(2·midrank) and the group's
     // share of the tie term (both corpus-exact decimals)
-    val perGroup = withCnt.groupBy(F.col("td_g"))
+    val perGroup = withCnt.groupBy(slice :+ F.col("td_g"): _*)
       .agg(F.count(F.lit(1)).as("td_n"),
         F.sum((F.lit(2L) * F.col("td_rk") + F.col("td_c") - 1L)
           .cast("decimal(38,0)")).as("td_r2"),
         F.sum((F.col("td_c").cast("decimal(19,0)") *
           F.col("td_c").cast("decimal(19,0)") - 1L).cast("decimal(38,0)"))
           .as("td_t"))
-    val packed = perGroup.agg(F.sort_array(F.collect_list(F.struct(
-      F.col("td_g"), F.col("td_n"), F.col("td_r2"), F.col("td_t"))))
-      .as("td_l"))
+    val packed = perGroup.groupBy(slice.map(_.as("group")): _*)
+      .agg(F.sort_array(F.collect_list(F.struct(
+        F.col("td_g"), F.col("td_n"), F.col("td_r2"), F.col("td_t"))))
+        .as("td_l"))
     val l = F.col("td_l")
     def fld(i: Int, f: String) = F.try_element_at(l, F.lit(i)).getField(f)
     val na = fld(1, "td_n"); val nb = fld(2, "td_n")
@@ -1648,79 +1603,15 @@ object Report {
     val mu = (naD * nbD) / F.lit(2.0d)
     val sigma = F.sqrt(((naD * nbD) / F.lit(12.0d)) *
       ((nD + F.lit(1.0d)) - tie / (nD * (nD - F.lit(1.0d)))))
-    packed.select(
+    val out = packed.select(keyCols.map(_ => F.col("group")) ++ Seq(
       F.size(l).cast("long").as("n_variants"),
       fld(1, "td_g").as("variant_a"), fld(2, "td_g").as("variant_b"),
       na.as("n_a"), nb.as("n_b"),
       uA.as("u_a"), uB.as("u_b"),
       (fld(1, "td_t") + fld(2, "td_t")).cast("double").as("tie_term"),
       F.when(F.size(l) === 2 && sigma > 0.0d,
-        (uA - mu) / sigma).as("z"))
-  }
-
-  /** Per-slice [[mannWhitneyU]] — the fairness/robustness face of the
-    * rank-sum test (did variant A beat B in EVERY segment, or only in
-    * aggregate — the Simpson's-paradox check an A/B readout needs):
-    * the same midrank algebra per slice through ONE composite range
-    * shuffle ([[graft.operators.ScalableRank.withRankByGroup]] on the
-    * slice key — ranks are computed WITHIN each slice, as running the
-    * two-sample test per slice requires; no per-slice jobs), per-value
-    * counts keyed by (slice, value), then the bounded per-slice
-    * 2-struct fold. Slices with ≠2 variants or all-tied values answer
-    * NULL z honestly. Output: (group, n_variants, variant_a, variant_b,
-    * n_a, n_b, u_a, u_b, tie_term, z) ascending by group. */
-  def mannWhitneyUByGroup(df: DataFrame, groupCol: String,
-      variantCol: String, valueCol: String): DataFrame = {
-    val g = F.col(groupCol).cast("string")
-    val v = F.col(variantCol).cast("string")
-    val x = F.col(valueCol).cast("double")
-    val clean = df.where(g.isNotNull && v.isNotNull && x.isNotNull)
-      .select(g.as("td_s"), v.as("td_g"), x.as("td_x"))
-    // method="min": the midrank identity 2·mid = 2·min + cnt − 1 needs
-    // MIN-ranks — row_number would split tie blocks arbitrarily across
-    // variants and desync from the oracle's rank()
-    val ranked = graft.operators.ScalableRank.withRankByGroup(
-      clean, "td_s", "td_x", "td_rk", method = "min")
-    val withCnt = ranked.join(
-      clean.groupBy(F.col("td_s"), F.col("td_x"))
-        .agg(F.count(F.lit(1)).as("td_c")),
-      Seq("td_s", "td_x"))
-    val perGroup = withCnt.groupBy(F.col("td_s"), F.col("td_g"))
-      .agg(F.count(F.lit(1)).as("td_n"),
-        F.sum((F.lit(2L) * F.col("td_rk") + F.col("td_c") - 1L)
-          .cast("decimal(38,0)")).as("td_r2"),
-        F.sum((F.col("td_c").cast("decimal(19,0)") *
-          F.col("td_c").cast("decimal(19,0)") - 1L).cast("decimal(38,0)"))
-          .as("td_t"))
-    val packed = perGroup.groupBy(F.col("td_s").as("group"))
-      .agg(F.sort_array(F.collect_list(F.struct(
-        F.col("td_g"), F.col("td_n"), F.col("td_r2"), F.col("td_t"))))
-        .as("td_l"))
-    val l = F.col("td_l")
-    def fld(i: Int, f: String) = F.try_element_at(l, F.lit(i)).getField(f)
-    val na = fld(1, "td_n"); val nb = fld(2, "td_n")
-    val naD = na.cast("double"); val nbD = nb.cast("double")
-    val nD = naD + nbD
-    val u2a = fld(1, "td_r2") -
-      (na.cast("decimal(19,0)") * (na + 1L).cast("decimal(19,0)"))
-        .cast("decimal(38,0)")
-    val uA = u2a.cast("double") / F.lit(2.0d)
-    val uB = (na.cast("decimal(19,0)") * nb.cast("decimal(19,0)"))
-      .cast("double") - uA
-    val tie = (fld(1, "td_t") + fld(2, "td_t")).cast("double")
-    val mu = (naD * nbD) / F.lit(2.0d)
-    val sigma = F.sqrt(((naD * nbD) / F.lit(12.0d)) *
-      ((nD + F.lit(1.0d)) - tie / (nD * (nD - F.lit(1.0d)))))
-    packed.select(
-      F.col("group"),
-      F.size(l).cast("long").as("n_variants"),
-      fld(1, "td_g").as("variant_a"), fld(2, "td_g").as("variant_b"),
-      na.as("n_a"), nb.as("n_b"),
-      uA.as("u_a"), uB.as("u_b"),
-      (fld(1, "td_t") + fld(2, "td_t")).cast("double").as("tie_term"),
-      F.when(F.size(l) === 2 && sigma > 0.0d,
-        (uA - mu) / sigma).as("z"))
-      .orderBy(F.col("group").asc)
+        (uA - mu) / sigma).as("z")): _*)
+    if (keyCols.isEmpty) out else out.orderBy(F.col("group").asc)
   }
 
   /** Two-sample Kolmogorov–Smirnov D — the DISTRIBUTION-SHAPE companion
@@ -1837,7 +1728,9 @@ object Report {
     * per-slice variant roster is a #slices-row relation joined on the
     * slice key. Slices with ≠2 variants answer NULL d/d_at with the
     * observed count. Output: (group, n_variants, variant_a, variant_b,
-    * n_a, n_b, d, d_at) ascending by group. */
+    * n_a, n_b, d, d_at) ascending by group. Kept apart from
+    * [[ksTwoSample]]: the roster and prefix plans differ, and the global
+    * one answers n_variants 0 on empty input. */
   def ksTwoSampleByGroup(df: DataFrame, groupCol: String,
       variantCol: String, valueCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -2019,31 +1912,8 @@ object Report {
     * double op once. Days whose weekday has std 0 (or a single sample)
     * answer NULL z honestly. Output:
     * (day, dow, cnt, dow_mean, dow_std, z) ascending by day. */
-  def seasonalDaily(df: DataFrame, tsCol: String): DataFrame = {
-    val daily = df.where(F.col(tsCol).isNotNull)
-      .groupBy(F.to_date(F.col(tsCol)).as("day"))
-      .agg(F.count(F.lit(1)).as("cnt"))
-      .withColumn("dow", F.unix_date(F.col("day")).cast("long") % 7L)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(F.col("dow"))
-      .rowsBetween(Long.MinValue, Long.MaxValue)
-    val nD = F.count(F.lit(1)).over(w).cast("double")
-    val mean = F.sum(F.col("cnt")).over(w).cast("double") / nD
-    val ex2 = F.sum((F.col("cnt").cast("decimal(19,0)") *
-        F.col("cnt").cast("decimal(19,0)")).cast("decimal(38,0)")).over(w)
-      .cast("double") / nD
-    val staged = daily
-      .withColumn("dow_mean", mean)
-      .withColumn("dow_std",
-        F.sqrt(F.greatest(F.lit(0.0d),
-          ex2 - F.col("dow_mean") * F.col("dow_mean"))))
-    staged.select(F.col("day"), F.col("dow"), F.col("cnt"),
-        F.col("dow_mean"), F.col("dow_std"),
-        F.when(F.col("dow_std") > 0.0d,
-          (F.col("cnt").cast("double") - F.col("dow_mean")) /
-            F.col("dow_std")).as("z"))
-      .orderBy(F.col("day").asc)
-  }
+  def seasonalDaily(df: DataFrame, tsCol: String): DataFrame =
+    seasonalDailyImpl(df, tsCol, keyCols = Nil)
 
   /** Per-group [[seasonalDaily]] — one weekday baseline PER SLICE (per
     * event type, per source), completing the grouped anomaly family
@@ -2058,14 +1928,18 @@ object Report {
     * (group, day, dow, cnt, dow_mean, dow_std, z) ascending by
     * (group, day). */
   def seasonalDailyByGroup(df: DataFrame, groupCol: String,
-      tsCol: String): DataFrame = {
-    val g = F.col(groupCol).cast("string")
-    val daily = df.where(g.isNotNull && F.col(tsCol).isNotNull)
-      .groupBy(g.as("group"), F.to_date(F.col(tsCol)).as("day"))
-      .agg(F.count(F.lit(1)).as("cnt"))
+      tsCol: String): DataFrame =
+    seasonalDailyImpl(df, tsCol, keyCols = Seq(groupCol))
+
+  /** `keyCols` is Nil (one global day series) or the one slice column
+    * (output `group`, cast to string, NULL slices dropped). */
+  private def seasonalDailyImpl(df: DataFrame, tsCol: String,
+      keyCols: Seq[String]): DataFrame = {
+    val group = keyCols.map(_ => F.col("group"))
+    val daily = dailyCounts(df, tsCol, keyCols)
       .withColumn("dow", F.unix_date(F.col("day")).cast("long") % 7L)
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(F.col("group"), F.col("dow"))
+      .partitionBy(group :+ F.col("dow"): _*)
       .rowsBetween(Long.MinValue, Long.MaxValue)
     val nD = F.count(F.lit(1)).over(w).cast("double")
     val mean = F.sum(F.col("cnt")).over(w).cast("double") / nD
@@ -2077,12 +1951,12 @@ object Report {
       .withColumn("dow_std",
         F.sqrt(F.greatest(F.lit(0.0d),
           ex2 - F.col("dow_mean") * F.col("dow_mean"))))
-    staged.select(F.col("group"), F.col("day"), F.col("dow"), F.col("cnt"),
+    staged.select(group ++ Seq(F.col("day"), F.col("dow"), F.col("cnt"),
         F.col("dow_mean"), F.col("dow_std"),
         F.when(F.col("dow_std") > 0.0d,
           (F.col("cnt").cast("double") - F.col("dow_mean")) /
-            F.col("dow_std")).as("z"))
-      .orderBy(F.col("group").asc, F.col("day").asc)
+            F.col("dow_std")).as("z")): _*)
+      .orderBy(group.map(_.asc) :+ F.col("day").asc: _*)
   }
 
   /** Two-sided CUSUM over DAILY event counts — the change-point/anomaly
@@ -2097,34 +1971,8 @@ object Report {
     * Output: (day, cnt, cusum_hi, cusum_lo) ascending; empty input
     * answers zero rows. */
   def cusumDaily(df: DataFrame, tsCol: String,
-      slack: Double = 0.0): DataFrame = {
-    require(slack >= 0.0d, s"slack must be >= 0, got $slack")
-    val daily = df.where(F.col(tsCol).isNotNull)
-      .groupBy(F.to_date(F.col(tsCol)).as("day"))
-      .agg(F.count(F.lit(1)).as("cnt"))
-    val packed = daily.agg(F.sort_array(F.collect_list(
-      F.struct(F.col("day"), F.col("cnt")))).as("td_l"))
-    val l = F.col("td_l")
-    // μ = Σcnt/days: exact long sum, ONE stated division
-    val mu = F.aggregate(l, F.lit(0L), (a, e) => a + e.getField("cnt"))
-      .cast("double") / F.size(l).cast("double")
-    def ramp(sign: Double): Column => Column = i =>
-      F.aggregate(F.slice(l, F.lit(1), i), F.lit(0.0d), (acc, e) =>
-        F.greatest(F.lit(0.0d), acc +
-          (F.lit(sign) * (e.getField("cnt").cast("double") - mu) -
-            F.lit(slack))))
-    packed.where(F.size(l) > 0).select(F.explode(F.transform(
-        F.sequence(F.lit(1), F.size(l)),
-        i => F.struct(
-          F.element_at(l, i).getField("day").as("day"),
-          F.element_at(l, i).getField("cnt").as("cnt"),
-          ramp(1.0d)(i).as("cusum_hi"),
-          ramp(-1.0d)(i).as("cusum_lo")))).as("td_r"))
-      .select(F.col("td_r.day").as("day"), F.col("td_r.cnt").as("cnt"),
-        F.col("td_r.cusum_hi").as("cusum_hi"),
-        F.col("td_r.cusum_lo").as("cusum_lo"))
-      .orderBy(F.col("day").asc)
-  }
+      slack: Double = 0.0): DataFrame =
+    cusumDailyImpl(df, tsCol, slack, keyCols = Nil)
 
   /** Per-group [[cusumDaily]] — per-slice change-point ramps (each
     * event type / source against ITS OWN grand mean), completing the
@@ -2138,16 +1986,15 @@ object Report {
     * (group, day, cnt, cusum_hi, cusum_lo) ascending by (group, day);
     * empty input answers zero rows. */
   def cusumDailyByGroup(df: DataFrame, groupCol: String, tsCol: String,
-      slack: Double = 0.0): DataFrame = {
+      slack: Double = 0.0): DataFrame =
+    cusumDailyImpl(df, tsCol, slack, keyCols = Seq(groupCol))
+
+  /** `keyCols` as in [[seasonalDailyImpl]]. */
+  private def cusumDailyImpl(df: DataFrame, tsCol: String, slack: Double,
+      keyCols: Seq[String]): DataFrame = {
     require(slack >= 0.0d, s"slack must be >= 0, got $slack")
-    val g = F.col(groupCol).cast("string")
-    val daily = df.where(g.isNotNull && F.col(tsCol).isNotNull)
-      .groupBy(g.as("group"), F.to_date(F.col(tsCol)).as("day"))
-      .agg(F.count(F.lit(1)).as("cnt"))
-    val packed = daily.groupBy(F.col("group"))
-      .agg(F.sort_array(F.collect_list(
-        F.struct(F.col("day"), F.col("cnt")))).as("td_l"))
     val l = F.col("td_l")
+    // μ = Σcnt/days: exact long sum, ONE stated division (per group)
     val mu = F.aggregate(l, F.lit(0L), (a, e) => a + e.getField("cnt"))
       .cast("double") / F.size(l).cast("double")
     def ramp(sign: Double): Column => Column = i =>
@@ -2155,19 +2002,8 @@ object Report {
         F.greatest(F.lit(0.0d), acc +
           (F.lit(sign) * (e.getField("cnt").cast("double") - mu) -
             F.lit(slack))))
-    packed.where(F.size(l) > 0)
-      .select(F.col("group"), F.explode(F.transform(
-        F.sequence(F.lit(1), F.size(l)),
-        i => F.struct(
-          F.element_at(l, i).getField("day").as("day"),
-          F.element_at(l, i).getField("cnt").as("cnt"),
-          ramp(1.0d)(i).as("cusum_hi"),
-          ramp(-1.0d)(i).as("cusum_lo")))).as("td_r"))
-      .select(F.col("group"),
-        F.col("td_r.day").as("day"), F.col("td_r.cnt").as("cnt"),
-        F.col("td_r.cusum_hi").as("cusum_hi"),
-        F.col("td_r.cusum_lo").as("cusum_lo"))
-      .orderBy(F.col("group").asc, F.col("day").asc)
+    dailyFolds(df, tsCol, keyCols,
+      Seq("cusum_hi" -> ramp(1.0d), "cusum_lo" -> ramp(-1.0d)))
   }
 
   /** EWMA baseline over DAILY event counts — the drift/anomaly monitor
@@ -2179,32 +2015,8 @@ object Report {
     * O(days²) work on METADATA, never on rows; β = 1−α is stated once
     * on the driver and the oracle restates the literal difference cast
     * to DOUBLE). Output: (day, cnt, ewma) ascending. */
-  def ewmaDaily(df: DataFrame, tsCol: String, alpha: Double = 0.3): DataFrame = {
-    require(alpha > 0.0d && alpha <= 1.0d, s"alpha must be in (0,1], got $alpha")
-    val beta = 1.0d - alpha
-    val daily = df.where(F.col(tsCol).isNotNull)
-      .groupBy(F.to_date(F.col(tsCol)).as("day"))
-      .agg(F.count(F.lit(1)).as("cnt"))
-    val packed = daily.agg(F.sort_array(F.collect_list(
-      F.struct(F.col("day"), F.col("cnt")))).as("td_l"))
-    val l = F.col("td_l")
-    // empty input packs an empty list; sequence(1, 0) = [1, 0] would
-    // feed element_at an out-of-range index under ANSI — filter first
-    // so the empty corpus answers zero rows
-    packed.where(F.size(l) > 0).select(F.explode(F.transform(
-        F.sequence(F.lit(1), F.size(l)),
-        i => F.struct(
-          F.element_at(l, i).getField("day").as("day"),
-          F.element_at(l, i).getField("cnt").as("cnt"),
-          F.aggregate(F.slice(l, F.lit(2), i - 1),
-            F.element_at(l, 1).getField("cnt").cast("double"),
-            (acc, e) => acc * F.lit(beta) +
-              F.lit(alpha) * e.getField("cnt").cast("double"))
-            .as("ewma")))).as("td_r"))
-      .select(F.col("td_r.day").as("day"), F.col("td_r.cnt").as("cnt"),
-        F.col("td_r.ewma").as("ewma"))
-      .orderBy(F.col("day").asc)
-  }
+  def ewmaDaily(df: DataFrame, tsCol: String, alpha: Double = 0.3): DataFrame =
+    ewmaDailyImpl(df, tsCol, alpha, keyCols = Nil)
 
   /** Per-group [[ewmaDaily]] — one trend baseline PER SLICE (per
     * event type, per source): the grouped face of the volume-anomaly
@@ -2215,31 +2027,59 @@ object Report {
     * (group, day, cnt, ewma) ascending by (group, day); empty input
     * answers zero rows. */
   def ewmaDailyByGroup(df: DataFrame, groupCol: String, tsCol: String,
-      alpha: Double = 0.3): DataFrame = {
+      alpha: Double = 0.3): DataFrame =
+    ewmaDailyImpl(df, tsCol, alpha, keyCols = Seq(groupCol))
+
+  /** `keyCols` as in [[seasonalDailyImpl]]. */
+  private def ewmaDailyImpl(df: DataFrame, tsCol: String, alpha: Double,
+      keyCols: Seq[String]): DataFrame = {
     require(alpha > 0.0d && alpha <= 1.0d, s"alpha must be in (0,1], got $alpha")
     val beta = 1.0d - alpha
-    val g = F.col(groupCol).cast("string")
-    val daily = df.where(g.isNotNull && F.col(tsCol).isNotNull)
-      .groupBy(g.as("group"), F.to_date(F.col(tsCol)).as("day"))
+    val l = F.col("td_l")
+    dailyFolds(df, tsCol, keyCols, Seq("ewma" -> (i =>
+      F.aggregate(F.slice(l, F.lit(2), i - 1),
+        F.element_at(l, 1).getField("cnt").cast("double"),
+        (acc, e) => acc * F.lit(beta) +
+          F.lit(alpha) * e.getField("cnt").cast("double")))))
+  }
+
+  /** The (group?, day, cnt) grid of the daily anomaly family: one keyed
+    * count shuffle, NULL timestamps and slices dropped. */
+  private def dailyCounts(df: DataFrame, tsCol: String,
+      keyCols: Seq[String]): DataFrame = {
+    val slice = keyCols.map(F.col(_).cast("string"))
+    df.where((slice :+ F.col(tsCol)).map(_.isNotNull).reduce(_ && _))
+      .groupBy(slice.map(_.as("group")) :+
+        F.to_date(F.col(tsCol)).as("day"): _*)
       .agg(F.count(F.lit(1)).as("cnt"))
-    val packed = daily.groupBy(F.col("group"))
+  }
+
+  /** The day series shared by [[cusumDailyImpl]] and [[ewmaDailyImpl]]:
+    * the [[dailyCounts]] grid packed per group into a sorted (day, cnt)
+    * list `td_l`, then one (group?, day, cnt, stats...) row per day i,
+    * each statistic a pinned fold over the list (O(days²) work on
+    * METADATA, never on rows), ascending by (group?, day). */
+  private def dailyFolds(df: DataFrame, tsCol: String, keyCols: Seq[String],
+      stats: Seq[(String, Column => Column)]): DataFrame = {
+    val group = keyCols.map(_ => F.col("group"))
+    val packed = dailyCounts(df, tsCol, keyCols).groupBy(group: _*)
       .agg(F.sort_array(F.collect_list(
         F.struct(F.col("day"), F.col("cnt")))).as("td_l"))
     val l = F.col("td_l")
+    // empty input packs an empty list; sequence(1, 0) = [1, 0] would
+    // feed element_at an out-of-range index under ANSI — filter first
+    // so the empty corpus answers zero rows
     packed.where(F.size(l) > 0)
-      .select(F.col("group"), F.explode(F.transform(
+      .select(group :+ F.explode(F.transform(
         F.sequence(F.lit(1), F.size(l)),
-        i => F.struct(
+        i => F.struct(Seq(
           F.element_at(l, i).getField("day").as("day"),
-          F.element_at(l, i).getField("cnt").as("cnt"),
-          F.aggregate(F.slice(l, F.lit(2), i - 1),
-            F.element_at(l, 1).getField("cnt").cast("double"),
-            (acc, e) => acc * F.lit(beta) +
-              F.lit(alpha) * e.getField("cnt").cast("double"))
-            .as("ewma")))).as("td_r"))
-      .select(F.col("group"), F.col("td_r.day").as("day"),
-        F.col("td_r.cnt").as("cnt"), F.col("td_r.ewma").as("ewma"))
-      .orderBy(F.col("group").asc, F.col("day").asc)
+          F.element_at(l, i).getField("cnt").as("cnt")) ++
+          stats.map { case (name, stat) => stat(i).as(name) }: _*)))
+        .as("td_r"): _*)
+      .select(group ++ ("day" +: "cnt" +: stats.map(_._1))
+        .map(c => F.col(s"td_r.$c").as(c)): _*)
+      .orderBy(group.map(_.asc) :+ F.col("day").asc: _*)
   }
 
   /** Pearson chi-squared test of independence between two CATEGORICAL

@@ -40,12 +40,14 @@ object Retrieval {
       .groupBy("id", "term").agg(F.count(F.lit(1)).as("tf"))
 
   /** A built BM25 index: the postings relation, per-document lengths, and
-    * the two corpus scalars. `postings`/`docLen` are lazy plans — persist
-    * them with [[saveBm25]] (parquet, partitioned by a term hash) to reuse
-    * across query batches without re-tokenizing the corpus. A loaded index
-    * carries `termBuckets`, and [[scoreQuery]] then adds the bucket
-    * predicate so the postings scan PRUNES to the query terms' partitions
-    * — at 100 TB a query touches |terms| directories, not the corpus. */
+    * the two corpus scalars. Contract: `docLen` holds one row per id and
+    * equals `postings.groupBy(id).sum(tf)`. `postings`/`docLen` are lazy
+    * plans — persist them with [[saveBm25]] (parquet, partitioned by a
+    * term hash) to reuse across query batches without re-tokenizing the
+    * corpus. A loaded index carries `termBuckets`, and [[scoreQuery]] then
+    * adds the bucket predicate so the postings scan PRUNES to the query
+    * terms' partitions — at 100 TB a query touches |terms| directories,
+    * not the corpus. */
   final case class Bm25Index(postings: DataFrame, docLen: DataFrame,
       nDocs: Long, avgDl: Double, termBuckets: Option[Int] = None,
       totalTokens: Long = -1L)
@@ -67,7 +69,9 @@ object Retrieval {
     * through the path's Hadoop FS (remote stores keep their stamp — same
     * contract as [[Ivf.save]]). N and avgdl are NOT recomputed at load, so
     * a loaded index scores bit-identically to the index it was saved
-    * from. */
+    * from. The doclen files are re-derived from the written postings, so
+    * `index.docLen` must equal `postings.groupBy(id).sum(tf)` (the
+    * [[Bm25Index]] contract) for the saved index to match `index`. */
   def saveBm25(index: Bm25Index, path: String, termBuckets: Int = 64): Unit = {
     require(termBuckets > 0, s"termBuckets must be positive, got $termBuckets")
     index.postings
@@ -154,8 +158,14 @@ object Retrieval {
         F.size(F.array_remove(Dedup.tokens(F.col(textCol)), ""))
           .cast("long").as("dl"))
       .where(F.col("dl") > 0)
-    val row = docLen.agg(F.count(F.lit(1)).as("n"), F.sum("dl").as("toks")).head()
+    // the distinct-id count rides the same job: a repeated id would count
+    // its doc twice in N and fan out scoreQuery's docLen join
+    val row = docLen.agg(F.count(F.lit(1)).as("n"), F.sum("dl").as("toks"),
+      F.count_distinct(F.col("id")).as("ids")).head()
     val n = row.getLong(0)
+    require(row.getLong(2) == n,
+      s"buildBm25 input repeats ids in column $idCol: ${n - row.getLong(2)} " +
+        "indexed rows share an id with another row or have a NULL id")
     val toks = if (n == 0) 0L else row.getLong(1)
     val avgDl = if (n == 0) 0.0 else toks.toDouble / n
     Bm25Index(postings, docLen, n, avgDl, totalTokens = toks)

@@ -12,16 +12,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.{SysCtx, SystemColumns, TableFrame}
 import graft.expressions.UuidV7
 
-/** One committed table version (a line in the table's metadata log).
-  * `schemaB64` carries the staged schema (base64 of `StructType.json`) so
-  * readers never re-infer types — in particular hive partition-directory
-  * values, which plain `spark.read.parquet` would re-type from the directory
-  * names (string "01" → int 1). */
 /** One [[TableStore.fsck]] finding. `kind` ∈ missing-data / row-mismatch /
   * orphan-dir / staging-leak / staging-debris / pruned-residue. */
 final case class FsckIssue(kind: String, collection: String, table: String,
   detail: String)
 
+/** One committed table version (a line in the table's metadata log).
+  * `schemaB64` carries the staged schema (base64 of `StructType.json`) so
+  * readers never re-infer types — in particular hive partition-directory
+  * values, which plain `spark.read.parquet` would re-type from the directory
+  * names (string "01" → int 1). */
 final case class VersionEntry(
     id: String,
     execution: String,

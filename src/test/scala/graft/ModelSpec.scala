@@ -957,17 +957,6 @@ class ModelSpec extends AnyFunSuite {
     assert(r1.getLong(0) == 1L && r1.isNullAt(2) && r1.isNullAt(8))
   }
 
-  test("hitsFused: same hub/authority separation as the gate variant") {
-    import spark.implicits._
-    val edges = Seq(("a", "c"), ("b", "c"), ("b", "d")).toDF("src", "dst")
-    val h = GraphRank.hitsFused(edges, "src", "dst", iters = 6)
-      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2)))
-      .toMap
-    assert(h("b")._1 > h("a")._1, h.toString)
-    assert(h("c")._2 > h("d")._2, h.toString)
-    assert(h("c")._1 == 0.0 && h("a")._2 == 0.0)
-  }
-
   test("kHopReach: exact path-graph reach; HyperBall ball tracks " +
     "exact+1 on small graphs") {
     import spark.implicits._
@@ -1453,5 +1442,58 @@ class ModelSpec extends AnyFunSuite {
     val z = TextAnalysis.readability(
       Seq((2L, "")).toDF("doc_id", "text"), "doc_id", "text").head()
     assert(z.getLong(1) == 0L && z.isNullAt(4) && z.isNullAt(5))
+  }
+
+  test("global/per-group twins: xByGroup on one constant group equals x") {
+    import spark.implicits._
+    import graft.operators.Quantiles
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val raw = ((0 until 40).map { i =>
+      ("g1", if (i % 3 == 0) "B" else "A",
+        java.lang.Double.valueOf((i * 7 % 11).toDouble),
+        new java.sql.Timestamp(t0 + ((i * 5 % 17) * 24L + i) * 3600000L))
+    } ++ Seq(("g1", "A", null, new java.sql.Timestamp(t0)),
+      ("g1", "B", java.lang.Double.valueOf(3.0), null)))
+      .toDF("g", "variant", "x", "ts")
+    // two stored "versions" of one group's sketch
+    val sketches = Seq(raw.where(F.col("x") < 5.0), raw.where(F.col("x") >= 5.0))
+      .map(Report.quantileSketch(_, "x", 0.0, 10.0, 5, Some("g")))
+      .reduce(_ union _)
+    // (pair, input, x, xByGroup, the grouped side's key column, ordered)
+    val twins: Seq[(String, org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+        String, Boolean)] = Seq(
+      ("histogram", raw, Report.histogram(_, "x", 4),
+        Report.histogramByGroup(_, "g", "x", 4), "g", false),
+      ("mergeQuantileSketches", sketches, Report.mergeQuantileSketches(_),
+        Report.mergeQuantileSketchesByGroup(_, "g"), "g", true),
+      ("welchT", raw, Report.welchT(_, "variant", "x"),
+        Report.welchTByGroup(_, "g", "variant", "x"), "group", true),
+      ("cliffsDelta", raw, Report.cliffsDelta(_, "variant", "x"),
+        Report.cliffsDeltaByGroup(_, "g", "variant", "x"), "group", true),
+      ("mannWhitneyU", raw, Report.mannWhitneyU(_, "variant", "x"),
+        Report.mannWhitneyUByGroup(_, "g", "variant", "x"), "group", true),
+      ("seasonalDaily", raw, Report.seasonalDaily(_, "ts"),
+        Report.seasonalDailyByGroup(_, "g", "ts"), "group", true),
+      ("cusumDaily", raw, Report.cusumDaily(_, "ts", slack = 0.5),
+        Report.cusumDailyByGroup(_, "g", "ts", slack = 0.5), "group", true),
+      ("ewmaDaily", raw, Report.ewmaDaily(_, "ts", alpha = 0.4),
+        Report.ewmaDailyByGroup(_, "g", "ts", alpha = 0.4), "group", true),
+      ("gini", raw, Quantiles.gini(_, "x"),
+        Quantiles.giniByGroup(_, "g", "x"), "group", true))
+    // doubles compare by their raw bits, so -0.0/0.0 or NaN drift fails
+    def bits(rows: Array[org.apache.spark.sql.Row]): Seq[Seq[Any]] =
+      rows.toSeq.map(_.toSeq.map {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d)
+        case v         => v
+      })
+    twins.foreach { case (name, in, global, byGroup, key, ordered) =>
+      val want = bits(global(in).collect())
+      val got = bits(byGroup(in).drop(key).collect())
+      assert(want.nonEmpty, name)
+      if (ordered) assert(got == want, name)
+      else assert(got.sortBy(_.toString) == want.sortBy(_.toString), name)
+    }
   }
 }

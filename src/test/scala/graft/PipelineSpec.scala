@@ -1900,6 +1900,21 @@ class PipelineSpec extends AnyFunSuite {
     assert(rescored(1L) == scored(1L)._2 && rescored(2L) == scored(2L)._2)
   }
 
+  test("bm25: a repeated doc id fails the build, naming the id column") {
+    import spark.implicits._
+    val docs = Seq((1L, "apple banana"), (2L, "banana cherry"),
+      (1L, "cherry durian")).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException] {
+      Retrieval.buildBm25(docs, "text", "doc_id")
+    }
+    assert(e.getMessage.contains("repeats ids in column doc_id"), e.getMessage)
+    // a repeat with no tokens is never indexed, so it is no clash
+    val idx = Retrieval.buildBm25(
+      docs.where(F.col("text") =!= "cherry durian")
+        .union(Seq((1L, "  ")).toDF("doc_id", "text")), "text", "doc_id")
+    assert(idx.nDocs == 2L)
+  }
+
   test("bm25: batch scoring equals the per-query path bit-exactly, on built and loaded indexes") {
     import spark.implicits._
     val docs = Seq(
