@@ -58,6 +58,8 @@ final class FlowContext(
   */
 final class FlowEngine(val store: TableStore, spark: SparkSession) {
   private val functions = mutable.LinkedHashMap[String, FlowFunction]()
+  private val runLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   def register(f: FlowFunction): Unit = {
     require(!functions.contains(f.name), s"function ${f.name} already registered")
@@ -127,26 +129,32 @@ final class FlowEngine(val store: TableStore, spark: SparkSession) {
     * replayed run writes a NEW version with the same rows — consumers
     * reading HEAD see the latest replay, not duplicated rows; only the
     * version history carries the duplicate. Exactly-once would need the
-    * offset write inside the transaction marker. */
+    * offset write inside the transaction marker.
+    *
+    * Runs of one function are serialized (StoreApi serves triggers from a
+    * thread pool): two overlapping runs would load the same offsets and
+    * publish the same increment twice. A run holds only its own
+    * function's lock, so plans that share functions cannot deadlock. */
   def runFunction(f: FlowFunction, executionId: String,
-      executionTs: Long = System.currentTimeMillis()): Seq[(String, String)] = {
-    val t0 = System.currentTimeMillis()
-    try {
-      val out = runFunctionInner(f, executionId, executionTs)
-      ExecutionLog.append(store.root, ExecutionRecord(executionId, f.name,
-        f.collection, "done", executionTs, System.currentTimeMillis() - t0, None))
-      out
-    } catch { case e: Throwable =>
-      // the failed run is journaled BEFORE the rethrow: the reference's
-      // execution/function_run listing shows failures (status_utils), and
-      // a crash between journal and offset write is at-least-once like the
-      // offset path itself
-      ExecutionLog.append(store.root, ExecutionRecord(executionId, f.name,
-        f.collection, "failed", executionTs, System.currentTimeMillis() - t0,
-        Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")))
-      throw e
+      executionTs: Long = System.currentTimeMillis()): Seq[(String, String)] =
+    runLocks.computeIfAbsent(f.name, _ => new Object).synchronized {
+      val t0 = System.currentTimeMillis()
+      try {
+        val out = runFunctionInner(f, executionId, executionTs)
+        ExecutionLog.append(store.root, ExecutionRecord(executionId, f.name,
+          f.collection, "done", executionTs, System.currentTimeMillis() - t0, None))
+        out
+      } catch { case e: Throwable =>
+        // the failed run is journaled BEFORE the rethrow: the reference's
+        // execution/function_run listing shows failures (status_utils), and
+        // a crash between journal and offset write is at-least-once like the
+        // offset path itself
+        ExecutionLog.append(store.root, ExecutionRecord(executionId, f.name,
+          f.collection, "failed", executionTs, System.currentTimeMillis() - t0,
+          Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")))
+        throw e
+      }
     }
-  }
 
   private def runFunctionInner(f: FlowFunction, executionId: String,
       executionTs: Long): Seq[(String, String)] = {

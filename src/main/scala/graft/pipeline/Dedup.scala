@@ -526,35 +526,9 @@ object Dedup {
   /** 64-bit SimHash over word tokens: per-token xxhash64 votes ±1 on each bit
     * position; the sign of each accumulated vote becomes the signature bit.
     * One codegen'd kernel ([[graft.expressions.SimHash64Expr]]); bit-parity
-    * with the HOF formulation below is asserted in KernelParitySpec. */
+    * with the test-side HOF formulation is asserted in KernelParitySpec. */
   def simhash64(text: Column): Column =
     graft.expressions.HashKernels.simhash64(tokens(text))
-
-  /** Reference HOF formulation of [[simhash64]] (interpreted lambdas — a
-    * 64-wide boxed loop per token). Kept only as the parity oracle for the
-    * kernel; not used in any pipeline. */
-  private[graft] def simhash64Hof(text: Column): Column = {
-    val toks = tokens(text)
-    // the Scala shiftright/shiftleft wrappers only take Int shifts; the SQL
-    // expressions accept column shifts, needed for the lambda bit index
-    def shr(v: Column, bits: Column) = F.call_function("shiftright", v, bits)
-    def shl(v: Column, bits: Column) = F.call_function("shiftleft", v, bits)
-    val votes = F.aggregate(
-      toks,
-      F.array_repeat(F.lit(0L), 64),
-      (acc, t) => {
-        val h = F.xxhash64(t)
-        F.zip_with(acc,
-          F.transform(F.sequence(F.lit(0), F.lit(63)),
-            b => F.when(shr(h, b).bitwiseAND(F.lit(1L)) =!= 0, 1L).otherwise(-1L)),
-          (a, v) => a + v)
-      })
-    // fold votes into a 64-bit long: bit b set iff votes(b) > 0
-    F.aggregate(
-      F.sequence(F.lit(0), F.lit(63)),
-      F.lit(0L),
-      (acc, b) => acc + F.when(F.element_at(votes, b + 1) > 0, shl(F.lit(1L), b)).otherwise(0L))
-  }
 
   /** Engine-portable SimHash: a 60-bit signature whose per-token hash is
     * the md5-prefix long ([[Sketches.hexPrefix]] — the repo's portable
@@ -569,43 +543,12 @@ object Dedup {
     * Shape: one row-local codegen kernel ([[graft.expressions
     * .SimHash60Md5Expr]]) — zero shuffles at any scale, one md5 + one
     * primitive 60-bit vote loop per token. Replaces the HOF formulation
-    * below (r18): its zip_with/transform lambda bodies evaluated
+    * (r18; kept as a test oracle): its zip_with/transform lambda bodies ran
     * interpreted, a 60-wide boxed loop per token. Signature values are
     * BIT-IDENTICAL (KernelParitySpec) — the q_dedup_simhash oracle hashes
     * the signature itself. */
   def simhash60Md5(text: Column): Column =
     graft.expressions.HashKernels.simhash60Md5(tokens(text))
-
-  /** Reference HOF formulation of [[simhash60Md5]] (interpreted lambdas).
-    * Kept only as the parity oracle for the kernel; not used in any
-    * pipeline. The token hash and the vote array are each BOUND through a
-    * single-element `aggregate` wrapper so neither re-evaluates per lambda
-    * element (Catalyst has no CSE inside HOF lambda bodies: an inline md5
-    * referenced by the 60-wide bit transform would otherwise run 60× per
-    * token). */
-  private[graft] def simhash60Md5Hof(text: Column): Column = {
-    def shr(v: Column, bits: Column) = F.call_function("shiftright", v, bits)
-    def shl(v: Column, bits: Column) = F.call_function("shiftleft", v, bits)
-    val votes = F.aggregate(
-      tokens(text),
-      F.array_repeat(F.lit(0L), 60),
-      (acc, t) => F.aggregate(
-        // binds h = hexPrefix(md5(t)) ONCE per token
-        F.array(Sketches.hexPrefix(t)), acc,
-        (a, h) => F.zip_with(a,
-          F.transform(F.sequence(F.lit(0), F.lit(59)),
-            b => F.when(shr(h, b).bitwiseAND(F.lit(1L)) =!= 0, 1L)
-              .otherwise(-1L)),
-          (x, v) => x + v)))
-    val sig = F.aggregate(
-      // binds the vote array ONCE for the 60-wide sign fold
-      F.array(votes), F.lit(0L),
-      (acc0, vs) => F.aggregate(F.sequence(F.lit(0), F.lit(59)), acc0,
-        (acc, b) => acc +
-          F.when(F.element_at(vs, b + 1) > 0, shl(F.lit(1L), b))
-            .otherwise(0L)))
-    F.coalesce(sig, F.lit(0L))
-  }
 
   /** Hamming distance between two 64-bit signatures. */
   def hamming64(a: Column, b: Column): Column = F.bit_count(a.bitwiseXOR(b))

@@ -37,6 +37,107 @@ object GraphRank {
 
   import QualityModel.GradScale
 
+  /** The directed edge list every operator starts from: NULL endpoints
+    * dropped, both endpoints cast to string as (td_u, td_v). */
+  private def edgeList(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges
+      .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
+      .select(F.col(srcCol).cast("string").as("td_u"),
+        F.col(dstCol).cast("string").as("td_v"))
+
+  /** The distinct nodes of an edge list: both endpoints, as `node`. */
+  private def nodeSet(e: DataFrame): DataFrame =
+    e.select(F.col("td_u").as("node"))
+      .union(e.select(F.col("td_v").as("node")))
+      .distinct()
+
+  /** The persisted edge list and node set an iterative operator reads
+    * every round, plus the node count — the set-up's one action. */
+  private def persistedGraph(edges: DataFrame): (DataFrame, DataFrame, Long) = {
+    val e = edges.persist(StorageLevel.MEMORY_AND_DISK_SER)
+    val nodes = nodeSet(e).persist(StorageLevel.MEMORY_AND_DISK_SER)
+    (e, nodes, nodes.count())
+  }
+
+  /** Persist and load `derived`, then release the edge cache `e` it was
+    * built from: the per-round work reads only `derived`. */
+  private def replacing(e: DataFrame, derived: DataFrame): DataFrame = {
+    val d = derived.persist(StorageLevel.MEMORY_AND_DISK_SER)
+    d.count()
+    e.unpersist(blocking = false)
+    d
+  }
+
+  /** The edge list with each source's out-degree (td_deg) joined on once,
+    * up front: the per-round work is then rank-join + fixed-point agg
+    * only. */
+  private def withOutDegree(e: DataFrame): DataFrame =
+    replacing(e, e.join(e.groupBy(F.col("td_u"))
+      .agg(F.count(F.lit(1)).cast("double").as("td_deg")), "td_u"))
+
+  /** The 2^20 fixed-point image of a double, as an exact long. */
+  private def fixedPoint(c: Column): Column =
+    F.floor(c * F.lit(GradScale) + F.lit(0.5d)).cast("long")
+
+  /** One PageRank round. Each edge contributes `term` (its share of the
+    * source's rank, read off the edge columns and `rank`) rounded into
+    * fixed point and summed per destination as DECIMAL(38,0), so the sum
+    * commutes across any partitioning; every node (missing sums at 0)
+    * then updates to r_v = base + d·(S_v/2^20). The columns of `nodes`
+    * ride through ahead of `rank`. */
+  private def pagerankStep(edges: DataFrame, term: Column, nodes: DataFrame,
+      ranks: DataFrame, base: Column, damping: Double): DataFrame = {
+    val contrib = edges
+      .join(ranks.select(F.col("node").as("td_u"), F.col("rank")), "td_u")
+      .groupBy(F.col("td_v"))
+      .agg(F.sum(F.floor(term * F.lit(GradScale) + F.lit(0.5d))
+        .cast("decimal(38,0)")).as("td_s"))
+    nodes
+      .join(contrib.withColumnRenamed("td_v", "node"), Seq("node"), "left")
+      .select(nodes.columns.toSeq.map(F.col) :+ (base + F.lit(damping) *
+        (F.coalesce(F.col("td_s"), F.lit(0L)).cast("decimal(38,0)")
+          .cast("double") / F.lit(GradScale))).as("rank"): _*)
+  }
+
+  /** The convergence loop of the `…Converged` operators: runs `round`
+    * (the next state and its exact integer delta) until `maxIters`
+    * rounds have run or, with `earlyStop`, a round's delta is 0 — the
+    * fixed-point image is stationary, so further rounds cannot change
+    * any oracle-visible digit. Returns the last state and one delta per
+    * round run.
+    *
+    * DELIBERATELY no release-behind of superseded iterates: measured r16
+    * (PERF.md) — unpersisting iterate k−1 after round k's action
+    * re-registers round k's cached entry (its plan CONTAINS k−1), and
+    * round k+1 then re-executes the whole prefix chain instead of reading
+    * the cache: 3.553 → 10.068 s min for PageRank (2.8×), 1.078 → 9.318 s
+    * for label propagation (8.6×) in the BENCH_ONLY shape. Materialization
+    * does NOT immunize dependents — the arm-B hazard (r14) applies to
+    * loaded buffers too on this engine. Iterate caches are node-sized,
+    * bounded by maxIters, and reclaimed by the ContextCleaner. */
+  private def converge[S](init: S, maxIters: Int, earlyStop: Boolean)(
+      round: S => (S, Long)): (S, Seq[Long]) = {
+    var state = init
+    val deltas = scala.collection.mutable.ArrayBuffer.empty[Long]
+    while (deltas.size < maxIters &&
+        !(earlyStop && deltas.lastOption.contains(0L))) {
+      val (next, delta) = round(state)
+      state = next
+      deltas += delta
+    }
+    (state, deltas.toSeq)
+  }
+
+  /** PageRank's set-up: the persisted node set, its size and the
+    * degree-joined edge list. */
+  private def pagerankGraph(edges: DataFrame, srcCol: String,
+      dstCol: String): (DataFrame, Double, DataFrame) = {
+    val (e, nodes, n) = persistedGraph(edgeList(edges, srcCol, dstCol))
+    require(n > 0, "pagerank over an empty edge list")
+    (nodes, n.toDouble, withOutDegree(e))
+  }
+
   /** Run `iters` PageRank passes over a directed edge list. Returns
     * (node, rank) ascending by node. Self-loops and duplicate edges are
     * used as given (dedupe upstream if unwanted); NULL endpoints are
@@ -44,27 +145,7 @@ object GraphRank {
   def pagerank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 5, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges
-      .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
-      .select(F.col(srcCol).cast("string").as("td_u"),
-        F.col(dstCol).cast("string").as("td_v"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val nodes = e.select(F.col("td_u").as("node"))
-      .union(e.select(F.col("td_v").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val n = nodes.count().toDouble
-    require(n > 0, "pagerank over an empty edge list")
-    // out-degree joined onto each edge once, up front: the per-iteration
-    // work is then rank-join + fixed-point agg only
-    val outdeg = e.groupBy(F.col("td_u"))
-      .agg(F.count(F.lit(1)).cast("double").as("td_deg"))
-    val eDeg = e.join(outdeg, "td_u")
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    eDeg.count() // materialize; e itself no longer needed per iteration
-    e.unpersist(blocking = false)
-
-    val base = (1.0d - damping) / n
+    val (nodes, n, eDeg) = pagerankGraph(edges, srcCol, dstCol)
     // NO per-iteration materialization: unlike the connected-components
     // contraction (whose rounds feed SEVERAL consumers and need a
     // checkpoint barrier — Clustering.scala), each PageRank iterate
@@ -75,20 +156,9 @@ object GraphRank {
     // node relations ARE cached (read every iteration).
     var ranks = nodes.select(F.col("node"),
       (F.lit(1.0d) / F.lit(n)).as("rank"))
-    for (_ <- 0 until iters) {
-      val contrib = eDeg
-        .join(ranks.withColumnRenamed("node", "td_u"), "td_u")
-        .groupBy(F.col("td_v"))
-        .agg(F.sum(F.floor((F.col("rank") / F.col("td_deg")) *
-            F.lit(GradScale) + F.lit(0.5d))
-          .cast("decimal(38,0)")).as("td_s"))
-      ranks = nodes
-        .join(contrib.withColumnRenamed("td_v", "node"), Seq("node"), "left")
-        .select(F.col("node"),
-          (F.lit(base) + F.lit(damping) *
-            (F.coalesce(F.col("td_s"), F.lit(0L)).cast("decimal(38,0)")
-              .cast("double") / F.lit(GradScale))).as("rank"))
-    }
+    for (_ <- 0 until iters)
+      ranks = pagerankStep(eDeg, F.col("rank") / F.col("td_deg"), nodes,
+        ranks, F.lit((1.0d - damping) / n), damping)
     ranks.orderBy(F.col("node").asc)
   }
 
@@ -108,68 +178,24 @@ object GraphRank {
       maxIters: Int = 20, damping: Double = 0.85,
       earlyStop: Boolean = true): (DataFrame, Seq[Long]) = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    val e = edges
-      .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
-      .select(F.col(srcCol).cast("string").as("td_u"),
-        F.col(dstCol).cast("string").as("td_v"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val nodes = e.select(F.col("td_u").as("node"))
-      .union(e.select(F.col("td_v").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val n = nodes.count().toDouble
-    require(n > 0, "pagerank over an empty edge list")
-    val outdeg = e.groupBy(F.col("td_u"))
-      .agg(F.count(F.lit(1)).cast("double").as("td_deg"))
-    val eDeg = e.join(outdeg, "td_u")
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    eDeg.count()
-    e.unpersist(blocking = false)
-    val base = (1.0d - damping) / n
-    def fp(c: org.apache.spark.sql.Column) =
-      F.floor(c * F.lit(GradScale) + F.lit(0.5d)).cast("long")
-    var ranks = nodes.select(F.col("node"),
+    val (nodes, n, eDeg) = pagerankGraph(edges, srcCol, dstCol)
+    val init = nodes.select(F.col("node"),
       (F.lit(1.0d) / F.lit(n)).as("rank"))
-    val deltas = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var round = 0
-    var stable = false
-    // DELIBERATELY no release-behind of superseded iterates: measured
-    // r16 (PERF.md) — unpersisting iterate k−1 after round k's action
-    // re-registers round k's cached entry (its plan CONTAINS k−1), and
-    // round k+1 then re-executes the whole prefix chain instead of
-    // reading the cache: 3.553 → 10.068 s min in the BENCH_ONLY shape
-    // (2.8×). Materialization does NOT immunize dependents — the arm-B
-    // hazard (r14) applies to loaded buffers too on this engine.
-    // Iterate caches are node-sized, bounded by maxIters, and reclaimed
-    // by the ContextCleaner.
-    while (round < maxIters && !(earlyStop && stable)) {
-      val contrib = eDeg
-        .join(ranks.withColumnRenamed("node", "td_u"), "td_u")
-        .groupBy(F.col("td_v"))
-        .agg(F.sum(F.floor((F.col("rank") / F.col("td_deg")) *
-            F.lit(GradScale) + F.lit(0.5d))
-          .cast("decimal(38,0)")).as("td_s"))
-      val next = nodes
-        .join(contrib.withColumnRenamed("td_v", "node"), Seq("node"), "left")
-        .select(F.col("node"),
-          (F.lit(base) + F.lit(damping) *
-            (F.coalesce(F.col("td_s"), F.lit(0L)).cast("decimal(38,0)")
-              .cast("double") / F.lit(GradScale))).as("rank"))
+    val (ranks, deltas) = converge(init, maxIters, earlyStop) { ranks =>
+      val next = pagerankStep(eDeg, F.col("rank") / F.col("td_deg"), nodes,
+        ranks, F.lit((1.0d - damping) / n), damping)
         .persist(StorageLevel.MEMORY_AND_DISK_SER)
       // ONE action per round: materializes the iterate AND reads the
       // exact L1 movement (sum of |fp deltas| — longs to ~2^43 nodes)
       val delta = next.select(F.col("node"), F.col("rank").as("td_new"))
         .join(ranks.select(F.col("node"), F.col("rank").as("td_old")),
           "node")
-        .agg(F.sum(F.abs(fp(F.col("td_new")) - fp(F.col("td_old"))))
-          .cast("long"))
+        .agg(F.sum(F.abs(fixedPoint(F.col("td_new")) -
+          fixedPoint(F.col("td_old")))).cast("long"))
         .head().getLong(0)
-      deltas += delta
-      stable = delta == 0L
-      ranks = next
-      round += 1
+      (next, delta)
     }
-    (ranks.orderBy(F.col("node").asc), deltas.toSeq)
+    (ranks.orderBy(F.col("node").asc), deltas)
   }
 
   /** Materialize the final node-sized rank relation (one count action —
@@ -207,10 +233,7 @@ object GraphRank {
       seeds: DataFrame, seedCol: String,
       iters: Int = 5, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges
-      .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
-      .select(F.col(srcCol).cast("string").as("td_u"),
-        F.col(dstCol).cast("string").as("td_v"))
+    val e = edgeList(edges, srcCol, dstCol)
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
     val seedSet = seeds
       .where(F.col(seedCol).isNotNull)
@@ -218,43 +241,25 @@ object GraphRank {
       .distinct()
     // nodes carry the seed flag: one broadcast-able semi-join at build,
     // then every iteration reads the flag from cache
-    val nodes = e.select(F.col("td_u").as("node"))
-      .union(e.select(F.col("td_v").as("node")))
-      .distinct()
+    val nodes = nodeSet(e)
       .join(seedSet.withColumn("td_seed", F.lit(true)), Seq("node"), "left")
       .select(F.col("node"),
         F.coalesce(F.col("td_seed"), F.lit(false)).as("td_seed"))
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
     val k = nodes.where(F.col("td_seed")).count()
     require(k > 0, "pagerankPersonalized: no seed appears in the graph")
-    val outdeg = e.groupBy(F.col("td_u"))
-      .agg(F.count(F.lit(1)).cast("double").as("td_deg"))
-    val eDeg = e.join(outdeg, "td_u")
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    eDeg.count()
-    e.unpersist(blocking = false)
+    val eDeg = withOutDegree(e)
 
     // the two driver-stated doubles of the trajectory: s = 1/K and the
     // per-seed base (1−d)·s — each op once, restated in the oracle
     val sv = 1.0d / k.toDouble
-    val base = (1.0d - damping) * sv
+    val base = F.when(F.col("td_seed"), F.lit((1.0d - damping) * sv))
+      .otherwise(F.lit(0.0d))
     var ranks = nodes.select(F.col("node"), F.col("td_seed"),
       F.when(F.col("td_seed"), F.lit(sv)).otherwise(F.lit(0.0d)).as("rank"))
-    for (_ <- 0 until iters) {
-      val contrib = eDeg
-        .join(ranks.select(F.col("node").as("td_u"), F.col("rank")), "td_u")
-        .groupBy(F.col("td_v"))
-        .agg(F.sum(F.floor((F.col("rank") / F.col("td_deg")) *
-            F.lit(GradScale) + F.lit(0.5d))
-          .cast("decimal(38,0)")).as("td_s"))
-      ranks = nodes
-        .join(contrib.withColumnRenamed("td_v", "node"), Seq("node"), "left")
-        .select(F.col("node"), F.col("td_seed"),
-          (F.when(F.col("td_seed"), F.lit(base)).otherwise(F.lit(0.0d)) +
-            F.lit(damping) *
-            (F.coalesce(F.col("td_s"), F.lit(0L)).cast("decimal(38,0)")
-              .cast("double") / F.lit(GradScale))).as("rank"))
-    }
+    for (_ <- 0 until iters)
+      ranks = pagerankStep(eDeg, F.col("rank") / F.col("td_deg"), nodes,
+        ranks, base, damping)
     ranks.select(F.col("node"), F.col("rank")).orderBy(F.col("node").asc)
   }
 
@@ -266,50 +271,30 @@ object GraphRank {
   def pagerankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, iters: Int = 5, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges
+    val weighted = edges
       .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull &&
         F.col(weightCol).isNotNull && F.col(weightCol).cast("double") > 0.0d)
       .select(F.col(srcCol).cast("string").as("td_u"),
         F.col(dstCol).cast("string").as("td_v"),
         F.col(weightCol).cast("double").as("td_w"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val nodes = e.select(F.col("td_u").as("node"))
-      .union(e.select(F.col("td_v").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val n = nodes.count().toDouble
+    val (e, nodes, n) = persistedGraph(weighted)
     require(n > 0, "pagerankWeighted over an empty edge list")
     // total outgoing weight per source in exact DECIMAL(28,4) (the
     // profile-sum convention), then ONE stated share division per edge
     val wsum = e.groupBy(F.col("td_u"))
       .agg(F.sum(F.col("td_w").cast("decimal(28,4)")).cast("decimal(38,4)")
         .as("td_wsum"))
-    val eShare = e.join(wsum, "td_u")
+    val eShare = replacing(e, e.join(wsum, "td_u")
       .select(F.col("td_u"), F.col("td_v"),
-        (F.col("td_w") / F.col("td_wsum").cast("double")).as("td_share"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    eShare.count()
-    e.unpersist(blocking = false)
+        (F.col("td_w") / F.col("td_wsum").cast("double")).as("td_share")))
 
-    val base = (1.0d - damping) / n
     // single-consumer iterates: composed plan, no per-iteration barrier
     // (see pagerank)
     var ranks = nodes.select(F.col("node"),
-      (F.lit(1.0d) / F.lit(n)).as("rank"))
-    for (_ <- 0 until iters) {
-      val contrib = eShare
-        .join(ranks.withColumnRenamed("node", "td_u"), "td_u")
-        .groupBy(F.col("td_v"))
-        .agg(F.sum(F.floor((F.col("rank") * F.col("td_share")) *
-            F.lit(GradScale) + F.lit(0.5d))
-          .cast("decimal(38,0)")).as("td_s"))
-      ranks = nodes
-        .join(contrib.withColumnRenamed("td_v", "node"), Seq("node"), "left")
-        .select(F.col("node"),
-          (F.lit(base) + F.lit(damping) *
-            (F.coalesce(F.col("td_s"), F.lit(0L)).cast("decimal(38,0)")
-              .cast("double") / F.lit(GradScale))).as("rank"))
-    }
+      (F.lit(1.0d) / F.lit(n.toDouble)).as("rank"))
+    for (_ <- 0 until iters)
+      ranks = pagerankStep(eShare, F.col("rank") * F.col("td_share"), nodes,
+        ranks, F.lit((1.0d - damping) / n.toDouble), damping)
     ranks.orderBy(F.col("node").asc)
   }
 
@@ -325,62 +310,57 @@ object GraphRank {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 5): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges
-      .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
-      .select(F.col(srcCol).cast("string").as("td_u"),
-        F.col(dstCol).cast("string").as("td_v"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val nodes = e.select(F.col("td_u").as("node"))
-      .union(e.select(F.col("td_v").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    nodes.count()
-
-    // one fixed-point pass: per-node sums of the other score over edges,
-    // missing nodes at 0, then L2-normalize via a fixed-point Σx². The
-    // norm is a driver scalar per pass — an unavoidable action (an
-    // in-plan broadcast-norm variant was measured 14× SLOWER at sf0.1:
-    // each pass's broadcast subtree nests every earlier pass's, and the
-    // racing broadcast threads re-execute the chain instead of sharing
-    // the caches). The unnormalized iterate is CACHED before the norm
-    // action reads it, so the final output reuses every pass instead of
-    // re-executing it. Iterate caches are node-sized and bounded by the
-    // fixed iteration count; the context cleaner reclaims them.
-    // DELIBERATELY no explicit unpersist of superseded iterates: it was
-    // measured at 1.5-1.8× SLOWER (r14, PERF.md) — every later iterate's
-    // cached plan CONTAINS the unpersisted one as a subplan, and the
-    // cache manager re-registers those dependent entries, whose next
-    // access then re-executes the chain instead of reading its cache.
-    def pass(scores: DataFrame, joinKey: String, outKey: String): DataFrame = {
-      val raw = e
-        .join(scores.withColumnRenamed("node", joinKey), joinKey)
-        .groupBy(F.col(outKey).as("node"))
-        .agg(F.sum(F.floor(F.col("score") * F.lit(GradScale) + F.lit(0.5d))
-          .cast("decimal(38,0)")).as("td_s"))
-      val unnorm = nodes.join(raw, Seq("node"), "left")
-        .select(F.col("node"),
-          (F.coalesce(F.col("td_s"), F.lit(0L)).cast("decimal(38,0)")
-            .cast("double") / F.lit(GradScale)).as("td_x"))
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      val nrm = math.sqrt(unnorm.agg(
-        F.sum(F.floor((F.col("td_x") * F.col("td_x")) * F.lit(GradScale) +
-            F.lit(0.5d)).cast("decimal(38,0)")).as("q"))
-        .head().getDecimal(0).doubleValue() / GradScale)
-      require(nrm > 0.0d, "HITS collapsed to the zero vector")
-      unnorm.select(F.col("node"), (F.col("td_x") / F.lit(nrm)).as("score"))
-    }
-
+    val (e, nodes, _) = persistedGraph(edgeList(edges, srcCol, dstCol))
     var hubs = nodes.select(F.col("node"), F.lit(1.0d).as("score"))
     var auth = hubs
     for (_ <- 0 until iters) {
-      auth = pass(hubs, "td_u", "td_v")
-      hubs = pass(auth, "td_v", "td_u")
+      auth = hitsPass(e, nodes, hubs, "td_u", "td_v")
+      hubs = hitsPass(e, nodes, auth, "td_v", "td_u")
     }
+    hubsAndAuthorities(hubs, auth)
+  }
+
+  /** One HITS pass: per-node sums of the other score over edges, missing
+    * nodes at 0, then L2-normalize via a fixed-point Σx². The norm is a
+    * driver scalar per pass — an unavoidable action (an in-plan
+    * broadcast-norm variant was measured 14× SLOWER at sf0.1: each
+    * pass's broadcast subtree nests every earlier pass's, and the racing
+    * broadcast threads re-execute the chain instead of sharing the
+    * caches). The unnormalized iterate is CACHED before the norm action
+    * reads it, so the final output reuses every pass instead of
+    * re-executing it. Iterate caches are node-sized and bounded by the
+    * iteration count; the context cleaner reclaims them. DELIBERATELY no
+    * explicit unpersist of superseded iterates: it was measured at
+    * 1.5-1.8× SLOWER (r14, PERF.md, re-confirmed r16) — every later
+    * iterate's cached plan CONTAINS the unpersisted one as a subplan, and
+    * the cache manager re-registers those dependent entries, whose next
+    * access then re-executes the chain instead of reading its cache. */
+  private def hitsPass(e: DataFrame, nodes: DataFrame, scores: DataFrame,
+      joinKey: String, outKey: String): DataFrame = {
+    val raw = e
+      .join(scores.withColumnRenamed("node", joinKey), joinKey)
+      .groupBy(F.col(outKey).as("node"))
+      .agg(F.sum(F.floor(F.col("score") * F.lit(GradScale) + F.lit(0.5d))
+        .cast("decimal(38,0)")).as("td_s"))
+    val unnorm = nodes.join(raw, Seq("node"), "left")
+      .select(F.col("node"),
+        (F.coalesce(F.col("td_s"), F.lit(0L)).cast("decimal(38,0)")
+          .cast("double") / F.lit(GradScale)).as("td_x"))
+      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    val nrm = math.sqrt(unnorm.agg(
+      F.sum(F.floor((F.col("td_x") * F.col("td_x")) * F.lit(GradScale) +
+          F.lit(0.5d)).cast("decimal(38,0)")).as("q"))
+      .head().getDecimal(0).doubleValue() / GradScale)
+    require(nrm > 0.0d, "HITS collapsed to the zero vector")
+    unnorm.select(F.col("node"), (F.col("td_x") / F.lit(nrm)).as("score"))
+  }
+
+  /** (node, hub, authority) ascending by node. */
+  private def hubsAndAuthorities(hubs: DataFrame, auth: DataFrame): DataFrame =
     hubs.withColumnRenamed("score", "hub")
       .join(auth.withColumnRenamed("score", "authority"), Seq("node"))
       .select(F.col("node"), F.col("hub"), F.col("authority"))
       .orderBy(F.col("node").asc)
-  }
 
   /** [[hits]] with a CONVERGENCE SIGNAL — completes the fixed-point
     * family next to [[pagerankConverged]]/[[labelPropagationConverged]]:
@@ -392,78 +372,34 @@ object GraphRank {
     * and `earlyStop` halts at the first round whose images are BOTH
     * stationary. The per-pass norm action already materializes each
     * iterate, so the delta is one extra node-sized 3-join aggregate per
-    * round; superseded iterates stay with the ContextCleaner — the
-    * [[hits]] convention, re-confirmed r16 (PERF.md): release-behind
-    * re-registers dependent cached plans and re-executes the prefix
-    * chain. Returns ((node, hub, authority) ascending, per-round
-    * deltas). */
+    * round; superseded iterates stay with the ContextCleaner (the
+    * reason is at `converge`). Returns ((node, hub, authority)
+    * ascending, per-round deltas). */
   def hitsConverged(edges: DataFrame, srcCol: String, dstCol: String,
       maxIters: Int = 20, earlyStop: Boolean = true)
       : (DataFrame, Seq[Long]) = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    val e = edges
-      .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
-      .select(F.col(srcCol).cast("string").as("td_u"),
-        F.col(dstCol).cast("string").as("td_v"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val nodes = e.select(F.col("td_u").as("node"))
-      .union(e.select(F.col("td_v").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    nodes.count()
-
-    def fp(c: org.apache.spark.sql.Column) =
-      F.floor(c * F.lit(GradScale) + F.lit(0.5d)).cast("long")
-    // identical pass to [[hits]] (same caching, same norm action)
-    def pass(scores: DataFrame, joinKey: String, outKey: String)
-        : DataFrame = {
-      val raw = e
-        .join(scores.withColumnRenamed("node", joinKey), joinKey)
-        .groupBy(F.col(outKey).as("node"))
-        .agg(F.sum(F.floor(F.col("score") * F.lit(GradScale) + F.lit(0.5d))
-          .cast("decimal(38,0)")).as("td_s"))
-      val unnorm = nodes.join(raw, Seq("node"), "left")
-        .select(F.col("node"),
-          (F.coalesce(F.col("td_s"), F.lit(0L)).cast("decimal(38,0)")
-            .cast("double") / F.lit(GradScale)).as("td_x"))
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      val nrm = math.sqrt(unnorm.agg(
-        F.sum(F.floor((F.col("td_x") * F.col("td_x")) * F.lit(GradScale) +
-            F.lit(0.5d)).cast("decimal(38,0)")).as("q"))
-        .head().getDecimal(0).doubleValue() / GradScale)
-      require(nrm > 0.0d, "HITS collapsed to the zero vector")
-      unnorm.select(F.col("node"), (F.col("td_x") / F.lit(nrm)).as("score"))
+    val (e, nodes, _) = persistedGraph(edgeList(edges, srcCol, dstCol))
+    val init = nodes.select(F.col("node"), F.lit(1.0d).as("score"))
+    val ((hubs, auth), deltas) = converge((init, init), maxIters, earlyStop) {
+      case (hubs, auth) =>
+        val nextAuth = hitsPass(e, nodes, hubs, "td_u", "td_v")
+        val nextHub = hitsPass(e, nodes, nextAuth, "td_v", "td_u")
+        // one node-sized aggregate reading both vectors' L1 movement off
+        // the cached iterates (exact longs; the returned scores are
+        // projections over the loaded unnorm caches)
+        val delta = nextHub.select(F.col("node"), F.col("score").as("td_hn"))
+          .join(hubs.select(F.col("node"), F.col("score").as("td_ho")), "node")
+          .join(nextAuth.select(F.col("node"), F.col("score").as("td_an")),
+            "node")
+          .join(auth.select(F.col("node"), F.col("score").as("td_ao")), "node")
+          .agg(F.sum(F.abs(fixedPoint(F.col("td_hn")) -
+            fixedPoint(F.col("td_ho"))) + F.abs(fixedPoint(F.col("td_an")) -
+            fixedPoint(F.col("td_ao")))).cast("long"))
+          .head().getLong(0)
+        ((nextHub, nextAuth), delta)
     }
-
-    var hubs = nodes.select(F.col("node"), F.lit(1.0d).as("score"))
-    var auth = hubs
-    val deltas = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var round = 0
-    var stable = false
-    while (round < maxIters && !(earlyStop && stable)) {
-      val nextAuth = pass(hubs, "td_u", "td_v")
-      val nextHub = pass(nextAuth, "td_v", "td_u")
-      // one node-sized aggregate reading both vectors' L1 movement off
-      // the cached iterates (exact longs; the returned scores are
-      // projections over the loaded unnorm caches)
-      val delta = nextHub.select(F.col("node"), F.col("score").as("td_hn"))
-        .join(hubs.select(F.col("node"), F.col("score").as("td_ho")), "node")
-        .join(nextAuth.select(F.col("node"), F.col("score").as("td_an")),
-          "node")
-        .join(auth.select(F.col("node"), F.col("score").as("td_ao")), "node")
-        .agg(F.sum(F.abs(fp(F.col("td_hn")) - fp(F.col("td_ho"))) +
-          F.abs(fp(F.col("td_an")) - fp(F.col("td_ao")))).cast("long"))
-        .head().getLong(0)
-      deltas += delta
-      stable = delta == 0L
-      hubs = nextHub
-      auth = nextAuth
-      round += 1
-    }
-    (hubs.withColumnRenamed("score", "hub")
-      .join(auth.withColumnRenamed("score", "authority"), Seq("node"))
-      .select(F.col("node"), F.col("hub"), F.col("authority"))
-      .orderBy(F.col("node").asc), deltas.toSeq)
+    (hubsAndAuthorities(hubs, auth), deltas)
   }
 
   /** Synchronous label-propagation communities (Raghavan et al. 2007,
@@ -485,34 +421,30 @@ object GraphRank {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges
-      .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
-      .select(F.col(srcCol).cast("string").as("td_u"),
-        F.col(dstCol).cast("string").as("td_v"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val nodes = e.select(F.col("td_u").as("node"))
-      .union(e.select(F.col("td_v").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    nodes.count()
+    val (e, nodes, _) = persistedGraph(edgeList(edges, srcCol, dstCol))
     var labels = nodes.select(F.col("node"), F.col("node").as("label"))
-    for (_ <- 0 until iters) {
-      val counts = e
-        .join(labels.withColumnRenamed("node", "td_u"), "td_u")
-        .groupBy(F.col("td_v"), F.col("label"))
-        .agg(F.count(F.lit(1)).as("td_c"))
-      val best = counts
-        .groupBy(F.col("td_v").as("node"))
-        .agg(F.min(F.struct((-F.col("td_c")).as("nc"),
-          F.col("label").as("l"))).as("td_b"))
-        .select(F.col("node"), F.col("td_b.l").as("td_new"))
-      labels = labels
-        .join(best, Seq("node"), "left")
-        .select(F.col("node"),
-          F.coalesce(F.col("td_new"), F.col("label")).as("label"))
-    }
+    for (_ <- 0 until iters)
+      labels = lpaRound(e, labels)
+        .select(F.col("node"), F.coalesce(F.col("td_new"), F.col("label"))
+          .as("label"))
     labels.select(F.col("node"), F.col("label").as("community"))
       .orderBy(F.col("node").asc)
+  }
+
+  /** One label-propagation round: `labels` with each node's most frequent
+    * in-neighbor label joined on as `td_new` (NULL for nodes without
+    * in-edges), ties to the smallest label. */
+  private def lpaRound(e: DataFrame, labels: DataFrame): DataFrame = {
+    val counts = e
+      .join(labels.withColumnRenamed("node", "td_u"), "td_u")
+      .groupBy(F.col("td_v"), F.col("label"))
+      .agg(F.count(F.lit(1)).as("td_c"))
+    val best = counts
+      .groupBy(F.col("td_v").as("node"))
+      .agg(F.min(F.struct((-F.col("td_c")).as("nc"),
+        F.col("label").as("l"))).as("td_b"))
+      .select(F.col("node"), F.col("td_b.l").as("td_new"))
+    labels.join(best, Seq("node"), "left")
   }
 
   /** [[labelPropagation]] with a CONVERGENCE SIGNAL: the same
@@ -533,48 +465,20 @@ object GraphRank {
       dstCol: String, maxIters: Int = 20, earlyStop: Boolean = true)
       : (DataFrame, Seq[Long]) = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    val e = edges
-      .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
-      .select(F.col(srcCol).cast("string").as("td_u"),
-        F.col(dstCol).cast("string").as("td_v"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val nodes = e.select(F.col("td_u").as("node"))
-      .union(e.select(F.col("td_v").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    nodes.count()
-    var labels = nodes.select(F.col("node"), F.col("node").as("label"))
-    val changes = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var round = 0
-    var stable = false
-    // no release-behind — measured 1.078 → 9.318 s min (8.6×) in the r16
-    // BENCH_ONLY arm: see pagerankConverged's note (the re-registration
-    // cascade re-executes every prefix round)
-    while (round < maxIters && !(earlyStop && stable)) {
-      val counts = e
-        .join(labels.withColumnRenamed("node", "td_u"), "td_u")
-        .groupBy(F.col("td_v"), F.col("label"))
-        .agg(F.count(F.lit(1)).as("td_c"))
-      val best = counts
-        .groupBy(F.col("td_v").as("node"))
-        .agg(F.min(F.struct((-F.col("td_c")).as("nc"),
-          F.col("label").as("l"))).as("td_b"))
-        .select(F.col("node"), F.col("td_b.l").as("td_new"))
-      val next = labels
-        .join(best, Seq("node"), "left")
+    val (e, nodes, _) = persistedGraph(edgeList(edges, srcCol, dstCol))
+    val init = nodes.select(F.col("node"), F.col("node").as("label"))
+    val (labels, changes) = converge(init, maxIters, earlyStop) { labels =>
+      val next = lpaRound(e, labels)
         .select(F.col("node"), F.col("label").as("td_prev"),
           F.coalesce(F.col("td_new"), F.col("label")).as("label"))
         .persist(StorageLevel.MEMORY_AND_DISK_SER)
       // ONE action per round: materializes the iterate AND reads the
       // convergence signal off the cached rows
       val changed = next.where(F.col("td_prev") =!= F.col("label")).count()
-      changes += changed
-      stable = changed == 0L
-      labels = next.select(F.col("node"), F.col("label"))
-      round += 1
+      (next.select(F.col("node"), F.col("label")), changed)
     }
     (labels.select(F.col("node"), F.col("label").as("community"))
-      .orderBy(F.col("node").asc), changes.toSeq)
+      .orderBy(F.col("node").asc), changes)
   }
 
   /** Newman MODULARITY of a partition (Newman 2004): the standard
@@ -600,10 +504,26 @@ object GraphRank {
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
       labels: DataFrame, nodeCol: String = "node",
       commCol: String = "community"): DataFrame = {
-    val e = edges
-      .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
-      .select(F.col(srcCol).cast("string").as("td_u"),
-        F.col(dstCol).cast("string").as("td_v"))
+    val (el, nNodes) = communityEdges(edgeList(edges, srcCol, dstCol), labels,
+      nodeCol, commCol)
+    withModularity(nNodes, volCut(el), F.lit(0L), identity)
+      .select(F.col("community"), F.col("n_nodes"), F.col("vol"),
+        F.col("cut"), F.col("intra"), F.col("dq"), F.col("q"))
+      .orderBy(F.col("community").asc)
+  }
+
+  /** The label side of the community operators: every edge with both
+    * endpoints' communities attached (td_cu, td_cv), and the node count
+    * per community (n_nodes). The label relation feeds THREE consumers
+    * (both endpoint joins + the size count) — a lazy iterative producer
+    * (labelPropagation's composed plan) would re-execute per consumer,
+    * so the node-sized partition is materialized ONCE. persist+count,
+    * NOT localCheckpoint: checkpointing runs the subplan WITHOUT AQE (no
+    * broadcast conversions — measured +6s on the 16k-node trade graph),
+    * while the cache materializes under the normal adaptive plan and the
+    * downstream joins see a broadcast-sized relation. */
+  private def communityEdges(e: DataFrame, labels: DataFrame, nodeCol: String,
+      commCol: String): (DataFrame, DataFrame) = {
     val lab = labels
       .select(F.col(nodeCol).cast("string").as("td_n"),
         F.col(commCol).as("td_c"))
@@ -611,40 +531,52 @@ object GraphRank {
     lab.count()
     val lu = lab.select(F.col("td_n").as("td_u"), F.col("td_c").as("td_cu"))
     val lv = lab.select(F.col("td_n").as("td_v"), F.col("td_c").as("td_cv"))
-    val el = e.join(lu, "td_u").join(lv, "td_v")
-    val nNodes = lab.groupBy(F.col("td_c").as("community"))
-      .agg(F.count(F.lit(1)).as("n_nodes"))
-    val per = el.groupBy(F.col("td_cu").as("community"))
+    (e.join(lu, "td_u").join(lv, "td_v"),
+      lab.groupBy(F.col("td_c").as("community"))
+        .agg(F.count(F.lit(1)).as("n_nodes")))
+  }
+
+  /** Per source community: vol = edges leaving it, cut = those crossing
+    * to another community (exact counts). */
+  private def volCut(el: DataFrame): DataFrame =
+    el.groupBy(F.col("td_cu").as("community"))
       .agg(F.count(F.lit(1)).as("vol"),
         F.sum(F.when(F.col("td_cu") =!= F.col("td_cv"), 1L).otherwise(0L))
           .as("cut"))
-    // left join from the label-derived community list so an all-sink
-    // community (possible on a non-symmetrized input) still answers a
-    // row; vol/cut coalesce to exact zeros
-    val base = nNodes.join(per, Seq("community"), "left")
-      .select(F.col("community"), F.col("n_nodes"),
-        F.coalesce(F.col("vol"), F.lit(0L)).as("vol"),
-        F.coalesce(F.col("cut"), F.lit(0L)).as("cut"))
-    val wAll = org.apache.spark.sql.expressions.Window
+
+  /** One frame over every community row, in community order: the bounded
+    * per-community totals (E, the Q fold) ride it instead of a second
+    * pass over the edges. */
+  private def allCommunities =
+    org.apache.spark.sql.expressions.Window
       .orderBy(F.col("community").asc)
       .rowsBetween(Long.MinValue, Long.MaxValue)
+
+  /** Newman's Q over per-community (vol, cut) sums, shared by the count
+    * and weighted modularities: intra = vol − cut, E = Σ vol, the
+    * community's dq = intra/E − (vol/E)² and q = Σ dq on every row.
+    * Left-joined from the label-derived community list so an all-sink
+    * community (possible on a non-symmetrized input) still answers a
+    * row, with vol/cut at `zero`. `exact` restates the sums' exact type
+    * on intra and E. */
+  private def withModularity(nNodes: DataFrame, per: DataFrame, zero: Column,
+      exact: Column => Column): DataFrame = {
     val eD = F.col("td_e").cast("double")
-    val withDq = base
-      .withColumn("intra", F.col("vol") - F.col("cut"))
-      .withColumn("td_e", F.sum(F.col("vol")).over(wAll))
-      .withColumn("dq", F.when(F.col("td_e") > 0L,
+    nNodes.join(per, Seq("community"), "left")
+      .select(F.col("community"), F.col("n_nodes"),
+        F.coalesce(F.col("vol"), zero).as("vol"),
+        F.coalesce(F.col("cut"), zero).as("cut"))
+      .withColumn("intra", exact(F.col("vol") - F.col("cut")))
+      .withColumn("td_e", exact(F.sum(F.col("vol")).over(allCommunities)))
+      .withColumn("dq", F.when(F.col("td_e") > zero,
         (F.col("intra").cast("double") / eD) -
           (F.col("vol").cast("double") / eD) *
           (F.col("vol").cast("double") / eD)).otherwise(F.lit(0.0d)))
-    withDq
       .withColumn("q", F.aggregate(
         F.sort_array(F.collect_list(
           F.struct(F.col("community").as("c"), F.col("dq").as("d")))
-          .over(wAll)),
+          .over(allCommunities)),
         F.lit(0.0d), (acc, s) => acc + s.getField("d")))
-      .select(F.col("community"), F.col("n_nodes"), F.col("vol"),
-        F.col("cut"), F.col("intra"), F.col("dq"), F.col("q"))
-      .orderBy(F.col("community").asc)
   }
 
   /** Per-community CONDUCTANCE — how well a partition (e.g.
@@ -662,41 +594,15 @@ object GraphRank {
   def communityConductance(edges: DataFrame, srcCol: String, dstCol: String,
       labels: DataFrame, nodeCol: String = "node",
       commCol: String = "community"): DataFrame = {
-    val e = edges
-      .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
-      .select(F.col(srcCol).cast("string").as("td_u"),
-        F.col(dstCol).cast("string").as("td_v"))
-    // the label relation feeds THREE consumers (both endpoint joins +
-    // the size count) — a lazy iterative producer (labelPropagation's
-    // composed plan) would re-execute per consumer, so materialize the
-    // node-sized partition ONCE. persist+count, NOT localCheckpoint:
-    // checkpointing runs the subplan WITHOUT AQE (no broadcast
-    // conversions — measured +6s on the 16k-node trade graph), while
-    // the cache materializes under the normal adaptive plan and the
-    // downstream joins see a broadcast-sized relation.
-    val lab = labels
-      .select(F.col(nodeCol).cast("string").as("td_n"),
-        F.col(commCol).as("td_c"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    lab.count()
-    val lu = lab.select(F.col("td_n").as("td_u"), F.col("td_c").as("td_cu"))
-    val lv = lab.select(F.col("td_n").as("td_v"), F.col("td_c").as("td_cv"))
-    val el = e.join(lu, "td_u").join(lv, "td_v")
-    val nNodes = lab.groupBy(F.col("td_c").as("community"))
-      .agg(F.count(F.lit(1)).as("n_nodes"))
-    val per = el.groupBy(F.col("td_cu").as("community"))
-      .agg(F.count(F.lit(1)).as("vol"),
-        F.sum(F.when(F.col("td_cu") =!= F.col("td_cv"), 1L).otherwise(0L))
-          .as("cut"))
+    val (el, nNodes) = communityEdges(edgeList(edges, srcCol, dstCol), labels,
+      nodeCol, commCol)
     // E = Σ_c vol(c): derived from the BOUNDED per-community rows via an
     // unpartitioned window (≤ #communities rows, the Lorenz convention)
     // instead of a second count over the edge-sized el — a broadcast
     // 1-row total would re-execute the whole edge pipeline on its own
     // thread (measured: the gate read 11.7s that way, ~2s this way)
-    val wAll = org.apache.spark.sql.expressions.Window
-      .orderBy(F.col("community").asc)
-      .rowsBetween(Long.MinValue, Long.MaxValue)
-    val withE = per.withColumn("td_e", F.sum(F.col("vol")).over(wAll))
+    val withE = volCut(el)
+      .withColumn("td_e", F.sum(F.col("vol")).over(allCommunities))
     val den = F.least(F.col("vol"), F.col("td_e") - F.col("vol"))
     withE.join(nNodes, Seq("community"))
       .select(F.col("community"), F.col("n_nodes"), F.col("vol"),
@@ -725,10 +631,7 @@ object GraphRank {
   def attributeAssortativity(edges: DataFrame, srcCol: String,
       dstCol: String, labels: DataFrame, nodeCol: String = "node",
       attrCol: String = "attr"): DataFrame = {
-    val e = edges
-      .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
-      .select(F.col(srcCol).cast("string").as("td_u"),
-        F.col(dstCol).cast("string").as("td_v"))
+    val e = edgeList(edges, srcCol, dstCol)
     val lab = labels
       .where(F.col(nodeCol).isNotNull && F.col(attrCol).isNotNull)
       .select(F.col(nodeCol).cast("string").as("td_n"),
@@ -801,43 +704,14 @@ object GraphRank {
       .select(F.col(srcCol).cast("string").as("td_u"),
         F.col(dstCol).cast("string").as("td_v"),
         F.col(weightCol).cast("decimal(20,6)").as("td_w"))
-    val lab = labels
-      .select(F.col(nodeCol).cast("string").as("td_n"),
-        F.col(commCol).as("td_c"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    lab.count()
-    val lu = lab.select(F.col("td_n").as("td_u"), F.col("td_c").as("td_cu"))
-    val lv = lab.select(F.col("td_n").as("td_v"), F.col("td_c").as("td_cv"))
-    val el = e.join(lu, "td_u").join(lv, "td_v")
-    val nNodes = lab.groupBy(F.col("td_c").as("community"))
-      .agg(F.count(F.lit(1)).as("n_nodes"))
+    val (el, nNodes) = communityEdges(e, labels, nodeCol, commCol)
     val zero = F.lit(java.math.BigDecimal.ZERO).cast("decimal(38,6)")
     val per = el.groupBy(F.col("td_cu").as("community"))
       .agg(F.sum(F.col("td_w")).cast("decimal(38,6)").as("vol"),
         F.sum(F.when(F.col("td_cu") =!= F.col("td_cv"), F.col("td_w"))
           .otherwise(F.lit(java.math.BigDecimal.ZERO).cast("decimal(20,6)")))
           .cast("decimal(38,6)").as("cut"))
-    val base = nNodes.join(per, Seq("community"), "left")
-      .select(F.col("community"), F.col("n_nodes"),
-        F.coalesce(F.col("vol"), zero).as("vol"),
-        F.coalesce(F.col("cut"), zero).as("cut"))
-    val wAll = org.apache.spark.sql.expressions.Window
-      .orderBy(F.col("community").asc)
-      .rowsBetween(Long.MinValue, Long.MaxValue)
-    val eD = F.col("td_e").cast("double")
-    val withDq = base
-      .withColumn("intra", (F.col("vol") - F.col("cut")).cast("decimal(38,6)"))
-      .withColumn("td_e", F.sum(F.col("vol")).over(wAll).cast("decimal(38,6)"))
-      .withColumn("dq", F.when(F.col("td_e") > zero,
-        (F.col("intra").cast("double") / eD) -
-          (F.col("vol").cast("double") / eD) *
-          (F.col("vol").cast("double") / eD)).otherwise(F.lit(0.0d)))
-    withDq
-      .withColumn("q", F.aggregate(
-        F.sort_array(F.collect_list(
-          F.struct(F.col("community").as("c"), F.col("dq").as("d")))
-          .over(wAll)),
-        F.lit(0.0d), (acc, s) => acc + s.getField("d")))
+    withModularity(nNodes, per, zero, _.cast("decimal(38,6)"))
       .select(F.col("community"), F.col("n_nodes"),
         F.col("vol").cast("double").as("vol"),
         F.col("cut").cast("double").as("cut"),
@@ -864,10 +738,7 @@ object GraphRank {
       k: Int, iters: Int = 3): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    var e = edges
-      .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
-      .select(F.col(srcCol).cast("string").as("td_u"),
-        F.col(dstCol).cast("string").as("td_v"))
+    var e = edgeList(edges, srcCol, dstCol)
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
     for (_ <- 0 until iters) {
       val keep = e.groupBy(F.col("td_u")).agg(F.count(F.lit(1)).as("td_d"))
@@ -905,11 +776,7 @@ object GraphRank {
   def kHopReach(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val e = edges
-      .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
-      .select(F.col(srcCol).cast("string").as("td_u"),
-        F.col(dstCol).cast("string").as("td_v"))
-      .distinct()
+    val e = edgeList(edges, srcCol, dstCol).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
     var pairs = e
     val layers = scala.collection.mutable.ArrayBuffer[DataFrame](e)
@@ -951,17 +818,8 @@ object GraphRank {
   def kHopReachApprox(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, lgK: Int = 12): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val e = edges
-      .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
-      .select(F.col(srcCol).cast("string").as("td_u"),
-        F.col(dstCol).cast("string").as("td_v"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val nodes = e.select(F.col("td_u").as("node"))
-      .union(e.select(F.col("td_v").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    nodes.count()
+    val (e, nodes, _) =
+      persistedGraph(edgeList(edges, srcCol, dstCol).distinct())
     var balls = nodes.groupBy(F.col("node"))
       .agg(F.expr(s"hll_sketch_agg(node, $lgK)").as("td_ball"))
     for (_ <- 0 until k) {
@@ -1048,10 +906,7 @@ object GraphRank {
   def closenessTruncated(edges: DataFrame, srcCol: String,
       dstCol: String, maxHops: Int = 2): DataFrame = {
     require(maxHops >= 1 && maxHops <= 8, s"maxHops in [1,8], got $maxHops")
-    val e = edges
-      .where(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
-      .select(F.col(srcCol).cast("string").as("td_u"),
-        F.col(dstCol).cast("string").as("td_v"))
+    val e = edgeList(edges, srcCol, dstCol)
       .where(F.col("td_u") =!= F.col("td_v"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
@@ -1074,12 +929,11 @@ object GraphRank {
       layers += frontier
       layers += seen
     }
-    def fx(c: Column) = F.floor(c * F.lit(1048576.0d) + F.lit(0.5d))
-      .cast("long")
     val out = seen.groupBy(F.col("td_u").as("node"))
       .agg(F.count(F.lit(1)).as("n_reach"),
         F.sum(F.col("td_d")).as("sum_dist"),
-        F.sum(fx(F.lit(1.0d) / F.col("td_d").cast("double"))).as("td_h"))
+        F.sum(fixedPoint(F.lit(1.0d) / F.col("td_d").cast("double")))
+          .as("td_h"))
       .select(F.col("node"), F.col("n_reach"), F.col("sum_dist"),
         (F.col("n_reach").cast("double") /
           F.col("sum_dist").cast("double")).as("closeness"),
@@ -1133,15 +987,13 @@ object GraphRank {
       .where(F.col("z_deg") <= maxHubDegree)
     val l = adj.select(F.col("z"), F.col("n").as("u"), F.col("z_deg"))
     val r = adj.select(F.col("z"), F.col("n").as("v"))
-    def fx(c: Column) = F.floor(c * F.lit(1048576.0d) + F.lit(0.5d))
-      .cast("long")
     val zD = F.col("z_deg").cast("double")
     val pairs = l.join(r, Seq("z"))
       .where(F.col("u") < F.col("v"))
       .groupBy(F.col("u"), F.col("v"))
       .agg(F.count(F.lit(1)).as("cn"),
-        F.sum(fx(F.lit(1.0d) / F.log(zD))).as("td_aa"),
-        F.sum(fx(F.lit(1.0d) / zD)).as("td_ra"))
+        F.sum(fixedPoint(F.lit(1.0d) / F.log(zD))).as("td_aa"),
+        F.sum(fixedPoint(F.lit(1.0d) / zD)).as("td_ra"))
     val nonEdges = pairs.join(e,
       pairs("u") === e("a") && pairs("v") === e("b"), "left_anti")
     def un(c: Column) = c.cast("double") / F.lit(1048576.0d)

@@ -41,29 +41,14 @@ object Similarity {
 
   /** Deterministic pseudo-random hyperplane component: hash of (plane, dim)
     * mapped to [-0.5, 0.5]. Reproducible across executors with no state. */
-  private def planeComponent(plane: Int, dim: Column): Column =
+  private[graft] def planeComponent(plane: Int, dim: Column): Column =
     (F.pmod(F.xxhash64(F.lit(plane), dim), F.lit(100000L)).cast(DoubleType) / 100000.0) - 0.5
 
   /** nbits-bit random-hyperplane LSH bucket id for a vector. One codegen'd
-    * kernel ([[graft.expressions.LshBucketExpr]]); bit-parity with the HOF
-    * formulation below is asserted in KernelParitySpec. */
+    * kernel ([[graft.expressions.LshBucketExpr]]); bit-parity with the
+    * test-side HOF formulation is asserted in KernelParitySpec. */
   def lshBucket(vec: Column, nbits: Int = 8): Column =
     graft.expressions.HashKernels.lshBucket(vec, nbits)
-
-  /** Reference HOF formulation of [[lshBucket]] (interpreted lambdas, one
-    * pass per hyperplane). Kept only as the parity oracle for the kernel —
-    * including the nbits=0 single-bucket mode (constant 0). */
-  private[graft] def lshBucketHof(vec: Column, nbits: Int = 8): Column = {
-    val bits = (0 until nbits).map { p =>
-      val proj = F.aggregate(
-        F.zip_with(vec, F.transform(F.sequence(F.lit(0), F.size(vec) - 1),
-          j => planeComponent(p, j)), (x, w) => x.cast(DoubleType) * w),
-        F.lit(0.0), (acc, v) => acc + v)
-      F.when(proj > 0, 1L << p).otherwise(0L)
-    }
-    if (bits.isEmpty) F.lit(0L)
-    else bits.reduce((a: Column, b: Column) => a + b)
-  }
 
   /** LSH-bucketed approximate top-k: queries only meet corpus vectors in the
     * same bucket. One shuffle on bucket id; recall trades off with nbits. */

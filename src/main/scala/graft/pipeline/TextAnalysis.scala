@@ -233,15 +233,6 @@ object TextAnalysis {
         .as("fkgl"))
   }
 
-  /** Reference HOF formulation of [[winnowFingerprint]] — parity oracle
-    * only (interpreted lambdas, fresh slice per window). */
-  private[graft] def winnowFingerprintHof(text: Column, w: Int = 4): Column = {
-    val toks = tokens(text)
-    val windows = F.transform(F.sequence(F.lit(0), F.greatest(F.size(toks) - w, F.lit(0))),
-      i => F.xxhash64(F.array_join(F.slice(toks, i + 1, F.lit(w)), " ")))
-    F.array_min(windows)
-  }
-
   /** Cross-document n-gram novelty: for each document, how much of its
     * content exists elsewhere in the corpus — `shared` counts the doc's
     * distinct word n-grams that appear in at least one OTHER document,

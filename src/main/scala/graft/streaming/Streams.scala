@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession, functions => F}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -683,23 +683,45 @@ object Streams {
           F.lit(false)).as("contaminated"))
   }
 
+  /** The keyed-state lifecycle shared by the one-row-per-key stateful
+    * folds ([[runningTotals]], [[statefulCusum]], [[statefulEwma]],
+    * [[statefulMoments]], [[statefulSprt]]): rows grouped by `key`; a key
+    * whose TTL timeout fires loses its state and emits nothing; a state
+    * idle past `stateTtlMs` (by its `lastMs` stamp) is stale even if the
+    * engine has not fired its timeout yet, so the key restarts from
+    * `zero(now)` — correctness never waits on the timeout. `fold` takes
+    * (key, previous state, the batch's rows, now) and returns the next
+    * state, stored with the TTL refreshed, and the key's one output row. */
+  private def keyedFold[T, S: Encoder, U: Encoder](ds: Dataset[T],
+      key: T => String, stateTtlMs: Option[Long], lastMs: S => Long,
+      zero: Long => S)(
+      fold: (String, S, Iterator[T], Long) => (S, U)): Dataset[U] = {
+    val timeoutConf =
+      if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
+      else GroupStateTimeout.NoTimeout()
+    ds.groupByKey(key)(Encoders.STRING)
+      .flatMapGroupsWithState[S, U](OutputMode.Append(), timeoutConf) {
+        (k: String, rows: Iterator[T], state: GroupState[S]) =>
+          if (state.hasTimedOut) {
+            state.remove()
+            Iterator.empty
+          } else {
+            val now = stateTtlMs.map(_ => state.getCurrentProcessingTimeMs())
+              .getOrElse(0L)
+            val prev = state.getOption
+              .filter(s => stateTtlMs.forall(t => now - lastMs(s) <= t))
+              .getOrElse(zero(now))
+            val (next, out) = fold(k, prev, rows, now)
+            state.update(next)
+            stateTtlMs.foreach(state.setTimeoutDuration)
+            Iterator.single(out)
+          }
+      }
+  }
+
   final case class SessionUpdate(key: String, events: Long, valueSum: Double)
   final case class TotalsState(events: Long, valueSum: Double, lastMs: Long)
 
-  /** Keyed running state via flatMapGroupsWithState: per-key event count
-    * and value sum, updated each micro-batch (the custom-state escape
-    * hatch — KeyValueGroupedDataset.[flat]mapGroupsWithState).
-    *
-    * State lifecycle (same contract as [[nearDupHits]]): by default one
-    * state row per distinct key lives forever — tiny per key, correct
-    * for all-history totals, but unbounded on an unbounded key space.
-    * Pass `stateTtlMs = Some(ms)` to evict keys idle past the TTL via
-    * `ProcessingTimeTimeout` (sliding: every arrival refreshes it); a
-    * key arriving after its state expired restarts its totals from zero
-    * — checked lazily at arrival too, so correctness never waits on the
-    * engine firing the timeout. Same trigger caveat as nearDupHits:
-    * pair a TTL with a processing-time trigger or `Trigger.Once`, not
-    * `AvailableNow` + `processAllAvailable()`. */
   final case class CusumUpdate(key: String, n: Long, cusumHi: Double,
     cusumLo: Double, alarm: Boolean)
   final case class CusumState(n: Long, hi: Double, lo: Double, lastMs: Long)
@@ -726,32 +748,18 @@ object Streams {
     require(slack >= 0.0d, s"slack must be >= 0, got $slack")
     require(threshold > 0.0d, s"threshold must be > 0, got $threshold")
     import ds.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[CusumState, CusumUpdate](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, state: GroupState[CusumState]) if state.hasTimedOut =>
-          state.remove()
-          Iterator.empty
-        case (key, rows, state: GroupState[CusumState]) =>
-          val now = stateTtlMs.map(_ => state.getCurrentProcessingTimeMs())
-            .getOrElse(0L)
-          val prev = state.getOption
-            .filter(s => stateTtlMs.forall(t => now - s.lastMs <= t))
-            .getOrElse(CusumState(0L, 0.0, 0.0, now))
-          var n = prev.n; var hi = prev.hi; var lo = prev.lo
-          rows.toSeq.sortBy(_._2).foreach { r =>
-            n += 1
-            hi = math.max(0.0, hi + (1.0 * (r._3 - mu) - slack))
-            lo = math.max(0.0, lo + (-1.0 * (r._3 - mu) - slack))
-          }
-          state.update(CusumState(n, hi, lo, now))
-          stateTtlMs.foreach(state.setTimeoutDuration)
-          Iterator.single(CusumUpdate(key, n, hi, lo,
-            hi > threshold || lo > threshold))
-      }
+    keyedFold[(String, Long, Double), CusumState, CusumUpdate](ds, _._1,
+        stateTtlMs, _.lastMs, CusumState(0L, 0.0, 0.0, _)) {
+      (key, prev, rows, now) =>
+        var n = prev.n; var hi = prev.hi; var lo = prev.lo
+        rows.toSeq.sortBy(_._2).foreach { r =>
+          n += 1
+          hi = math.max(0.0, hi + (1.0 * (r._3 - mu) - slack))
+          lo = math.max(0.0, lo + (-1.0 * (r._3 - mu) - slack))
+        }
+        (CusumState(n, hi, lo, now),
+          CusumUpdate(key, n, hi, lo, hi > threshold || lo > threshold))
+    }
   }
 
   final case class EwmaUpdate(key: String, n: Long, value: Double,
@@ -776,34 +784,20 @@ object Streams {
     require(alpha > 0.0d && alpha <= 1.0d, s"alpha must be in (0,1], got $alpha")
     val beta = 1.0d - alpha
     import ds.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[EwmaState, EwmaUpdate](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, state: GroupState[EwmaState]) if state.hasTimedOut =>
-          state.remove()
-          Iterator.empty
-        case (key, rows, state: GroupState[EwmaState]) =>
-          val now = stateTtlMs.map(_ => state.getCurrentProcessingTimeMs())
-            .getOrElse(0L)
-          val prev = state.getOption
-            .filter(s => stateTtlMs.forall(t => now - s.lastMs <= t))
-            .getOrElse(EwmaState(0L, 0.0, now))
-          var n = prev.n; var ewma = prev.ewma
-          var lastV = 0.0d; var dev = 0.0d
-          rows.toSeq.sortBy(_._2).foreach { r =>
-            val v = r._3
-            if (n == 0L) { dev = 0.0d; ewma = v }
-            else { dev = v - ewma; ewma = ewma * beta + alpha * v }
-            n += 1
-            lastV = v
-          }
-          state.update(EwmaState(n, ewma, now))
-          stateTtlMs.foreach(state.setTimeoutDuration)
-          Iterator.single(EwmaUpdate(key, n, lastV, ewma, dev))
-      }
+    keyedFold[(String, Long, Double), EwmaState, EwmaUpdate](ds, _._1,
+        stateTtlMs, _.lastMs, EwmaState(0L, 0.0, _)) {
+      (key, prev, rows, now) =>
+        var n = prev.n; var ewma = prev.ewma
+        var lastV = 0.0d; var dev = 0.0d
+        rows.toSeq.sortBy(_._2).foreach { r =>
+          val v = r._3
+          if (n == 0L) { dev = 0.0d; ewma = v }
+          else { dev = v - ewma; ewma = ewma * beta + alpha * v }
+          n += 1
+          lastV = v
+        }
+        (EwmaState(n, ewma, now), EwmaUpdate(key, n, lastV, ewma, dev))
+    }
   }
 
   final case class MomentsUpdate(key: String, n: Long, value: Double,
@@ -833,50 +827,37 @@ object Streams {
   def statefulMoments(ds: Dataset[(String, Long, Double)],
       stateTtlMs: Option[Long] = None): Dataset[MomentsUpdate] = {
     import ds.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[MomentsState, MomentsUpdate](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, state: GroupState[MomentsState]) if state.hasTimedOut =>
-          state.remove()
-          Iterator.empty
-        case (key, rows, state: GroupState[MomentsState]) =>
-          val now = stateTtlMs.map(_ => state.getCurrentProcessingTimeMs())
-            .getOrElse(0L)
-          val prev = state.getOption
-            .filter(s => stateTtlMs.forall(t => now - s.lastMs <= t))
-            .getOrElse(MomentsState(0L, 0L, 0L, now))
-          var n = prev.n; var sx = prev.sx; var sxx = prev.sxx
-          var lastV = 0.0d
-          rows.toSeq.sortBy(_._2).foreach { r =>
-            val v = r._3
-            // loud domain guard: past |v| = 2^21 the squared image
-            // floor(v²·2^20) exceeds Long and JVM toLong CLAMPS silently
-            if (math.abs(v) > 2097152.0d || v.isNaN)
-              throw new IllegalArgumentException(
-                s"statefulMoments value $v for key '$key' is outside the " +
-                "fixed-point domain |v| <= 2^21 (= 2097152): the squared " +
-                "2^20 image would overflow Long and clamp to a silently " +
-                "wrong variance — rescale the metric to original units " +
-                "upstream (the q_ab_welch gate convention)")
-            n += 1
-            sx += math.floor(v * 1048576.0d + 0.5d).toLong
-            sxx += math.floor((v * v) * 1048576.0d + 0.5d).toLong
-            lastV = v
-          }
-          state.update(MomentsState(n, sx, sxx, now))
-          stateTtlMs.foreach(state.setTimeoutDuration)
-          val nD = n.toDouble
-          val mean = (sx.toDouble / 1048576.0d) / nD
-          val variance = math.max(0.0d,
-            (sxx.toDouble / 1048576.0d) / nD - mean * mean)
-          val std = math.sqrt(variance)
-          val z = if (n >= 2L && std > 0.0d) Some((lastV - mean) / std)
-                  else None
-          Iterator.single(MomentsUpdate(key, n, lastV, mean, std, z))
-      }
+    keyedFold[(String, Long, Double), MomentsState, MomentsUpdate](ds, _._1,
+        stateTtlMs, _.lastMs, MomentsState(0L, 0L, 0L, _)) {
+      (key, prev, rows, now) =>
+        var n = prev.n; var sx = prev.sx; var sxx = prev.sxx
+        var lastV = 0.0d
+        rows.toSeq.sortBy(_._2).foreach { r =>
+          val v = r._3
+          // loud domain guard: past |v| = 2^21 the squared image
+          // floor(v²·2^20) exceeds Long and JVM toLong CLAMPS silently
+          if (math.abs(v) > 2097152.0d || v.isNaN)
+            throw new IllegalArgumentException(
+              s"statefulMoments value $v for key '$key' is outside the " +
+              "fixed-point domain |v| <= 2^21 (= 2097152): the squared " +
+              "2^20 image would overflow Long and clamp to a silently " +
+              "wrong variance — rescale the metric to original units " +
+              "upstream (the q_ab_welch gate convention)")
+          n += 1
+          sx += math.floor(v * 1048576.0d + 0.5d).toLong
+          sxx += math.floor((v * v) * 1048576.0d + 0.5d).toLong
+          lastV = v
+        }
+        val nD = n.toDouble
+        val mean = (sx.toDouble / 1048576.0d) / nD
+        val variance = math.max(0.0d,
+          (sxx.toDouble / 1048576.0d) / nD - mean * mean)
+        val std = math.sqrt(variance)
+        val z = if (n >= 2L && std > 0.0d) Some((lastV - mean) / std)
+                else None
+        (MomentsState(n, sx, sxx, now),
+          MomentsUpdate(key, n, lastV, mean, std, z))
+    }
   }
 
   final case class SprtUpdate(key: String, trials: Long, successes: Long,
@@ -910,67 +891,52 @@ object Streams {
     val upper = math.log((1.0d - beta) / alpha)
     val lower = math.log(beta / (1.0d - alpha))
     import ds.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[SprtState, SprtUpdate](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, state: GroupState[SprtState]) if state.hasTimedOut =>
-          state.remove()
-          Iterator.empty
-        case (key, rows, state: GroupState[SprtState]) =>
-          val now = stateTtlMs.map(_ => state.getCurrentProcessingTimeMs())
-            .getOrElse(0L)
-          val prev = state.getOption
-            .filter(s => stateTtlMs.forall(t => now - s.lastMs <= t))
-            .getOrElse(SprtState(0L, 0L, "", -1L, now))
-          var n = prev.trials; var k = prev.successes
-          var decision = prev.decision; var decSeq = prev.decisionSeq
-          rows.toSeq.sortBy(_._2).foreach { r =>
-            n += 1
-            if (r._3) k += 1
-            if (decision.isEmpty) {
-              val llr = k.toDouble * c1 + (n - k).toDouble * c0
-              if (llr >= upper) { decision = "accept_h1"; decSeq = r._2 }
-              else if (llr <= lower) { decision = "accept_h0"; decSeq = r._2 }
-            }
+    keyedFold[(String, Long, Boolean), SprtState, SprtUpdate](ds, _._1,
+        stateTtlMs, _.lastMs, SprtState(0L, 0L, "", -1L, _)) {
+      (key, prev, rows, now) =>
+        var n = prev.trials; var k = prev.successes
+        var decision = prev.decision; var decSeq = prev.decisionSeq
+        rows.toSeq.sortBy(_._2).foreach { r =>
+          n += 1
+          if (r._3) k += 1
+          if (decision.isEmpty) {
+            val llr = k.toDouble * c1 + (n - k).toDouble * c0
+            if (llr >= upper) { decision = "accept_h1"; decSeq = r._2 }
+            else if (llr <= lower) { decision = "accept_h0"; decSeq = r._2 }
           }
-          state.update(SprtState(n, k, decision, decSeq, now))
-          stateTtlMs.foreach(state.setTimeoutDuration)
-          val llr = k.toDouble * c1 + (n - k).toDouble * c0
-          Iterator.single(SprtUpdate(key, n, k, llr,
+        }
+        val llr = k.toDouble * c1 + (n - k).toDouble * c0
+        (SprtState(n, k, decision, decSeq, now),
+          SprtUpdate(key, n, k, llr,
             if (decision.isEmpty) "continue" else decision,
             if (decision.isEmpty) None else Some(decSeq)))
-      }
+    }
   }
 
+  /** Keyed running state via flatMapGroupsWithState: per-key event count
+    * and value sum, updated each micro-batch (the custom-state escape
+    * hatch — KeyValueGroupedDataset.[flat]mapGroupsWithState).
+    *
+    * State lifecycle (same contract as [[nearDupHits]]): by default one
+    * state row per distinct key lives forever — tiny per key, correct
+    * for all-history totals, but unbounded on an unbounded key space.
+    * Pass `stateTtlMs = Some(ms)` to evict keys idle past the TTL via
+    * `ProcessingTimeTimeout` (sliding: every arrival refreshes it); a
+    * key arriving after its state expired restarts its totals from zero
+    * — checked lazily at arrival too, so correctness never waits on the
+    * engine firing the timeout. Same trigger caveat as nearDupHits:
+    * pair a TTL with a processing-time trigger or `Trigger.Once`, not
+    * `AvailableNow` + `processAllAvailable()`. */
   def runningTotals(ds: Dataset[(String, Double)],
       stateTtlMs: Option[Long] = None): Dataset[SessionUpdate] = {
     import ds.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[TotalsState, SessionUpdate](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, state: GroupState[TotalsState]) if state.hasTimedOut =>
-          state.remove()
-          Iterator.empty
-        case (key, rows, state: GroupState[TotalsState]) =>
-          val now = stateTtlMs.map(_ => state.getCurrentProcessingTimeMs())
-            .getOrElse(0L)
-          // a state row idle past the TTL is stale even if the engine has
-          // not fired its timeout yet: restart from zero
-          val prev = state.getOption
-            .filter(s => stateTtlMs.forall(t => now - s.lastMs <= t))
-            .getOrElse(TotalsState(0L, 0.0, now))
-          var n = prev.events
-          var s = prev.valueSum
-          rows.foreach { r => n += 1; s += r._2 }
-          state.update(TotalsState(n, s, now))
-          stateTtlMs.foreach(state.setTimeoutDuration)
-          Iterator.single(SessionUpdate(key, n, s))
-      }
+    keyedFold[(String, Double), TotalsState, SessionUpdate](ds, _._1,
+        stateTtlMs, _.lastMs, TotalsState(0L, 0.0, _)) {
+      (key, prev, rows, now) =>
+        var n = prev.events
+        var s = prev.valueSum
+        rows.foreach { r => n += 1; s += r._2 }
+        (TotalsState(n, s, now), SessionUpdate(key, n, s))
+    }
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` for named gates to files — the
   * optimization rounds' plan-evidence artifact (plans/r17/<gate>_{before,
   * after}.txt). Usage: runMain graft.tools.PlanDump <outDir> <suffix>
@@ -14,14 +12,7 @@ object PlanDump {
     val sfDir = if (args.length > 3) args(3)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.td.session(s"local[$cpus]", cpus.toInt)
     new java.io.File(outDir).mkdirs()
     gates.foreach { g =>
       val df = graft.SparkEntry.queries(g)(spark, sfDir)

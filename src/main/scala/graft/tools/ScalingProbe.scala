@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 
 /** Scaling experiment (NOT part of the driver contract): times the heavy
   * pipeline operators at 1×, 10× and 100× the sf0.1 documents table to
@@ -13,14 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 object ScalingProbe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.driver.memory", "24g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.td.session(s"local[$cpus]", cpus.toInt)
 
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select("doc_id", "text")

@@ -8,13 +8,7 @@ import graft.core._
 import graft.expressions.UuidV7
 
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = td.session("local[4]", 4)
   val sf = "/root/testdata/sf0.001"
 }
 

@@ -17,7 +17,7 @@ class KernelParitySpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val mismatches = docs.select(
         Dedup.simhash64(F.col("text")).as("k"),
-        Dedup.simhash64Hof(F.col("text")).as("h"))
+        HofOracles.simhash64Hof(F.col("text")).as("h"))
       .filter(F.col("k") =!= F.col("h") || F.col("k").isNull =!= F.col("h").isNull)
       .count()
     assert(mismatches == 0)
@@ -29,7 +29,7 @@ class KernelParitySpec extends AnyFunSuite {
       .toDF("id", "text")
     val rows = df.select(F.col("id"),
         Dedup.simhash64(F.col("text")).as("k"),
-        Dedup.simhash64Hof(F.col("text")).as("h"))
+        HofOracles.simhash64Hof(F.col("text")).as("h"))
       .collect()
     rows.foreach { r => assert(r.getLong(1) == r.getLong(2), s"id=${r.getLong(0)}") }
     // null text → 0L signature (HOF folds a null votes array to 0)
@@ -40,7 +40,7 @@ class KernelParitySpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val mismatches = docs.select(
         Dedup.simhash60Md5(F.col("text")).as("k"),
-        Dedup.simhash60Md5Hof(F.col("text")).as("h"))
+        HofOracles.simhash60Md5Hof(F.col("text")).as("h"))
       .filter(F.col("k") =!= F.col("h") || F.col("k").isNull =!= F.col("h").isNull)
       .count()
     assert(mismatches == 0)
@@ -53,7 +53,7 @@ class KernelParitySpec extends AnyFunSuite {
       .toDF("id", "text")
     val rows = df.select(F.col("id"),
         Dedup.simhash60Md5(F.col("text")).as("k"),
-        Dedup.simhash60Md5Hof(F.col("text")).as("h"))
+        HofOracles.simhash60Md5Hof(F.col("text")).as("h"))
       .collect()
     rows.foreach { r => assert(r.getLong(1) == r.getLong(2), s"id=${r.getLong(0)}") }
     // null text → 0L (the HOF's outer coalesce)
@@ -148,7 +148,7 @@ class KernelParitySpec extends AnyFunSuite {
     Seq(1, 4, 9).foreach { w =>
       val mm = docs.select(
           TextAnalysis.winnowFingerprint(F.col("text"), w).as("k"),
-          TextAnalysis.winnowFingerprintHof(F.col("text"), w).as("h"))
+          HofOracles.winnowFingerprintHof(F.col("text"), w).as("h"))
         .filter(F.col("k") =!= F.col("h")).count()
       assert(mm == 0, s"w=$w")
     }
@@ -174,7 +174,7 @@ class KernelParitySpec extends AnyFunSuite {
     Seq(0, 1, 4, 8, 16).foreach { nbits => // 0 = single-bucket exact mode
       val mismatches = emb.select(
           Similarity.lshBucket(F.col("embedding"), nbits).as("k"),
-          Similarity.lshBucketHof(F.col("embedding"), nbits).as("h"))
+          HofOracles.lshBucketHof(F.col("embedding"), nbits).as("h"))
         .filter(F.col("k") =!= F.col("h"))
         .count()
       assert(mismatches == 0, s"nbits=$nbits")
@@ -191,7 +191,7 @@ class KernelParitySpec extends AnyFunSuite {
     ).toDF("id", "v")
     val rows = df.select(F.col("id"),
         Similarity.lshBucket(F.col("v"), 8).as("k"),
-        Similarity.lshBucketHof(F.col("v"), 8).as("h"))
+        HofOracles.lshBucketHof(F.col("v"), 8).as("h"))
       .collect()
     rows.foreach { r => assert(r.getLong(1) == r.getLong(2), s"id=${r.getLong(0)}") }
     // null vector and null element both collapse to bucket 0

@@ -365,6 +365,42 @@ class StoreFlowSpec extends AnyFunSuite {
     assert(seen.toSeq == Seq("0", "10", "20"))
   }
 
+  test("flow: concurrent triggers of one publisher run one at a time") {
+    // two overlapping triggers of one incremental publisher: each run must
+    // see the offset the other saved, never both the same one
+    val store = freshStore()
+    val engine = new FlowEngine(store, spark)
+    import spark.implicits._
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger
+    val maxInFlight = new java.util.concurrent.atomic.AtomicInteger
+    engine.publisher("incr", "c", Seq("t")) { ctx =>
+      maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+      try {
+        val n = ctx.offsets.getOrElse("n", "0").toInt
+        Thread.sleep(300)
+        ctx.setOffset("n", (n + 1).toString)
+        Seq(TableFrame.fromRaw(Seq(n).toDF("n")))
+      } finally inFlight.decrementAndGet()
+    }
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (1 to 2).map { _ =>
+      val t = new Thread(() =>
+        try { start.await(); engine.trigger("incr") }
+        catch { case e: Throwable => errors.add(e) })
+      t.start()
+      t
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    assert(errors.isEmpty, errors.toString)
+    assert(maxInFlight.get == 1, s"${maxInFlight.get} runs in flight at once")
+    assert(graft.flow.Offsets.load(store.root, "incr") == Map("n" -> "2"))
+    val published = store.scan("c/t@INITIAL..HEAD").get.df
+      .select("n").as[Int].collect().sorted.toSeq
+    assert(published == Seq(0, 1))
+  }
+
   test("flow: nightly ingest — exact + near-dup dedup against the stored corpus") {
     // the continuous-ingest composition: each night's batch is deduped
     // against the CURRENT stored corpus (exact via md5 anti-join, near-dup

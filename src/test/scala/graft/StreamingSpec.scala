@@ -824,6 +824,64 @@ class StreamingSpec extends AnyFunSuite {
       s"expired moments must restart, got $mo")
   }
 
+  test("stateful sprt TTL: a latched decision expires with its state") {
+    import spark.implicits._
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("key",
+        org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("seq",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("s",
+        org.apache.spark.sql.types.BooleanType)))
+    def writeRows(dir: java.nio.file.Path, rows: Seq[(String, Long, Boolean)],
+        name: String, mtime: Long): Unit = {
+      val stage = Files.createTempDirectory("graft-sp-stage")
+      rows.toDF("key", "seq", "s").coalesce(1).write.mode("overwrite")
+        .parquet(stage.toString)
+      val part = stage.toFile.listFiles()
+        .filter(f => f.getName.endsWith(".parquet") &&
+          !f.getName.startsWith("_")).head
+      val dst = dir.resolve(name)
+      java.nio.file.Files.copy(part.toPath, dst)
+      assert(dst.toFile.setLastModified(mtime))
+    }
+    @annotation.nowarn("cat=deprecation")
+    def runOnce(dir: String, out: String,
+        ckpt: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      val stream = Streams.readParquetStream(spark, dir, schema,
+        maxFilesPerTrigger = 1).as[(String, Long, Boolean)]
+      val sprt = Streams.statefulSprt(stream, p0 = 0.2d, p1 = 0.8d,
+        stateTtlMs = Some(500L))
+      val q = sprt.toDF().writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
+      q.awaitTermination()
+      q
+    }
+    val dir = Files.createTempDirectory("graft-sp-ttl")
+    val out = Files.createTempDirectory("graft-sp-ttl-out").toString
+    val ck = Files.createTempDirectory("graft-sp-ttl-ck").toString
+    // 'a' latches accept_h1 at its second success; 'b' stays at continue
+    writeRows(dir, Seq(("a", 1L, true), ("a", 2L, true), ("b", 1L, true)),
+      "b0.parquet", 1700000000000L)
+    runOnce(dir.toString, out, ck).stop()
+    Thread.sleep(1200)
+    // past the TTL: 'a' arrives again and starts a fresh test (its latched
+    // verdict went with its state); 'b' is evicted
+    writeRows(dir, Seq(("a", 3L, true)), "b1.parquet", 1700000060000L)
+    val q = runOnce(dir.toString, out, ck)
+    val stateRows = q.recentProgress.flatMap(_.stateOperators)
+      .lastOption.map(_.numRowsTotal)
+    q.stop()
+    assert(stateRows.contains(1L), s"state rows after eviction: $stateRows")
+    val a = spark.read.parquet(out).as[Streams.SprtUpdate].collect()
+      .filter(_.key == "a").map(u => (u.trials, u.decision, u.decisionSeq))
+      .toSet
+    assert(a == Set((2L, "accept_h1", Some(2L)), (1L, "continue", None)),
+      s"an expired latch must restart the test, got $a")
+  }
+
   test("streaming near-dup: rewrites flagged against the min-id canonical; differential vs batch band index") {
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog while seventeen " +
