@@ -3,6 +3,7 @@ package graft.flow
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.collection.immutable.VectorMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -57,13 +58,16 @@ final class FlowContext(
   * marker.
   */
 final class FlowEngine(val store: TableStore, spark: SparkSession) {
-  private val functions = mutable.LinkedHashMap[String, FlowFunction]()
+  // copy-on-write under registerLock, so StoreApi's pool reads whole
+  // snapshots; insertion order is the tie order of `plan`
+  @volatile private var functions = VectorMap.empty[String, FlowFunction]
+  private val registerLock = new Object
   private val runLocks =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  def register(f: FlowFunction): Unit = {
+  def register(f: FlowFunction): Unit = registerLock.synchronized {
     require(!functions.contains(f.name), s"function ${f.name} already registered")
-    functions(f.name) = f
+    functions = functions.updated(f.name, f)
   }
 
   private def tables(f: FlowFunction, refs: Seq[String]): Seq[(String, String)] =
@@ -94,9 +98,10 @@ final class FlowEngine(val store: TableStore, spark: SparkSession) {
       fn: FlowContext => Seq[TableFrame]): Unit =
     register(FlowFunction(name, collection, Role.Subscriber, inputs, Nil, triggerBy, fn))
 
-  /** Functions triggered by a new version of `collection/table`. */
-  private def dependents(collection: String, table: String): Seq[FlowFunction] =
-    functions.values.toSeq.filter { f =>
+  /** Functions of `fs` triggered by a new version of `collection/table`. */
+  private def dependents(fs: Seq[FlowFunction], collection: String,
+      table: String): Seq[FlowFunction] =
+    fs.filter { f =>
       val trig = f.triggerBy.getOrElse(f.inputs).map(s => TableRef.parse(s, f.collection))
       trig.exists(r => r.collection == collection && r.table == table)
     }
@@ -193,9 +198,10 @@ final class FlowEngine(val store: TableStore, spark: SparkSession) {
     * at most once per execution (the planner's once-per-plan semantics).
     * Returns the function names in run order. */
   def trigger(name: String): Seq[String] = {
-    require(functions.contains(name),
-      s"no registered function '$name' (registered: ${functions.keys.mkString(", ")})")
-    val order = plan(functions(name))
+    val fs = functions
+    require(fs.contains(name),
+      s"no registered function '$name' (registered: ${fs.keys.mkString(", ")})")
+    val order = plan(fs(name), fs.values.toSeq)
     val executionId = store.newId()
     val executionTs = System.currentTimeMillis() // the plan's triggered_on
     order.foreach(f => runFunction(f, executionId, executionTs))
@@ -208,13 +214,15 @@ final class FlowEngine(val store: TableStore, spark: SparkSession) {
     * triggered by — so a join downstream of two paths of unequal length
     * sees this execution's output of both (planner.rs:20-55). Ties keep
     * breadth-first discovery order. A dependency cycle fails before any
-    * run, naming the functions it blocks. */
-  private def plan(root: FlowFunction): Seq[FlowFunction] = {
+    * run, naming the functions it blocks. `fs` is the registry snapshot
+    * the whole plan reads. */
+  private def plan(root: FlowFunction,
+      fs: Seq[FlowFunction]): Seq[FlowFunction] = {
     val reached = mutable.LinkedHashMap[String, FlowFunction](root.name -> root)
     val queue = mutable.Queue[FlowFunction](root)
     while (queue.nonEmpty) {
       val f = queue.dequeue()
-      for ((c, t) <- outputTables(f); d <- dependents(c, t)
+      for ((c, t) <- outputTables(f); d <- dependents(fs, c, t)
            if !reached.contains(d.name)) {
         reached(d.name) = d
         queue.enqueue(d)

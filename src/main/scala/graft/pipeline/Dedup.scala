@@ -444,30 +444,11 @@ object Dedup {
     * common shingles through the candidate-only inverted index.
     * Recall ≈ 1-(1-t^r)^b at similarity t; precision exact. */
   def minhashLshPairs(df: DataFrame, textCol: String, idCol: String,
-      k: Int = 32, bands: Int = 8, n: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val banded = minhashBandIndex(df, textCol, idCol, k, bands, n)
-    val cand = banded.as("x").join(banded.as("y"), Seq("band", "bh"))
-      .filter(F.col("x.id") < F.col("y.id"))
-      .select(F.col("x.id").as("a"), F.col("y.id").as("b")).distinct()
-    // verify: exact jaccard via an inverted index over candidate docs only
-    val candIds = cand.select(F.col("a").as("id"))
-      .union(cand.select(F.col("b"))).distinct()
-    val candDocs = df.select(F.col(idCol).as("id"), F.col(textCol))
-      .join(candIds, Seq("id"))
-    val candShingles = shingled(candDocs, textCol, "id", n)
-    val sizes = candShingles.groupBy("id").agg(F.count(F.lit(1)).as("n_sh"))
-    val sided = candShingles.join(sizes, Seq("id"))
-    val common = sided.as("p").join(sided.as("q"), Seq("shingle"))
-      .filter(F.col("p.id") < F.col("q.id"))
-      .select(F.col("p.id").as("a"), F.col("q.id").as("b"),
-        F.col("p.n_sh").as("na"), F.col("q.n_sh").as("nb"))
-      .groupBy("a", "b", "na", "nb").agg(F.count(F.lit(1)).as("common"))
-    cand.join(common, Seq("a", "b"))
-      .withColumn("jaccard",
-        F.col("common").cast(DoubleType) / (F.col("na") + F.col("nb") - F.col("common")))
-      .filter(F.col("jaccard") >= threshold)
+      k: Int = 32, bands: Int = 8, n: Int = 3, threshold: Double = 0.5): DataFrame =
+    minhashPairsImpl(minhashBandIndex(df, textCol, idCol, k, bands, n),
+      df.select(F.col(idCol).as("id"), F.col(textCol)), textCol, n,
+      threshold, keyCols = Nil)
       .select("a", "b", "jaccard")
-  }
 
   /** [[minhashLshPairs]] restricted WITHIN a partition column — "near-dups
     * within the same language/domain/license", the standard curation form.
@@ -488,29 +469,35 @@ object Dedup {
       .select(F.col(idCol).as("id"), g.as("td_grp"), F.col(textCol))
     val banded = minhashBandIndex(withG, textCol, "id", k, bands, n)
       .join(withG.select(F.col("id"), F.col("td_grp")), Seq("id"))
-    val cand = banded.as("x").join(banded.as("y"),
-        Seq("band", "bh", "td_grp"))
+    minhashPairsImpl(banded, withG, textCol, n, threshold,
+        keyCols = Seq("td_grp"))
+      .select(F.col("td_grp").as("group"), F.col("a"), F.col("b"),
+        F.col("jaccard"))
+  }
+
+  /** The body of [[minhashLshPairs]] and [[minhashLshPairsGrouped]]:
+    * candidates from shared (band, bh, keyCols) buckets of `banded`,
+    * verified by exact Jaccard over an inverted index of the candidate
+    * `docs` (id, keyCols…, text) keyed by (shingle, keyCols) — a
+    * shingle-only join would re-admit the cross-group fan-out. */
+  private def minhashPairsImpl(banded: DataFrame, docs: DataFrame,
+      textCol: String, n: Int, threshold: Double,
+      keyCols: Seq[String]): DataFrame = {
+    val keys = keyCols.map(F.col)
+    val cand = banded.as("x").join(banded.as("y"), Seq("band", "bh") ++ keyCols)
       .filter(F.col("x.id") < F.col("y.id"))
-      .select(F.col("td_grp"), F.col("x.id").as("a"), F.col("y.id").as("b"))
+      .select(keys ++ Seq(F.col("x.id").as("a"), F.col("y.id").as("b")): _*)
       .distinct()
-    // verify: exact jaccard via an inverted index over candidate docs
-    // only (same ids can't repeat across groups — id is the key). The
-    // group key rides the shingles and JOINS the inverted-index key, so
-    // cross-group doc pairs sharing boilerplate shingles are never even
-    // generated here — the same pre-filter discipline as the candidate
-    // stage (a shingle-only join would re-admit exactly the cross-group
-    // fan-out this operator exists to avoid).
     val candIds = cand.select(F.col("a").as("id"))
       .union(cand.select(F.col("b"))).distinct()
-    val candDocs = withG.join(candIds, Seq("id"))
-    val candShingles = candDocs
-      .select(F.col("id"), F.col("td_grp"), tokens(F.col(textCol)).as("toks"))
-      .select(F.col("id"), F.col("td_grp"),
-        shinglesFromTokens(F.col("toks"), n).as("sh"))
-      .select(F.col("id"), F.col("td_grp"), F.explode(F.col("sh")).as("shingle"))
+    val candShingles = docs.join(candIds, Seq("id"))
+      .select((F.col("id") +: keys) :+ tokens(F.col(textCol)).as("toks"): _*)
+      .select((F.col("id") +: keys) :+
+        shinglesFromTokens(F.col("toks"), n).as("sh"): _*)
+      .select((F.col("id") +: keys) :+ F.explode(F.col("sh")).as("shingle"): _*)
     val sizes = candShingles.groupBy("id").agg(F.count(F.lit(1)).as("n_sh"))
     val sided = candShingles.join(sizes, Seq("id"))
-    val common = sided.as("p").join(sided.as("q"), Seq("shingle", "td_grp"))
+    val common = sided.as("p").join(sided.as("q"), "shingle" +: keyCols)
       .filter(F.col("p.id") < F.col("q.id"))
       .select(F.col("p.id").as("a"), F.col("q.id").as("b"),
         F.col("p.n_sh").as("na"), F.col("q.n_sh").as("nb"))
@@ -519,8 +506,6 @@ object Dedup {
       .withColumn("jaccard",
         F.col("common").cast(DoubleType) / (F.col("na") + F.col("nb") - F.col("common")))
       .filter(F.col("jaccard") >= threshold)
-      .select(F.col("td_grp").as("group"), F.col("a"), F.col("b"),
-        F.col("jaccard"))
   }
 
   /** 64-bit SimHash over word tokens: per-token xxhash64 votes ±1 on each bit
@@ -552,12 +537,6 @@ object Dedup {
 
   /** Hamming distance between two 64-bit signatures. */
   def hamming64(a: Column, b: Column): Column = F.bit_count(a.bitwiseXOR(b))
-
-  /** SimHash near-dup groups: exact-signature buckets (hamming 0). */
-  def simhashExactGroups(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    df.select(F.col(idCol).as("id"), simhash64(F.col(textCol)).as("sig"))
-      .groupBy("sig").agg(F.min("id").as("keep_id"), F.count(F.lit(1)).as("n"))
-      .filter(F.col("n") > 1)
 
   /** Embedding cosine near-dup pairs within a blocking key (e.g. a coarse
     * cluster/label): pairs only form inside blocks, keeping the join from

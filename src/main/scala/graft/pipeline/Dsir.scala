@@ -83,11 +83,6 @@ object Dsir {
     (rows.toDF("bucket", "cnt"), rows.map(_._2).sum)
   }
 
-  /** [[bucketCountsOf]] over a raw document table (one tokenization). */
-  def bucketCounts(df: DataFrame, textCol: String, idCol: String,
-      chars: Int = 4): (DataFrame, Long) =
-    bucketCountsOf(features(df, textCol, idCol, chars))
-
   /** (id, n_features, weight) for every raw document with ≥1 feature:
     * the DSIR importance weight of the doc under `target` vs `raw`.
     * Buckets unseen in a corpus get the add-one floor 1/(total+B).

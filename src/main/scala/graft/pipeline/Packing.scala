@@ -77,17 +77,6 @@ object Packing {
       .drop(pid, cum, opid, off, "$td.__gcum")
   }
 
-  /** Per-pack audit: documents per pack, tokens starting in the pack, and
-    * fill fraction against the budget (can exceed 1 when a doc started in
-    * this pack spills into the next; packs other than the last should be
-    * ~full when documents are small relative to the budget). */
-  def packStats(packed: DataFrame, tokenCol: String, budget: Long): DataFrame =
-    packed.groupBy("pack_id")
-      .agg(F.count(F.lit(1)).as("n_docs"),
-        F.sum(F.col(tokenCol).cast("long")).as("tokens_started"))
-      .select(F.col("pack_id"), F.col("n_docs"), F.col("tokens_started"),
-        (F.col("tokens_started").cast("double") / budget).as("fill_frac"))
-
   /** Overlapping character windows per document — the chunking step of an
     * embedding/retrieval pipeline: (id, chunk_idx, chunk) with windows of
     * `size` chars starting every `size - overlap` chars. Pure

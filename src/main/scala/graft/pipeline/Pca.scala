@@ -89,26 +89,37 @@ object Pca {
     require(dim >= 1, s"dim must be >= 1, got $dim")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val (n, means) = colMeans(df, vecCol, dim)
+    // stage the projection s in its own select (multi-referenced below,
+    // CollapseProject keeps it evaluated once)
+    powerIterate(df, vecCol, dim, iters, n, means,
+        "power iteration collapsed to the zero vector") { (base, v) =>
+      (base.select(F.col("td_e"),
+          centeredDot(F.col("td_e"), means, v).as("td_s")),
+        deflated(F.col("td_e"), F.typedlit(Seq.empty[Double]), means, Nil))
+    }
+  }
+
+  /** The power-iteration loop of [[fit]] and [[fitDeflatedK]], one
+    * aggregation job per pass: u_i = Σ_rows r_i·s in fixed point, then
+    * v ← u/‖u‖. `pass(base, v)` stages one pass over the non-NULL
+    * `td_e` vectors and returns it (carrying `td_s`) with the residual
+    * column r. */
+  private def powerIterate(df: DataFrame, vecCol: String, dim: Int,
+      iters: Int, n: Long, means: Array[Double], collapsed: String)(
+      pass: (DataFrame, Array[Double]) => (DataFrame, Column)): PcaModel = {
     val base = df.where(F.col(vecCol).isNotNull).select(F.col(vecCol).as("td_e"))
     var v = Array.fill(dim)(1.0d / math.sqrt(dim.toDouble))
     var lambda = 0.0d
     for (_ <- 0 until iters) {
-      // stage the projection s in its own select (multi-referenced below,
-      // CollapseProject keeps it evaluated once); the gradient is ONE
-      // array-valued fixed-point aggregate over the scaled residual —
-      // plan stays a handful of kernel nodes per pass
-      val staged = base.select(F.col("td_e"),
-        centeredDot(F.col("td_e"), means, v).as("td_s"))
+      val (staged, resid) = pass(base, v)
       val row = staged.agg(fixedVecSum(
-        graft.expressions.PcaKernels.vecScale(
-          deflated(F.col("td_e"), F.typedlit(Seq.empty[Double]), means, Nil),
-          F.col("td_s")),
+        graft.expressions.PcaKernels.vecScale(resid, F.col("td_s")),
         dim).as("g")).head()
       val sums = row.getSeq[java.math.BigDecimal](0)
       val u = Array.tabulate(dim)(i => sums(i).doubleValue() / GradScale)
       // ‖u‖ with the same pinned ascending fold the oracle states
       val nrm = math.sqrt(u.indices.foldLeft(0.0d)((a, i) => a + u(i) * u(i)))
-      require(nrm > 0.0d, "power iteration collapsed to the zero vector")
+      require(nrm > 0.0d, collapsed)
       v = u.map(_ / nrm)
       lambda = nrm / (n.toDouble - 1.0d)
     }
@@ -152,38 +163,26 @@ object Pca {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val means = priors.head.means
     val ws = priors.map(_.weights)
-    val n = priors.head.n
-    val base = df.where(F.col(vecCol).isNotNull).select(F.col(vecCol).as("td_e"))
-    var v = Array.fill(dim)(1.0d / math.sqrt(dim.toDouble))
-    var lambda = 0.0d
-    for (_ <- 0 until iters) {
-      // stage 1: the prior projections p_l (each a pinned ascending fold),
-      // packed in prior order; stage 2: the residual VECTOR xd from one
-      // deflate kernel (left-to-right prior subtraction — the same double
-      // sequence the per-column formulation stated); stage 3: the deflated
-      // projection s = Σ xd_i·v_i. Every stage is a named multi-referenced
-      // column, so CollapseProject keeps each evaluated once, and the
-      // whole pass plans as a handful of kernel nodes (the r17 planning-
-      // time fix — see centeredDot's doc) instead of dim-wide trees.
+    // stage 1: the prior projections p_l (each a pinned ascending fold),
+    // packed in prior order; stage 2: the residual VECTOR xd from one
+    // deflate kernel (left-to-right prior subtraction — the same double
+    // sequence the per-column formulation stated); stage 3: the deflated
+    // projection s = Σ xd_i·v_i. Every stage is a named multi-referenced
+    // column, so CollapseProject keeps each evaluated once, and the
+    // whole pass plans as a handful of kernel nodes (the r17 planning-
+    // time fix — see centeredDot's doc) instead of dim-wide trees.
+    powerIterate(df, vecCol, dim, iters, priors.head.n, means,
+        "deflated power iteration collapsed to zero") { (base, v) =>
       val stage1 = base.select(F.col("td_e"),
         F.array(ws.map(w => centeredDot(F.col("td_e"), means, w)): _*)
           .as("td_ps"))
       val stage2 = stage1.select(
         deflated(F.col("td_e"), F.col("td_ps"), means, ws).as("td_xd"))
-      val staged = stage2.select(F.col("td_xd"),
-        graft.expressions.VectorKernels.dot(
-          F.col("td_xd"), F.typedlit(v.toSeq)).as("td_s"))
-      val row = staged.agg(fixedVecSum(
-        graft.expressions.PcaKernels.vecScale(F.col("td_xd"), F.col("td_s")),
-        dim).as("g")).head()
-      val sums = row.getSeq[java.math.BigDecimal](0)
-      val u = Array.tabulate(dim)(i => sums(i).doubleValue() / GradScale)
-      val nrm = math.sqrt(u.indices.foldLeft(0.0d)((a, i) => a + u(i) * u(i)))
-      require(nrm > 0.0d, "deflated power iteration collapsed to zero")
-      v = u.map(_ / nrm)
-      lambda = nrm / (n.toDouble - 1.0d)
+      (stage2.select(F.col("td_xd"),
+          graft.expressions.VectorKernels.dot(
+            F.col("td_xd"), F.typedlit(v.toSeq)).as("td_s")),
+        F.col("td_xd"))
     }
-    PcaModel(dim, n, means, v, lambda)
   }
 
   /** Top-k principal components by ITERATED deflation — the real

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, functions => F}
 
 import graft.expressions.MathKernels
 
@@ -250,8 +250,19 @@ object QualityModel {
       threshold: Double): DataFrame = {
     val s = F.col(scoreCol).cast("double")
     val y = F.col(labelCol).cast("int")
-    val pred = (s >= F.lit(threshold)).cast("int")
-    val agg = df.where(s.isNotNull && y.isNotNull).agg(
+    confusionPrf(df.where(s.isNotNull && y.isNotNull).groupBy(),
+      (s >= F.lit(threshold)).cast("int"), y, keys = Nil)
+  }
+
+  /** The confusion algebra of [[prAtThreshold]], [[prCurve]] and
+    * [[graft.streaming.Streams.windowedConfusion]]: per group of
+    * `grouped`, the tp/fp/tn/fn sums of the 0/1 prediction `pred`
+    * against the 0/1 label `y`, then precision, recall and F1 (NULL
+    * where a denominator is empty). Output: (keys…, tp, fp, tn, fn,
+    * precision, recall, f1). */
+  private[graft] def confusionPrf(grouped: RelationalGroupedDataset,
+      pred: Column, y: Column, keys: Seq[String]): DataFrame = {
+    val agg = grouped.agg(
       F.sum(pred * y).cast("long").as("tp"),
       F.sum(pred * (F.lit(1) - y)).cast("long").as("fp"),
       F.sum((F.lit(1) - pred) * (F.lit(1) - y)).cast("long").as("tn"),
@@ -260,9 +271,10 @@ object QualityModel {
       (F.col("tp") + F.col("fp")).cast("double")
     val r = F.col("tp").cast("double") /
       (F.col("tp") + F.col("fn")).cast("double")
-    agg.select(F.col("tp"), F.col("fp"), F.col("tn"), F.col("fn"),
+    agg.select(keys.map(F.col) ++ Seq(F.col("tp"), F.col("fp"),
+        F.col("tn"), F.col("fn"),
         F.when(F.col("tp") + F.col("fp") > 0L, p).as("precision"),
-        F.when(F.col("tp") + F.col("fn") > 0L, r).as("recall"))
+        F.when(F.col("tp") + F.col("fn") > 0L, r).as("recall")): _*)
       .withColumn("f1",
         F.when(F.col("precision").isNotNull && F.col("recall").isNotNull &&
             F.col("precision") + F.col("recall") > 0.0d,
@@ -283,28 +295,9 @@ object QualityModel {
     val s = F.col(scoreCol).cast("double")
     val y = F.col(labelCol).cast("int")
     val t = thresholds.distinct.sorted.toDF("threshold")
-    val pred = (s >= F.col("threshold")).cast("int")
-    val agg = df.where(s.isNotNull && y.isNotNull)
-      .crossJoin(F.broadcast(t))
-      .groupBy(F.col("threshold"))
-      .agg(
-        F.sum(pred * y).cast("long").as("tp"),
-        F.sum(pred * (F.lit(1) - y)).cast("long").as("fp"),
-        F.sum((F.lit(1) - pred) * (F.lit(1) - y)).cast("long").as("tn"),
-        F.sum((F.lit(1) - pred) * y).cast("long").as("fn"))
-    val p = F.col("tp").cast("double") /
-      (F.col("tp") + F.col("fp")).cast("double")
-    val r = F.col("tp").cast("double") /
-      (F.col("tp") + F.col("fn")).cast("double")
-    agg.select(F.col("threshold"), F.col("tp"), F.col("fp"),
-        F.col("tn"), F.col("fn"),
-        F.when(F.col("tp") + F.col("fp") > 0L, p).as("precision"),
-        F.when(F.col("tp") + F.col("fn") > 0L, r).as("recall"))
-      .withColumn("f1",
-        F.when(F.col("precision").isNotNull && F.col("recall").isNotNull &&
-            F.col("precision") + F.col("recall") > 0.0d,
-          (F.lit(2.0d) * F.col("precision") * F.col("recall")) /
-            (F.col("precision") + F.col("recall"))))
+    confusionPrf(df.where(s.isNotNull && y.isNotNull)
+        .crossJoin(F.broadcast(t)).groupBy(F.col("threshold")),
+      (s >= F.col("threshold")).cast("int"), y, keys = Seq("threshold"))
       .orderBy(F.col("threshold").asc)
   }
 

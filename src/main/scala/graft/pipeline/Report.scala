@@ -192,11 +192,20 @@ object Report {
   def quantileSketch(df: DataFrame, valueCol: String, lo: Double, hi: Double,
       bins: Int, groupCol: Option[String] = None): DataFrame = {
     val x = F.col(valueCol).cast("double")
-    // bin index in [0, bins+1]: 0 = underflow, 1..bins = grid, bins+1 = overflow
-    val idx = gridBin(x, lo, hi, bins).as("td_bin")
+    binnedSketch(df, x, gridBin(x, lo, hi, bins), bins, groupCol,
+      lo, hi, "linear")
+  }
+
+  /** The shared body of [[quantileSketch]] and [[logQuantileSketch]]:
+    * count the non-NULL `x` rows per `bin` (in [0, bins+1]: 0 =
+    * underflow, 1..bins = grid, bins+1 = overflow) and stamp the grid
+    * (`lo`, `hi`, `bins`, `scale`). */
+  private def binnedSketch(df: DataFrame, x: Column, bin: Column, bins: Int,
+      groupCol: Option[String], lo: Double, hi: Double,
+      scale: String): DataFrame = {
     val keyCols = groupCol.toSeq.map(F.col)
     val binned = df.where(x.isNotNull)
-      .select(keyCols :+ idx: _*)
+      .select(keyCols :+ bin.as("td_bin"): _*)
       .groupBy(keyCols :+ F.col("td_bin"): _*)
       .agg(F.count(F.lit(1)).as("td_n"))
     // dense (bins+2)-array per group in ONE scatter aggregate (absent
@@ -212,7 +221,7 @@ object Report {
       .withColumn("lo", F.lit(lo))
       .withColumn("hi", F.lit(hi))
       .withColumn("bins", F.lit(bins))
-      .withColumn("scale", F.lit("linear"))
+      .withColumn("scale", F.lit(scale))
   }
 
   /** LOG-scaled [[quantileSketch]]: bins equi-width in ln(x) over
@@ -234,24 +243,9 @@ object Report {
     val lnHi = java.lang.Math.log(hi)
     val x = F.col(valueCol).cast("double")
     val lnX = graft.expressions.MathKernels.ln(x)
-    val idx = F.when(x <= 0.0d, F.lit(0L))
-      .otherwise(gridBin(lnX, lnLo, lnHi, bins)).as("td_bin")
-    val keyCols = groupCol.toSeq.map(F.col)
-    val binned = df.where(x.isNotNull)
-      .select(keyCols :+ idx: _*)
-      .groupBy(keyCols :+ F.col("td_bin"): _*)
-      .agg(F.count(F.lit(1)).as("td_n"))
-    val scatter = graft.expressions.VecAggs.scatterLong(
-      F.col("td_bin"), F.col("td_n"), bins + 2).as("counts")
-    val grouped =
-      if (groupCol.isDefined) binned.groupBy(keyCols: _*).agg(scatter)
-      else binned.agg(scatter)
-    grouped
-      .withColumn("n", F.aggregate(F.col("counts"), F.lit(0L), _ + _))
-      .withColumn("lo", F.lit(lnLo))
-      .withColumn("hi", F.lit(lnHi))
-      .withColumn("bins", F.lit(bins))
-      .withColumn("scale", F.lit("log"))
+    binnedSketch(df, x, F.when(x <= 0.0d, F.lit(0L))
+        .otherwise(gridBin(lnX, lnLo, lnHi, bins)), bins, groupCol,
+      lnLo, lnHi, "log")
   }
 
   /** Union previously-built quantile sketches (same grid) into one:
@@ -563,9 +557,15 @@ object Report {
     sketchDriftImpl(a, baseline, countsCol, keyCols = Seq(groupCol),
       joinOnKeys = false)
 
-  private def sketchDriftImpl(a: DataFrame, b: DataFrame,
-      countsCol: String, keyCols: Seq[String],
-      joinOnKeys: Boolean = true): DataFrame = {
+  /** The paired-cells prefix of the drift and JSD statistics: both
+    * stamps checked, `a` joined to the broadcast `b` (on `keyCols`, or
+    * crossed with one global `b` row when `keyCols` is empty or
+    * `joinOnKeys` is false), and the zipped (ca, cb) cell array staged
+    * as `td_z` beside `n_a`, `n_b` and `carry`, raising when the two
+    * (lo, hi, bins, scale) stamps differ. */
+  private def pairedCells(a: DataFrame, b: DataFrame, countsCol: String,
+      keyCols: Seq[String], joinOnKeys: Boolean,
+      carry: Seq[Column]): DataFrame = {
     requireGridStamp(a); requireGridStamp(b)
     def side(df: DataFrame, sfx: String, keys: Seq[String]) = df.select(
       keys.map(F.col) ++ Seq(
@@ -586,14 +586,21 @@ object Report {
       F.col("td_scalea") === F.col("td_scaleb")
     // stage the zipped (ca, cb) array as a bound attribute BEFORE the
     // folds (lambda bodies re-inline unbound producers per element)
-    val staged = joined.select(keyCols.map(F.col) ++ Seq(
+    joined.select(keyCols.map(F.col) ++ Seq(
       F.when(sameGrid,
           F.zip_with(F.col("td_ca"), F.col("td_cb"),
             (x, y) => F.struct(x.as("ca"), y.as("cb"))))
         .otherwise(F.raise_error(F.lit("cannot diff sketches with " +
           "different grids: (lo, hi, bins, scale) stamps disagree")))
         .as("td_z"),
-      F.col("n_a"), F.col("n_b"), F.col("td_binsa")): _*)
+      F.col("n_a"), F.col("n_b")) ++ carry: _*)
+  }
+
+  private def sketchDriftImpl(a: DataFrame, b: DataFrame,
+      countsCol: String, keyCols: Seq[String],
+      joinOnKeys: Boolean = true): DataFrame = {
+    val staged = pairedCells(a, b, countsCol, keyCols, joinOnKeys,
+      Seq(F.col("td_binsa")))
     val naD = F.col("n_a").cast("double")
     val nbD = F.col("n_b").cast("double")
     val cellsD = (F.col("td_binsa") + 2).cast("double")
@@ -639,13 +646,6 @@ object Report {
       countsCol: String = "counts"): DataFrame =
     sketchJsdImpl(a, b, countsCol, keyCols = Nil)
 
-  /** Per-group [[sketchJsd]] (inner join on `groupCol` — both sides
-    * must carry the group): per-language length divergence between two
-    * corpus versions, zero rescans. */
-  def sketchJsdByGroup(a: DataFrame, b: DataFrame, groupCol: String,
-      countsCol: String = "counts"): DataFrame =
-    sketchJsdImpl(a, b, countsCol, keyCols = Seq(groupCol))
-
   /** JSD of EVERY group/window sketch in `a` against ONE global
     * `baseline` row — the [[sketchDriftVsBaseline]] live-monitoring
     * shape with the bounded symmetric statistic: per-hour windows from
@@ -653,38 +653,12 @@ object Report {
     * against the stored corpus baseline, one broadcast row. */
   def sketchJsdVsBaseline(a: DataFrame, baseline: DataFrame,
       groupCol: String, countsCol: String = "counts"): DataFrame =
-    sketchJsdImpl(a, baseline, countsCol, keyCols = Seq(groupCol),
-      joinOnKeys = false)
+    sketchJsdImpl(a, baseline, countsCol, keyCols = Seq(groupCol))
 
+  /** JSD of each `keyCols` row of `a` against the one row of `b`. */
   private def sketchJsdImpl(a: DataFrame, b: DataFrame,
-      countsCol: String, keyCols: Seq[String],
-      joinOnKeys: Boolean = true): DataFrame = {
-    requireGridStamp(a); requireGridStamp(b)
-    def side(df: DataFrame, sfx: String, keys: Seq[String]) = df.select(
-      keys.map(F.col) ++ Seq(
-        F.col(countsCol).as(s"td_c$sfx"), F.col("n").as(s"n_$sfx"),
-        F.col("lo").as(s"td_lo$sfx"), F.col("hi").as(s"td_hi$sfx"),
-        F.col("bins").as(s"td_bins$sfx"),
-        F.col("scale").as(s"td_scale$sfx")): _*)
-    val joined =
-      if (keyCols.isEmpty)
-        side(a, "a", Nil).crossJoin(F.broadcast(side(b, "b", Nil)))
-      else if (joinOnKeys)
-        side(a, "a", keyCols).join(F.broadcast(side(b, "b", keyCols)), keyCols)
-      else
-        side(a, "a", keyCols).crossJoin(F.broadcast(side(b, "b", Nil)))
-    val sameGrid = F.col("td_loa") === F.col("td_lob") &&
-      F.col("td_hia") === F.col("td_hib") &&
-      F.col("td_binsa") === F.col("td_binsb") &&
-      F.col("td_scalea") === F.col("td_scaleb")
-    val staged = joined.select(keyCols.map(F.col) ++ Seq(
-      F.when(sameGrid,
-          F.zip_with(F.col("td_ca"), F.col("td_cb"),
-            (x, y) => F.struct(x.as("ca"), y.as("cb"))))
-        .otherwise(F.raise_error(F.lit("cannot diff sketches with " +
-          "different grids: (lo, hi, bins, scale) stamps disagree")))
-        .as("td_z"),
-      F.col("n_a"), F.col("n_b")): _*)
+      countsCol: String, keyCols: Seq[String]): DataFrame = {
+    val staged = pairedCells(a, b, countsCol, keyCols, joinOnKeys = false, Nil)
     val naD = F.col("n_a").cast("double")
     val nbD = F.col("n_b").cast("double")
     val ln = graft.expressions.MathKernels.ln _
@@ -2322,7 +2296,14 @@ object Report {
     * ⇔ p_adj ≤ α (the step-up rule, monotone-equivalent). Output:
     * (test_id, p_value, rank, p_adj, reject) ascending by rank. */
   def bhFdr(df: DataFrame, idCol: String, pCol: String,
-      alpha: Double = 0.05d): DataFrame = {
+      alpha: Double = 0.05d): DataFrame =
+    stepUpFdr(df, idCol, pCol, alpha, cm = None)
+
+  /** The step-up body of [[bhFdr]] and [[byFdr]]: p_adj = min(1, min
+    * over the suffix of c·m·p/rank), where the factor c is the column
+    * `cm` over `td_m` (staged as `td_cm`), or 1 when `cm` is None. */
+  private def stepUpFdr(df: DataFrame, idCol: String, pCol: String,
+      alpha: Double, cm: Option[Column]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val id = F.col(idCol).cast("string")
     val p = F.col(pCol).cast("double")
@@ -2333,11 +2314,13 @@ object Report {
       Window.unboundedPreceding, Window.unboundedFollowing)
     val wSuf = Window.orderBy(F.col("p_value").desc, F.col("test_id").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val raw = F.col("td_m").cast("double") * F.col("p_value") /
+    val m = F.col("td_m").cast("double")
+    val raw = cm.fold(m)(_ => F.col("td_cm") * m) * F.col("p_value") /
       F.col("rank").cast("double")
-    clean
+    val ranked = clean
       .withColumn("rank", F.row_number().over(wAsc).cast("long"))
       .withColumn("td_m", F.count(F.lit(1)).over(wAll).cast("long"))
+    cm.fold(ranked)(ranked.withColumn("td_cm", _))
       .withColumn("td_raw", raw)
       .withColumn("p_adj",
         F.least(F.lit(1.0d), F.min(F.col("td_raw")).over(wSuf)))
@@ -2530,32 +2513,10 @@ object Report {
     * bounded by construction, the benford-grid rule). Output:
     * (test_id, p_value, rank, p_adj, reject) ascending by rank. */
   def byFdr(df: DataFrame, idCol: String, pCol: String,
-      alpha: Double = 0.05d): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val id = F.col(idCol).cast("string")
-    val p = F.col(pCol).cast("double")
-    val clean = df.where(id.isNotNull && p.isNotNull)
-      .select(id.as("test_id"), p.as("p_value"))
-    val wAsc = Window.orderBy(F.col("p_value").asc, F.col("test_id").asc)
-    val wAll = Window.partitionBy().rowsBetween(
-      Window.unboundedPreceding, Window.unboundedFollowing)
-    val wSuf = Window.orderBy(F.col("p_value").desc, F.col("test_id").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cm = F.aggregate(F.sequence(F.lit(1L), F.col("td_m")),
-      F.lit(0.0d), (a, i) => a + F.lit(1.0d) / i.cast("double"))
-    val raw = F.col("td_cm") * F.col("td_m").cast("double") *
-      F.col("p_value") / F.col("rank").cast("double")
-    clean
-      .withColumn("rank", F.row_number().over(wAsc).cast("long"))
-      .withColumn("td_m", F.count(F.lit(1)).over(wAll).cast("long"))
-      .withColumn("td_cm", cm)
-      .withColumn("td_raw", raw)
-      .withColumn("p_adj",
-        F.least(F.lit(1.0d), F.min(F.col("td_raw")).over(wSuf)))
-      .select(F.col("test_id"), F.col("p_value"), F.col("rank"),
-        F.col("p_adj"), (F.col("p_adj") <= F.lit(alpha)).as("reject"))
-      .orderBy(F.col("rank").asc)
-  }
+      alpha: Double = 0.05d): DataFrame =
+    stepUpFdr(df, idCol, pCol, alpha, cm = Some(F.aggregate(
+      F.sequence(F.lit(1L), F.col("td_m")),
+      F.lit(0.0d), (a, i) => a + F.lit(1.0d) / i.cast("double"))))
 
   /** Wald's sequential probability-ratio test (Wald 1945) per group
     * over an ordered Bernoulli grid — "on which DAY could this

@@ -246,33 +246,7 @@ object Retrieval {
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "query terms must be non-empty")
     val q = terms.map(_.trim.toLowerCase).filter(_.nonEmpty).distinct
-    // on a loaded (partitioned) index, the bucket predicate is a partition
-    // filter: the scan prunes to the terms' directories before any IO
-    val pruned = index.termBuckets match {
-      case Some(b) => index.postings.where(
-        F.col("term_bucket").isin(q.map(termBucket(_, b)).distinct: _*))
-      case None => index.postings
-    }
-    val matched = pruned.where(F.col("term").isin(q: _*))
-      .select("id", "term", "tf")
-    val docFreq = matched.groupBy("term").agg(F.count(F.lit(1)).as("df"))
-    // graft.expressions.MathKernels.ln, not F.log: Spark's log codegens to
-    // StrictMath.log (fdlibm), 1 ulp off the platform libm on some
-    // arguments — which breaks hash parity with engines using libm ln
-    val idf = graft.expressions.MathKernels.ln(
-      (F.lit(1.0) + (F.lit(index.nDocs.toDouble) - F.col("df") + F.lit(0.5)) /
-        (F.col("df") + F.lit(0.5))).cast(DoubleType))
-    val tfc = (F.col("tf") * F.lit(k1 + 1.0)) /
-      (F.col("tf") + F.lit(k1) *
-        (F.lit(1.0 - b) + (F.lit(b) * F.col("dl")) / F.lit(index.avgDl)))
-    matched
-      .join(F.broadcast(docFreq), Seq("term"))
-      .join(index.docLen, Seq("id"))
-      .withColumn("ts", (idf * tfc).cast(DoubleType))
-      .groupBy("id")
-      .agg(F.count(F.lit(1)).as("n_terms"),
-        F.aggregate(F.array_sort(F.collect_list(F.col("ts"))),
-          F.lit(0.0), (acc, x) => acc + x).as("score"))
+    scoreTerms(index, q, k1, b, queryTerms = None)
   }
 
   /** Score a BATCH of queries in one pass — the shape retrieval-based
@@ -299,26 +273,41 @@ object Retrieval {
       .where(F.length(F.col("term")) > 0).distinct()
     val termList = qt.select("term").distinct().collect().map(_.getString(0)).toSeq
     require(termList.nonEmpty, "query batch has no non-empty terms")
+    scoreTerms(index, termList, k1, b, queryTerms = Some(qt))
+  }
+
+  /** The shared body of [[scoreQuery]] and [[scoreQueryBatch]]: prune the
+    * postings to `terms` (bucket partition filter first on a loaded
+    * index), count df per term, and fold the sorted idf·tfc terms per
+    * `id` — or, given the (qid, term) relation `queryTerms`, join it
+    * broadcast on term and fold per (qid, id). */
+  private def scoreTerms(index: Bm25Index, terms: Seq[String], k1: Double,
+      b: Double, queryTerms: Option[DataFrame]): DataFrame = {
+    // on a loaded (partitioned) index, the bucket predicate is a partition
+    // filter: the scan prunes to the terms' directories before any IO
     val pruned = index.termBuckets match {
       case Some(bk) => index.postings.where(
-        F.col("term_bucket").isin(termList.map(termBucket(_, bk)).distinct: _*))
+        F.col("term_bucket").isin(terms.map(termBucket(_, bk)).distinct: _*))
       case None => index.postings
     }
-    val matched = pruned.where(F.col("term").isin(termList: _*))
+    val matched = pruned.where(F.col("term").isin(terms: _*))
       .select("id", "term", "tf")
     val docFreq = matched.groupBy("term").agg(F.count(F.lit(1)).as("df"))
+    // graft.expressions.MathKernels.ln, not F.log: Spark's log codegens to
+    // StrictMath.log (fdlibm), 1 ulp off the platform libm on some
+    // arguments — which breaks hash parity with engines using libm ln
     val idf = graft.expressions.MathKernels.ln(
       (F.lit(1.0) + (F.lit(index.nDocs.toDouble) - F.col("df") + F.lit(0.5)) /
         (F.col("df") + F.lit(0.5))).cast(DoubleType))
     val tfc = (F.col("tf") * F.lit(k1 + 1.0)) /
       (F.col("tf") + F.lit(k1) *
         (F.lit(1.0 - b) + (F.lit(b) * F.col("dl")) / F.lit(index.avgDl)))
-    matched
-      .join(F.broadcast(docFreq), Seq("term"))
-      .join(F.broadcast(qt), Seq("term"))
+    val withDf = matched.join(F.broadcast(docFreq), Seq("term"))
+    val keys = queryTerms.fold(Seq("id"))(_ => Seq("qid", "id"))
+    queryTerms.fold(withDf)(qt => withDf.join(F.broadcast(qt), Seq("term")))
       .join(index.docLen, Seq("id"))
       .withColumn("ts", (idf * tfc).cast(DoubleType))
-      .groupBy("qid", "id")
+      .groupBy(keys.head, keys.tail: _*)
       .agg(F.count(F.lit(1)).as("n_terms"),
         F.aggregate(F.array_sort(F.collect_list(F.col("ts"))),
           F.lit(0.0), (acc, x) => acc + x).as("score"))

@@ -162,24 +162,10 @@ object Sketches {
     * Deterministic given the two sketches, so the estimator itself — not
     * just its expectation — is oracle-checkable. Both sketches must
     * carry the same k. Output: one (n_kept, n_common, jaccard) row. */
-  def kmvJaccard(a: DataFrame, b: DataFrame): DataFrame =
-    kmvJaccardImpl(a, b, Nil)
-
-  /** Per-group [[kmvJaccard]]: groups present in only one side estimate
-    * jaccard 0 (nothing in common), keeping the per-slice drift table
-    * total. Output: (group, n_kept, n_common, jaccard). */
-  def kmvJaccardByGroup(a: DataFrame, b: DataFrame,
-      groupCol: String): DataFrame =
-    kmvJaccardImpl(a, b, Seq(groupCol))
-
-  private def kmvJaccardImpl(a: DataFrame, b: DataFrame,
-      keys: Seq[String]): DataFrame = {
-    val keyCols = keys.map(F.col)
+  def kmvJaccard(a: DataFrame, b: DataFrame): DataFrame = {
     def side(df: DataFrame, mark: String) = df
-      .select(keyCols ++ Seq(F.col("k"),
-        F.explode(F.col("entries")).as("e")): _*)
-      .select(keyCols ++ Seq(F.col("k"), F.col("e.h").as("td_h"),
-        F.lit(mark).as("td_side")): _*)
+      .select(F.col("k"), F.explode(F.col("entries")).as("e"))
+      .select(F.col("k"), F.col("e.h").as("td_h"), F.lit(mark).as("td_side"))
     val both = side(a, "a").unionByName(side(b, "b"))
     // stamp identity is validated across ALL entry rows in the final
     // aggregate below, not per hash — two sketches with different k
@@ -188,7 +174,7 @@ object Sketches {
     // max of k through the per-hash agg lets the group-level guard see
     // every stamp even when a hash appears on both sides
     val perHash2 = both
-      .groupBy(keyCols :+ F.col("td_h"): _*)
+      .groupBy(F.col("td_h"))
       .agg(F.max(F.when(F.col("td_side") === "a", 1).otherwise(0))
           .as("in_a"),
         F.max(F.when(F.col("td_side") === "b", 1).otherwise(0)).as("in_b"),
@@ -200,23 +186,20 @@ object Sketches {
         F.first(F.col("td_kmin")))
       .otherwise(F.raise_error(F.lit(
         "cannot compare KMV sketches with different k stamps")))
-    // union bottom-k: sorted fold over the ≤ 2k per-hash rows per group
-    // (sketch entries, never corpus), sliced to k — no window
+    // union bottom-k: sorted fold over the ≤ 2k per-hash rows (sketch
+    // entries, never corpus), sliced to k — no window
     perHash2
-      .groupBy(keyCols: _*)
       .agg(F.slice(F.sort_array(F.collect_list(F.struct(
             F.col("td_h"), F.col("in_a"), F.col("in_b")))),
           F.lit(1), kGuard).as("td_m"))
-      .select(keyCols ++ Seq(
-        F.size(F.col("td_m")).cast("long").as("n_kept"),
+      .select(F.size(F.col("td_m")).cast("long").as("n_kept"),
         F.aggregate(F.col("td_m"), F.lit(0L),
           (acc, e) => acc +
             (e.getField("in_a") * e.getField("in_b")).cast("long"))
-          .as("n_common")): _*)
+          .as("n_common"))
       .withColumn("jaccard",
         F.col("n_common").cast("double") / F.col("n_kept").cast("double"))
-      .select(keyCols ++ Seq(F.col("n_kept"), F.col("n_common"),
-        F.col("jaccard")): _*)
+      .select(F.col("n_kept"), F.col("n_common"), F.col("jaccard"))
   }
 
   // ---------------------------------------------------------------------

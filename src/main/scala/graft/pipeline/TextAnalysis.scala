@@ -13,13 +13,7 @@ object TextAnalysis {
   /** Token count via regex match count (robust to repeated whitespace). */
   def tokenCount(text: Column): Column = F.regexp_count(text, F.lit("\\S+"))
 
-  /** BPE-ish subword count estimate: words + digit runs + punctuation marks
-    * each count as a token boundary heuristic. */
-  def subwordCountEstimate(text: Column): Column =
-    F.regexp_count(text, F.lit("[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"))
-
   def charCount(text: Column): Column = F.char_length(text)
-  def distinctTokenCount(text: Column): Column = distinctTokenCountFromTokens(tokens(text))
   def distinctTokenCountFromTokens(toks: Column): Column = F.size(F.array_distinct(toks))
   /** Mean token length in chars, double. Total token chars =
     * `char_length(array_join(toks, ""))` — same value as the former
@@ -115,8 +109,6 @@ object TextAnalysis {
     "zh" -> Seq("的", "是", "在", "了", "和", "有", "我", "不"))
 
   /** Per-language marker hit count. */
-  def langScore(text: Column, lang: String): Column =
-    langScoreFromTokens(tokens(text), lang)
   def langScoreFromTokens(toks: Column, lang: String): Column =
     graft.expressions.TextKernels.tokenSetHits(toks, stopwords.toMap.apply(lang))
 

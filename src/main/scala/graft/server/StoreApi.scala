@@ -7,6 +7,7 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
+import com.fasterxml.jackson.databind.node.ArrayNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.DataFrame
 
@@ -104,16 +105,14 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
         respondJson(ex, 200, """{"data":"OK"}""")
 
       case ("GET", Seq("collections")) =>
-        val root = TableStore.jsonMapper.createObjectNode()
-        val data = root.putArray("data")
-        store.listCollections().foreach(c => data.addObject().put("name", c))
-        respondJson(ex, 200, TableStore.jsonMapper.writeValueAsString(root))
+        respondData(ex) { data =>
+          store.listCollections().foreach(c => data.addObject().put("name", c))
+        }
 
       case ("GET", Seq("transactions")) =>
-        val root = TableStore.jsonMapper.createObjectNode()
-        val data = root.putArray("data")
-        store.listTransactions().foreach(t => data.addObject().put("id", t))
-        respondJson(ex, 200, TableStore.jsonMapper.writeValueAsString(root))
+        respondData(ex) { data =>
+          store.listTransactions().foreach(t => data.addObject().put("id", t))
+        }
 
       case ("GET", Seq("function_runs")) =>
         respondRuns(ex, ExecutionLog.read(store.root))
@@ -121,17 +120,16 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
       case ("GET", Seq("executions")) =>
         // one row per trigger: id + rollup status (failed if any run failed)
         val runs = ExecutionLog.read(store.root)
-        val root = TableStore.jsonMapper.createObjectNode()
-        val data = root.putArray("data")
-        runs.groupBy(_.execution).toSeq
-          .sortBy { case (_, rs) => rs.map(_.triggeredOn).min }
-          .foreach { case (id, rs) =>
-            data.addObject().put("id", id)
-              .put("status", if (rs.exists(_.status == "failed")) "failed" else "done")
-              .put("triggered_on", rs.map(_.triggeredOn).min)
-              .put("function_runs", rs.size)
-          }
-        respondJson(ex, 200, TableStore.jsonMapper.writeValueAsString(root))
+        respondData(ex) { data =>
+          runs.groupBy(_.execution).toSeq
+            .sortBy { case (_, rs) => rs.map(_.triggeredOn).min }
+            .foreach { case (id, rs) =>
+              data.addObject().put("id", id)
+                .put("status", if (rs.exists(_.status == "failed")) "failed" else "done")
+                .put("triggered_on", rs.map(_.triggeredOn).min)
+                .put("function_runs", rs.size)
+            }
+        }
 
       case ("GET", Seq("collections", c, "functions", f, "history")) =>
         respondRuns(ex, ExecutionLog.read(store.root)
@@ -140,30 +138,25 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
       case ("GET", Seq("collections", c, "tables", t, "data-versions")) =>
         val vs = store.versions(c, t)
         if (vs.isEmpty) respondJson(ex, 404, s"""{"error":"table not found: $c/$t"}""")
-        else {
-          val root = TableStore.jsonMapper.createObjectNode()
-          val data = root.putArray("data")
+        else respondData(ex) { data =>
           vs.foreach { v =>
             data.addObject().put("id", v.id).put("execution", v.execution)
               .put("transaction", v.transaction).put("created_at", v.timestampMs)
               .put("rows", v.rows)
           }
-          respondJson(ex, 200, TableStore.jsonMapper.writeValueAsString(root))
         }
 
       case ("GET", Seq("collections", c, "functions")) =>
         engine match {
           case None => respondJson(ex, 404, """{"error":"no flow engine attached"}""")
-          case Some(eng) =>
-            val root = TableStore.jsonMapper.createObjectNode()
-            val data = root.putArray("data")
+          case Some(eng) => respondData(ex) { data =>
             eng.functionsIn(c).foreach { f =>
               val o = data.addObject().put("name", f.name)
                 .put("role", f.role.toString.toLowerCase)
               val outs = o.putArray("tables")
               f.outputs.foreach(outs.add)
             }
-            respondJson(ex, 200, TableStore.jsonMapper.writeValueAsString(root))
+          }
         }
 
       case ("POST", Seq("collections", c, "functions", f, "execute")) =>
@@ -173,17 +166,13 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
             respondJson(ex, 404, s"""{"error":"function not found: $c/$f"}""")
           case Some(eng) =>
             val ran = eng.trigger(f)
-            val root = TableStore.jsonMapper.createObjectNode()
-            val data = root.putArray("data")
-            ran.foreach(data.add)
-            respondJson(ex, 200, TableStore.jsonMapper.writeValueAsString(root))
+            respondData(ex)(data => ran.foreach(data.add))
         }
 
       case ("GET", Seq("collections", c, "tables")) =>
-        val arr = TableStore.jsonMapper.createObjectNode()
-        val data = arr.putArray("data")
-        store.listTables(c).foreach(t => data.addObject().put("name", t))
-        respondJson(ex, 200, TableStore.jsonMapper.writeValueAsString(arr))
+        respondData(ex) { data =>
+          store.listTables(c).foreach(t => data.addObject().put("name", t))
+        }
 
       case ("GET", Seq("collections", c, "tables", t, "schema")) =>
         store.schema(TableRef.parse(t, c), q.get("at").map(_.toLong)) match {
@@ -251,16 +240,21 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
     }
   }
 
-  private def respondRuns(ex: HttpExchange, runs: Seq[ExecutionRecord]): Unit = {
-    val root = TableStore.jsonMapper.createObjectNode()
-    val data = root.putArray("data")
-    runs.foreach { r =>
-      val o = data.addObject().put("execution", r.execution)
-        .put("function", r.function).put("collection", r.collection)
-        .put("status", r.status).put("triggered_on", r.triggeredOn)
-        .put("duration_ms", r.durationMs)
-      r.error.foreach(o.put("error", _))
+  private def respondRuns(ex: HttpExchange, runs: Seq[ExecutionRecord]): Unit =
+    respondData(ex) { data =>
+      runs.foreach { r =>
+        val o = data.addObject().put("execution", r.execution)
+          .put("function", r.function).put("collection", r.collection)
+          .put("status", r.status).put("triggered_on", r.triggeredOn)
+          .put("duration_ms", r.durationMs)
+        r.error.foreach(o.put("error", _))
+      }
     }
+
+  /** A 200 `{"data": [...]}` response whose array `fill` writes. */
+  private def respondData(ex: HttpExchange)(fill: ArrayNode => Unit): Unit = {
+    val root = TableStore.jsonMapper.createObjectNode()
+    fill(root.putArray("data"))
     respondJson(ex, 200, TableStore.jsonMapper.writeValueAsString(root))
   }
 

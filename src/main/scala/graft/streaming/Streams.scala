@@ -226,28 +226,11 @@ object Streams {
       threshold: Double): DataFrame = {
     val s = F.col(scoreCol).cast("double")
     val y = F.col(labelCol).cast("int")
-    val pred = (s >= F.lit(threshold)).cast("int")
-    val agg = df.where(s.isNotNull && y.isNotNull)
-      .withWatermark(tsCol, watermark)
-      .groupBy(F.window(F.col(tsCol), window))
-      .agg(
-        F.sum(pred * y).cast("long").as("tp"),
-        F.sum(pred * (F.lit(1) - y)).cast("long").as("fp"),
-        F.sum((F.lit(1) - pred) * (F.lit(1) - y)).cast("long").as("tn"),
-        F.sum((F.lit(1) - pred) * y).cast("long").as("fn"))
-    val p = F.col("tp").cast("double") /
-      (F.col("tp") + F.col("fp")).cast("double")
-    val r = F.col("tp").cast("double") /
-      (F.col("tp") + F.col("fn")).cast("double")
-    agg.select(F.col("window"), F.col("tp"), F.col("fp"), F.col("tn"),
-        F.col("fn"),
-        F.when(F.col("tp") + F.col("fp") > 0L, p).as("precision"),
-        F.when(F.col("tp") + F.col("fn") > 0L, r).as("recall"))
-      .withColumn("f1",
-        F.when(F.col("precision").isNotNull && F.col("recall").isNotNull &&
-            F.col("precision") + F.col("recall") > 0.0d,
-          (F.lit(2.0d) * F.col("precision") * F.col("recall")) /
-            (F.col("precision") + F.col("recall"))))
+    graft.pipeline.QualityModel.confusionPrf(
+      df.where(s.isNotNull && y.isNotNull)
+        .withWatermark(tsCol, watermark)
+        .groupBy(F.window(F.col(tsCol), window)),
+      (s >= F.lit(threshold)).cast("int"), y, keys = Seq("window"))
   }
 
   /** Live calibration monitoring: per event-time window, the

@@ -3,8 +3,39 @@ package graft.tools
 /** Writes `.explain("formatted")` for named gates to files — the
   * optimization rounds' plan-evidence artifact (plans/r17/<gate>_{before,
   * after}.txt). Usage: runMain graft.tools.PlanDump <outDir> <suffix>
-  * <gate,gate,...> [sfDir]. */
+  * <gate,gate,...> [sfDir].
+  *
+  * What a run allocates is stripped ([[normalize]]), so two dumps of one
+  * commit compare byte for byte, except in the part of the plan that a
+  * gate in [[Unstable]] names on its first line. */
 object PlanDump {
+  /** Gates whose plan differs between two runs of one commit, and where.
+    * AQE picks a join side from runtime statistics: q_graph_triangles'
+    * self-join sides are within 1 % of each other, and q_graph_reach's
+    * partial-aggregate output size varies. q_kmv_jaccard's Expand groups
+    * are ordered by a hash over expression ids. */
+  val Unstable: Map[String, String] = Map(
+    "q_graph_triangles" -> "AQE join side",
+    "q_graph_reach" -> "AQE join side",
+    "q_kmv_jaccard" -> "order of the distinct-aggregate Expand groups")
+
+  private val runIds: Seq[(scala.util.matching.Regex, String)] = Seq(
+    "#\\d+L?".r -> "#",
+    "\\[plan_id=\\d+\\]".r -> "[plan_id=]",
+    "RDD\\[\\d+\\]".r -> "RDD[]",
+    "(\\.(?:scala|java)):\\d+".r -> "$1:",
+    "\\[codegen id : \\d+\\]".r -> "[codegen id : ]",
+    "(?m)(^\\(\\d+\\) \\w*QueryStage\\nOutput \\[\\d+\\]: .*\\nArguments: )\\d+".r -> "$1",
+    "(/[A-Za-z][\\w.-]*?[A-Za-z-])\\d{6,}(?=[/\\]])".r -> "$1",
+    "(?<=/)[0-9a-z]{26}(?=[/\\]])".r -> "<id>",
+    "(\\[[BCDFIJSZ])@[0-9a-f]+".r -> "$1@")
+
+  /** `plan` without expression, plan, RDD, codegen-stage and AQE
+    * query-stage ids, call-site line numbers, temp-dir suffixes, store
+    * version ids in paths and array identity hashes. */
+  def normalize(plan: String): String =
+    runIds.foldLeft(plan) { case (s, (re, to)) => re.replaceAllIn(s, to) }
+
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
@@ -16,10 +47,12 @@ object PlanDump {
     new java.io.File(outDir).mkdirs()
     gates.foreach { g =>
       val df = graft.SparkEntry.queries(g)(spark, sfDir)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val txt = normalize(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
+      val mark = Unstable.get(g)
+        .fold("")(what => s"# unstable between runs: $what\n")
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/${g}_$suffix.txt"), txt)
+        java.nio.file.Paths.get(s"$outDir/${g}_$suffix.txt"), mark + txt)
       println(s"[plandump] wrote $outDir/${g}_$suffix.txt")
     }
     spark.stop()

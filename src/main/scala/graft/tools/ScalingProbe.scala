@@ -1069,28 +1069,15 @@ object ScalingProbe {
           "vec_id", "embedding", "grp", threshold = 0.99).count()
       }))
 
-    val ops = if (opFilter.isEmpty) ops0 else ops0.filter(o => opFilter(o._1))
     println(f"${"op"}%-14s ${"x1(5k)"}%10s ${"x10(50k)"}%10s ${"xBIG"}%10s  growth10 growthBIG")
-    for ((name, big, op) <- ops) {
+    for ((ops, scale) <- Seq((ops0, scaled _), (evOps, scaledEv _),
+        (embOps, scaledEmb _)); (name, big, op) <- ops
+        if opFilter.isEmpty || opFilter(name)) {
       // warm-up at x1, then measure
-      op(scaled(1))
-      val (t1, _) = time(op(scaled(1)))
-      val (t10, _) = time(op(scaled(10)))
-      val (tBig, nBig) = time(op(scaled(big)))
-      println(f"$name%-14s $t1%9.2fs $t10%9.2fs $tBig%9.2fs  ${t10 / t1}%7.1fx ${tBig / t1}%8.1fx   (big=x$big rows=$nBig)")
-    }
-    for ((name, big, op) <- if (opFilter.isEmpty) evOps else evOps.filter(o => opFilter(o._1))) {
-      op(scaledEv(1))
-      val (t1, _) = time(op(scaledEv(1)))
-      val (t10, _) = time(op(scaledEv(10)))
-      val (tBig, nBig) = time(op(scaledEv(big)))
-      println(f"$name%-14s $t1%9.2fs $t10%9.2fs $tBig%9.2fs  ${t10 / t1}%7.1fx ${tBig / t1}%8.1fx   (big=x$big rows=$nBig)")
-    }
-    for ((name, big, op) <- if (opFilter.isEmpty) embOps else embOps.filter(o => opFilter(o._1))) {
-      op(scaledEmb(1))
-      val (t1, _) = time(op(scaledEmb(1)))
-      val (t10, _) = time(op(scaledEmb(10)))
-      val (tBig, nBig) = time(op(scaledEmb(big)))
+      op(scale(1))
+      val (t1, _) = time(op(scale(1)))
+      val (t10, _) = time(op(scale(10)))
+      val (tBig, nBig) = time(op(scale(big)))
       println(f"$name%-14s $t1%9.2fs $t10%9.2fs $tBig%9.2fs  ${t10 / t1}%7.1fx ${tBig / t1}%8.1fx   (big=x$big rows=$nBig)")
     }
     spark.stop()

@@ -1459,6 +1459,14 @@ class ModelSpec extends AnyFunSuite {
     val sketches = Seq(raw.where(F.col("x") < 5.0), raw.where(F.col("x") >= 5.0))
       .map(Report.quantileSketch(_, "x", 0.0, 10.0, 5, Some("g")))
       .reduce(_ union _)
+    // one near-dup pair (one word changed), one exact copy, one unrelated doc
+    val docs = Seq(
+      ("g1", 1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
+      ("g1", 2L, "the quick brown fox jumps over the lazy dog near the river bank tonight"),
+      ("g1", 3L, "spark plans every shuffle before a single task of the job runs"),
+      ("g1", 4L, "spark plans every shuffle before a single task of the job runs"),
+      ("g1", 5L, "an unrelated sentence about quantile sketches and their merges"))
+      .toDF("g", "id", "text")
     // (pair, input, x, xByGroup, the grouped side's key column, ordered)
     val twins: Seq[(String, org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
@@ -1481,7 +1489,9 @@ class ModelSpec extends AnyFunSuite {
       ("ewmaDaily", raw, Report.ewmaDaily(_, "ts", alpha = 0.4),
         Report.ewmaDailyByGroup(_, "g", "ts", alpha = 0.4), "group", true),
       ("gini", raw, Quantiles.gini(_, "x"),
-        Quantiles.giniByGroup(_, "g", "x"), "group", true))
+        Quantiles.giniByGroup(_, "g", "x"), "group", true),
+      ("minhashLshPairs", docs, Dedup.minhashLshPairs(_, "text", "id"),
+        Dedup.minhashLshPairsGrouped(_, "text", "id", "g"), "group", false))
     // doubles compare by their raw bits, so -0.0/0.0 or NaN drift fails
     def bits(rows: Array[org.apache.spark.sql.Row]): Seq[Seq[Any]] =
       rows.toSeq.map(_.toSeq.map {

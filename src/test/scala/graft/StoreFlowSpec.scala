@@ -401,6 +401,50 @@ class StoreFlowSpec extends AnyFunSuite {
     assert(published == Seq(0, 1))
   }
 
+  test("flow: registering races triggers — every function listed, no trigger throws") {
+    // 8 threads register 500 functions each while another thread keeps
+    // triggering a publisher, whose plan scans the registry for dependents
+    val store = freshStore()
+    val engine = new FlowEngine(store, spark)
+    import spark.implicits._
+    engine.publisher("pub", "c", Seq("t")) { _ =>
+      Seq(TableFrame.fromRaw(Seq(1).toDF("x")))
+    }
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val registering = new java.util.concurrent.CountDownLatch(8)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val triggers = new java.util.concurrent.atomic.AtomicInteger
+    val trigger = new Thread(() =>
+      try {
+        start.await()
+        while (registering.getCount > 0 || triggers.get == 0) {
+          engine.trigger("pub")
+          triggers.incrementAndGet()
+        }
+      } catch { case e: Throwable => errors.add(e) })
+    val registrars = (0 until 8).map { i =>
+      new Thread(() =>
+        try {
+          start.await()
+          (0 until 500).foreach { j =>
+            engine.subscriber(s"s_${i}_$j", "reg", Seq("in"))(_ => Nil)
+          }
+        } catch { case e: Throwable => errors.add(e) }
+        finally registering.countDown())
+    }
+    val all = trigger +: registrars
+    all.foreach(_.start())
+    start.countDown()
+    all.foreach(_.join())
+    assert(errors.isEmpty, errors.toString)
+    assert(triggers.get >= 1)
+    val listed = engine.functionsIn("reg").map(_.name)
+    val nListed = listed.size
+    assert(nListed == 4000)
+    assert(listed.toSet ==
+      (for (i <- 0 until 8; j <- 0 until 500) yield s"s_${i}_$j").toSet)
+  }
+
   test("flow: nightly ingest — exact + near-dup dedup against the stored corpus") {
     // the continuous-ingest composition: each night's batch is deduped
     // against the CURRENT stored corpus (exact via md5 anti-join, near-dup
