@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
 
 import graft.expressions.MathKernels
 
@@ -250,19 +250,19 @@ object QualityModel {
       threshold: Double): DataFrame = {
     val s = F.col(scoreCol).cast("double")
     val y = F.col(labelCol).cast("int")
-    confusionPrf(df.where(s.isNotNull && y.isNotNull).groupBy(),
-      (s >= F.lit(threshold)).cast("int"), y, keys = Nil)
+    confusionPrf(df.where(s.isNotNull && y.isNotNull), keys = Nil,
+      (s >= F.lit(threshold)).cast("int"), y)
   }
 
   /** The confusion algebra of [[prAtThreshold]], [[prCurve]] and
-    * [[graft.streaming.Streams.windowedConfusion]]: per group of
-    * `grouped`, the tp/fp/tn/fn sums of the 0/1 prediction `pred`
-    * against the 0/1 label `y`, then precision, recall and F1 (NULL
-    * where a denominator is empty). Output: (keys…, tp, fp, tn, fn,
-    * precision, recall, f1). */
-  private[graft] def confusionPrf(grouped: RelationalGroupedDataset,
-      pred: Column, y: Column, keys: Seq[String]): DataFrame = {
-    val agg = grouped.agg(
+    * [[graft.streaming.Streams.windowedConfusion]]: per `keys` group of
+    * `df`, the tp/fp/tn/fn sums of the 0/1 prediction `pred` against
+    * the 0/1 label `y`, then precision, recall and F1 (NULL where a
+    * denominator is empty). Output: (keys…, tp, fp, tn, fn, precision,
+    * recall, f1). */
+  private[graft] def confusionPrf(df: DataFrame, keys: Seq[Column],
+      pred: Column, y: Column): DataFrame = {
+    val agg = df.groupBy(keys: _*).agg(
       F.sum(pred * y).cast("long").as("tp"),
       F.sum(pred * (F.lit(1) - y)).cast("long").as("fp"),
       F.sum((F.lit(1) - pred) * (F.lit(1) - y)).cast("long").as("tn"),
@@ -271,10 +271,9 @@ object QualityModel {
       (F.col("tp") + F.col("fp")).cast("double")
     val r = F.col("tp").cast("double") /
       (F.col("tp") + F.col("fn")).cast("double")
-    agg.select(keys.map(F.col) ++ Seq(F.col("tp"), F.col("fp"),
-        F.col("tn"), F.col("fn"),
+    agg.select(F.col("*"),
         F.when(F.col("tp") + F.col("fp") > 0L, p).as("precision"),
-        F.when(F.col("tp") + F.col("fn") > 0L, r).as("recall")): _*)
+        F.when(F.col("tp") + F.col("fn") > 0L, r).as("recall"))
       .withColumn("f1",
         F.when(F.col("precision").isNotNull && F.col("recall").isNotNull &&
             F.col("precision") + F.col("recall") > 0.0d,
@@ -296,8 +295,8 @@ object QualityModel {
     val y = F.col(labelCol).cast("int")
     val t = thresholds.distinct.sorted.toDF("threshold")
     confusionPrf(df.where(s.isNotNull && y.isNotNull)
-        .crossJoin(F.broadcast(t)).groupBy(F.col("threshold")),
-      (s >= F.col("threshold")).cast("int"), y, keys = Seq("threshold"))
+        .crossJoin(F.broadcast(t)), keys = Seq(F.col("threshold")),
+      (s >= F.col("threshold")).cast("int"), y)
       .orderBy(F.col("threshold").asc)
   }
 

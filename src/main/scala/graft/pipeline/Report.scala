@@ -561,11 +561,10 @@ object Report {
     * stamps checked, `a` joined to the broadcast `b` (on `keyCols`, or
     * crossed with one global `b` row when `keyCols` is empty or
     * `joinOnKeys` is false), and the zipped (ca, cb) cell array staged
-    * as `td_z` beside `n_a`, `n_b` and `carry`, raising when the two
+    * as `td_z` beside `n_a`, `n_b` and `td_binsa`, raising when the two
     * (lo, hi, bins, scale) stamps differ. */
   private def pairedCells(a: DataFrame, b: DataFrame, countsCol: String,
-      keyCols: Seq[String], joinOnKeys: Boolean,
-      carry: Seq[Column]): DataFrame = {
+      keyCols: Seq[String], joinOnKeys: Boolean): DataFrame = {
     requireGridStamp(a); requireGridStamp(b)
     def side(df: DataFrame, sfx: String, keys: Seq[String]) = df.select(
       keys.map(F.col) ++ Seq(
@@ -593,14 +592,13 @@ object Report {
         .otherwise(F.raise_error(F.lit("cannot diff sketches with " +
           "different grids: (lo, hi, bins, scale) stamps disagree")))
         .as("td_z"),
-      F.col("n_a"), F.col("n_b")) ++ carry: _*)
+      F.col("n_a"), F.col("n_b"), F.col("td_binsa")): _*)
   }
 
   private def sketchDriftImpl(a: DataFrame, b: DataFrame,
       countsCol: String, keyCols: Seq[String],
       joinOnKeys: Boolean = true): DataFrame = {
-    val staged = pairedCells(a, b, countsCol, keyCols, joinOnKeys,
-      Seq(F.col("td_binsa")))
+    val staged = pairedCells(a, b, countsCol, keyCols, joinOnKeys)
     val naD = F.col("n_a").cast("double")
     val nbD = F.col("n_b").cast("double")
     val cellsD = (F.col("td_binsa") + 2).cast("double")
@@ -658,7 +656,7 @@ object Report {
   /** JSD of each `keyCols` row of `a` against the one row of `b`. */
   private def sketchJsdImpl(a: DataFrame, b: DataFrame,
       countsCol: String, keyCols: Seq[String]): DataFrame = {
-    val staged = pairedCells(a, b, countsCol, keyCols, joinOnKeys = false, Nil)
+    val staged = pairedCells(a, b, countsCol, keyCols, joinOnKeys = false)
     val naD = F.col("n_a").cast("double")
     val nbD = F.col("n_b").cast("double")
     val ln = graft.expressions.MathKernels.ln _

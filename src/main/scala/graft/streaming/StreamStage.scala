@@ -56,18 +56,18 @@ object StreamStage {
     (dir, s.read.parquet(dir).schema)
   }
 
+  // a stateful query's shuffle-partition count is frozen into its
+  // checkpoint at first start — a per-query sizing decision, not a session
+  // default. These bounded gates carry tiny state, so they run with 8
+  // instead of inheriting the session's 32: 4× fewer state stores to open,
+  // checkpoint, and commit per micro-batch. A production job sizes this to
+  // its key cardinality the same way.
+  private val StatePartitions = 8
+
   /** Run a streaming DataFrame to completion (AvailableNow) into a memory
-    * sink and return the sink table.
-    *
-    * State partitions: a stateful query's shuffle-partition count is frozen
-    * into its checkpoint at first start — it is a per-query sizing decision,
-    * not a session default. These bounded gates carry tiny state, so they
-    * run with `statePartitions` (default 8) instead of inheriting the
-    * session's 32: 4× fewer state stores to open, checkpoint, and commit
-    * per micro-batch. A production job sizes this to its key cardinality
-    * the same way. */
-  def runToMemory(df: DataFrame, prefix: String, outputMode: String,
-      statePartitions: Int = 8): DataFrame = {
+    * sink and return the sink table, with `StatePartitions` shuffle
+    * partitions for its state. */
+  def runToMemory(df: DataFrame, prefix: String, outputMode: String): DataFrame = {
     val s = df.sparkSession
     // a FIXED per-prefix sink name, replacing the previous run's table:
     // UUID-per-run names leaked one memory-sink table (and its rows) per
@@ -84,7 +84,7 @@ object StreamStage {
       .foreach(_.stop())
     val key = "spark.sql.shuffle.partitions"
     val old = s.conf.get(key)
-    s.conf.set(key, statePartitions.toString)
+    s.conf.set(key, StatePartitions.toString)
     // per-run scratch: state-store files are useless once the AvailableNow
     // run completes (the memory sink holds the result), so the dir is
     // deleted afterwards — without this every invocation leaked a

@@ -227,10 +227,9 @@ object Streams {
     val s = F.col(scoreCol).cast("double")
     val y = F.col(labelCol).cast("int")
     graft.pipeline.QualityModel.confusionPrf(
-      df.where(s.isNotNull && y.isNotNull)
-        .withWatermark(tsCol, watermark)
-        .groupBy(F.window(F.col(tsCol), window)),
-      (s >= F.lit(threshold)).cast("int"), y, keys = Seq("window"))
+      df.where(s.isNotNull && y.isNotNull).withWatermark(tsCol, watermark),
+      keys = Seq(F.window(F.col(tsCol), window)),
+      (s >= F.lit(threshold)).cast("int"), y)
   }
 
   /** Live calibration monitoring: per event-time window, the

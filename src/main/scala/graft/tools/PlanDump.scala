@@ -28,11 +28,15 @@ object PlanDump {
     "(?m)(^\\(\\d+\\) \\w*QueryStage\\nOutput \\[\\d+\\]: .*\\nArguments: )\\d+".r -> "$1",
     "(/[A-Za-z][\\w.-]*?[A-Za-z-])\\d{6,}(?=[/\\]])".r -> "$1",
     "(?<=/)[0-9a-z]{26}(?=[/\\]])".r -> "<id>",
-    "(\\[[BCDFIJSZ])@[0-9a-f]+".r -> "$1@")
+    "(\\[[BCDFIJSZ])@[0-9a-f]+".r -> "$1@",
+    "(lambda \\w+?)_\\d+".r -> "$1_",
+    "\\$\\$Lambda\\$\\d+/0x[0-9a-f]+@[0-9a-f]+".r -> "\\$\\$Lambda\\$")
 
   /** `plan` without expression, plan, RDD, codegen-stage and AQE
     * query-stage ids, call-site line numbers, temp-dir suffixes, store
-    * version ids in paths and array identity hashes. */
+    * version ids in paths, array identity hashes, lambda-variable
+    * counters (which count every lambda the JVM built before, so they
+    * follow the gate order) and JVM lambda class names. */
   def normalize(plan: String): String =
     runIds.foldLeft(plan) { case (s, (re, to)) => re.replaceAllIn(s, to) }
 
