@@ -10,6 +10,7 @@ import scala.util.Using
 import com.fasterxml.jackson.databind.node.ArrayNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.Bridge
 
 import graft.flow.{ExecutionLog, ExecutionRecord, FlowEngine}
 import graft.store.{TableRef, TableStore}
@@ -42,7 +43,12 @@ import graft.store.{TableRef, TableStore}
   * `at` is the reference's epoch-millis trigger-time cutoff.
   *
   * Scale note: schema and list are served from the version log alone (no
-  * Spark job, no file reads). `sample` runs a bounded `offset/limit` scan.
+  * Spark job, no file reads). `sample` is one `collect` job over the
+  * `offset/limit` slice (planned as `CollectLimitExec`: no shuffle, no write
+  * job) plus a parquet encode on the serving thread; the driver holds at
+  * most `offset + len` rows of it. `download` is a single-file Spark write
+  * (one task, no rows on the driver) read back into the response. The two
+  * differ because only a bounded slice may be collected to the driver.
   * `download` funnels the whole table through one HTTP response by design —
   * that is what a download endpoint is — while the data path for engines
   * stays the distributed parquet under the store root; a cluster consumer
@@ -193,13 +199,13 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
         require(offset >= 0 && len >= 0, s"offset/len must be >= 0, got $offset/$len")
         store.sample(TableRef.parse(t, c), offset, len, q.get("at").map(_.toLong)) match {
           case None => respondJson(ex, 404, s"""{"error":"table not found: $c/$t"}""")
-          case Some(df) => respondParquet(ex, df)
+          case Some(df) => respondParquet(ex, Bridge.collectParquet(df))
         }
 
       case ("GET", Seq("collections", c, "tables", t, "download")) =>
         scanAt(c, t, q) match {
           case None => respondJson(ex, 404, s"""{"error":"table not found: $c/$t"}""")
-          case Some(df) => respondParquet(ex, df)
+          case Some(df) => respondParquet(ex, singleFileParquet(df))
         }
 
       case ("POST", Seq("collections", c, "tables", t, "restore")) =>
@@ -282,9 +288,10 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
     Using.resource(ex.getResponseBody)(_.write(bytes))
   }
 
-  /** Serve a frame as one parquet file (the response is one byte stream, so
-    * the single-file rewrite is inherent to the endpoint, not a plan flaw). */
-  private def respondParquet(ex: HttpExchange, df: DataFrame): Unit = {
+  /** `df` as one parquet file from a single-task Spark write into a temp
+    * dir: the whole table streams through one task and never gathers on
+    * the driver as rows. */
+  private def singleFileParquet(df: DataFrame): Array[Byte] = {
     val tmp = Files.createTempDirectory("graft-api-parquet")
     try {
       val out = tmp.resolve("out").toString
@@ -292,10 +299,13 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
       val part = Using.resource(Files.list(Path.of(out)))(
         _.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")))
         .getOrElse(throw new IllegalStateException("no parquet part written"))
-      val bytes = Files.readAllBytes(part)
-      ex.getResponseHeaders.set("Content-Type", "application/vnd.apache.parquet")
-      ex.sendResponseHeaders(200, bytes.length)
-      Using.resource(ex.getResponseBody)(_.write(bytes))
+      Files.readAllBytes(part)
     } finally TableStore.deleteTree(tmp)
+  }
+
+  private def respondParquet(ex: HttpExchange, bytes: Array[Byte]): Unit = {
+    ex.getResponseHeaders.set("Content-Type", "application/vnd.apache.parquet")
+    ex.sendResponseHeaders(200, bytes.length)
+    Using.resource(ex.getResponseBody)(_.write(bytes))
   }
 }

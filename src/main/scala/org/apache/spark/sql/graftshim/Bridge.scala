@@ -1,7 +1,22 @@
 package org.apache.spark.sql
 package graftshim
 
+import java.io.ByteArrayOutputStream
+import java.net.URI
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.hadoop.util.Progressable
+
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
 
 /** Access bridge into `private[sql]` Spark internals we legitimately need:
   * Column ↔ catalyst Expression conversion (Spark 4 moved Column onto
@@ -11,4 +26,67 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object Bridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `df` as the bytes of one parquet file: one `collect` action (the plan,
+    * execution id and listener events of `df.collect()`, keeping catalyst
+    * rows instead of converting them to `Row`s), then an encode on the
+    * calling thread by the writer a Spark parquet write builds per task
+    * (`ParquetFileFormat.prepareWrite` → `OutputWriterFactory.newInstance`).
+    * The file carries the same write support, row-schema footer metadata,
+    * codec and session settings as a `df.write.parquet` part file, with no
+    * write job, no output committer and no file on disk: the writer's
+    * output stream is a byte buffer. Every row of `df` is held on the
+    * driver, so `df` must be bounded. */
+  def collectParquet(df: DataFrame): Array[Byte] = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val session = ds.sparkSession
+    val qe = ds.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+    SQLConf.withExistingConf(session.sessionState.conf) {
+      val job = Job.getInstance(session.sessionState.newHadoopConf())
+      val factory = new ParquetFileFormat().prepareWrite(session, job, Map.empty, ds.schema)
+      val conf = job.getConfiguration
+      conf.setClass(s"fs.${BufferFs.Scheme}.impl", classOf[BufferFs], classOf[FileSystem])
+      conf.setBoolean(s"fs.${BufferFs.Scheme}.impl.disable.cache", true)
+      val name = UUID.randomUUID().toString
+      try {
+        val w = factory.newInstance(s"${BufferFs.Scheme}:/$name", ds.schema,
+          new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+        try rows.foreach(w.write) finally w.close()
+        BufferFs.files.get(name).toByteArray
+      } finally BufferFs.files.remove(name)
+    }
+  }
+}
+
+/** A write-only Hadoop file system whose files are byte buffers, keyed by
+  * file name in [[BufferFs.files]] until the creator removes them — so a
+  * Hadoop-path writer can encode into memory. Everything but `create`
+  * is unsupported. */
+final class BufferFs extends FileSystem {
+  override def getUri: URI = URI.create(s"${BufferFs.Scheme}:///")
+  override def getWorkingDirectory: Path = new Path(getUri)
+  override def setWorkingDirectory(dir: Path): Unit = ()
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    val buf = new ByteArrayOutputStream()
+    BufferFs.files.put(f.getName, buf)
+    new FSDataOutputStream(buf, statistics)
+  }
+  private def unsupported = throw new UnsupportedOperationException(
+    s"${BufferFs.Scheme}: only create is supported")
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = unsupported
+  override def append(f: Path, bufferSize: Int, progress: Progressable): FSDataOutputStream =
+    unsupported
+  override def rename(src: Path, dst: Path): Boolean = unsupported
+  override def delete(f: Path, recursive: Boolean): Boolean = unsupported
+  override def listStatus(f: Path): Array[FileStatus] = unsupported
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = unsupported
+  override def getFileStatus(f: Path): FileStatus = unsupported
+}
+
+object BufferFs {
+  val Scheme = "graftbuf"
+  val files = new ConcurrentHashMap[String, ByteArrayOutputStream]()
 }

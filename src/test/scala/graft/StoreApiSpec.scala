@@ -4,10 +4,14 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.SysCtx
 import graft.server.StoreApi
-import graft.store.TableStore
+import graft.store.{TableRef, TableStore}
 
 /** The HTTP table-API surface over the store (reference:
   * api/apiserver.py:936-1013 — list/schema/sample/download/delete). */
@@ -324,5 +328,128 @@ class StoreApiSpec extends AnyFunSuite {
     withApi(store) { port =>
       assert(get(port, "/collections/c/tables/t/sample?offset=-1").statusCode() == 400)
     }
+  }
+
+  /** GET `sample` and check the body against `store.sample` with the same
+    * arguments: its decoded schema (names, types, nullability) and rows, in
+    * order, are the sample's, and its bytes are those of a single-file Spark
+    * write of the sample. Returns the decoded frame. */
+  private def assertSample(port: Int, store: TableStore, c: String, t: String,
+      offset: Int, len: Int, at: Option[Long] = None): org.apache.spark.sql.DataFrame = {
+    val r = get(port, s"/collections/$c/tables/$t/sample?offset=$offset&len=$len" +
+      at.fold("")(a => s"&at=$a"))
+    assert(r.statusCode() == 200, new String(r.body()))
+    val want = store.sample(TableRef.parse(t, c), offset, len, at).get
+    val dir = Files.createTempDirectory("graft-api-sample")
+    try {
+      val got = spark.read.parquet(Files.write(dir.resolve("got.parquet"), r.body()).toString)
+      assert(got.schema == want.schema)
+      val rows = got.collect().toSeq
+      assert(rows == want.collect().toSeq)
+      want.coalesce(1).write.parquet(dir.resolve("want").toString)
+      val part = scala.util.Using.resource(Files.list(dir.resolve("want")))(
+        _.iterator().asScala.find(_.toString.endsWith(".parquet")).get)
+      assert(java.util.Arrays.equals(r.body(), Files.readAllBytes(part)))
+      spark.createDataFrame(spark.sparkContext.parallelize(rows), got.schema)
+    } finally TableStore.deleteTree(dir)
+  }
+
+  test("sample fidelity: nested and typed columns, the $td. columns, len=0, past the end") {
+    import spark.implicits._
+    val store = freshStore()
+    val df = (0 until 30).map { i =>
+      (i.toLong, BigDecimal(i) / 7, java.sql.Date.valueOf(f"2024-01-${i % 28 + 1}%02d"),
+        new java.sql.Timestamp(1700000000000L + i * 3600000L),
+        (0 until i % 4).map(j => s"v$j"), (i % 3, if (i % 5 == 0) null else s"s$i"),
+        Map(s"k$i" -> i.toDouble))
+    }.toDF("id", "amount", "day", "ts", "tags", "pair", "attrs")
+      .withColumn("amount", F.col("amount").cast("decimal(12,4)"))
+      .coalesce(1)
+    store.write("c", "typed", df)
+    withApi(store) { port =>
+      val got = assertSample(port, store, "c", "typed", 3, 5)
+      assert(got.count() == 5)
+      val names = got.schema.fieldNames.toSeq
+      assert(Seq("id", "amount", "day", "ts", "tags", "pair", "attrs").forall(names.contains))
+      assert(names.exists(_.startsWith("$td.")))
+      assertSample(port, store, "c", "typed", 0, 100)
+      // len=0: a valid parquet file with the full schema and no rows
+      assert(assertSample(port, store, "c", "typed", 0, 0).count() == 0)
+      assert(assertSample(port, store, "c", "typed", 500, 20).count() == 0)
+    }
+  }
+
+  test("sample fidelity: hive-partitioned, restored, column-adding range, at=") {
+    import spark.implicits._
+    val store = freshStore()
+    val ctx = SysCtx.fresh()
+    store.stageWrite("c", "part",
+      (0 until 40).map(i => (i, s"r$i", i % 3)).toDF("id", "tag", "p"), ctx,
+      partitionBy = Seq("p"))
+    store.commitTransaction(ctx.transaction)
+    store.write("c", "evo", Seq((1, "a"), (2, "b")).toDF("id", "tag").coalesce(1))
+    Thread.sleep(5)
+    val cut = System.currentTimeMillis()
+    Thread.sleep(5)
+    store.write("c", "evo",
+      Seq((3, "c", 3.5), (4, "d", 4.5)).toDF("id", "tag", "score").coalesce(1))
+    store.write("c", "evo", Seq((9, "bad")).toDF("id", "tag"))
+    store.restore("c", "evo", "HEAD~2")
+    withApi(store) { port =>
+      assert(assertSample(port, store, "c", "part", 2, 10).count() == 10)
+      // HEAD is the restored version: its data lives in HEAD~3's directory
+      val restored = assertSample(port, store, "c", "evo", 0, 10)
+      assert(restored.select("id").as[Int].collect().toSeq == Seq(1, 2))
+      // a range whose newer version added `score`: the older rows read it as null
+      val range = assertSample(port, store, "c", "evo@HEAD~3..HEAD~2", 1, 2)
+      assert(range.schema.fieldNames.contains("score"))
+      assert(range.select("id").as[Int].collect().toSeq == Seq(2, 3))
+      assert(assertSample(port, store, "c", "evo", 0, 10, Some(cut))
+        .select("id").as[Int].collect().toSeq == Seq(1, 2))
+    }
+  }
+
+  test("sample runs one Spark job and leaves nothing under java.io.tmpdir") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val group = s"storeapi-spec-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val store = freshStore()
+    store.write("c", "t", (0 until 100).map(i => (i, s"r$i")).toDF("id", "tag").coalesce(1))
+    // every job of this thread carries `group`, so a job without it is the
+    // server's. The marker job runs after the request; the listener bus
+    // delivers in order, so once its end is seen every earlier job is counted.
+    val serverJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val markerIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.job.description") == marker)) markerIds.add(e.jobId)
+        else if (!props.exists(_.getProperty("spark.jobGroup.id") == group)) serverJobs.incrementAndGet()
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerIds.contains(e.jobId)) markerDone.countDown()
+    }
+    val tmp = java.nio.file.Path.of(System.getProperty("java.io.tmpdir"))
+    def entries() = scala.util.Using.resource(Files.list(tmp))(
+      _.iterator().asScala.map(_.getFileName.toString).toSet)
+    sc.setJobGroup(group, "StoreApiSpec")
+    try withApi(store) { port =>
+      val sample = "/collections/c/tables/t/sample?len=20"
+      assert(get(port, sample).statusCode() == 200) // warm up the pool thread
+      sc.addSparkListener(listener)
+      try {
+        val before = entries()
+        assert(get(port, sample).statusCode() == 200)
+        val added = entries() -- before
+        assert(added.isEmpty, s"new entries under $tmp: $added")
+        sc.setJobDescription(marker)
+        spark.range(1).collect()
+        assert(markerDone.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        assert(serverJobs.get == 1, s"one sample ran ${serverJobs.get} Spark jobs")
+      } finally sc.removeSparkListener(listener)
+    } finally sc.clearJobGroup()
   }
 }
