@@ -52,7 +52,8 @@ def git(*args):
 
 def export(rev, sha):
     """A fresh directory holding the committed files of `sha`."""
-    d = tempfile.mkdtemp(prefix=f"benchpairs-{sha[:10]}-")
+    # short: sbt puts a unix socket path under it (at most 107 bytes)
+    d = tempfile.mkdtemp(prefix="bp-")
     archive = subprocess.Popen(["git", "-C", REPO, "archive", "--format=tar", sha],
                                stdout=subprocess.PIPE)
     subprocess.run(["tar", "-x", "-C", d], stdin=archive.stdout, check=True)
