@@ -88,5 +88,5 @@ final class BufferFs extends FileSystem {
 
 object BufferFs {
   val Scheme = "graftbuf"
-  val files = new ConcurrentHashMap[String, ByteArrayOutputStream]()
+  private[graftshim] val files = new ConcurrentHashMap[String, ByteArrayOutputStream]()
 }

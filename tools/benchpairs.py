@@ -29,7 +29,8 @@ sandbox (section 8, with the bounds of section 6):
   unresolved  BASE's own spread (interquartile range over median) is wider
               than the bound, and not every change run beats every BASE run
 
-Per-layer metrics (--trace 1) have no bound and get only gain/loss/-.
+A gain or loss over fewer than ten pairs is marked so: section 8 asks for
+ten. Per-layer metrics (--trace 1) have no bound and get only gain/loss/-.
 Every run's `correct` flag and failed count is printed; the exit status is
 1 when any run failed or was not correct, else 0.
 """
@@ -112,6 +113,8 @@ def verdict(spec, base, change):
         word = "WORSE"
     else:
         word = "within"
+    if word in ("gain", "loss") and len(base) < 10:
+        word += " (<10 pairs)"
     return wins, losses, word
 
 
