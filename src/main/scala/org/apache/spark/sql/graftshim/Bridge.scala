@@ -12,7 +12,6 @@ import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.hadoop.util.Progressable
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -21,7 +20,8 @@ import org.apache.spark.sql.internal.SQLConf
 /** Access bridge into `private[sql]` Spark internals we legitimately need:
   * Column ↔ catalyst Expression conversion (Spark 4 moved Column onto
   * ColumnNode; `classic.ExpressionUtils` is the sanctioned converter but is
-  * package-private). Lives under
+  * package-private), and a session's parquet writer outside a write job
+  * (`classic.Dataset.queryExecution`, `SessionState`). Lives under
   * `org.apache.spark.sql` solely to satisfy the access qualifier. */
 object Bridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
