@@ -45,10 +45,12 @@ import graft.store.{TableRef, TableStore}
   * Scale note: schema and list are served from the version log alone (no
   * Spark job, no file reads). `sample` is one `collect` job over the
   * `offset/limit` slice (planned as `CollectLimitExec`: no shuffle, no write
-  * job) plus a parquet encode on the serving thread; the driver holds at
-  * most `offset + len` rows of it. `download` is a single-file Spark write
-  * (one task, no rows on the driver) read back into the response. The two
-  * differ because only a bounded slice may be collected to the driver.
+  * job; Spark's take adds a job only when the first partition holds fewer
+  * than `offset + len` rows) plus a parquet encode on the serving thread, so
+  * the driver holds at most `offset + len` rows. `download` is a single-file
+  * Spark write (one task, no rows on the driver) read back into the
+  * response. The two differ because only a bounded slice may be collected
+  * to the driver.
   * `download` funnels the whole table through one HTTP response by design —
   * that is what a download endpoint is — while the data path for engines
   * stays the distributed parquet under the store root; a cluster consumer
@@ -303,6 +305,9 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
     } finally TableStore.deleteTree(tmp)
   }
 
+  /** A 200 response whose body is one parquet file: `sample` encodes it
+    * from collected rows ([[Bridge.collectParquet]]), `download` from a
+    * Spark write ([[singleFileParquet]]). */
   private def respondParquet(ex: HttpExchange, bytes: Array[Byte]): Unit = {
     ex.getResponseHeaders.set("Content-Type", "application/vnd.apache.parquet")
     ex.sendResponseHeaders(200, bytes.length)

@@ -146,6 +146,7 @@ def report(workload, specs, runs, pairs):
         print(f"| {name} | {spec['unit']} | {fmt(a[1])} [{fmt(a[0])}, {fmt(a[2])}] | "
               f"{fmt(b[1])} [{fmt(b[0])}, {fmt(b[2])}] | {rel} | "
               f"{wins}/{losses} | {word} |")
+    sys.stdout.flush()
 
 
 def main():
