@@ -17,8 +17,7 @@ first alternating from pair to pair. Nothing under `perfbench/` is edited.
 
 For each workload and metric it prints each side's median and quartiles,
 the change relative to BASE, the pairs the change won and lost (ties count
-for neither), and a verdict by the choosing-metrics rule for a small
-sandbox (section 8, with the bounds of section 6):
+for neither), and a verdict:
 
   gain        the change won at least 9/10 of the pairs, and the medians
               differ in its favour by more than BASE's interquartile range
@@ -29,8 +28,9 @@ sandbox (section 8, with the bounds of section 6):
   unresolved  BASE's own spread (interquartile range over median) is wider
               than the bound, and not every change run beats every BASE run
 
-A gain or loss over fewer than ten pairs is marked so: section 8 asks for
-ten. Per-layer metrics (--trace 1) have no bound and get only gain/loss/-.
+A gain or loss over fewer than ten pairs is marked so, since a claim needs
+at least ten. Per-layer metrics (--trace 1) have no bound and get only
+gain/loss/-.
 Every run's `correct` flag and failed count is printed; the exit status is
 1 when any run failed or was not correct, else 0.
 """
@@ -92,7 +92,7 @@ def quartiles(xs):
 
 
 def verdict(spec, base, change):
-    """The section 8 / section 6 verdict for one metric on one workload."""
+    """The pairs won and lost and the verdict, for one metric on one workload."""
     sign = 1 if spec["better"] == "lower" else -1
     wins = sum(1 for a, b in zip(base, change) if sign * (b - a) < 0)
     losses = sum(1 for a, b in zip(base, change) if sign * (b - a) > 0)
