@@ -43,14 +43,15 @@ import graft.store.{TableRef, TableStore}
   * `at` is the reference's epoch-millis trigger-time cutoff.
   *
   * Scale note: schema and list are served from the version log alone (no
-  * Spark job, no file reads). `sample` is one `collect` job over the
-  * `offset/limit` slice (planned as `CollectLimitExec`: no shuffle, no write
-  * job; Spark's take adds a job only when the first partition holds fewer
-  * than `offset + len` rows) plus a parquet encode on the serving thread, so
-  * the driver holds at most `offset + len` rows. `download` is a single-file
-  * Spark write (one task, no rows on the driver) read back into the
-  * response. The two differ because only a bounded slice may be collected
-  * to the driver.
+  * Spark job, no file reads). `sample` is one Spark job of one task
+  * ([[Bridge.sliceParquet]]): no shuffle, no write job, no temp dir. The
+  * task reads the table's partitions in order, drops the first `offset`
+  * rows as it reads them, and encodes the next `len` (at most) as one
+  * parquet file, so the driver holds no rows, only that file of at most
+  * `len` rows. `download` is a single-file Spark write (one task, no rows
+  * on the driver) read back into the response. The two differ because a
+  * task's result is capped by `spark.driver.maxResultSize`, which a
+  * `len`-bounded slice may pass through and a whole table may not.
   * `download` funnels the whole table through one HTTP response by design —
   * that is what a download endpoint is — while the data path for engines
   * stays the distributed parquet under the store root; a cluster consumer
@@ -201,7 +202,7 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
         require(offset >= 0 && len >= 0, s"offset/len must be >= 0, got $offset/$len")
         store.sample(TableRef.parse(t, c), offset, len, q.get("at").map(_.toLong)) match {
           case None => respondJson(ex, 404, s"""{"error":"table not found: $c/$t"}""")
-          case Some(df) => respondParquet(ex, Bridge.collectParquet(df))
+          case Some(df) => respondParquet(ex, Bridge.sliceParquet(df))
         }
 
       case ("GET", Seq("collections", c, "tables", t, "download")) =>
@@ -306,8 +307,8 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
   }
 
   /** A 200 response whose body is one parquet file: `sample` encodes it
-    * from collected rows ([[Bridge.collectParquet]]), `download` from a
-    * Spark write ([[singleFileParquet]]). */
+    * in one Spark task ([[Bridge.sliceParquet]]), `download` reads it back
+    * from a single-file Spark write ([[singleFileParquet]]). */
   private def respondParquet(ex: HttpExchange, bytes: Array[Byte]): Unit = {
     ex.getResponseHeaders.set("Content-Type", "application/vnd.apache.parquet")
     ex.sendResponseHeaders(200, bytes.length)

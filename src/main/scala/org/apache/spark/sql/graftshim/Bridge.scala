@@ -6,55 +6,89 @@ import java.net.URI
 import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, FileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.hadoop.util.Progressable
 
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{CollectLimitExec, SQLExecution}
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 /** Access bridge into `private[sql]` Spark internals we legitimately need:
   * Column ↔ catalyst Expression conversion (Spark 4 moved Column onto
   * ColumnNode; `classic.ExpressionUtils` is the sanctioned converter but is
   * package-private), and a session's parquet writer outside a write job
-  * (`classic.Dataset.queryExecution`, `SessionState`). Lives under
+  * (`classic.Dataset.queryExecution`, `SessionState`, the physical plan). Lives under
   * `org.apache.spark.sql` solely to satisfy the access qualifier. */
 object Bridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** `df` as the bytes of one parquet file: one `collect` action (the plan,
-    * execution id and listener events of `df.collect()`, keeping catalyst
-    * rows instead of converting them to `Row`s), then an encode on the
-    * calling thread by the writer a Spark parquet write builds per task
-    * (`ParquetFileFormat.prepareWrite` → `OutputWriterFactory.newInstance`).
-    * The file carries the same write support, row-schema footer metadata,
-    * codec and session settings as a `df.write.parquet` part file, with no
-    * write job, no output committer and no file on disk: the writer's
-    * output stream is a byte buffer. Every row of `df` is held on the
-    * driver, so `df` must be bounded. */
-  def collectParquet(df: DataFrame): Array[Byte] = {
+  /** The `offset/limit` slice `df` as the bytes of one parquet file, made
+    * by one Spark job of one task. Spark plans the slice's collect as
+    * `CollectLimitExec(offset + len, child, offset)`. The task reads
+    * `child`'s partitions in partition order (the order `df.collect()`
+    * takes them in), drops the first `offset` rows as they arrive, stops
+    * after the next `len`, and encodes those with the writer a Spark
+    * parquet write builds per task (`ParquetFileFormat.prepareWrite` →
+    * `OutputWriterFactory.newInstance`) into a byte buffer. So the file
+    * carries the same write support, row-schema footer metadata, codec and
+    * session settings as a `df.write.parquet` part file, with no shuffle,
+    * no write job, no output committer and no file on disk. No row reaches
+    * the driver, only the task's result: the file of at most `len` rows,
+    * which `spark.driver.maxResultSize` caps. Any other plan (the empty
+    * relation of `len = 0`) is encoded whole by the same single task. */
+  def sliceParquet(df: DataFrame): Array[Byte] = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val session = ds.sparkSession
     val qe = ds.queryExecution
-    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
-    SQLConf.withExistingConf(session.sessionState.conf) {
-      val job = Job.getInstance(session.sessionState.newHadoopConf())
-      val factory = new ParquetFileFormat().prepareWrite(session, job, Map.empty, ds.schema)
-      val conf = job.getConfiguration
-      conf.setClass(s"fs.${BufferFs.Scheme}.impl", classOf[BufferFs], classOf[FileSystem])
-      conf.setBoolean(s"fs.${BufferFs.Scheme}.impl.disable.cache", true)
-      val name = UUID.randomUUID().toString
-      try {
-        val w = factory.newInstance(s"${BufferFs.Scheme}:/$name", ds.schema,
-          new TaskAttemptContextImpl(conf, new TaskAttemptID()))
-        try rows.foreach(w.write) finally w.close()
-        BufferFs.files.get(name).toByteArray
-      } finally BufferFs.files.remove(name)
+    val schema = ds.schema
+    val job = Job.getInstance(session.sessionState.newHadoopConf())
+    val factory = SQLConf.withExistingConf(session.sessionState.conf)(
+      new ParquetFileFormat().prepareWrite(session, job, Map.empty, schema))
+    job.getConfiguration.setClass(s"fs.${BufferFs.Scheme}.impl", classOf[BufferFs], classOf[FileSystem])
+    job.getConfiguration.setBoolean(s"fs.${BufferFs.Scheme}.impl.disable.cache", true)
+    val conf = new SerializableConfiguration(job.getConfiguration)
+    val (plan, skip, keep) = qe.executedPlan match {
+      case CollectLimitExec(limit, child, offset) =>
+        (child, offset, if (limit >= 0) limit - offset else Int.MaxValue)
+      case p => (p, 0, Int.MaxValue)
+    }
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      val rdd = plan.execute().coalesce(1, partitionCoalescer = Some(InOrder))
+      session.sparkContext.runJob(rdd, (rows: Iterator[InternalRow]) =>
+        encode(factory, conf.value, schema, rows.drop(skip).take(keep))).head
+    }
+  }
+
+  private def encode(factory: OutputWriterFactory, conf: Configuration, schema: StructType,
+      rows: Iterator[InternalRow]): Array[Byte] = {
+    val name = UUID.randomUUID().toString
+    try {
+      val w = factory.newInstance(s"${BufferFs.Scheme}:/$name", schema,
+        new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+      try rows.foreach(w.write) finally w.close()
+      BufferFs.files.get(name).toByteArray
+    } finally BufferFs.files.remove(name)
+  }
+
+  /** One group of every parent partition in partition order, so a
+    * coalesced task reads them as `executeTake` would, without the
+    * locality regrouping of the default coalescer. */
+  private object InOrder extends PartitionCoalescer with Serializable {
+    override def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] = {
+      val g = new PartitionGroup()
+      g.partitions ++= parent.partitions
+      Array(g)
     }
   }
 }

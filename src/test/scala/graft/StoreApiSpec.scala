@@ -414,23 +414,34 @@ class StoreApiSpec extends AnyFunSuite {
     import spark.implicits._
     val sc = spark.sparkContext
     val group = s"storeapi-spec-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
     val store = freshStore()
     store.write("c", "t", (0 until 100).map(i => (i, s"r$i")).toDF("id", "tag").coalesce(1))
+    store.write("c", "multi", (0 until 200).map(i => (i, s"r$i")).toDF("id", "tag").repartition(4))
     // every job of this thread carries `group`, so a job without it is the
-    // server's. The marker job runs after the request; the listener bus
+    // server's. A marker job runs after the request; the listener bus
     // delivers in order, so once its end is seen every earlier job is counted.
-    val serverJobs = new java.util.concurrent.atomic.AtomicInteger()
-    val markerIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val markerDone = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        if (props.exists(_.getProperty("spark.job.description") == marker)) markerIds.add(e.jobId)
-        else if (!props.exists(_.getProperty("spark.jobGroup.id") == group)) serverJobs.incrementAndGet()
+    def serverJobs(request: => Unit): Int = {
+      val marker = s"$group-marker-${java.util.UUID.randomUUID()}"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val markerIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val markerDone = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          val props = Option(e.properties)
+          if (props.exists(_.getProperty("spark.job.description") == marker)) markerIds.add(e.jobId)
+          else if (!props.exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+        }
+        override def onJobEnd(e: SparkListenerJobEnd): Unit =
+          if (markerIds.contains(e.jobId)) markerDone.countDown()
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (markerIds.contains(e.jobId)) markerDone.countDown()
+      sc.addSparkListener(listener)
+      try {
+        request
+        sc.setJobDescription(marker)
+        spark.range(1).collect()
+        assert(markerDone.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        jobs.get
+      } finally sc.removeSparkListener(listener)
     }
     val tmp = java.nio.file.Path.of(System.getProperty("java.io.tmpdir"))
     def entries() = scala.util.Using.resource(Files.list(tmp))(
@@ -439,17 +450,20 @@ class StoreApiSpec extends AnyFunSuite {
     try withApi(store) { port =>
       val sample = "/collections/c/tables/t/sample?len=20"
       assert(get(port, sample).statusCode() == 200) // warm up the pool thread
-      sc.addSparkListener(listener)
+      val before = entries()
+      val n = serverJobs(assert(get(port, sample).statusCode() == 200))
+      val added = entries() -- before
+      assert(added.isEmpty, s"new entries under $tmp: $added")
+      assert(n == 1, s"one sample ran $n Spark jobs")
+      // one file per split: an offset past the first partitions is still one
+      // job, and the rows are those of `store.sample`
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
       try {
-        val before = entries()
-        assert(get(port, sample).statusCode() == 200)
-        val added = entries() -- before
-        assert(added.isEmpty, s"new entries under $tmp: $added")
-        sc.setJobDescription(marker)
-        spark.range(1).collect()
-        assert(markerDone.await(30, java.util.concurrent.TimeUnit.SECONDS))
-        assert(serverJobs.get == 1, s"one sample ran ${serverJobs.get} Spark jobs")
-      } finally sc.removeSparkListener(listener)
+        assert(store.scan(TableRef.parse("multi", "c")).get.df.rdd.getNumPartitions >= 4)
+        val m = serverJobs(assert(assertSample(port, store, "c", "multi", 130, 40).size == 40))
+        // assertSample's own jobs run in `group`
+        assert(m == 1, s"a multi-partition sample ran $m Spark jobs")
+      } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
     } finally sc.clearJobGroup()
   }
 }

@@ -2,7 +2,7 @@
 """Alternating-pair comparison of two revisions on the flow benchmark.
 
     python3 tools/benchpairs.py [BASE [CHANGE]] [--pairs 10] [--seed 1]
-        [--workloads pubsub_small,catalog_deep] [--trace 0] [--json FILE]
+        [--workloads pubsub_small,catalog_deep] [--trace 0]
 
 BASE and CHANGE are git revisions of this repository (default HEAD~1 and
 HEAD). Each is exported with `git archive` into its own fresh directory
@@ -17,9 +17,10 @@ first alternating from pair to pair. Nothing under `perfbench/` is edited.
 
 For each workload and metric it prints each side's median and quartiles,
 the change relative to BASE, the pairs the change won and lost (ties count
-for neither), and a verdict:
+for neither, and a pair with a run that gave no result counts as not won),
+and a verdict:
 
-  gain        the change won at least 9/10 of the pairs, and the medians
+  gain        the change won at least 9/10 of the pairs run, and the medians
               differ in its favour by more than BASE's interquartile range
   loss        the same, in BASE's favour
   within      the change's median is no worse than BASE's by more than the
@@ -30,7 +31,8 @@ for neither), and a verdict:
 
 A gain or loss over fewer than ten pairs is marked so, since a claim needs
 at least ten. Per-layer metrics (--trace 1) have no bound and get only
-gain/loss/-.
+gain/loss/-. Below that table it prints every run's value of every metric,
+in pair order, so the summary can be checked against the runs.
 Every run's `correct` flag and failed count is printed; the exit status is
 1 when any run failed or was not correct, else 0.
 """
@@ -92,17 +94,23 @@ def quartiles(xs):
 
 
 def verdict(spec, base, change):
-    """The pairs won and lost and the verdict, for one metric on one workload."""
+    """The pairs won and lost and the verdict, for one metric on one workload.
+    `base` and `change` hold one value per pair run, None where a run gave
+    no result."""
+    pairs = len(base)
     sign = 1 if spec["better"] == "lower" else -1
-    wins = sum(1 for a, b in zip(base, change) if sign * (b - a) < 0)
-    losses = sum(1 for a, b in zip(base, change) if sign * (b - a) > 0)
+    both = [(a, b) for a, b in zip(base, change) if a is not None and b is not None]
+    wins = sum(1 for a, b in both if sign * (b - a) < 0)
+    losses = sum(1 for a, b in both if sign * (b - a) > 0)
+    base = [a for a in base if a is not None]
+    change = [b for b in change if b is not None]
     q1, med_a, q3 = quartiles(base)
     med_b = statistics.median(change)
     iqr = q3 - q1
     gap = sign * (med_b - med_a)  # > 0: the change is worse
-    if wins >= 0.9 * len(base) and -gap > iqr:
+    if wins >= 0.9 * pairs and -gap > iqr:
         word = "gain"
-    elif losses >= 0.9 * len(base) and gap > iqr:
+    elif losses >= 0.9 * pairs and gap > iqr:
         word = "loss"
     elif "bound" not in spec:
         word = "-"
@@ -113,7 +121,7 @@ def verdict(spec, base, change):
         word = "WORSE"
     else:
         word = "within"
-    if word in ("gain", "loss") and len(base) < 10:
+    if word in ("gain", "loss") and pairs < 10:
         word += " (<10 pairs)"
     return wins, losses, word
 
@@ -133,19 +141,29 @@ def report(workload, specs, runs, pairs):
     print("| metric | unit | base median [q1, q3] | change median [q1, q3] | change | "
           "won/lost | verdict |")
     print("|---|---|---|---|---|---|---|")
-    ok = [i for i in range(pairs) if runs["base"][i] and runs["change"][i]]
+    values = {side: {spec["name"]: [r["metrics"][spec["name"]]["value"] if r else None
+                                    for r in runs[side]] for spec in specs}
+              for side in ("base", "change")}
     for spec in specs:
         name = spec["name"]
-        base = [runs["base"][i]["metrics"][name]["value"] for i in ok]
-        change = [runs["change"][i]["metrics"][name]["value"] for i in ok]
-        if not base:
+        base, change = values["base"][name], values["change"][name]
+        if all(v is None for v in base) or all(v is None for v in change):
             continue
-        a, b = quartiles(base), quartiles(change)
+        a = quartiles([v for v in base if v is not None])
+        b = quartiles([v for v in change if v is not None])
         rel = f"{100 * (b[1] - a[1]) / a[1]:+.1f} %" if a[1] else "n/a"
         wins, losses, word = verdict(spec, base, change)
         print(f"| {name} | {spec['unit']} | {fmt(a[1])} [{fmt(a[0])}, {fmt(a[2])}] | "
               f"{fmt(b[1])} [{fmt(b[0])}, {fmt(b[2])}] | {rel} | "
               f"{wins}/{losses} | {word} |")
+    print(f"\nEvery run, pair 1 to {pairs} (- marks a run that gave no result):\n")
+    print("| metric | base | change |")
+    print("|---|---|---|")
+    for spec in specs:
+        name = spec["name"]
+        cells = [" ".join("-" if v is None else fmt(v) for v in values[side][name])
+                 for side in ("base", "change")]
+        print(f"| {name} | {cells[0]} | {cells[1]} |")
     sys.stdout.flush()
 
 
@@ -157,7 +175,6 @@ def main():
     ap.add_argument("--seed", type=int, default=1, help="seed of the first pair")
     ap.add_argument("--workloads", help="comma-separated; default: all in BENCHMARK.json")
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--json", help="also write every run's result line here")
     a = ap.parse_args()
 
     shas = {"base": git("rev-parse", "--verify", a.base + "^{commit}"),
@@ -190,10 +207,6 @@ def main():
                              f"correct={r['correct']} failed={r['failed']}"), file=sys.stderr)
             results[w] = runs
             report(w, specs, runs, a.pairs)
-        if a.json:
-            with open(a.json, "w") as fh:
-                json.dump({"base": shas["base"], "change": shas["change"],
-                           "seed": a.seed, "trace": a.trace, "runs": results}, fh)
     finally:
         for d in dirs.values():
             shutil.rmtree(d, ignore_errors=True)
