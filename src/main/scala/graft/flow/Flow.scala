@@ -1,13 +1,20 @@
 package graft.flow
 
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.StandardOpenOption.{APPEND, CREATE, WRITE}
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.immutable.VectorMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.Bridge
 
 import graft.core.{SysCtx, TableFrame}
 import graft.store.{TableRef, TableStore}
@@ -56,6 +63,14 @@ final class FlowContext(
   * every function its commits reach and runs them in dependency order, each
   * run's outputs published atomically through the store's transaction
   * marker.
+  *
+  * Functions of one plan with no path between them run at the same time,
+  * as the reference's supervisor starts one worker per function work item
+  * (td-supervisor/src/services/supervisor.rs); see [[trigger]] for the
+  * rules. The runs beyond the calling thread's own go to one pool of
+  * `defaultParallelism - 1` daemon helper threads per engine, created on
+  * first use: none at `local[1]`, so there every plan runs one function
+  * at a time on the calling thread.
   */
 final class FlowEngine(val store: TableStore, spark: SparkSession) {
   // copy-on-write under registerLock, so StoreApi's pool reads whole
@@ -64,6 +79,17 @@ final class FlowEngine(val store: TableStore, spark: SparkSession) {
   private val registerLock = new Object
   private val runLocks =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+  // a helper only runs a function, never waits on another helper, so
+  // triggers sharing the pool cannot deadlock on it; idle helpers exit
+  private val helperCount = spark.sparkContext.defaultParallelism - 1
+  private lazy val helpers = {
+    val p = new ThreadPoolExecutor(helperCount, helperCount, 60, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, "graft-flow-run"); t.setDaemon(true); t
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
 
   def register(f: FlowFunction): Unit = registerLock.synchronized {
     require(!functions.contains(f.name), s"function ${f.name} already registered")
@@ -139,7 +165,10 @@ final class FlowEngine(val store: TableStore, spark: SparkSession) {
     * Runs of one function are serialized (StoreApi serves triggers from a
     * thread pool): two overlapping runs would load the same offsets and
     * publish the same increment twice. A run holds only its own
-    * function's lock, so plans that share functions cannot deadlock. */
+    * function's lock, so plans that share functions cannot deadlock.
+    *
+    * The journal line carries the run's start (`started_on`), so the
+    * journal alone shows which runs of a trigger overlapped. */
   def runFunction(f: FlowFunction, executionId: String,
       executionTs: Long = System.currentTimeMillis()): Seq[(String, String)] =
     runLocks.computeIfAbsent(f.name, _ => new Object).synchronized {
@@ -147,7 +176,7 @@ final class FlowEngine(val store: TableStore, spark: SparkSession) {
       try {
         val out = runFunctionInner(f, executionId, executionTs)
         ExecutionLog.append(store.root, ExecutionRecord(executionId, f.name,
-          f.collection, "done", executionTs, System.currentTimeMillis() - t0, None))
+          f.collection, "done", executionTs, System.currentTimeMillis() - t0, None, Some(t0)))
         out
       } catch { case e: Throwable =>
         // the failed run is journaled BEFORE the rethrow: the reference's
@@ -156,7 +185,8 @@ final class FlowEngine(val store: TableStore, spark: SparkSession) {
         // offset path itself
         ExecutionLog.append(store.root, ExecutionRecord(executionId, f.name,
           f.collection, "failed", executionTs, System.currentTimeMillis() - t0,
-          Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")))
+          Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"),
+          Some(t0)))
         throw e
       }
     }
@@ -196,15 +226,47 @@ final class FlowEngine(val store: TableStore, spark: SparkSession) {
 
   /** Manual trigger: run `name` and every function its commits reach, each
     * at most once per execution (the planner's once-per-plan semantics).
-    * Returns the function names in run order. */
+    * Returns the function names in plan order.
+    *
+    * The plan runs level by level: every function whose in-plan
+    * dependencies have all committed starts together. The calling thread
+    * runs the first of them in plan order itself, and the others run on
+    * the engine's helper threads, at most `defaultParallelism - 1` at a
+    * time (a wider level carries its rest over to the next). So a chain
+    * never leaves the calling thread. A helper run carries the caller's
+    * Spark local properties (job group, description, scheduler pool) and
+    * active session as they were when the level started; what the run
+    * sets there stays on its helper.
+    *
+    * Two functions of the plan that write the same table never overlap:
+    * they run in plan order, so the table's versions commit in it.
+    *
+    * After a run fails no new run starts. Runs already in flight finish
+    * and commit in their own transactions, and then the trigger rethrows
+    * the failure of the earliest failed function in plan order. */
   def trigger(name: String): Seq[String] = {
     val fs = functions
     require(fs.contains(name),
       s"no registered function '$name' (registered: ${fs.keys.mkString(", ")})")
-    val order = plan(fs(name), fs.values.toSeq)
+    val (order, waitsFor) = plan(fs(name), fs.values.toSeq)
     val executionId = store.newId()
     val executionTs = System.currentTimeMillis() // the plan's triggered_on
-    order.foreach(f => runFunction(f, executionId, executionTs))
+    val failed = new AtomicBoolean
+    // the run's failure; None once it committed, or when it never started
+    def run(f: FlowFunction): Option[Throwable] =
+      if (failed.get) None
+      else try { runFunction(f, executionId, executionTs); None }
+      catch { case e: Throwable => failed.set(true); Some(e) }
+    val committed = mutable.Set[String]()
+    var pending = order
+    while (pending.nonEmpty) {
+      val level = pending.filter(f => waitsFor(f.name).forall(committed))
+        .take(1 + helperCount)
+      val helped = level.tail.map(f => Bridge.withThreadLocalsCaptured(spark, helpers)(run(f)))
+      (run(level.head) +: helped.map(_.join())).flatten.headOption.foreach(e => throw e)
+      committed ++= level.map(_.name)
+      pending = pending.filterNot(f => committed(f.name))
+    }
     order.map(_.name)
   }
 
@@ -215,9 +277,13 @@ final class FlowEngine(val store: TableStore, spark: SparkSession) {
     * sees this execution's output of both (planner.rs:20-55). Ties keep
     * breadth-first discovery order. A dependency cycle fails before any
     * run, naming the functions it blocks. `fs` is the registry snapshot
-    * the whole plan reads. */
+    * the whole plan reads.
+    *
+    * Returns the order and, per function, the in-plan functions it waits
+    * for: those that write a table it reads or is triggered by, and those
+    * earlier in the order that write a table it writes. */
   private def plan(root: FlowFunction,
-      fs: Seq[FlowFunction]): Seq[FlowFunction] = {
+      fs: Seq[FlowFunction]): (Seq[FlowFunction], Map[String, Set[String]]) = {
     val reached = mutable.LinkedHashMap[String, FlowFunction](root.name -> root)
     val queue = mutable.Queue[FlowFunction](root)
     while (queue.nonEmpty) {
@@ -246,7 +312,12 @@ final class FlowEngine(val store: TableStore, spark: SparkSession) {
     val blocked = discovered.filterNot(f => done.contains(f.name))
     require(blocked.isEmpty, "dependency cycle in the trigger plan of " +
       s"'${root.name}': ${blocked.map(_.name).mkString(", ")} cannot be ordered")
-    done.values.toSeq
+    val order = done.values.toVector
+    (order, order.zipWithIndex.map { case (f, i) =>
+      val outs = outputTables(f).toSet
+      f.name -> (waitsFor(f.name) ++
+        order.take(i).filter(g => outputTables(g).exists(outs)).map(_.name))
+    }.toMap)
   }
 }
 
@@ -260,7 +331,8 @@ final case class ExecutionRecord(
     status: String, // done | failed
     triggeredOn: Long,
     durationMs: Long,
-    error: Option[String])
+    error: Option[String],
+    startedOn: Option[Long]) // epoch ms at run start; absent from older lines
 
 /** Append-only JSONL run journal in the store root — the library-side stand-in
   * for the reference server's execution bookkeeping. One line per function
@@ -268,7 +340,9 @@ final case class ExecutionRecord(
 object ExecutionLog {
   private def path(root: String) = Paths.get(root, "_executions", "log.jsonl")
 
-  def append(root: String, r: ExecutionRecord): Unit = {
+  /** Runs of one trigger finish concurrently, so appends are serialized
+    * within the process and each line goes out in one write. */
+  def append(root: String, r: ExecutionRecord): Unit = synchronized {
     val p = path(root)
     Files.createDirectories(p.getParent)
     val n = graft.store.TableStore.jsonMapper.createObjectNode()
@@ -276,9 +350,12 @@ object ExecutionLog {
       .put("collection", r.collection).put("status", r.status)
       .put("triggered_on", r.triggeredOn).put("duration_ms", r.durationMs)
     r.error.foreach(n.put("error", _))
-    Files.writeString(p, graft.store.TableStore.jsonMapper.writeValueAsString(n) + "\n",
-      StandardCharsets.UTF_8,
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    r.startedOn.foreach(n.put("started_on", _))
+    val line = ByteBuffer.wrap((graft.store.TableStore.jsonMapper.writeValueAsString(n) + "\n")
+      .getBytes(StandardCharsets.UTF_8))
+    Using.resource(FileChannel.open(p, CREATE, WRITE, APPEND)) { ch =>
+      while (line.hasRemaining) ch.write(line)
+    }
   }
 
   def read(root: String): Seq[ExecutionRecord] = {
@@ -290,7 +367,7 @@ object ExecutionLog {
         ExecutionRecord(n.get("execution").asText(), n.get("function").asText(),
           n.get("collection").asText(), n.get("status").asText(),
           n.get("triggered_on").asLong(), n.get("duration_ms").asLong(),
-          Option(n.get("error")).map(_.asText()))
+          Option(n.get("error")).map(_.asText()), Option(n.get("started_on")).map(_.asLong()))
       }
   }
 }

@@ -34,7 +34,9 @@ import graft.store.{TableRef, TableStore}
   *   - `GET    /status`                                    — health probe
   *   - `GET    /collections/{c}/functions` and
   *     `POST   /collections/{c}/functions/{f}/execute`     — list/trigger
-  *     registered flow functions when a [[FlowEngine]] is attached
+  *     registered flow functions when a [[FlowEngine]] is attached; an
+  *     execute returns the names of the functions it ran in plan order
+  *     ([[FlowEngine.trigger]]), which is not the order they finished in
   *   - `GET    /executions`, `GET /function_runs`,
   *     `GET    /collections/{c}/functions/{f}/history`     — the run
   *     journal ([[graft.flow.ExecutionLog]]), incl. failed runs
@@ -257,6 +259,7 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
           .put("status", r.status).put("triggered_on", r.triggeredOn)
           .put("duration_ms", r.durationMs)
         r.error.foreach(o.put("error", _))
+        r.startedOn.foreach(o.put("started_on", _))
       }
     }
 

@@ -4,7 +4,7 @@ package graftshim
 import java.io.ByteArrayOutputStream
 import java.net.URI
 import java.util.UUID
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, ExecutorService}
 
 import scala.jdk.CollectionConverters._
 
@@ -28,11 +28,19 @@ import org.apache.spark.sql.types.StructType
   * Column ↔ catalyst Expression conversion (Spark 4 moved Column onto
   * ColumnNode; `classic.ExpressionUtils` is the sanctioned converter but is
   * package-private), and a session's parquet writer outside a write job
-  * (`classic.Dataset.queryExecution`, `SessionState`, the physical plan). Lives under
+  * (`classic.Dataset.queryExecution`, `SessionState`, the physical plan), and
+  * `SQLExecution`'s thread-local capture for work on other threads. Lives under
   * `org.apache.spark.sql` solely to satisfy the access qualifier. */
 object Bridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `body` on `pool`, under this thread's Spark local properties (job
+    * group, description, scheduler pool) and with `session` active: the
+    * capture Spark itself uses for broadcast and subquery futures. */
+  def withThreadLocalsCaptured[T](session: SparkSession, pool: ExecutorService)(
+      body: => T): CompletableFuture[T] =
+    SQLExecution.withThreadLocalCaptured(session.asInstanceOf[classic.SparkSession], pool)(body)
 
   /** The `offset/limit` slice `df` as the bytes of one parquet file, made
     * by one Spark job of one task. Spark plans the slice's collect as

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -348,6 +350,201 @@ class StoreFlowSpec extends AnyFunSuite {
     assert(err.getMessage.contains("cycle") &&
       err.getMessage.contains("Q, R"), err.getMessage)
     assert(store.versions("c", "p").isEmpty, "nothing ran")
+  }
+
+  /** Counts down `both` and waits (bounded) for the other run to do the
+    * same: true when the two runs were in flight together. */
+  private def meet(both: java.util.concurrent.CountDownLatch): Boolean = {
+    both.countDown()
+    both.await(20, java.util.concurrent.TimeUnit.SECONDS)
+  }
+
+  test("flow: independent functions of a plan overlap, the join reads both outputs") {
+    // P → A, P → B, (A, B) → S: A and B wait for each other, so sequential
+    // runs fail on the bounded wait instead of hanging
+    val store = freshStore()
+    val engine = new FlowEngine(store, spark)
+    import spark.implicits._
+    store.write("c", "a", Seq(0).toDF("g"))
+    store.write("c", "b", Seq(0).toDF("g"))
+    val both = new java.util.concurrent.CountDownLatch(2)
+    val met = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
+    var seen = (0, 0)
+    def g(tf: TableFrame): Int = tf.df.select("g").head().getInt(0)
+    engine.publisher("P", "c", Seq("p")) { _ => Seq(TableFrame.fromRaw(Seq(1).toDF("g"))) }
+    Seq("A" -> "a", "B" -> "b").foreach { case (name, out) =>
+      engine.transformer(name, "c", Seq("p"), Seq(out)) { ctx =>
+        met.put(name, meet(both))
+        Seq(ctx.input(0))
+      }
+    }
+    engine.subscriber("S", "c", Seq("a", "b")) { ctx =>
+      seen = (g(ctx.input(0)), g(ctx.input(1)))
+      Nil
+    }
+    assert(engine.trigger("P") == Seq("P", "A", "B", "S"))
+    assert(met.get("A") && met.get("B"), s"runs in flight together: $met")
+    assert(seen == ((1, 1)), "S read this execution's output of both")
+    // the journal alone shows the overlap
+    val runs = graft.flow.ExecutionLog.read(store.root).map(r => r.function -> r).toMap
+    val (a, b) = (runs("A"), runs("B"))
+    assert(a.startedOn.get < b.startedOn.get + b.durationMs &&
+      b.startedOn.get < a.startedOn.get + a.durationMs, s"$a $b")
+  }
+
+  test("flow: a chain runs every function on the calling thread") {
+    val store = freshStore()
+    val engine = new FlowEngine(store, spark)
+    import spark.implicits._
+    val threads = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    def record(tf: TableFrame): Seq[TableFrame] = { threads.add(Thread.currentThread); Seq(tf) }
+    engine.publisher("P", "c", Seq("p"))(_ => record(TableFrame.fromRaw(Seq(1).toDF("g"))))
+    engine.transformer("T", "c", Seq("p"), Seq("t"))(ctx => record(ctx.input(0)))
+    engine.transformer("U", "c", Seq("t"), Seq("u"))(ctx => record(ctx.input(0)))
+    engine.subscriber("S", "c", Seq("u")) { ctx => record(ctx.input(0)); Nil }
+    assert(engine.trigger("P") == Seq("P", "T", "U", "S"))
+    assert(threads.asScala.toSet == Set(Thread.currentThread))
+  }
+
+  test("flow: two writers of one table in a plan never overlap, HEAD is the later") {
+    val store = freshStore()
+    val engine = new FlowEngine(store, spark)
+    import spark.implicits._
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger
+    val maxInFlight = new java.util.concurrent.atomic.AtomicInteger
+    engine.publisher("P", "c", Seq("p")) { _ => Seq(TableFrame.fromRaw(Seq(1).toDF("g"))) }
+    Seq("W1", "W2").foreach { name =>
+      engine.transformer(name, "c", Seq("p"), Seq("t")) { _ =>
+        maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+        try { Thread.sleep(300); Seq(TableFrame.fromRaw(Seq(name).toDF("w"))) }
+        finally inFlight.decrementAndGet()
+      }
+    }
+    assert(engine.trigger("P") == Seq("P", "W1", "W2"))
+    assert(maxInFlight.get == 1, s"${maxInFlight.get} writers of c/t in flight at once")
+    assert(store.versions("c", "t").size == 2)
+    assert(store.scan("c/t").get.df.select("w").as[String].collect().toSeq == Seq("W2"))
+    assert(store.scan("c/t@HEAD^").get.df.select("w").as[String].collect().toSeq == Seq("W1"))
+  }
+
+  test("flow: a failure while runs overlap — the sibling commits, nothing new starts") {
+    // P → A, P → B, (A, B) → S; A's output fails at write time while B is
+    // in flight
+    val store = freshStore()
+    val engine = new FlowEngine(store, spark)
+    import spark.implicits._
+    val boom = F.udf(() => { throw new IllegalStateException("boom-A"); 1 })
+    var fail = false
+    var both = new java.util.concurrent.CountDownLatch(2)
+    var subscriberRuns = 0
+    engine.publisher("P", "c", Seq("p")) { _ => Seq(TableFrame.fromRaw(Seq(1).toDF("g"))) }
+    engine.transformer("A", "c", Seq("p"), Seq("a")) { ctx =>
+      meet(both)
+      ctx.setOffset("cursor", if (fail) "advanced" else "1")
+      Seq(if (fail) TableFrame.fromRaw(spark.range(1).select(boom().as("g")))
+          else ctx.input(0))
+    }
+    engine.transformer("B", "c", Seq("p"), Seq("b")) { ctx =>
+      meet(both)
+      Seq(ctx.input(0))
+    }
+    engine.subscriber("S", "c", Seq("a", "b")) { _ => subscriberRuns += 1; Nil }
+    engine.trigger("P")
+    assert(subscriberRuns == 1)
+    fail = true
+    both = new java.util.concurrent.CountDownLatch(2)
+    val err = intercept[Exception](engine.trigger("P"))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage).exists(_.contains("boom-A"))), err)
+    assert(subscriberRuns == 1, "the downstream subscriber never ran")
+    assert(store.versions("c", "b").size == 2, "the sibling's version committed")
+    assert(store.scan("c/b").get.df.count() == 1)
+    assert(store.versions("c", "a").size == 1)
+    val staging = java.nio.file.Paths.get(store.root, "c", "a", ".staging")
+    assert(!Files.exists(staging) || Files.list(staging).count() == 0)
+    assert(graft.flow.Offsets.load(store.root, "A") == Map("cursor" -> "1"))
+    val failedExecution = graft.flow.ExecutionLog.read(store.root)
+      .filter(_.execution == graft.flow.ExecutionLog.read(store.root).last.execution)
+    assert(failedExecution.map(r => r.function -> r.status).toSet ==
+      Set("P" -> "done", "A" -> "failed", "B" -> "done"), failedExecution)
+    assert(failedExecution.size == 3)
+  }
+
+  test("flow: helper runs carry the caller's job group and leak nothing back") {
+    val store = freshStore()
+    val engine = new FlowEngine(store, spark)
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val group = s"flow-${java.util.UUID.randomUUID()}"
+    val end = s"$group-end"
+    val caller = Thread.currentThread
+    // job group of every job a helper run started, keyed by that run
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        val g = props.flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        props.flatMap(p => Option(p.getProperty("graft.test.run"))).foreach(r => jobs.add(r -> g))
+        if (g == end) ended.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val both = new java.util.concurrent.CountDownLatch(2)
+      val helped = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      engine.publisher("P", "c", Seq("p")) { _ =>
+        sc.setJobGroup(group, "flow test", interruptOnCancel = false)
+        Seq(TableFrame.fromRaw(Seq(1).toDF("g")))
+      }
+      Seq("A" -> "a", "B" -> "b").foreach { case (name, out) =>
+        engine.transformer(name, "c", Seq("p"), Seq(out)) { ctx =>
+          if (Thread.currentThread != caller) {
+            helped.add(name)
+            sc.setLocalProperty("graft.test.run", name)
+          }
+          assert(meet(both))
+          assert(ctx.input(0).df.count() == 1)
+          Seq(ctx.input(0))
+        }
+      }
+      assert(engine.trigger("P") == Seq("P", "A", "B"))
+      assert(helped.asScala.toSeq == Seq("B"))
+      assert(sc.getLocalProperty("graft.test.run") == null, "helper property leaked")
+      assert(sc.getLocalProperty("spark.jobGroup.id") == group)
+      // the listener bus delivers in order: once this job is seen, so are B's
+      sc.setJobGroup(end, "flow test end", interruptOnCancel = false)
+      spark.range(1).count()
+      assert(ended.await(20, java.util.concurrent.TimeUnit.SECONDS))
+      val ofB = jobs.asScala.toSeq.filter(_._1 == "B")
+      assert(ofB.size >= 2, "B's count and its staged write") // count + write
+      assert(ofB.forall(_._2 == group), ofB)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("execution journal: concurrent appends stay whole, old lines without started_on read") {
+    import graft.flow.{ExecutionLog, ExecutionRecord}
+    val root = Files.createTempDirectory("graft-journal").toString
+    val log = java.nio.file.Paths.get(root, "_executions", "log.jsonl")
+    Files.createDirectories(log.getParent)
+    Files.writeString(log, """{"execution":"e0","function":"f","collection":"c",""" +
+      """"status":"done","triggered_on":5,"duration_ms":7}""" + "\n")
+    val err = "x" * 20000 // longer than one buffered write
+    val threads = (0 until 8).map { i =>
+      new Thread(() => (0 until 50).foreach { j =>
+        ExecutionLog.append(root, ExecutionRecord(s"e$i", s"f$j", "c", "failed", 1L, 2L,
+          Some(err), Some(3L)))
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    val rs = ExecutionLog.read(root)
+    assert(rs.head == ExecutionRecord("e0", "f", "c", "done", 5L, 7L, None, None))
+    assert(rs.size == 1 + 8 * 50)
+    assert(rs.tail.forall(r => r.error.contains(err) && r.startedOn.contains(3L)))
   }
 
   test("flow: offsets persist between runs (incremental publisher)") {
