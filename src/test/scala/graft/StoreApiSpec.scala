@@ -219,6 +219,8 @@ class StoreApiSpec extends AnyFunSuite {
     withApi(store) { port =>
       val runs = json(get(port, "/function_runs")).get("data")
       assert(runs.size() == 2)
+      assert((0 until runs.size()).forall(i => runs.get(i).get("started_on").asLong() >=
+        runs.get(i).get("triggered_on").asLong()))
 
       val hist = json(get(port, "/collections/c/functions/boom/history")).get("data")
       assert(hist.size() == 1)
