@@ -463,8 +463,8 @@ class StoreFlowSpec extends AnyFunSuite {
     val staging = java.nio.file.Paths.get(store.root, "c", "a", ".staging")
     assert(!Files.exists(staging) || Files.list(staging).count() == 0)
     assert(graft.flow.Offsets.load(store.root, "A") == Map("cursor" -> "1"))
-    val failedExecution = graft.flow.ExecutionLog.read(store.root)
-      .filter(_.execution == graft.flow.ExecutionLog.read(store.root).last.execution)
+    val journal = graft.flow.ExecutionLog.read(store.root)
+    val failedExecution = journal.filter(_.execution == journal.last.execution)
     assert(failedExecution.map(r => r.function -> r.status).toSet ==
       Set("P" -> "done", "A" -> "failed", "B" -> "done"), failedExecution)
     assert(failedExecution.size == 3)
