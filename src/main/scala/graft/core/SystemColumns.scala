@@ -68,35 +68,36 @@ object SystemColumns {
 
   /** mode="raw": drop any present system columns and regenerate all
     * (fresh data at import, reference: _common.py:82-147). */
-  def addRaw(df: DataFrame, ctx: SysCtx): DataFrame =
-    arrange(Required.foldLeft(df.drop(systemColumns(df): _*)) { (d, n) =>
-      d.withColumn(n, valueFor(n, ctx))
-    })
+  def addRaw(df: DataFrame, ctx: SysCtx): DataFrame = stamp(df, ctx, _ => false)
 
   /** mode="tab": fill only missing system columns (table scan wrap). */
-  def addTab(df: DataFrame, ctx: SysCtx): DataFrame = {
-    val present = df.columns.toSet
-    arrange(Required.foldLeft(df) { (d, n) =>
-      if (present(n)) d else d.withColumn(n, valueFor(n, ctx))
-    })
-  }
+  def addTab(df: DataFrame, ctx: SysCtx): DataFrame = stamp(df, ctx, _ => true)
 
   /** mode="sys": apply inception policy at store time — `$td.id` REGENERATE,
     * `$td.ver.*` PROPAGATE-or-fill (reference: _constants.py:178-218). */
-  def addSys(df: DataFrame, ctx: SysCtx): DataFrame = {
-    val present = df.columns.toSet
-    val withId = df.drop(Id).withColumn(Id, valueFor(Id, ctx))
-    arrange(Required.drop(1).foldLeft(withId) { (d, n) =>
-      if (present(n)) d else d.withColumn(n, valueFor(n, ctx))
-    })
+  def addSys(df: DataFrame, ctx: SysCtx): DataFrame = stamp(df, ctx, _ != Id)
+
+  /** One projection: the user columns in order, then the system columns
+    * sorted by name — each present one that `keep` accepts passes through,
+    * every other Required one is generated by [[valueFor]], and any other
+    * present one is dropped. `df` itself when that changes nothing. */
+  private def stamp(df: DataFrame, ctx: SysCtx, keep: String => Boolean): DataFrame = {
+    val (sys, user) = df.columns.toSeq.partition(isSystem)
+    val kept = sys.filter(keep)
+    val generated = Required.filterNot(kept.contains)
+    if (generated.isEmpty && user ++ kept.sorted == df.columns.toSeq) df
+    else df.select(user.map(quoted) ++ (kept ++ generated).sorted.map(n =>
+      if (kept.contains(n)) quoted(n) else valueFor(n, ctx).as(n)): _*)
   }
+
+  private def quoted(name: String) = F.col(s"`$name`")
 
   /** Column-order invariant: user columns first (original order), then system
     * columns sorted by name (reference: frame.py:2820-2840). */
   def arrange(df: DataFrame): DataFrame = {
     val (sys, user) = df.columns.toSeq.partition(isSystem)
     val ordered = user ++ sys.sorted
-    if (ordered == df.columns.toSeq) df else df.select(ordered.map(n => F.col(s"`$n`")): _*)
+    if (ordered == df.columns.toSeq) df else df.select(ordered.map(quoted): _*)
   }
 
   /** Post-join fixup: drop right-side duplicated system columns (suffixed),

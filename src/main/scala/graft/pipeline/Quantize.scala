@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -179,6 +181,17 @@ object Quantize {
       centroids: Array[Array[Array[Double]]]) {
     require(dim % m == 0, s"dim $dim must be divisible by m $m")
     def dsub: Int = dim / m
+
+    // the one broadcast of `centroids` per SparkContext: every kernel ref
+    // of this codebook shares it, so the refs compare equal (expression
+    // CSE) and repeated calls do not pile up broadcast blocks
+    @transient private var shipped: (SparkContext, Broadcast[Array[Array[Array[Double]]]]) = _
+
+    private[Quantize] def broadcastOn(sc: SparkContext)
+        : Broadcast[Array[Array[Array[Double]]]] = synchronized {
+      if (shipped == null || (shipped._1 ne sc)) shipped = (sc, sc.broadcast(centroids))
+      shipped._2
+    }
   }
 
   /** (id, sub, sv) subvector rows: sub ∈ [0, m), sv the dsub-dim slice. */
@@ -234,8 +247,7 @@ object Quantize {
     val volume = cb.m.toLong * cb.ks * cb.dsub
     if (forceBroadcast.getOrElse(volume > PqBroadcastThreshold))
       graft.expressions.PqCodebookBroadcast(
-        df.sparkSession.sparkContext.broadcast(cb.centroids),
-        cb.m, cb.ks, cb.dsub)
+        cb.broadcastOn(df.sparkSession.sparkContext), cb.m, cb.ks, cb.dsub)
     else graft.expressions.PqCodebookInline(cb.centroids)
   }
 

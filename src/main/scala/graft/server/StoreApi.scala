@@ -79,11 +79,11 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
   def stop(): Unit = { server.stop(0); pool.shutdownNow(); () }
 
   private def safely(ex: HttpExchange)(body: => Unit): Unit =
-    try { if (authorized(ex)) body else respondJson(ex, 401,
-      """{"error":"missing or invalid bearer token"}""") }
-    catch {
-      case e: IllegalArgumentException => respondJson(ex, 400, errorJson(e))
-      case e: Throwable => respondJson(ex, 500, errorJson(e))
+    try { if (authorized(ex)) body else respondError(ex, 401,
+      "missing or invalid bearer token") }
+    catch { case e: Throwable =>
+      respondError(ex, if (e.isInstanceOf[IllegalArgumentException]) 400 else 500,
+        s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
     } finally ex.close()
 
   /** Static bearer-token auth, the minimal port of the reference
@@ -100,12 +100,6 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
       val want = s"Bearer $tok"
       java.security.MessageDigest.isEqual(
         got.getBytes(StandardCharsets.UTF_8), want.getBytes(StandardCharsets.UTF_8))
-  }
-
-  private def errorJson(e: Throwable): String = {
-    val n = TableStore.jsonMapper.createObjectNode()
-    n.put("error", s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
-    TableStore.jsonMapper.writeValueAsString(n)
   }
 
   private def route(ex: HttpExchange): Unit = {
@@ -148,7 +142,7 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
 
       case ("GET", Seq("collections", c, "tables", t, "data-versions")) =>
         val vs = store.versions(c, t)
-        if (vs.isEmpty) respondJson(ex, 404, s"""{"error":"table not found: $c/$t"}""")
+        if (vs.isEmpty) notFound(ex, s"table not found: $c/$t")
         else respondData(ex) { data =>
           vs.foreach { v =>
             data.addObject().put("id", v.id).put("execution", v.execution)
@@ -159,7 +153,7 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
 
       case ("GET", Seq("collections", c, "functions")) =>
         engine match {
-          case None => respondJson(ex, 404, """{"error":"no flow engine attached"}""")
+          case None => notFound(ex, "no flow engine attached")
           case Some(eng) => respondData(ex) { data =>
             eng.functionsIn(c).foreach { f =>
               val o = data.addObject().put("name", f.name)
@@ -172,9 +166,9 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
 
       case ("POST", Seq("collections", c, "functions", f, "execute")) =>
         engine match {
-          case None => respondJson(ex, 404, """{"error":"no flow engine attached"}""")
+          case None => notFound(ex, "no flow engine attached")
           case Some(eng) if !eng.functionsIn(c).exists(_.name == f) =>
-            respondJson(ex, 404, s"""{"error":"function not found: $c/$f"}""")
+            notFound(ex, s"function not found: $c/$f")
           case Some(eng) =>
             val ran = eng.trigger(f)
             respondData(ex)(data => ran.foreach(data.add))
@@ -187,7 +181,7 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
 
       case ("GET", Seq("collections", c, "tables", t, "schema")) =>
         store.schema(TableRef.parse(t, c), q.get("at").map(_.toLong)) match {
-          case None => respondJson(ex, 404, s"""{"error":"table not found: $c/$t"}""")
+          case None => notFound(ex, s"table not found: $c/$t")
           case Some(s) =>
             val root = TableStore.jsonMapper.createObjectNode()
             val fields = root.putObject("data").putArray("fields")
@@ -203,21 +197,20 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
         val len = q.get("len").map(_.toInt).getOrElse(100)
         require(offset >= 0 && len >= 0, s"offset/len must be >= 0, got $offset/$len")
         store.sample(TableRef.parse(t, c), offset, len, q.get("at").map(_.toLong)) match {
-          case None => respondJson(ex, 404, s"""{"error":"table not found: $c/$t"}""")
+          case None => notFound(ex, s"table not found: $c/$t")
           case Some(df) => respondParquet(ex, Bridge.sliceParquet(df))
         }
 
       case ("GET", Seq("collections", c, "tables", t, "download")) =>
         scanAt(c, t, q) match {
-          case None => respondJson(ex, 404, s"""{"error":"table not found: $c/$t"}""")
+          case None => notFound(ex, s"table not found: $c/$t")
           case Some(df) => respondParquet(ex, singleFileParquet(df))
         }
 
       case ("POST", Seq("collections", c, "tables", t, "restore")) =>
         // metadata-only rollback: ?to=<selector> (HEAD~n / fixed id)
         q.get("to") match {
-          case None => respondJson(ex, 400,
-            """{"error":"missing required query parameter: to"}""")
+          case None => respondError(ex, 400, "missing required query parameter: to")
           case Some(ref) =>
             // a selector that does not PARSE is the caller's malformed
             // request (400); a selector that parses but resolves to no
@@ -227,8 +220,7 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
               try { graft.store.Version.parse(ref); None }
               catch { case iae: IllegalArgumentException => Some(iae) }
             parseError match {
-              case Some(iae) => respondJson(ex, 400,
-                s"""{"error":${jsonString(iae.getMessage)}}""")
+              case Some(iae) => respondError(ex, 400, iae.getMessage)
               case None =>
                 try store.restore(c, t, ref) match {
                   case Some(e) => respondJson(ex, 200,
@@ -236,18 +228,17 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
                   case None => respondJson(ex, 200,
                     """{"data":"noop: HEAD already reads that version"}""")
                 } catch {
-                  case iae: IllegalArgumentException => respondJson(ex, 404,
-                    s"""{"error":${jsonString(iae.getMessage)}}""")
+                  case iae: IllegalArgumentException => notFound(ex, iae.getMessage)
                 }
             }
         }
 
       case ("DELETE", Seq("collections", c, "tables", t)) =>
         if (store.deleteTable(c, t)) respondJson(ex, 200, """{"data":"deleted"}""")
-        else respondJson(ex, 404, s"""{"error":"table not found: $c/$t"}""")
+        else notFound(ex, s"table not found: $c/$t")
 
-      case ("GET", _) => respondJson(ex, 404, """{"error":"no such endpoint"}""")
-      case (m, _) => respondJson(ex, 405, s"""{"error":"method not allowed: $m"}""")
+      case ("GET", _) => notFound(ex, "no such endpoint")
+      case (m, _) => respondError(ex, 405, s"method not allowed: $m")
     }
   }
 
@@ -280,12 +271,16 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
         java.net.URLDecoder.decode(k, "UTF-8") -> java.net.URLDecoder.decode(v, "UTF-8")
       }.toMap
 
-  /** A string as a JSON string literal (quoted + escaped) — any text that
-    * can embed user input must pass through here, or a quote/backslash in
-    * the input produces a malformed response body. */
-  private def jsonString(s: String): String =
-    TableStore.jsonMapper.writeValueAsString(
-      Option(s).getOrElse("(no message)"))
+  /** An `{"error": msg}` response. The message is written as an escaped
+    * JSON string, so a quote or backslash in the user input it embeds
+    * (a path segment, a query value) cannot make the body malformed. */
+  private def respondError(ex: HttpExchange, code: Int, msg: String): Unit = {
+    val n = TableStore.jsonMapper.createObjectNode()
+    n.put("error", Option(msg).getOrElse("(no message)"))
+    respondJson(ex, code, TableStore.jsonMapper.writeValueAsString(n))
+  }
+
+  private def notFound(ex: HttpExchange, what: String): Unit = respondError(ex, 404, what)
 
   private def respondJson(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)

@@ -288,39 +288,47 @@ final class TableStore(val root: String, spark: SparkSession) {
 
   private def stageWrite(coll: String, table: String, df: DataFrame, ctx: SysCtx,
       partitionBy: Seq[String], appendLogEntry: Boolean): VersionEntry = {
-    val versionId = ctx.version
-    val finalDir = tableDir(coll, table).resolve(versionId)
-    // stage under a dot-prefixed dir: hidden from Spark listings until the
-    // transaction commit moves it into place
-    val dir = tableDir(coll, table).resolve(".staging").resolve(versionId)
     val stamped = SystemColumns.addSys(df, ctx)
-    // row count observed DURING the write job (CollectMetrics rides the
-    // plan) — the pre-r18 shape re-read the whole staged directory just to
-    // count it, a full extra scan per version write
-    val obs = org.apache.spark.sql.Observation()
-    val writer = stamped
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-      .write.mode("overwrite")
-    try {
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-        .parquet(dir.toString)
-    } catch { case e: Throwable =>
-      // a half-written staging dir would otherwise leak: the pending move
-      // is only registered below, so abortTransaction can't see it
-      if (Files.exists(dir)) TableStore.deleteTree(dir)
-      throw e
-    }
-    val rows = obs.get("n").asInstanceOf[Long]
     val schemaHash = Integer.toHexString(df.schema.filterNot(f =>
       SystemColumns.isSystem(f.name)).map(f => (f.name, f.dataType.sql)).hashCode())
     val schemaB64 = java.util.Base64.getEncoder.encodeToString(
       stamped.schema.json.getBytes(StandardCharsets.UTF_8))
-    val e = VersionEntry(versionId, ctx.execution, ctx.transaction,
-      ctx.timestamp.getTime, schemaHash, rows, Some(schemaB64))
+    staged(coll, table, stamped, ctx, partitionBy, appendLogEntry) { rows =>
+      VersionEntry(ctx.version, ctx.execution, ctx.transaction,
+        ctx.timestamp.getTime, schemaHash, rows, Some(schemaB64))
+    }
+  }
+
+  /** The one staging path: write `data` as version `ctx.version` under a
+    * dot-prefixed dir (hidden from Spark listings until the transaction
+    * commit moves it into place), make its log entry from the row count
+    * observed during the write, then register the move and append the
+    * entry. `entry` may reject the count by throwing: a failed write or a
+    * rejected count deletes the staging dir before any move is registered,
+    * so neither commit nor abort ever sees it. */
+  private def staged(coll: String, table: String, data: DataFrame, ctx: SysCtx,
+      partitionBy: Seq[String], appendLogEntry: Boolean)(
+      entry: Long => VersionEntry): VersionEntry = {
+    val dir = tableDir(coll, table).resolve(".staging").resolve(ctx.version)
+    // row count observed DURING the write job (CollectMetrics rides the
+    // plan) — the pre-r18 shape re-read the whole staged directory just to
+    // count it, a full extra scan per version write
+    val obs = org.apache.spark.sql.Observation()
+    val writer = data
+      .observe(obs, org.apache.spark.sql.functions.count(
+        org.apache.spark.sql.functions.lit(1)).as("n"))
+      .write.mode("overwrite")
+    val e = try {
+      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+        .parquet(dir.toString)
+      entry(obs.get("n").asInstanceOf[Long])
+    } catch { case ex: Throwable =>
+      if (Files.exists(dir)) TableStore.deleteTree(dir)
+      throw ex
+    }
     stagedMoves.synchronized {
-      stagedMoves(ctx.transaction) =
-        (dir, finalDir) :: stagedMoves.getOrElse(ctx.transaction, Nil)
+      stagedMoves(ctx.transaction) = (dir, tableDir(coll, table).resolve(ctx.version)) ::
+        stagedMoves.getOrElse(ctx.transaction, Nil)
     }
     if (appendLogEntry) appendLog(coll, table, e)
     e
@@ -391,7 +399,7 @@ final class TableStore(val root: String, spark: SparkSession) {
 
   /** Write one table in its own single-version transaction. */
   def write(coll: String, table: String, df: DataFrame): VersionEntry = {
-    val ctx = SysCtx.fresh().copy(version = newId())
+    val ctx = SysCtx.fresh()
     val e = stageWrite(coll, table, df, ctx)
     commitTransaction(ctx.transaction)
     e
@@ -482,7 +490,7 @@ final class TableStore(val root: String, spark: SparkSession) {
     val head = versions(coll, table).lastOption
     if (head.exists(_.dataRef == target.dataRef)) None
     else {
-      val ctx = SysCtx.fresh().copy(version = newId())
+      val ctx = SysCtx.fresh()
       val e = VersionEntry(ctx.version, ctx.execution, ctx.transaction,
         System.currentTimeMillis(), target.schemaHash, target.rows,
         target.schemaB64, dataOf = Some(target.dataRef))
@@ -501,8 +509,9 @@ final class TableStore(val root: String, spark: SparkSession) {
     * max(1, ceil(bytes/targetBytes)) files via a narrow `coalesce` (no
     * shuffle), committed as a NEW version through the same staged-write
     * transaction as any publish; the old layout stays addressable at
-    * `@HEAD~1` until [[vacuum]] prunes it. Row count is re-verified
-    * against the source entry — a mismatch aborts loudly before commit.
+    * `@HEAD~1` until [[vacuum]] prunes it. The row count observed during
+    * the rewrite is checked against the source entry — a mismatch aborts
+    * loudly before commit and leaves nothing staged.
     * Returns None when HEAD is already within the file budget.
     * Hive-partitioned versions are refused (their file budget is
     * per-partition; re-write those with `stageWrite(partitionBy)`). */
@@ -525,27 +534,14 @@ final class TableStore(val root: String, spark: SparkSession) {
     else {
       val schema = e.schema.getOrElse(spark.read.parquet(dir.toString).schema)
       val df = spark.read.schema(schema).parquet(dir.toString)
-      val ctx = SysCtx.fresh().copy(version = newId())
-      val finalDir = tableDir(coll, table).resolve(ctx.version)
-      val staging = tableDir(coll, table).resolve(".staging").resolve(ctx.version)
-      try df.coalesce(targetFiles).write.mode("overwrite").parquet(staging.toString)
-      catch { case ex: Throwable =>
-        if (Files.exists(staging)) TableStore.deleteTree(staging)
-        throw ex
-      }
-      val rows = spark.read.schema(schema).parquet(staging.toString).count()
-      if (rows != e.rows) {
-        TableStore.deleteTree(staging)
-        throw new IllegalStateException(
+      val ctx = SysCtx.fresh()
+      val ne = staged(coll, table, df.coalesce(targetFiles), ctx, Nil,
+          appendLogEntry = true) { rows =>
+        if (rows != e.rows) throw new IllegalStateException(
           s"compaction row mismatch for $coll/$table@${e.id}: ${e.rows} -> $rows")
+        VersionEntry(ctx.version, ctx.execution, ctx.transaction,
+          ctx.timestamp.getTime, e.schemaHash, rows, e.schemaB64)
       }
-      val ne = VersionEntry(ctx.version, ctx.execution, ctx.transaction,
-        ctx.timestamp.getTime, e.schemaHash, rows, e.schemaB64)
-      stagedMoves.synchronized {
-        stagedMoves(ctx.transaction) =
-          (staging, finalDir) :: stagedMoves.getOrElse(ctx.transaction, Nil)
-      }
-      appendLog(coll, table, ne)
       commitTransaction(ctx.transaction)
       Some(ne)
     }

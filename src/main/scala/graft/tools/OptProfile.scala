@@ -1,21 +1,14 @@
 package graft.tools
 
-/** Local profiling aid for the optimization rounds. `gate <name>` times
-  * one declared gate end to end (two count actions); `jobs <a,b,...>`
+/** Local profiling aid for the optimization rounds: `jobs <a,b,...>`
   * prints the Spark job/stage/task counts of one warm run of each named
   * gate. Never part of the driver contract; output is human-oriented.
-  * Usage: runMain graft.tools.OptProfile gate|jobs <gates>. */
+  * To time gates, run `graft.Bench` with `SPARK_GRAFT_BENCH_ONLY`.
+  * Usage: runMain graft.tools.OptProfile jobs <gates>. */
 object OptProfile {
-  def time[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[prof] $label%-40s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-    r
-  }
-
   def main(args: Array[String]): Unit = {
     val which = if (args.nonEmpty) args(0) else sys.error(
-      "usage: OptProfile gate <gate> | jobs <gate,gate,...>")
+      "usage: OptProfile jobs <gate,gate,...>")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.td.session(s"local[$cpus]", cpus.toInt)
@@ -23,12 +16,6 @@ object OptProfile {
     spark.range(1000000L).selectExpr("id % 10 as k", "id").groupBy("k").count().count()
 
     which match {
-      case "gate" =>
-        // time any declared gate end to end, 2 reps
-        val name = args(1)
-        val fn = graft.SparkEntry.queries(name)
-        for (rep <- 1 to 2)
-          time(s"$name rep$rep") { fn(spark, sfDir).count() }
       case "jobs" =>
         // deterministic structural profile: Spark job/stage/task counts for
         // one warm run of each named gate (comma-separated). Counts don't

@@ -41,6 +41,85 @@ class CoreSpec extends AnyFunSuite {
     assert(row.getString(0) == ctx.execution)
   }
 
+  /** The stamping as one `withColumn` per system column and then a
+    * reorder: the formulation the one-projection stamp replaced, kept here
+    * as the reference its schemas must match byte for byte. */
+  private object ChainedStamp {
+    import SystemColumns._
+    private def valueFor(n: String, ctx: SysCtx) = n match {
+      case Id          => UuidV7.uuidv7()
+      case Execution   => F.lit(ctx.execution)
+      case Transaction => F.lit(ctx.transaction)
+      case Version     => F.lit(ctx.version)
+      case Timestamp   => F.lit(ctx.timestamp).cast(TimestampType)
+    }
+    private def fill(df: org.apache.spark.sql.DataFrame, names: Seq[String], ctx: SysCtx) = {
+      val present = df.columns.toSet
+      arrange(names.foldLeft(df)((d, n) =>
+        if (present(n)) d else d.withColumn(n, valueFor(n, ctx))))
+    }
+    def apply(mode: String, df: org.apache.spark.sql.DataFrame, ctx: SysCtx) = mode match {
+      case "raw" => fill(df.drop(systemColumns(df): _*), Required, ctx)
+      case "tab" => fill(df, Required, ctx)
+      case "sys" => fill(df.drop(Id).withColumn(Id, valueFor(Id, ctx)), Required.drop(1), ctx)
+    }
+  }
+
+  test("system columns: raw/tab/sys stamp in one projection, as the chained stamp did") {
+    import spark.implicits._
+    import SystemColumns._
+    val base = Seq((1, "a"), (2, "b")).toDF("k", "s")
+    val old = new java.sql.Timestamp(0L)
+    val inputs = Map(
+      "none" -> base,
+      // out of order, with a `$td.` column outside Required
+      "some" -> base.select(F.col("k"), F.lit("old-exec").as(Execution), F.col("s"),
+        F.lit("old-id").as(Id), F.lit(7).as("$td.extra")),
+      "all" -> base.select(F.lit("old-ts").as("$td.extra"), F.col("k"),
+        F.lit(old).as(Timestamp), F.lit("old-version").as(Version), F.col("s"),
+        F.lit("old-id").as(Id), F.lit("old-txn").as(Transaction),
+        F.lit("old-exec").as(Execution)))
+    val modes = Map[String, (org.apache.spark.sql.DataFrame, SysCtx) => org.apache.spark.sql.DataFrame](
+      "raw" -> addRaw _, "tab" -> addTab _, "sys" -> addSys _)
+    val ctx = SysCtx.fresh()
+    for ((shape, in) <- inputs; (mode, stamp) <- modes) {
+      val out = stamp(in, ctx)
+      val what = s"$mode over $shape"
+      val sys = in.columns.toSeq.filter(isSystem)
+      val wantSys = ((if (mode == "raw") Nil else sys) ++ Required).distinct.sorted
+      assert(out.columns.toSeq == Seq("k", "s") ++ wantSys, what)
+      assert(out.schema.json == ChainedStamp(mode, in, ctx).schema.json, what)
+      // one projection over the input, nothing stacked under it
+      val projects = out.queryExecution.analyzed.collect {
+        case p: org.apache.spark.sql.catalyst.plans.logical.Project => p }
+      val inProjects = in.queryExecution.analyzed.collect {
+        case p: org.apache.spark.sql.catalyst.plans.logical.Project => p }
+      assert(projects.size == inProjects.size + 1, what)
+      val rows = out.select(F.col(s"`$Id`"), F.col(s"`$Execution`")).collect()
+      val ids = rows.map(_.getString(0)).toSeq
+      val keepsId = mode == "tab" && sys.contains(Id)
+      assert(ids.forall(_ == "old-id") == keepsId, s"$what: ids $ids")
+      assert(keepsId || ids.distinct.size == 2 && ids.forall(_.length == 26), what)
+      val exec = if (mode != "raw" && sys.contains(Execution)) "old-exec" else ctx.execution
+      assert(rows.forall(_.getString(1) == exec), what)
+      if (mode == "raw") assert(!out.columns.contains("$td.extra"), what)
+    }
+    // nothing to stamp or move: the frame itself comes back
+    val stored = addTab(inputs("all"), ctx)
+    assert(addTab(stored, SysCtx.fresh()) eq stored)
+    assert(addSys(inputs("some"), ctx).schema.fields.toSeq.map(f => f.name -> f.dataType) ==
+      Seq("k" -> IntegerType,
+      "s" -> StringType, "$td.extra" -> IntegerType, Id -> StringType,
+      Execution -> StringType, Timestamp -> TimestampType,
+      Transaction -> StringType, Version -> StringType))
+    // the store logs the schema of its sys stamp: the same bytes as before
+    val store = new graft.store.TableStore(
+      java.nio.file.Files.createTempDirectory("graft-core-stamp").toString, spark)
+    val e = store.write("c", "t", inputs("some"))
+    val logged = new String(java.util.Base64.getDecoder.decode(e.schemaB64.get), "UTF-8")
+    assert(logged == ChainedStamp("sys", inputs("some"), ctx).schema.json)
+  }
+
   test("system columns survive select and are dropped from right side of join") {
     val ctx = SysCtx.fresh()
     val tf = TableFrame.fromRaw(nation.df, ctx)

@@ -228,6 +228,16 @@ class QuantizeSpec extends AnyFunSuite {
       .isInstanceOf[graft.expressions.PqCodebookInline])
   }
 
+  test("pq codebook broadcast: one handle per codebook, so its refs are equal") {
+    val cb = Quantize.trainPq(emb, "vec_id", "embedding", m = 8, ks = 16, iters = 1)
+    val a = Quantize.kernelCodebookRef(emb, cb, forceBroadcast = Some(true))
+    val b = Quantize.kernelCodebookRef(emb, cb, forceBroadcast = Some(true))
+    def id(r: graft.expressions.PqCodebookRef): Long =
+      r.asInstanceOf[graft.expressions.PqCodebookBroadcast].handle.id
+    assert(id(a) == id(b))
+    assert(a == b, "two refs of one codebook compare unequal, so expression CSE is lost")
+  }
+
   test("pq codes relation: one m-length code array per id, codes in [0, ks)") {
     val cb = Quantize.trainPq(emb, "vec_id", "embedding", m = 8, ks = 16, iters = 1)
     val enc = Quantize.encodePq(emb, "vec_id", "embedding", cb)

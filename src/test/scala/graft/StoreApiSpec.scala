@@ -204,6 +204,22 @@ class StoreApiSpec extends AnyFunSuite {
     } finally api.stop()
   }
 
+  test("404 bodies stay JSON when the path segment holds a quote") {
+    val store = freshStore()
+    val api = new StoreApi(store, Some(new graft.flow.FlowEngine(store, spark)))
+    api.start()
+    try {
+      val resp = http.send(
+        HttpRequest.newBuilder(URI.create(
+          s"http://127.0.0.1:${api.boundPort}/collections/c/functions/a%22b/execute"))
+          .POST(HttpRequest.BodyPublishers.noBody()).build(),
+        HttpResponse.BodyHandlers.ofByteArray())
+      assert(resp.statusCode() == 404)
+      // the body parses, and the decoded name is in it verbatim
+      assert(json(resp).get("error").asText() == "function not found: c/a\"b")
+    } finally api.stop()
+  }
+
   test("execution journal: runs, rollup, history, failures") {
     import spark.implicits._
     val store = freshStore()

@@ -955,6 +955,29 @@ class StoreFlowSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("partition"), ex.getMessage)
   }
 
+  test("compact: a row-count mismatch aborts before commit and leaves nothing staged or logged") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val store = freshStore()
+    store.write("c", "t", (1L to 500L).map(i => (i, s"v$i")).toDF("id", "v").repartition(16))
+    val head = store.versions("c", "t").last
+    val dir = java.nio.file.Paths.get(store.pathOf("c", "t", head))
+    val tableDir = dir.getParent
+    // lose one data file, so the rewrite sees fewer rows than the entry
+    val part = scala.util.Using.resource(java.nio.file.Files.list(dir))(
+      _.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get)
+    java.nio.file.Files.delete(part)
+    def logLines() = java.nio.file.Files.readAllLines(tableDir.resolve("_log.jsonl")).size
+    val linesBefore = logLines()
+    val ex = intercept[IllegalStateException](store.compact("c", "t", targetBytes = 64L << 20))
+    assert(ex.getMessage.contains("row mismatch"), ex.getMessage)
+    val staging = tableDir.resolve(".staging")
+    assert(!java.nio.file.Files.exists(staging) ||
+      scala.util.Using.resource(java.nio.file.Files.list(staging))(_.count()) == 0)
+    assert(logLines() == linesBefore)
+    assert(store.versions("c", "t").map(_.id) == Seq(head.id))
+  }
+
   test("version history: runs split on change, absence, and reappearance") {
     import graft.store.VersionDiff
     import spark.implicits._
