@@ -10,9 +10,10 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.immutable.VectorMap
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 import scala.util.Using
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftshim.Bridge
 
@@ -332,7 +333,28 @@ final case class ExecutionRecord(
     triggeredOn: Long,
     durationMs: Long,
     error: Option[String],
-    startedOn: Option[Long]) // epoch ms at run start; absent from older lines
+    startedOn: Option[Long]) { // epoch ms at run start; absent from older lines
+
+  /** Fills `n` with the record's fields: one journal line, and one element
+    * of the `/function_runs` and `history` answers. */
+  def writeTo(n: ObjectNode): ObjectNode = {
+    n.put("execution", execution).put("function", function)
+      .put("collection", collection).put("status", status)
+      .put("triggered_on", triggeredOn).put("duration_ms", durationMs)
+    error.foreach(n.put("error", _))
+    startedOn.foreach(n.put("started_on", _))
+    n
+  }
+}
+
+object ExecutionRecord {
+  /** The inverse of [[ExecutionRecord.writeTo]]. */
+  def from(n: JsonNode): ExecutionRecord =
+    ExecutionRecord(n.get("execution").asText(), n.get("function").asText(),
+      n.get("collection").asText(), n.get("status").asText(),
+      n.get("triggered_on").asLong(), n.get("duration_ms").asLong(),
+      Option(n.get("error")).map(_.asText()), Option(n.get("started_on")).map(_.asLong()))
+}
 
 /** Append-only JSONL run journal in the store root — the library-side stand-in
   * for the reference server's execution bookkeeping. One line per function
@@ -345,30 +367,26 @@ object ExecutionLog {
   def append(root: String, r: ExecutionRecord): Unit = synchronized {
     val p = path(root)
     Files.createDirectories(p.getParent)
-    val n = graft.store.TableStore.jsonMapper.createObjectNode()
-    n.put("execution", r.execution).put("function", r.function)
-      .put("collection", r.collection).put("status", r.status)
-      .put("triggered_on", r.triggeredOn).put("duration_ms", r.durationMs)
-    r.error.foreach(n.put("error", _))
-    r.startedOn.foreach(n.put("started_on", _))
-    val line = ByteBuffer.wrap((graft.store.TableStore.jsonMapper.writeValueAsString(n) + "\n")
-      .getBytes(StandardCharsets.UTF_8))
+    val mapper = graft.store.TableStore.jsonMapper
+    val line = ByteBuffer.wrap((mapper.writeValueAsString(r.writeTo(mapper.createObjectNode())) +
+      "\n").getBytes(StandardCharsets.UTF_8))
     Using.resource(FileChannel.open(p, CREATE, WRITE, APPEND)) { ch =>
       while (line.hasRemaining) ch.write(line)
     }
   }
 
+  /** The complete lines' records. An unterminated last line (an append
+    * in progress, or one cut short by a crash) is skipped, as LogIndex
+    * skips one in a table's `_log.jsonl`. */
   def read(root: String): Seq[ExecutionRecord] = {
     val p = path(root)
     if (!Files.exists(p)) Seq.empty
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq
-      .filter(_.nonEmpty).map { line =>
-        val n = graft.store.TableStore.jsonMapper.readTree(line)
-        ExecutionRecord(n.get("execution").asText(), n.get("function").asText(),
-          n.get("collection").asText(), n.get("status").asText(),
-          n.get("triggered_on").asLong(), n.get("duration_ms").asLong(),
-          Option(n.get("error")).map(_.asText()), Option(n.get("started_on")).map(_.asLong()))
-      }
+    else {
+      val text = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+      text.substring(0, text.lastIndexOf('\n') + 1).split('\n').toSeq
+        .filter(_.nonEmpty)
+        .map(line => ExecutionRecord.from(graft.store.TableStore.jsonMapper.readTree(line)))
+    }
   }
 }
 

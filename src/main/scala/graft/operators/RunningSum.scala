@@ -8,9 +8,10 @@ import org.apache.spark.sql.expressions.Window
   * selection, and any "take from the top until the budget is spent"
   * shape: range-partition on the order key, window-sum within partitions
   * in parallel, add each partition's broadcast prefix offset. The only
-  * driver-side data is the numPartitions-row per-partition sums. Same
-  * design as [[ScalableRank.withRank]] (including the localCheckpoint
-  * that pins partition ids across the two plan branches).
+  * driver-side data is the numPartitions-row per-partition sums. The
+  * partitions come from [[ScalableRank.pinned]]; the offsets are summed on
+  * the driver rather than by [[ScalableRank.withOffsets]], because callers
+  * need the grand total there.
   */
 object RunningSum {
 
@@ -22,11 +23,7 @@ object RunningSum {
     require(order.nonEmpty, "running sum needs an explicit order")
     val spark = df.sparkSession
     import spark.implicits._
-    val parted = df
-      .repartitionByRange(order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("$td.__pid", F.spark_partition_id())
-      .localCheckpoint()
+    val parted = ScalableRank.pinned(df, order, order)
     val w = Window.partitionBy(F.col("`$td.__pid`")).orderBy(order: _*)
     val sums = parted.groupBy(F.col("`$td.__pid`"))
       .agg(F.sum(valueCol).as("s"))

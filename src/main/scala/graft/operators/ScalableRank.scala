@@ -1,26 +1,96 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.types.LongType
 
 /** Distributed whole-column rank without a single-reducer global window.
   *
   * `Expr.rank` matches the reference's semantics with `Window.orderBy(col)`
   * — correct, but Spark executes an unpartitioned window on ONE task. This
-  * is the 100 TB formulation:
+  * is the 100 TB formulation, the two-phase prefix:
   *
   *  1. range-repartition by the rank key (equal keys land in one partition,
-  *     so ties never straddle partition boundaries);
+  *     so ties never straddle partition boundaries) — [[pinned]];
   *  2. rank within each partition (parallel windows);
-  *  3. one tiny aggregate of per-partition row counts → cumulative offsets,
-  *     broadcast back;
-  *  4. global rank = partition offset + within-partition rank.
+  *  3. one tiny aggregate of per-partition sizes → exclusive cumulative
+  *     offsets, broadcast back;
+  *  4. global rank = partition offset + within-partition rank
+  *     ([[withOffsets]]).
   *
   * The only global data movement is the range shuffle Spark would need for
   * any total ordering; the offsets table is `numPartitions` rows.
+  *
+  * Why partition ids are pinned: the pid-tagged relation feeds TWO plan
+  * branches (the local windows and the offsets aggregate). Without
+  * materialization each branch re-executes its own range exchange, and
+  * the range partitioner samples bounds with an RDD-id-derived seed —
+  * identical on small data, divergent at scale, which would pair offsets
+  * with the wrong partitions. [[pinned]]'s `localCheckpoint` runs the
+  * range exchange once, so both branches read one set of pids. Keys can
+  * be any orderable type; [[graft.pipeline.Packing.packByBudget]] derives
+  * its pid from the data instead, which needs a numeric id.
   */
 object ScalableRank {
+
+  /** `df` range-partitioned by `partCols`, sorted by `order` within each
+    * partition and tagged with its partition id `$td.__pid`, materialized
+    * once so that every consumer reads the same pids. */
+  private[graft] def pinned(df: DataFrame, partCols: Seq[Column],
+      order: Seq[Column]): DataFrame =
+    df.repartitionByRange(partCols: _*)
+      .sortWithinPartitions(order: _*)
+      .withColumn("$td.__pid", F.spark_partition_id())
+      .localCheckpoint()
+
+  /** One output column of [[withOffsets]]: `local` over the
+    * (pid[, group]) window, plus, when `size` is set, the sum of the
+    * aggregate `size` over the same group's rows in earlier partitions. */
+  private[graft] final case class Prefixed(as: String,
+      local: WindowSpec => Column, size: Option[Column] = None)
+
+  /** Adds `cols` to a relation carrying `$td.__pid` (from [[pinned]], or a
+    * pid derived from the data), and drops the pid. Each column is a
+    * window over (pid[, group]) in `order`; a sized one adds the exclusive
+    * prefix over pid of its per-(pid[, group]) size, from one aggregate of
+    * ≈ partitions + groups rows broadcast back. The group join is
+    * null-safe, so NULL group keys form one group. The offsets relation's
+    * columns are read through that relation, so input columns of any name
+    * (`pid`, `offset`, …) pass through untouched. */
+  private[graft] def withOffsets(parted: DataFrame, group: Option[String],
+      order: Seq[Column], cols: Seq[Prefixed]): DataFrame = {
+    // unsuffixed names for the first sized column keep the one-column
+    // plans (every rank) as they were
+    def nth(name: String, i: Int) = if (i == 0) name else s"$name$i"
+    val w = Window.partitionBy(F.col("`$td.__pid`") +: group.map(F.col).toSeq: _*)
+      .orderBy(order: _*)
+    val (sized, plain) = cols.partition(_.size.isDefined)
+    require(sized.nonEmpty, "withOffsets needs a sized column")
+    val tmp = sized.indices.map(nth("$td.__local", _))
+    val local = (sized.zip(tmp) ++ plain.map(c => (c, c.as)))
+      .foldLeft(parted) { case (d, (c, name)) => d.withColumn(name, c.local(w)) }
+    val og = group.map(_ => F.col("`$td.__og`")).toSeq
+    val sizes = sized.indices.map(i => sized(i).size.get.as(nth("sz", i)))
+    val prior = Window.partitionBy(og: _*).orderBy("pid")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = local
+      .groupBy(F.col("`$td.__pid`").as("pid") +:
+        group.map(g => F.col(g).as("$td.__og")).toSeq: _*)
+      .agg(sizes.head, sizes.tail: _*)
+      .select((F.col("pid") +: og) ++ sized.indices.map(i =>
+        F.coalesce(F.sum(nth("sz", i)).over(prior), F.lit(0L)).as(nth("offset", i))): _*)
+    val on = (local("`$td.__pid`") === offsets("pid")) +:
+      group.map(g => local(g) <=> offsets("`$td.__og`")).toSeq
+    // offsets has ≈ numPartitions rows → broadcast join, no data shuffle
+    val joined = local.join(F.broadcast(offsets), on.reduce(_ && _))
+    val offCols = offsets.columns.toSeq.map(n => offsets(s"`$n`"))
+    sized.indices.foldLeft(joined) { (d, i) =>
+        d.withColumn(sized(i).as, offsets(nth("offset", i)) + F.col(s"`${tmp(i)}`"))
+      }
+      .drop(offCols.head, offCols.tail: _*)
+      .drop("$td.__pid" +: tmp: _*)
+  }
+
   /** Append a global rank column. Methods: min | dense | ordinal.
     * For `ordinal`, supply deterministic `tiebreakers` to fix an order on
     * equal keys (otherwise ties get an arbitrary stable-per-run order). */
@@ -28,91 +98,51 @@ object ScalableRank {
       method: String = "min", descending: Boolean = false,
       tiebreakers: Seq[String] = Nil): DataFrame = {
     val keyCol = if (descending) F.col(key).desc else F.col(key).asc
-    val tiebreak = tiebreakers.map(F.col)
-    // min/dense: ties MUST share a partition → range-partition by key alone;
-    // ordinal orders ties too, so tiebreakers may join the partitioner.
-    // The directional column steers the range partitioner so partition ids
-    // follow the requested global order for descending ranks as well.
-    val partCols =
-      if (method == "ordinal") keyCol +: tiebreak.map(_.asc) else Seq(keyCol)
-    // localCheckpoint: the pid-tagged relation feeds TWO plan branches
-    // (the rank join and the offsets aggregate). Without materialization
-    // each branch re-executes its own range exchange, and the range
-    // partitioner samples bounds with an RDD-id-derived seed — identical
-    // on small data, divergent at scale, which would pair offsets with the
-    // wrong partitions. One materialized execution pins the pids. (Keys
-    // here can be any orderable type, so the quantile-split trick
-    // Packing.packByBudget uses for numeric ids does not apply.)
-    val parted = df
-      .repartitionByRange(partCols: _*)
-      .sortWithinPartitions(keyCol +: tiebreak.map(_.asc): _*)
-      .withColumn("$td.__pid", F.spark_partition_id())
-      .localCheckpoint()
-    // within-partition window: parallel across partitions
-    val w = Window.partitionBy(F.col("`$td.__pid`")).orderBy(keyCol +: tiebreak.map(_.asc): _*)
-    val local = method match {
-      case "min"     => F.rank().over(w).cast(LongType)
-      case "dense"   => F.dense_rank().over(w).cast(LongType)
-      case "ordinal" => F.row_number().over(w).cast(LongType)
-      case other     => throw new IllegalArgumentException(s"rank method: $other")
-    }
-    val withLocal = parted.withColumn("$td.__local", local)
+    val order = keyCol +: tiebreakers.map(F.col(_).asc)
     // per-partition sizes: rows for min/ordinal, distinct keys for dense.
     // countDistinct ignores NULLs, but dense_rank gives the null group a
     // rank — count it explicitly or every partition after the nulls would
     // have an offset one too small.
-    val sizeAgg = method match {
-      case "dense" =>
-        F.countDistinct(F.col(key)) +
-          F.max(F.when(F.col(key).isNull, 1L).otherwise(0L))
-      case _ => F.count(F.lit(1))
+    val rows = F.count(F.lit(1))
+    val (local, size) = method match {
+      case "min"     => (F.rank(), rows)
+      case "dense"   => (F.dense_rank(), F.countDistinct(F.col(key)) +
+        F.max(F.when(F.col(key).isNull, 1L).otherwise(0L)))
+      case "ordinal" => (F.row_number(), rows)
+      case other     => throw new IllegalArgumentException(s"rank method: $other")
     }
-    val offsets = withLocal.groupBy(F.col("`$td.__pid`").as("pid"))
-      .agg(sizeAgg.as("sz"))
-      .withColumn("offset",
-        F.coalesce(F.sum("sz").over(
-          Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)), F.lit(0L)))
-      .select("pid", "offset")
-    // offsets has numPartitions rows → broadcast join, no extra shuffle of data
-    withLocal
-      .join(F.broadcast(offsets), F.col("`$td.__pid`") === F.col("pid"))
-      .withColumn(as, F.col("offset") + F.col("`$td.__local`"))
-      .drop("$td.__pid", "$td.__local", "pid", "offset")
+    // min/dense: ties MUST share a partition → range-partition by key alone;
+    // ordinal orders ties too, so tiebreakers may join the partitioner.
+    // The directional column steers the range partitioner so partition ids
+    // follow the requested global order for descending ranks as well.
+    val partCols = if (method == "ordinal") order else Seq(keyCol)
+    withOffsets(pinned(df, partCols, order), None, order,
+      Seq(Prefixed(as, w => local.over(w).cast(LongType), Some(size))))
   }
 
   /** [[withRank]] (method = min) that ALSO emits each key's global tie
-    * count, in the SAME parallel window pass. The former consumers of
-    * this pair (midranks for Spearman/Mann-Whitney/Kruskal/Cliff/AUC)
-    * joined the ranked relation against a `groupBy(key).count()` of the
-    * ORIGINAL relation — a second scan of the input lineage plus a keyed
-    * shuffle and join, per statistic (r17 optimization round). Because
-    * the min-method range partitioner confines ties to one partition,
-    * the tie count is the window PEERS count (RANGE BETWEEN CURRENT ROW
-    * AND CURRENT ROW over the same ordering) — identical values, zero
-    * extra exchanges. */
+    * count, in the SAME parallel window pass: because the min-method range
+    * partitioner confines ties to one partition, the tie count is the
+    * window PEERS count (RANGE BETWEEN CURRENT ROW AND CURRENT ROW over
+    * the same ordering) — no `groupBy(key).count()` of the input joined
+    * back, zero extra exchanges. Midranks (Spearman, Mann-Whitney,
+    * Kruskal, Cliff, AUC) are 2·mid = 2·rank + count − 1. */
   def withMinRankAndTies(df: DataFrame, key: String, rankAs: String,
-      cntAs: String, descending: Boolean = false): DataFrame = {
-    val keyCol = if (descending) F.col(key).desc else F.col(key).asc
-    val parted = df
-      .repartitionByRange(keyCol)
-      .sortWithinPartitions(keyCol)
-      .withColumn("$td.__pid", F.spark_partition_id())
-      .localCheckpoint() // pins pids for the two consumer branches (see withRank)
-    val w = Window.partitionBy(F.col("`$td.__pid`")).orderBy(keyCol)
-    val peers = w.rangeBetween(Window.currentRow, Window.currentRow)
-    val withLocal = parted
-      .withColumn("$td.__local", F.rank().over(w).cast(LongType))
-      .withColumn(cntAs, F.count(F.lit(1)).over(peers))
-    val offsets = withLocal.groupBy(F.col("`$td.__pid`").as("pid"))
-      .agg(F.count(F.lit(1)).as("sz"))
-      .withColumn("offset",
-        F.coalesce(F.sum("sz").over(
-          Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)), F.lit(0L)))
-      .select("pid", "offset")
-    withLocal
-      .join(F.broadcast(offsets), F.col("`$td.__pid`") === F.col("pid"))
-      .withColumn(rankAs, F.col("offset") + F.col("`$td.__local`"))
-      .drop("$td.__pid", "$td.__local", "pid", "offset")
+      cntAs: String, descending: Boolean = false): DataFrame =
+    minRankAndTies(df, None, key, rankAs, cntAs, descending)
+
+  /** [[withMinRankAndTies]], or with `group` its per-group form: min-ranks
+    * and tie counts WITHIN each group, from one range shuffle on
+    * (group, key) — the [[withRankByGroup]] layout. */
+  private[graft] def minRankAndTies(df: DataFrame, group: Option[String],
+      key: String, rankAs: String, cntAs: String,
+      descending: Boolean = false): DataFrame = {
+    val order = Seq(if (descending) F.col(key).desc else F.col(key).asc)
+    val partCols = group.map(F.col(_).asc).toSeq ++ order
+    withOffsets(pinned(df, partCols, partCols), group, order, Seq(
+      Prefixed(rankAs, w => F.rank().over(w).cast(LongType), Some(F.count(F.lit(1)))),
+      Prefixed(cntAs, w => F.count(F.lit(1))
+        .over(w.rangeBetween(Window.currentRow, Window.currentRow)))))
   }
 
   /** Per-GROUP ordinal rank for MANY simultaneously-huge groups — the
@@ -141,52 +171,19 @@ object ScalableRank {
     *    a partition, so the range partitioner keys on (group, key) alone
     *    (tiebreakers are ignored, as in [[withRank]]'s min) and offsets
     *    stay plain row counts — SQL rank continues from row positions.
-    * NULL group keys form one group (null-safe offset join). Kept apart
-    * from [[withRank]]: different partitioning contracts (group first). */
+    * NULL group keys form one group. */
   def withRankByGroup(df: DataFrame, groupCol: String, key: String,
       as: String = "rank", tiebreakers: Seq[String] = Nil,
       method: String = "ordinal"): DataFrame = {
-    val order = method match {
-      case "ordinal" => F.col(key).asc +: tiebreakers.map(F.col(_).asc)
-      case "min"     => Seq(F.col(key).asc)
+    val (order, local) = method match {
+      case "ordinal" => (F.col(key).asc +: tiebreakers.map(F.col(_).asc), F.row_number())
+      case "min"     => (Seq(F.col(key).asc), F.rank())
       case other =>
         throw new IllegalArgumentException(s"group rank method: $other")
     }
     val partCols = F.col(groupCol).asc +: order
-    // localCheckpoint pins partition ids across the two consuming branches
-    // (rank + offsets), same reasoning as [[withRank]]
-    val parted = df
-      .repartitionByRange(partCols: _*)
-      .sortWithinPartitions(partCols: _*)
-      .withColumn("$td.__pid", F.spark_partition_id())
-      .localCheckpoint()
-    val w = Window.partitionBy(F.col("`$td.__pid`"), F.col(groupCol))
-      .orderBy(order: _*)
-    val local = method match {
-      case "min" => F.rank().over(w).cast(LongType)
-      case _     => F.row_number().over(w).cast(LongType)
-    }
-    val withLocal = parted.withColumn("$td.__local", local)
-    // offsets: how many of MY group's rows live in earlier partitions.
-    // The aggregate is (pid, group)-keyed — ≈ partitions + groups rows —
-    // and the cumulative window runs over that metadata, not the data.
-    val offsets = withLocal
-      .groupBy(F.col("`$td.__pid`").as("$td.__opid"),
-        F.col(groupCol).as("$td.__og"))
-      .agg(F.count(F.lit(1)).as("$td.__sz"))
-      .withColumn("$td.__off",
-        F.coalesce(F.sum(F.col("`$td.__sz`")).over(
-          Window.partitionBy(F.col("`$td.__og`"))
-            .orderBy(F.col("`$td.__opid`"))
-            .rowsBetween(Window.unboundedPreceding, -1)), F.lit(0L)))
-      .select(F.col("`$td.__opid`"), F.col("`$td.__og`"), F.col("`$td.__off`"))
-    withLocal
-      .join(F.broadcast(offsets),
-        F.col("`$td.__pid`") === F.col("`$td.__opid`") &&
-          (F.col(groupCol) <=> F.col("`$td.__og`")))
-      .withColumn(as, F.col("`$td.__off`") + F.col("`$td.__local`"))
-      .drop("$td.__pid", "$td.__local", "$td.__opid", "$td.__og",
-        "$td.__sz", "$td.__off")
+    withOffsets(pinned(df, partCols, partCols), Some(groupCol), order,
+      Seq(Prefixed(as, w => local.over(w).cast(LongType), Some(F.count(F.lit(1))))))
   }
 
   /** Percentile-rank normalization: map `key` onto [0, 1] as

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
+import graft.operators.ScalableRank
 
 /** Sequence packing: assign documents to fixed-budget training sequences
   * ("packs") — the step that turns a deduplicated, filtered corpus into
@@ -33,16 +34,14 @@ object Packing {
     *
     * The partition id is derived FROM THE DATA (id compared against
     * driver-held quantile split points from a deterministic
-    * Greenwald-Khanna sketch), not from `spark_partition_id()` after a
-    * range shuffle: the corpus-side window and the offsets aggregate sit
-    * in two plan branches, and two separate range exchanges sample their
-    * bounds with RDD-id-derived seeds — identical on small data, silently
-    * divergent at scale, which would misattribute every boundary row's
-    * offset. A data-derived pid cannot disagree between branches. */
+    * Greenwald-Khanna sketch) rather than pinned by
+    * [[graft.operators.ScalableRank.pinned]] from `spark_partition_id()`
+    * after a range shuffle: a data-derived pid cannot disagree between
+    * the two plan branches that read it (the reason ScalableRank gives),
+    * and needs no materialization. */
   def packByBudget(df: DataFrame, idCol: String, tokenCol: String,
       budget: Long): DataFrame = {
     require(budget > 0, "pack budget must be positive")
-    val pid = "$td.__pid"; val cum = "$td.__cum"
     val p = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val bounds: Array[Long] =
       if (p <= 1) Array.empty
@@ -51,30 +50,16 @@ object Packing {
     val pidCol = bounds.foldLeft(F.lit(0)) { (acc, b) =>
       acc + F.when(F.col(idCol) > b, 1).otherwise(0)
     }
-    val parted = df.withColumn(pid, pidCol)
-    val w = Window.partitionBy(F.col(s"`$pid`")).orderBy(F.col(idCol).asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val withLocal = parted.withColumn(cum,
-      F.coalesce(F.sum(F.col(tokenCol).cast("long")).over(w), F.lit(0L)))
-    // per-partition token totals → exclusive prefix over pid (numPartitions
-    // rows, trivially small) → broadcast join back. The offsets relation's
-    // columns share the $td.__ namespace of the other helper columns: bare
-    // names would make an input 'pid' ambiguous and silently drop an input
-    // 'offset' in the final drop.
-    val opid = "$td.__offset_pid"; val off = "$td.__offset"
-    val offsets = withLocal.groupBy(F.col(s"`$pid`").as(opid))
-      .agg(F.sum(F.col(tokenCol).cast("long")).as("$td.__sz"))
-      .withColumn(off,
-        F.coalesce(F.sum(F.col("`$td.__sz`")).over(
-          Window.orderBy(F.col(s"`$opid`")).rowsBetween(Window.unboundedPreceding, -1)),
-          F.lit(0L)))
-      .select(F.col(s"`$opid`"), F.col(s"`$off`"))
-    withLocal
-      .join(F.broadcast(offsets), F.col(s"`$pid`") === F.col(s"`$opid`"))
-      .withColumn("$td.__gcum", F.col(s"`$off`") + F.col(s"`$cum`"))
+    val tokens = F.col(tokenCol).cast("long")
+    // exclusive prefix: local sum of the earlier rows + earlier partitions'
+    val gcum = "$td.__gcum"
+    ScalableRank.withOffsets(df.withColumn("$td.__pid", pidCol), None,
+        Seq(F.col(idCol).asc), Seq(ScalableRank.Prefixed(gcum, w =>
+          F.coalesce(F.sum(tokens).over(w.rowsBetween(Window.unboundedPreceding, -1)),
+            F.lit(0L)), Some(F.sum(tokens)))))
       .withColumn("pack_id", F.expr(s"`$$td.__gcum` div $budget"))
-      .withColumn("pack_pos", F.pmod(F.col("`$td.__gcum`"), F.lit(budget)))
-      .drop(pid, cum, opid, off, "$td.__gcum")
+      .withColumn("pack_pos", F.pmod(F.col(s"`$gcum`"), F.lit(budget)))
+      .drop(gcum)
   }
 
   /** Overlapping character windows per document — the chunking step of an

@@ -1423,10 +1423,10 @@ object Report {
     * aggregate δ can hide a losing segment — the Simpson's-paradox
     * check an effect-size readout needs). Ranks are computed WITHIN
     * each slice through ONE composite range shuffle
-    * ([[graft.operators.ScalableRank.withRankByGroup]] with min-ranks —
-    * the identity 2U_A = Σ2R_A − n_A(n_A+1) needs tie-stable min ranks,
-    * the r16 Mann-Whitney lesson), per-value counts keyed by
-    * (slice, value), then the bounded per-slice 2-struct fold. Slices
+    * (min-ranks — the identity 2U_A = Σ2R_A − n_A(n_A+1) needs
+    * tie-stable min ranks, the r16 Mann-Whitney lesson — and tie counts
+    * from the same window pass), then the bounded per-slice 2-struct
+    * fold. Slices
     * with ≠2 variants answer NULL u_a/delta/magnitude with the observed
     * counts. Output: (group, n_variants, variant_a, variant_b, n_a,
     * n_b, u_a, delta, magnitude) ascending by group. */
@@ -1477,9 +1477,11 @@ object Report {
 
   /** The rank step shared by [[cliffsDeltaImpl]] and [[mannWhitneyUImpl]]:
     * non-NULL rows as (td_s?, td_g = variant, td_x = value) with the
-    * MIN-rank `td_rk` of td_x and its tie count `td_c`. Global: one
-    * range-shuffle pass. Per slice: ranks WITHIN each slice from one
-    * composite range shuffle, then per-(slice, value) counts joined back. */
+    * MIN-rank `td_rk` of td_x and its tie count `td_c`, globally or within
+    * each slice, from one range-shuffle pass. Min-ranks, because the
+    * midrank identity 2·mid = 2·min + cnt − 1 needs them — row_number
+    * would split tie blocks arbitrarily across variants and desync from
+    * the oracle's rank(). */
   private def minRanksWithTies(df: DataFrame, variantCol: String,
       valueCol: String, keyCols: Seq[String]): DataFrame = {
     val slice = keyCols.map(F.col(_).cast("string"))
@@ -1487,20 +1489,8 @@ object Report {
     val x = F.col(valueCol).cast("double")
     val clean = df.where((slice :+ v :+ x).map(_.isNotNull).reduce(_ && _))
       .select(slice.map(_.as("td_s")) ++ Seq(v.as("td_g"), x.as("td_x")): _*)
-    if (keyCols.isEmpty)
-      // rank + tie count in ONE pass (r17: the former groupBy(key)+join
-      // re-scanned the input lineage per statistic)
-      graft.operators.ScalableRank.withMinRankAndTies(
-        clean, "td_x", "td_rk", "td_c")
-    else
-      // method="min": the midrank identity 2·mid = 2·min + cnt − 1 needs
-      // MIN-ranks — row_number would split tie blocks arbitrarily across
-      // variants and desync from the oracle's rank()
-      graft.operators.ScalableRank.withRankByGroup(
-          clean, "td_s", "td_x", "td_rk", method = "min")
-        .join(clean.groupBy(F.col("td_s"), F.col("td_x"))
-            .agg(F.count(F.lit(1)).as("td_c")),
-          Seq("td_s", "td_x"))
+    graft.operators.ScalableRank.minRankAndTies(clean,
+      keyCols.headOption.map(_ => "td_s"), "td_x", "td_rk", "td_c")
   }
 
   /** Mann–Whitney U (Wilcoxon rank-sum) A/B test — the NONPARAMETRIC
@@ -1530,11 +1520,10 @@ object Report {
     * rank-sum test (did variant A beat B in EVERY segment, or only in
     * aggregate — the Simpson's-paradox check an A/B readout needs):
     * the same midrank algebra per slice through ONE composite range
-    * shuffle ([[graft.operators.ScalableRank.withRankByGroup]] on the
-    * slice key — ranks are computed WITHIN each slice, as running the
-    * two-sample test per slice requires; no per-slice jobs), per-value
-    * counts keyed by (slice, value), then the bounded per-slice
-    * 2-struct fold. Slices with ≠2 variants or all-tied values answer
+    * shuffle on (slice, value) — ranks and tie counts are computed
+    * WITHIN each slice, as running the two-sample test per slice
+    * requires; no per-slice jobs — then the bounded per-slice 2-struct
+    * fold. Slices with ≠2 variants or all-tied values answer
     * NULL z honestly. Output: (group, n_variants, variant_a, variant_b,
     * n_a, n_b, u_a, u_b, tie_term, z) ascending by group. */
   def mannWhitneyUByGroup(df: DataFrame, groupCol: String,
@@ -1597,7 +1586,7 @@ object Report {
     * value).
     *
     * Scale shape: one (value)-keyed count aggregation, then the
-    * cumulative counts ride a [[graft.operators.ScalableRank]]-style
+    * cumulative counts ride [[graft.operators.ScalableRank]]'s
     * two-phase prefix (range shuffle → parallel per-partition window →
     * numPartitions-row offsets broadcast back) — NEVER an unpartitioned
     * window over the distinct-value relation, which is corpus-sized for
@@ -1609,84 +1598,8 @@ object Report {
     * variant_b, n_a, n_b, d, d_at (the SMALLEST value attaining the
     * supremum). */
   def ksTwoSample(df: DataFrame, variantCol: String,
-      valueCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val v = F.col(variantCol).cast("string")
-    val x = F.col(valueCol).cast("double")
-    val clean = df.where(v.isNotNull && x.isNotNull)
-      .select(v.as("td_g"), x.as("td_x"))
-    val vl = clean.groupBy(F.col("td_g")).agg(F.count(F.lit(1)).as("td_n"))
-      .agg(F.sort_array(F.collect_list(
-        F.struct(F.col("td_g"), F.col("td_n")))).as("td_l"))
-      .select(
-        F.size(F.col("td_l")).cast("long").as("td_nv"),
-        F.try_element_at(F.col("td_l"), F.lit(1)).getField("td_g").as("td_va"),
-        F.try_element_at(F.col("td_l"), F.lit(2)).getField("td_g").as("td_vb"),
-        F.try_element_at(F.col("td_l"), F.lit(1)).getField("td_n").as("td_na"),
-        F.try_element_at(F.col("td_l"), F.lit(2)).getField("td_n").as("td_nb"))
-    // per-distinct-value variant counts, the 1-row roster riding along
-    val cells = clean.crossJoin(F.broadcast(vl))
-      .groupBy(F.col("td_x"))
-      .agg(
-        F.sum(F.when(F.col("td_g") === F.col("td_va"), 1L).otherwise(0L))
-          .as("td_ca"),
-        F.sum(F.when(F.col("td_g") === F.col("td_vb"), 1L).otherwise(0L))
-          .as("td_cb"),
-        F.first(F.col("td_nv")).as("td_nv"),
-        F.first(F.col("td_va")).as("td_va"),
-        F.first(F.col("td_vb")).as("td_vb"),
-        F.first(F.col("td_na")).as("td_na"),
-        F.first(F.col("td_nb")).as("td_nb"))
-    // two-phase prefix over ascending values — localCheckpoint pins the
-    // range partitioner's sampled bounds for the two consumer branches
-    // (the ScalableRank discipline)
-    val parted = cells.repartitionByRange(F.col("td_x").asc)
-      .sortWithinPartitions(F.col("td_x").asc)
-      .withColumn("$td.__pid", F.spark_partition_id())
-      .localCheckpoint()
-    val w = Window.partitionBy(F.col("`$td.__pid`"))
-      .orderBy(F.col("td_x").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = parted
-      .withColumn("$td.__la", F.sum(F.col("td_ca")).over(w))
-      .withColumn("$td.__lb", F.sum(F.col("td_cb")).over(w))
-    val wOff = Window.orderBy("pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local.groupBy(F.col("`$td.__pid`").as("pid"))
-      .agg(F.sum(F.col("td_ca")).as("ta"), F.sum(F.col("td_cb")).as("tb"))
-      .select(F.col("pid"),
-        F.coalesce(F.sum("ta").over(wOff), F.lit(0L)).as("oa"),
-        F.coalesce(F.sum("tb").over(wOff), F.lit(0L)).as("ob"))
-    val cum = local
-      .join(F.broadcast(offsets), F.col("`$td.__pid`") === F.col("pid"))
-      .withColumn("td_cca", F.col("`$td.__la`") + F.col("oa"))
-      .withColumn("td_ccb", F.col("`$td.__lb`") + F.col("ob"))
-    // |n_B·C_A − n_A·C_B| exact; the max struct carries the smallest
-    // attaining value (negated x: ties on the statistic pick max(−x))
-    val av = F.abs(
-      F.col("td_nb").cast("decimal(18,0)") *
-        F.col("td_cca").cast("decimal(18,0)") -
-      F.col("td_na").cast("decimal(18,0)") *
-        F.col("td_ccb").cast("decimal(18,0)"))
-    cum.agg(
-        F.max(F.struct(av.as("av"),
-          (F.lit(0.0d) - F.col("td_x")).as("negx"))).as("td_m"),
-        F.first(F.col("td_nv")).as("td_nv"),
-        F.first(F.col("td_va")).as("td_va"),
-        F.first(F.col("td_vb")).as("td_vb"),
-        F.first(F.col("td_na")).as("td_na"),
-        F.first(F.col("td_nb")).as("td_nb"))
-      .select(
-        F.coalesce(F.col("td_nv"), F.lit(0L)).as("n_variants"),
-        F.col("td_va").as("variant_a"), F.col("td_vb").as("variant_b"),
-        F.col("td_na").as("n_a"), F.col("td_nb").as("n_b"),
-        F.when(F.col("td_nv") === 2L,
-          F.col("td_m").getField("av").cast("double") /
-            (F.col("td_na").cast("double") * F.col("td_nb").cast("double")))
-          .as("d"),
-        F.when(F.col("td_nv") === 2L,
-          F.lit(0.0d) - F.col("td_m").getField("negx")).as("d_at"))
-  }
+      valueCol: String): DataFrame =
+    ksTwoSampleImpl(df, variantCol, valueCol, keyCols = Nil)
 
   /** Per-slice [[ksTwoSample]] — distribution-shape drift PER SEGMENT
     * (did the variant change the metric's shape only in one language/
@@ -1697,93 +1610,74 @@ object Report {
     * cumulative counts from per-(partition, slice) windows plus a
     * bounded per-(partition, slice) offset relation broadcast back;
     * never a per-slice job, never an unpartitioned window. The
-    * per-slice variant roster is a #slices-row relation joined on the
+    * per-slice variant roster is a #slices-row relation broadcast on the
     * slice key. Slices with ≠2 variants answer NULL d/d_at with the
     * observed count. Output: (group, n_variants, variant_a, variant_b,
-    * n_a, n_b, d, d_at) ascending by group. Kept apart from
-    * [[ksTwoSample]]: the roster and prefix plans differ, and the global
-    * one answers n_variants 0 on empty input. */
+    * n_a, n_b, d, d_at) ascending by group. */
   def ksTwoSampleByGroup(df: DataFrame, groupCol: String,
-      variantCol: String, valueCol: String): DataFrame = {
+      variantCol: String, valueCol: String): DataFrame =
+    ksTwoSampleImpl(df, variantCol, valueCol, keyCols = Seq(groupCol))
+
+  /** `keyCols` as in [[welchTImpl]]; the global form (Nil) answers one
+    * row, n_variants 0 on empty input. */
+  private def ksTwoSampleImpl(df: DataFrame, variantCol: String,
+      valueCol: String, keyCols: Seq[String]): DataFrame = {
+    import graft.operators.ScalableRank
     import org.apache.spark.sql.expressions.Window
-    val g = F.col(groupCol).cast("string")
+    val slice = keyCols.map(F.col(_).cast("string"))
+    val s = keyCols.map(_ => F.col("td_s"))
     val v = F.col(variantCol).cast("string")
     val x = F.col(valueCol).cast("double")
-    val clean = df.where(g.isNotNull && v.isNotNull && x.isNotNull)
-      .select(g.as("td_s"), v.as("td_g"), x.as("td_x"))
-    def fld(l: Column, i: Int, f: String) =
-      F.try_element_at(l, F.lit(i)).getField(f)
-    val vl = clean.groupBy(F.col("td_s"), F.col("td_g"))
+    val clean = df.where((slice :+ v :+ x).map(_.isNotNull).reduce(_ && _))
+      .select(slice.map(_.as("td_s")) ++ Seq(v.as("td_g"), x.as("td_x")): _*)
+    val l = F.col("td_l")
+    def fld(i: Int, f: String) = F.try_element_at(l, F.lit(i)).getField(f)
+    // the variant roster, one row per slice, broadcast to every row
+    val vl = clean.groupBy(s :+ F.col("td_g"): _*)
       .agg(F.count(F.lit(1)).as("td_n"))
-      .groupBy(F.col("td_s"))
+      .groupBy(s: _*)
       .agg(F.sort_array(F.collect_list(
         F.struct(F.col("td_g"), F.col("td_n")))).as("td_l"))
-      .select(F.col("td_s"),
-        F.size(F.col("td_l")).cast("long").as("td_nv"),
-        fld(F.col("td_l"), 1, "td_g").as("td_va"),
-        fld(F.col("td_l"), 2, "td_g").as("td_vb"),
-        fld(F.col("td_l"), 1, "td_n").as("td_na"),
-        fld(F.col("td_l"), 2, "td_n").as("td_nb"))
-    val cells = clean.groupBy(F.col("td_s"), F.col("td_x"), F.col("td_g"))
-      .agg(F.count(F.lit(1)).as("td_c"))
-      .join(vl, Seq("td_s"))
-      .groupBy(F.col("td_s"), F.col("td_x"))
+      .select(s ++ Seq(F.size(l).cast("long").as("td_nv"),
+        fld(1, "td_g").as("td_va"), fld(2, "td_g").as("td_vb"),
+        fld(1, "td_n").as("td_na"), fld(2, "td_n").as("td_nb")): _*)
+    val roster = Seq("td_nv", "td_va", "td_vb", "td_na", "td_nb")
+      .map(c => F.first(F.col(c)).as(c))
+    // per-distinct-value variant counts, the roster riding along
+    val cells = (if (keyCols.isEmpty) clean.crossJoin(F.broadcast(vl))
+        else clean.join(F.broadcast(vl), Seq("td_s")))
+      .groupBy(s :+ F.col("td_x"): _*)
       .agg(
-        F.sum(F.when(F.col("td_g") === F.col("td_va"), F.col("td_c"))
-          .otherwise(0L)).as("td_ca"),
-        F.sum(F.when(F.col("td_g") === F.col("td_vb"), F.col("td_c"))
-          .otherwise(0L)).as("td_cb"),
-        F.first(F.col("td_nv")).as("td_nv"),
-        F.first(F.col("td_va")).as("td_va"),
-        F.first(F.col("td_vb")).as("td_vb"),
-        F.first(F.col("td_na")).as("td_na"),
-        F.first(F.col("td_nb")).as("td_nb"))
-    // composite two-phase prefix: slices occupy contiguous partition
-    // runs, so per-slice offsets accumulate over pid exactly like
-    // withRankByGroup's; localCheckpoint pins the sampled bounds for
-    // the two consumer branches
-    val parted = cells
-      .repartitionByRange(F.col("td_s").asc, F.col("td_x").asc)
-      .sortWithinPartitions(F.col("td_s").asc, F.col("td_x").asc)
-      .withColumn("$td.__pid", F.spark_partition_id())
-      .localCheckpoint()
-    val w = Window.partitionBy(F.col("`$td.__pid`"), F.col("td_s"))
-      .orderBy(F.col("td_x").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = parted
-      .withColumn("$td.__la", F.sum(F.col("td_ca")).over(w))
-      .withColumn("$td.__lb", F.sum(F.col("td_cb")).over(w))
-    val wOff = Window.partitionBy(F.col("td_os")).orderBy(F.col("pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local
-      .groupBy(F.col("`$td.__pid`").as("pid"), F.col("td_s").as("td_os"))
-      .agg(F.sum(F.col("td_ca")).as("ta"), F.sum(F.col("td_cb")).as("tb"))
-      .select(F.col("pid"), F.col("td_os"),
-        F.coalesce(F.sum("ta").over(wOff), F.lit(0L)).as("oa"),
-        F.coalesce(F.sum("tb").over(wOff), F.lit(0L)).as("ob"))
-    val cum = local
-      .join(F.broadcast(offsets),
-        F.col("`$td.__pid`") === F.col("pid") &&
-          F.col("td_s") === F.col("td_os"))
-      .withColumn("td_cca", F.col("`$td.__la`") + F.col("oa"))
-      .withColumn("td_ccb", F.col("`$td.__lb`") + F.col("ob"))
+        F.sum(F.when(F.col("td_g") === F.col("td_va"), 1L).otherwise(0L))
+          .as("td_ca"),
+        F.sum(F.when(F.col("td_g") === F.col("td_vb"), 1L).otherwise(0L))
+          .as("td_cb") +: roster: _*)
+    // cumulative counts C_A, C_B: the two-phase prefix over ascending
+    // values (per slice: slices occupy contiguous partition runs)
+    val order = Seq(F.col("td_x").asc)
+    val partCols = s.map(_.asc) ++ order
+    val cum = ScalableRank.withOffsets(
+      ScalableRank.pinned(cells, partCols, partCols),
+      keyCols.headOption.map(_ => "td_s"), order, Seq("a", "b").map { t =>
+        val c = F.col(s"td_c$t")
+        ScalableRank.Prefixed(s"td_cc$t", w => F.sum(c).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+          Some(F.sum(c)))
+      })
+    // |n_B·C_A − n_A·C_B| exact; the max struct carries the smallest
+    // attaining value (negated x: ties on the statistic pick max(−x))
     val av = F.abs(
       F.col("td_nb").cast("decimal(18,0)") *
         F.col("td_cca").cast("decimal(18,0)") -
       F.col("td_na").cast("decimal(18,0)") *
         F.col("td_ccb").cast("decimal(18,0)"))
-    cum.groupBy(F.col("td_s").as("group"))
+    val out = cum.groupBy(s.map(_.as("group")): _*)
       .agg(
         F.max(F.struct(av.as("av"),
           (F.lit(0.0d) - F.col("td_x")).as("negx"))).as("td_m"),
-        F.first(F.col("td_nv")).as("td_nv"),
-        F.first(F.col("td_va")).as("td_va"),
-        F.first(F.col("td_vb")).as("td_vb"),
-        F.first(F.col("td_na")).as("td_na"),
-        F.first(F.col("td_nb")).as("td_nb"))
-      .select(
-        F.col("group"),
-        F.col("td_nv").as("n_variants"),
+        roster: _*)
+      .select(s.map(_ => F.col("group")) ++ Seq(
+        F.coalesce(F.col("td_nv"), F.lit(0L)).as("n_variants"),
         F.col("td_va").as("variant_a"), F.col("td_vb").as("variant_b"),
         F.col("td_na").as("n_a"), F.col("td_nb").as("n_b"),
         F.when(F.col("td_nv") === 2L,
@@ -1791,8 +1685,8 @@ object Report {
             (F.col("td_na").cast("double") * F.col("td_nb").cast("double")))
           .as("d"),
         F.when(F.col("td_nv") === 2L,
-          F.lit(0.0d) - F.col("td_m").getField("negx")).as("d_at"))
-      .orderBy(F.col("group").asc)
+          F.lit(0.0d) - F.col("td_m").getField("negx")).as("d_at")): _*)
+    if (keyCols.isEmpty) out else out.orderBy(F.col("group").asc)
   }
 
   /** Kruskal–Wallis H — [[mannWhitneyU]] extended to K groups (one-way

@@ -243,16 +243,7 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
   }
 
   private def respondRuns(ex: HttpExchange, runs: Seq[ExecutionRecord]): Unit =
-    respondData(ex) { data =>
-      runs.foreach { r =>
-        val o = data.addObject().put("execution", r.execution)
-          .put("function", r.function).put("collection", r.collection)
-          .put("status", r.status).put("triggered_on", r.triggeredOn)
-          .put("duration_ms", r.durationMs)
-        r.error.foreach(o.put("error", _))
-        r.startedOn.foreach(o.put("started_on", _))
-      }
-    }
+    respondData(ex)(data => runs.foreach(r => r.writeTo(data.addObject())))
 
   /** A 200 `{"data": [...]}` response whose array `fill` writes. */
   private def respondData(ex: HttpExchange)(fill: ArrayNode => Unit): Unit = {

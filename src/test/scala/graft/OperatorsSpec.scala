@@ -234,6 +234,41 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
+  test("ranks keep input columns named pid and offset, with their values") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.expressions.{Window, WindowSpec}
+    val df = spark.range(0, 400).select(F.col("id"),
+        (F.col("id") % 37).as("v"), (F.col("id") % 3).as("pid"),
+        (F.col("id") % 5).as("offset"), (F.col("id") % 2).as("g"))
+      .repartition(4)
+    // id → (pid, offset, r, c?), c absent (0) where the operator has none
+    def byId(d: org.apache.spark.sql.DataFrame) = d.collect().map { r =>
+      r.getAs[Long]("id") -> (r.getAs[Long]("pid"), r.getAs[Long]("offset"),
+        r.getAs[Long]("r"),
+        if (r.schema.fieldNames.contains("c")) r.getAs[Long]("c") else 0L)
+    }.toMap
+    def want(fn: Column, w: WindowSpec) =
+      byId(df.withColumn("r", fn.over(w).cast("long")))
+    val byV = Window.orderBy("v")
+    val cases = Seq(
+      ScalableRank.withRank(df, "v", "r", "min") -> want(F.rank(), byV),
+      ScalableRank.withRank(df, "v", "r", "dense") -> want(F.dense_rank(), byV),
+      ScalableRank.withRank(df, "v", "r", "ordinal", tiebreakers = Seq("id")) ->
+        want(F.row_number(), Window.orderBy("v", "id")),
+      ScalableRank.withMinRankAndTies(df, "v", "r", "c") ->
+        byId(df.withColumn("r", F.rank().over(byV).cast("long"))
+          .withColumn("c", F.count(F.lit(1)).over(Window.partitionBy("v")))),
+      ScalableRank.withRankByGroup(df, "g", "v", "r", tiebreakers = Seq("id")) ->
+        want(F.row_number(), Window.partitionBy("g").orderBy("v", "id")),
+      graft.core.TableFrame.fromDF(df).with_row_index(Seq("v", "id"), "r").df
+        .withColumn("r", F.col("r") + 1L) ->
+        want(F.row_number(), Window.orderBy("v", "id")))
+    for (((got, exp), i) <- cases.zipWithIndex) {
+      assert(got.columns.count(Set("pid", "offset")) == 2, s"case $i: ${got.columns.toSeq}")
+      assert(byId(got) == exp, s"case $i")
+    }
+  }
+
   test("salted join matches plain join on skewed data") {
     import spark.implicits._
     // hot key: 90% of left rows share key 1

@@ -779,4 +779,44 @@ class PropertySpec extends AnyFunSuite {
           s"want ($expD, $expAt)")
     }
   }
+
+  test("min rank + tie count == keyed rank() + groupBy(key).count join, " +
+    "global and per slice, NULL keys, both orders, 1/3/8 partitions") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.{functions => F}
+    import spark.implicits._
+    val sliced: Gen[List[(Option[Int], Option[Int])]] = for {
+      n <- Gen.choose(1, 60)
+      rows <- Gen.listOfN(n, for {
+        s <- Gen.option(Gen.choose(0, 2)) // small domains → many ties
+        k <- Gen.option(Gen.choose(-5, 5))
+      } yield (s, k))
+    } yield rows
+    // NULL keys and NULL slice keys in every sample
+    val nulls = List((None, None), (None, Some(1)), (Some(0), None))
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try for {
+      parts <- Seq(1, 3, 8)
+      (rows, si) <- samples(sliced, n = 3).zipWithIndex
+      desc <- Seq(false, true)
+      group <- Seq(None, Some("s"))
+    } {
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      val df = (rows ++ nulls).zipWithIndex
+        .map { case ((s, k), i) => (i.toLong, s, k) }
+        .toDF("id", "s", "k").repartition(5)
+      val got = ScalableRank.minRankAndTies(df, group, "k", "r", "c", desc)
+        .select("id", "r", "c").as[(Long, Long, Long)].collect().sorted.toSeq
+      val keys = group.toSeq :+ "k"
+      val counts = df.groupBy(keys.map(c => F.col(c).as(s"e_$c")): _*)
+        .agg(F.count(F.lit(1)).as("c"))
+      val w = Window.partitionBy(group.toSeq.map(F.col): _*)
+        .orderBy(if (desc) F.col("k").desc else F.col("k").asc)
+      val want = df.withColumn("r", F.rank().over(w).cast("long"))
+        .join(counts, keys.map(c => F.col(c) <=> F.col(s"e_$c")).reduce(_ && _))
+        .select("id", "r", "c").as[(Long, Long, Long)].collect().sorted.toSeq
+      assert(got == want,
+        s"partitions=$parts sample=$si desc=$desc group=$group")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
 }

@@ -250,6 +250,31 @@ class StoreApiSpec extends AnyFunSuite {
     }
   }
 
+  test("execution journal: a torn last line is skipped, endpoints answer 200") {
+    import graft.flow.{ExecutionLog, ExecutionRecord}
+    val store = freshStore()
+    val log = java.nio.file.Paths.get(store.root, "_executions", "log.jsonl")
+    Files.createDirectories(log.getParent)
+    val done = ExecutionRecord("e1", "f", "c", "done", 5L, 7L, None, Some(6L))
+    ExecutionLog.append(store.root, done)
+    // an append cut short: no closing brace, no newline
+    Files.writeString(log, """{"execution":"e2","function":"f","coll""",
+      java.nio.file.StandardOpenOption.APPEND)
+    assert(ExecutionLog.read(store.root) == Seq(done))
+    // the journal line keeps its field order, byte for byte
+    val line = """{"execution":"e1","function":"f","collection":"c","status":"done",""" +
+      """"triggered_on":5,"duration_ms":7,"started_on":6}"""
+    assert(Files.readString(log).startsWith(line + "\n"))
+    withApi(store) { port =>
+      for (path <- Seq("/function_runs", "/executions", "/collections/c/functions/f/history")) {
+        val r = get(port, path)
+        assert(r.statusCode() == 200, path)
+        assert(json(r).get("data").size() == 1, path)
+      }
+      assert(json(get(port, "/function_runs")).get("data").get(0).toString == line)
+    }
+  }
+
   test("path traversal in URL segments is rejected, store left intact") {
     import spark.implicits._
     val store = freshStore()
