@@ -1426,9 +1426,8 @@ object Report {
     * (min-ranks — the identity 2U_A = Σ2R_A − n_A(n_A+1) needs
     * tie-stable min ranks, the r16 Mann-Whitney lesson — and tie counts
     * from the same window pass), then the bounded per-slice 2-struct
-    * fold. Slices
-    * with ≠2 variants answer NULL u_a/delta/magnitude with the observed
-    * counts. Output: (group, n_variants, variant_a, variant_b, n_a,
+    * fold. Slices with ≠2 variants answer NULL u_a/delta/magnitude with
+    * the observed counts. Output: (group, n_variants, variant_a, variant_b, n_a,
     * n_b, u_a, delta, magnitude) ascending by group. */
   def cliffsDeltaByGroup(df: DataFrame, groupCol: String,
       variantCol: String, valueCol: String): DataFrame =
