@@ -1,16 +1,12 @@
 package graft.flow
 
-import java.nio.ByteBuffer
-import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.nio.file.StandardOpenOption.{APPEND, CREATE, WRITE}
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.immutable.VectorMap
 import scala.collection.mutable
-import scala.util.Using
 
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
@@ -18,7 +14,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftshim.Bridge
 
 import graft.core.{SysCtx, TableFrame}
-import graft.store.{TableRef, TableStore}
+import graft.store.{MetaFiles, TableRef, TableStore}
 
 /** The three function roles (reference:
   * client/td-sdk/tabsdata/_decorators.py:42,102,156). */
@@ -362,32 +358,23 @@ object ExecutionRecord {
 object ExecutionLog {
   private def path(root: String) = Paths.get(root, "_executions", "log.jsonl")
 
-  /** Runs of one trigger finish concurrently, so appends are serialized
-    * within the process and each line goes out in one write. */
-  def append(root: String, r: ExecutionRecord): Unit = synchronized {
-    val p = path(root)
-    Files.createDirectories(p.getParent)
-    val mapper = graft.store.TableStore.jsonMapper
-    val line = ByteBuffer.wrap((mapper.writeValueAsString(r.writeTo(mapper.createObjectNode())) +
-      "\n").getBytes(StandardCharsets.UTF_8))
-    Using.resource(FileChannel.open(p, CREATE, WRITE, APPEND)) { ch =>
-      while (line.hasRemaining) ch.write(line)
-    }
+  // one incremental index per journal, shared by every engine and server
+  // of the process: a read parses only the lines appended since the last.
+  // It holds every record read, ~0.3 KB each plus its error text.
+  private val index = new MetaFiles.Indexed[Vector[ExecutionRecord]](Vector.empty,
+    (rs, line) => rs :+ ExecutionRecord.from(TableStore.jsonMapper.readTree(line)))
+
+  /** Runs of one trigger finish concurrently; each line goes out in one
+    * serialized write ([[MetaFiles.append]]). */
+  def append(root: String, r: ExecutionRecord): Unit = {
+    val mapper = TableStore.jsonMapper
+    MetaFiles.append(path(root), Seq(mapper.writeValueAsString(r.writeTo(mapper.createObjectNode()))))
   }
 
-  /** The complete lines' records. An unterminated last line (an append
-    * in progress, or one cut short by a crash) is skipped, as LogIndex
-    * skips one in a table's `_log.jsonl`. */
-  def read(root: String): Seq[ExecutionRecord] = {
-    val p = path(root)
-    if (!Files.exists(p)) Seq.empty
-    else {
-      val text = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      text.substring(0, text.lastIndexOf('\n') + 1).split('\n').toSeq
-        .filter(_.nonEmpty)
-        .map(line => ExecutionRecord.from(graft.store.TableStore.jsonMapper.readTree(line)))
-    }
-  }
+  /** The complete lines' records, read through the journal's LogIndex:
+    * an unterminated last line (an append in progress, or one cut short by
+    * a crash) is skipped, and a replaced journal is re-read whole. */
+  def read(root: String): Seq[ExecutionRecord] = index.read(path(root))
 }
 
 /** Per-function offset state: a tiny JSON map in the store, written by
@@ -401,8 +388,7 @@ object Offsets {
     else {
       // real JSON parse (same reasoning as the store's version log): a
       // regex scrape breaks on escaped quotes in offset values
-      val n = graft.store.TableStore.jsonMapper
-        .readTree(Files.readString(p, StandardCharsets.UTF_8))
+      val n = TableStore.jsonMapper.readTree(Files.readString(p, StandardCharsets.UTF_8))
       val it = n.fields()
       val b = Map.newBuilder[String, String]
       while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText() }
@@ -412,13 +398,8 @@ object Offsets {
 
   def save(root: String, fn: String, offsets: Map[String, String]): Unit = {
     if (offsets.isEmpty) return
-    val p = path(root, fn)
-    Files.createDirectories(p.getParent)
-    val tmp = p.getParent.resolve(s".${fn}.tmp")
-    val node = graft.store.TableStore.jsonMapper.createObjectNode()
+    val node = TableStore.jsonMapper.createObjectNode()
     offsets.toSeq.sortBy(_._1).foreach { case (k, v) => node.put(k, v) }
-    val body = graft.store.TableStore.jsonMapper.writeValueAsString(node)
-    Files.writeString(tmp, body, StandardCharsets.UTF_8)
-    Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    MetaFiles.publish(path(root, fn), TableStore.jsonMapper.writeValueAsString(node))
   }
 }

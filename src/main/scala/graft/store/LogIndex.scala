@@ -3,15 +3,22 @@ package graft.store
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, NoSuchFileException, Path, StandardOpenOption}
+import java.nio.file.{Files, NoSuchFileException, Path, StandardCopyOption, StandardOpenOption}
 import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.{ConcurrentHashMap, ThreadLocalRandom}
+
+import scala.util.Using
 
 /** Incremental reader of one append-only, newline-terminated text file
-  * (a table's `_log.jsonl` or `_pruned.jsonl`), folding each line into an
-  * immutable state `S`.
+  * (a table's `_log.jsonl` or `_pruned.jsonl`, or the store's execution
+  * journal `_executions/log.jsonl`), folding each line into an immutable
+  * state `S`. Writers add lines only through [[MetaFiles.append]]: one
+  * write per batch of lines, serialized within the process, so the
+  * process's appends never interleave bytes, however long a line.
   *
   * Each [[read]] stats the file once and, when it is not empty, re-reads
-  * its first line: both files start with a unique version id, so a first
+  * its first line: each of these files starts with a line no other file
+  * starts with (a unique version id, or a run's execution id), so a first
   * line that differs from the cached one means the file was replaced,
   * even when a reused inode gives it the old file key and the same size.
   * Unchanged → the cached state. Growth → only the bytes past the last
@@ -75,5 +82,57 @@ private[store] final class LogIndex[S](path: Path, empty: S, add: (S, String) =>
     val buf = ByteBuffer.allocate(n)
     while (buf.hasRemaining && ch.read(buf, pos + buf.position()) > 0) ()
     java.util.Arrays.copyOf(buf.array(), buf.position())
+  }
+}
+
+/** The one writer of the store's metadata files, beside their one reader
+  * ([[LogIndex]]):
+  *   - the append-only logs (`<table>/_log.jsonl`, `<table>/_pruned.jsonl`,
+  *     `_executions/log.jsonl`) grow only by [[append]];
+  *   - the small replace-whole files (`_transactions/<txid>.json`,
+  *     `_offsets/<fn>.json`) change only by [[publish]]. */
+private[graft] object MetaFiles {
+  /** Appends `lines`, each terminated by a newline, in one write. Appends
+    * are serialized within the process, so concurrent appenders never
+    * interleave bytes, whatever a line's length (a buffered writer splits a
+    * long line into several writes). */
+  def append(p: Path, lines: Seq[String]): Unit = {
+    Files.createDirectories(p.getParent)
+    val buf = ByteBuffer.wrap(lines.map(_ + "\n").mkString.getBytes(StandardCharsets.UTF_8))
+    synchronized {
+      Using.resource(FileChannel.open(p, StandardOpenOption.CREATE,
+          StandardOpenOption.WRITE, StandardOpenOption.APPEND)) { ch =>
+        while (buf.hasRemaining) ch.write(buf)
+      }
+    }
+  }
+
+  /** Replaces `p` with `body` in one atomic rename: readers see the old
+    * file or the new one, never a partial write. The temp file sits in the
+    * same directory (a rename does not cross file systems) under a name of
+    * its own, so concurrent publishes of one file never share it. */
+  def publish(p: Path, body: String): Unit = {
+    Files.createDirectories(p.getParent)
+    val tmp = p.resolveSibling(
+      s".${p.getFileName}.${java.lang.Long.toHexString(ThreadLocalRandom.current().nextLong())}.tmp")
+    Files.writeString(tmp, body, StandardCharsets.UTF_8)
+    Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** One [[LogIndex]] per file path, made on the first read of an existing
+    * file: probes of absent files (e.g. HTTP lookups of arbitrary table
+    * names) do not grow the map. */
+  final class Indexed[S](empty: S, add: (S, String) => S) {
+    private val indexes = new ConcurrentHashMap[Path, LogIndex[S]]()
+
+    def read(p: Path): S = {
+      val ix = indexes.get(p)
+      if (ix != null) ix.read()
+      else if (!Files.exists(p)) empty
+      else indexes.computeIfAbsent(p, new LogIndex(_, empty, add)).read()
+    }
+
+    /** Forgets `p`'s index (its file was deleted). */
+    def drop(p: Path): Unit = indexes.remove(p)
   }
 }

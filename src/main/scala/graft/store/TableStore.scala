@@ -61,9 +61,16 @@ final case class VersionEntry(
   * rename (HDFS/ABFS) or a small DB, same as every table-format metadata
   * layer.
   *
+  * Metadata files: the logs and markers are read and written only through
+  * [[MetaFiles]]. Lines are appended one write per batch of lines, and
+  * appends are serialized within the process, so concurrent writers of one
+  * table (restores, runs of two triggers) never interleave a long line.
+  *
   * Metadata index: each instance keeps an in-memory index per table, so a
   * read pays for the log lines appended since its previous read, not for
-  * the whole history. The index relies on this contract:
+  * the whole history (the execution journal, `_executions/log.jsonl`, is
+  * the third indexed file; see [[graft.flow.ExecutionLog]]). The index
+  * relies on this contract:
   *   - `_log.jsonl` and `_pruned.jsonl` are append-only, and each starts
   *     with a line carrying a unique version id. A file that is replaced
   *     (new file key or new first line, so a reused inode is caught) or
@@ -92,26 +99,14 @@ final class TableStore(val root: String, spark: SparkSession) {
   def newId(): String = UuidV7.next(ThreadLocalRandom.current())
 
   // ---- metadata log ----
-  // per-table incremental indexes over `_log.jsonl` / `_pruned.jsonl`,
-  // keyed by file path (see the class doc for the contract)
-  private val logIndexes =
-    new java.util.concurrent.ConcurrentHashMap[Path, LogIndex[Vector[VersionEntry]]]()
-  private val prunedIndexes =
-    new java.util.concurrent.ConcurrentHashMap[Path, LogIndex[Set[String]]]()
-
-  private def indexed[S](indexes: java.util.concurrent.ConcurrentHashMap[Path, LogIndex[S]],
-      p: Path, empty: S, add: (S, String) => S): S = {
-    // no index for a file that does not exist: probes of absent tables
-    // (e.g. HTTP lookups of arbitrary names) must not grow the map
-    val ix = indexes.get(p)
-    if (ix != null) ix.read()
-    else if (!Files.exists(p)) empty
-    else indexes.computeIfAbsent(p, _ => new LogIndex(p, empty, add)).read()
-  }
+  // per-table incremental indexes over `_log.jsonl` / `_pruned.jsonl`
+  // (see the class doc for the contract)
+  private val logIndexes = new MetaFiles.Indexed[Vector[VersionEntry]](Vector.empty,
+    (es, line) => es :+ parseEntry(line))
+  private val prunedIndexes = new MetaFiles.Indexed[Set[String]](Set.empty, _ + _)
 
   private def readLog(coll: String, table: String): Vector[VersionEntry] =
-    indexed(logIndexes, logPath(coll, table), Vector.empty[VersionEntry],
-      (es: Vector[VersionEntry], line: String) => es :+ parseEntry(line))
+    logIndexes.read(logPath(coll, table))
 
   // real JSON parse/render (Jackson ships with Spark) — a regex scrape
   // would mis-split the moment any string field carries an escaped quote
@@ -143,12 +138,8 @@ final class TableStore(val root: String, spark: SparkSession) {
     TableStore.jsonMapper.writeValueAsString(n)
   }
 
-  private def appendLog(coll: String, table: String, e: VersionEntry): Unit = {
-    Files.createDirectories(tableDir(coll, table))
-    Files.writeString(logPath(coll, table), renderEntry(e) + "\n",
-      StandardCharsets.UTF_8,
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-  }
+  private def appendLog(coll: String, table: String, e: VersionEntry): Unit =
+    MetaFiles.append(logPath(coll, table), Seq(renderEntry(e)))
 
   // ---- transactions ----
   private def txnMarker(txid: String): Path = txnDir.resolve(s"$txid.json")
@@ -168,10 +159,7 @@ final class TableStore(val root: String, spark: SparkSession) {
         if (Files.exists(from)) Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
       }
     }
-    Files.createDirectories(txnDir)
-    val tmp = txnDir.resolve(s".$txid.tmp")
-    Files.writeString(tmp, s"""{"txid":"$txid","status":"committed"}""")
-    Files.move(tmp, txnMarker(txid), StandardCopyOption.ATOMIC_MOVE)
+    MetaFiles.publish(txnMarker(txid), s"""{"txid":"$txid","status":"committed"}""")
     committed.add(txid)
   }
   def isCommitted(txid: String): Boolean = committed.contains(txid) || {
@@ -180,8 +168,9 @@ final class TableStore(val root: String, spark: SparkSession) {
     c
   }
 
-  /** Committed transaction ids, newest last (reference: apiserver.py
-    * `/transactions` list). */
+  /** Committed transaction ids, sorted by id (reference: apiserver.py
+    * `/transactions` list). That is commit order only for the UUIDv7 ids of
+    * [[SysCtx.fresh]]; [[writeIdempotent]]'s md5-hex ids sort by hash. */
   def listTransactions(): Seq[String] = {
     if (!Files.exists(txnDir)) Seq.empty
     else Using.resource(Files.list(txnDir))(_.iterator().asScala
@@ -217,8 +206,7 @@ final class TableStore(val root: String, spark: SparkSession) {
     tableDir(coll, table).resolve("_pruned.jsonl")
 
   private def prunedIds(coll: String, table: String): Set[String] =
-    indexed(prunedIndexes, prunedPath(coll, table), Set.empty[String],
-      (ids: Set[String], line: String) => ids + line)
+    prunedIndexes.read(prunedPath(coll, table))
 
   /** Retention vacuum: physically delete all but the newest `keepLast`
     * committed versions of a table — the storage-lifecycle knob without
@@ -232,11 +220,8 @@ final class TableStore(val root: String, spark: SparkSession) {
     * Tombstone first, then data deletion — a crash between the two leaves
     * an invisible orphan dir (re-vacuum removes it), never a visible
     * version with missing data. Returns the pruned version ids. */
-  def vacuum(coll: String, table: String, keepLast: Int): Seq[String] = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val vs = versions(coll, table)
-    pruneVersions(coll, table, vs.dropRight(keepLast))
-  }
+  def vacuum(coll: String, table: String, keepLast: Int): Seq[String] =
+    vacuumOlderThan(coll, table, Long.MaxValue, keepLast)
 
   /** Age-based retention: prune versions stamped BEFORE `cutoffMs` (epoch
     * ms, exclusive), always keeping the newest `keepLast` regardless of
@@ -245,35 +230,21 @@ final class TableStore(val root: String, spark: SparkSession) {
   def vacuumOlderThan(coll: String, table: String, cutoffMs: Long,
       keepLast: Int = 1): Seq[String] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val vs = versions(coll, table)
-    pruneVersions(coll, table,
-      vs.dropRight(keepLast).filter(_.timestampMs < cutoffMs))
-  }
-
-  private def pruneVersions(coll: String, table: String,
-      prune: Seq[VersionEntry]): Seq[String] = {
-    if (prune.nonEmpty) {
-      Files.writeString(prunedPath(coll, table),
-        prune.map(_.id + "\n").mkString, StandardCharsets.UTF_8,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
+    val prune = versions(coll, table).dropRight(keepLast)
+      .filter(_.timestampMs < cutoffMs).map(_.id)
+    if (prune.nonEmpty) MetaFiles.append(prunedPath(coll, table), prune)
     // a data dir stays alive while ANY surviving version reads it —
     // a [[restore]] entry references an OLDER id's directory, and
     // pruning that id must not strand the restored HEAD (the id stops
     // RESOLVING the moment it is tombstoned; only its bytes survive)
     val referenced = versions(coll, table).map(_.dataRef).toSet
-    prune.foreach { e =>
-      val dir = tableDir(coll, table).resolve(e.id)
-      if (!referenced(e.id) && Files.exists(dir)) TableStore.deleteTree(dir)
-    }
-    // sweep: a crash between tombstone and deletion leaves orphan dirs —
-    // any previously tombstoned id still on disk (and unreferenced) goes
+    // every tombstoned id still on disk and unreferenced goes: the ids
+    // just pruned, and those a crash between tombstone and deletion left
     prunedIds(coll, table).foreach { id =>
       val dir = tableDir(coll, table).resolve(id)
       if (!referenced(id) && Files.exists(dir)) TableStore.deleteTree(dir)
     }
-    prune.map(_.id)
+    prune
   }
 
   // ---- write path ----
@@ -480,7 +451,7 @@ final class TableStore(val root: String, spark: SparkSession) {
     * the restored relation is `@HEAD`, the mistaken publish is
     * `@HEAD~1`. O(bytes) cost: zero. [[vacuum]] keeps a data directory
     * alive while ANY surviving version references it (see
-    * [[pruneVersions]]), so restoring then pruning the source id never
+    * [[vacuumOlderThan]]), so restoring then pruning the source id never
     * strands the new HEAD. Returns None when the target already IS
     * HEAD's data (a no-op restore). */
   def restore(coll: String, table: String, ref: String): Option[VersionEntry] = {
@@ -707,8 +678,8 @@ final class TableStore(val root: String, spark: SparkSession) {
     if (!Files.exists(d)) false
     else {
       TableStore.deleteTree(d)
-      logIndexes.remove(logPath(coll, table))
-      prunedIndexes.remove(prunedPath(coll, table))
+      logIndexes.drop(logPath(coll, table))
+      prunedIndexes.drop(prunedPath(coll, table))
       true
     }
   }
@@ -761,7 +732,7 @@ final class TableStore(val root: String, spark: SparkSession) {
           .filter(Files.isDirectory(_)).map(_.getFileName.toString)
           .filterNot(n => n.startsWith(".") || n.startsWith("_")).toSeq)
       // a tombstoned id's directory is LEGITIMATE residue while a
-      // surviving restore entry reads it (see pruneVersions)
+      // surviving restore entry reads it (see vacuumOlderThan)
       val referenced = versions(coll, table).map(_.dataRef).toSet
       onDisk.foreach { id =>
         if (!byId.contains(id))

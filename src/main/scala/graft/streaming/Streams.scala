@@ -381,20 +381,6 @@ object Streams {
         F.col("session_window.start").as("session_start"),
         F.col("last_ts"), F.col("n_events")): _*)
 
-  /** Run a (bounded) streaming query into an in-memory table and block until
-    * all available input is processed — the micro-batch harness used by the
-    * local tests and the pub/sub continuous mode. */
-  def runToMemory(df: DataFrame, name: String, outputMode: String = "append"): StreamingQuery = {
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory(s"graft-ckpt-$name").toString)
-      .start()
-    q.processAllAvailable()
-    q
-  }
-
   /** Continuous pub/sub: stream a source table directory into a sink
     * directory as parquet micro-batches. */
   def pipeToParquet(df: DataFrame, outDir: String, checkpointDir: String): StreamingQuery =

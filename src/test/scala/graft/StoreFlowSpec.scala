@@ -547,6 +547,28 @@ class StoreFlowSpec extends AnyFunSuite {
     assert(rs.tail.forall(r => r.error.contains(err) && r.startedOn.contains(3L)))
   }
 
+  test("execution journal: a re-created journal and another engine's runs read back") {
+    import graft.flow.{ExecutionLog, ExecutionRecord}
+    import spark.implicits._
+    val store = freshStore()
+    val log = java.nio.file.Paths.get(store.root, "_executions", "log.jsonl")
+    val old = Seq("f", "g").map(ExecutionRecord("e1", _, "c", "done", 5L, 7L, None, Some(6L)))
+    old.foreach(ExecutionLog.append(store.root, _))
+    assert(ExecutionLog.read(store.root) == old)
+    Files.delete(log)
+    assert(ExecutionLog.read(store.root).isEmpty)
+    val fresh = ExecutionRecord("e2", "h", "c", "failed", 8L, 9L, Some("boom"), Some(8L))
+    ExecutionLog.append(store.root, fresh)
+    assert(ExecutionLog.read(store.root) == Seq(fresh))
+    // a second engine (its own store instance) on the same root
+    val engine = new FlowEngine(new TableStore(store.root, spark), spark)
+    engine.publisher("p", "c", Seq("t")) { _ => Seq(TableFrame.fromRaw(Seq(1).toDF("x"))) }
+    engine.trigger("p")
+    val rs = ExecutionLog.read(store.root)
+    assert(rs.head == fresh)
+    assert(rs.tail.map(r => (r.function, r.status)) == Seq(("p", "done")))
+  }
+
   test("flow: offsets persist between runs (incremental publisher)") {
     val store = freshStore()
     val engine = new FlowEngine(store, spark)
@@ -912,6 +934,30 @@ class StoreFlowSpec extends AnyFunSuite {
     assert(store.fsck(verifyCounts = true).isEmpty)
     // a bad target fails loudly
     intercept[IllegalArgumentException](store.restore("c", "t", "HEAD~9"))
+  }
+
+  test("restore: concurrent restores of a wide table keep its log readable") {
+    val store = freshStore()
+    val wide = spark.range(3).select((0 until 120).map(i => (F.col("id") + i).as(s"c$i")): _*)
+    store.write("c", "t", wide)
+    store.write("c", "t", wide)
+    // the staged schema makes each log line longer than one buffered write
+    val log = java.nio.file.Paths.get(store.root, "c", "t", "_log.jsonl")
+    assert(Files.readAllLines(log).get(0).length > 8192)
+    val restored = new java.util.concurrent.atomic.AtomicInteger
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (0 until 4).map { _ =>
+      val t = new Thread(() => (0 until 25).foreach { _ =>
+        try { if (store.restore("c", "t", "HEAD~1").isDefined) restored.incrementAndGet() }
+        catch { case e: Throwable => errors.add(e) }
+      })
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    assert(errors.isEmpty,
+      s"${errors.size} restores threw, first: ${String.valueOf(errors.peek()).take(120)}")
+    assert(new TableStore(store.root, spark).versions("c", "t").size == 2 + restored.get)
   }
 
   test("compact: fewer files, verbatim rows, old layout addressable, loud guards") {

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.Streams
+import graft.streaming.{StreamStage, Streams}
 
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -41,9 +41,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = Streams.readParquetStream(spark, dir.toString, schema)
     val dist = Streams.windowedDistribution(
       stream, "ts", "value", "1 hour", "1 hour", 0.0, 512.0, 64)
-    val q = Streams.runToMemory(dist, "dist_bins", outputMode = "complete")
-    q.stop()
-    val got = spark.table("dist_bins")
+    val got = StreamStage.runToMemory(dist, "dist_bins", "complete")
       .select(F.unix_timestamp(F.col("window.start")).as("h"), F.col("bin"), F.col("n"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val expect = batch.where(F.col("value").isNotNull)
@@ -90,11 +88,10 @@ class StreamingSpec extends AnyFunSuite {
     val schema = spark.read.parquet(dir.toString).schema
     val stream = Streams.readParquetStream(spark, dir.toString, schema)
     val wd = Streams.windowedDistinct(stream, "ts", "user_id", "1 hour", "1 hour")
-    val q = Streams.runToMemory(wd, "wdist_hll", outputMode = "complete")
-    q.stop()
+    val sink = StreamStage.runToMemory(wd, "wdist_hll", "complete")
     // per-hour estimates equal the batch HLL over the same hour slices
     // EXACTLY (same DataSketches algebra, order-insensitive updates)
-    val got = spark.table("wdist_hll")
+    val got = sink
       .select(F.unix_timestamp(F.col("window.start")).as("h"), F.col("estimate"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expect = graft.pipeline.Report.distinctSketch(
@@ -105,7 +102,7 @@ class StreamingSpec extends AnyFunSuite {
     // ...and the per-window binary sketches union to the whole-corpus
     // estimate with no rescan — live windows join batch history
     val unioned = graft.pipeline.Report.mergeDistinctSketches(
-      spark.table("wdist_hll").select("sketch"))
+      sink.select("sketch"))
     val whole = batch
       .agg(F.expr("hll_sketch_estimate(hll_sketch_agg(user_id, 12))"))
       .head().getLong(0)
@@ -120,11 +117,10 @@ class StreamingSpec extends AnyFunSuite {
     val stream = Streams.readParquetStream(spark, dir.toString, schema)
     val wk = Streams.windowedKmv(stream, "ts", "user_id", "1 hour",
       "1 hour", k = 8)
-    val q = Streams.runToMemory(wk, "wkmv", outputMode = "complete")
-    q.stop()
+    val sink = StreamStage.runToMemory(wk, "wkmv", "complete")
     // determinism: every streamed window's entry list equals the batch
     // bottom-8 of that hour's rows BIT-exactly
-    val got = spark.table("wkmv")
+    val got = sink
       .select(F.unix_timestamp(F.col("window.start")).as("h"),
         F.col("entries"))
       .collect()
@@ -146,7 +142,7 @@ class StreamingSpec extends AnyFunSuite {
     // whole-corpus sketch (any global bottom-k hash ranks in the top-k
     // of its own window)
     val merged = graft.pipeline.Sketches.mergeKmvSketches(
-      spark.table("wkmv").select("entries", "k"))
+      sink.select("entries", "k"))
     val whole = graft.pipeline.Sketches.kmvSketch(batch, "user_id", 8)
     assert(merged.collect().toSeq == whole.collect().toSeq)
   }
@@ -160,13 +156,12 @@ class StreamingSpec extends AnyFunSuite {
     val (m, k) = (1024, 3)
     val wb = Streams.windowedBloom(stream, "ts", "user_id", "1 hour",
       "1 hour", m, k)
-    val q = Streams.runToMemory(wb, "wbloom", outputMode = "complete")
-    q.stop()
+    val sink = StreamStage.runToMemory(wb, "wbloom", "complete")
     // per-hour determinism: the streamed sparse words assemble into the
     // exact batch filter of that hour's rows
     val hCol = F.unix_timestamp(F.col("window.start")).as("h")
     val streamedPerHour = graft.pipeline.Sketches.cellsToBloom(
-      spark.table("wbloom").select(hCol, F.col("td_w"), F.col("td_bits")),
+      sink.select(hCol, F.col("td_w"), F.col("td_bits")),
       m, k, groupCols = Seq("h"))
     val hourly = batch.withColumn("h",
       F.unix_timestamp(F.date_trunc("hour", F.col("ts"))))
@@ -194,9 +189,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = Streams.readParquetStream(spark, dir.toString, schema)
     val cm = Streams.windowedConfusion(stream, "ts", "td_score", "td_label",
       "1 hour", "1 hour", 0.4)
-    val q = Streams.runToMemory(cm, "wcm", outputMode = "complete")
-    q.stop()
-    val got = spark.table("wcm")
+    val got = StreamStage.runToMemory(cm, "wcm", "complete")
       .select(F.unix_timestamp(F.col("window.start")).as("h"),
         F.col("tp"), F.col("fp"), F.col("tn"), F.col("fn"),
         F.col("precision"), F.col("recall"), F.col("f1"))
@@ -222,9 +215,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = Streams.readParquetStream(spark, dir.toString, schema)
     val cal = Streams.windowedCalibration(stream, "ts", "td_score",
       "td_label", "1 hour", "1 hour", bins = 10)
-    val q = Streams.runToMemory(cal, "wcal", outputMode = "complete")
-    q.stop()
-    val got = spark.table("wcal")
+    val got = StreamStage.runToMemory(cal, "wcal", "complete")
       .select(F.unix_timestamp(F.col("window.start")).as("h"),
         F.col("bin"), F.col("n"), F.col("n_pos"),
         F.col("frac_pos"), F.col("mean_score"))
@@ -248,12 +239,11 @@ class StreamingSpec extends AnyFunSuite {
     val schema = spark.read.parquet(dir.toString).schema
     val stream = Streams.readParquetStream(spark, dir.toString, schema)
     val wm = Streams.windowedMoments(stream, "ts", "value", "1 hour", "1 hour")
-    val q = Streams.runToMemory(wm, "wmom", outputMode = "complete")
-    q.stop()
+    val sink = StreamStage.runToMemory(wm, "wmom", "complete")
     // the streamed window rows ARE batch-encoding sketch rows: merging
     // them all equals the whole-corpus batch sketch bit-exactly
     val mergedAll = graft.pipeline.Report.mergeMomentSketches(
-      spark.table("wmom").drop("window")).head()
+      sink.drop("window")).head()
     val whole = graft.pipeline.Report.momentSketch(batch, "value").head()
     assert(mergedAll.toSeq == whole.toSeq,
       s"streamed-union vs batch: $mergedAll vs $whole")
@@ -272,9 +262,7 @@ class StreamingSpec extends AnyFunSuite {
     val cells = Streams.windowedQuantileSketch(
       stream, "ts", "value", "1 hour", "1 hour", 1.0, 1024.0, 64,
       scale = "log")
-    val q = Streams.runToMemory(cells, "wqs", outputMode = "complete")
-    q.stop()
-    val rows = spark.table("wqs")
+    val rows = StreamStage.runToMemory(cells, "wqs", "complete")
       .select(F.unix_timestamp(F.col("window.start")).as("h"),
         F.col("bin"), F.col("n"))
     val perWindow = graft.pipeline.Report.binsToSketch(rows,
@@ -292,11 +280,10 @@ class StreamingSpec extends AnyFunSuite {
     val linCells = Streams.windowedQuantileSketch(
       Streams.readParquetStream(spark, dir.toString, schema),
       "ts", "value", "1 hour", "1 hour", 0.0, 512.0, 64)
-    val q2 = Streams.runToMemory(linCells, "wqs_lin", outputMode = "complete")
-    q2.stop()
+    val sink2 = StreamStage.runToMemory(linCells, "wqs_lin", "complete")
     val linMerged = graft.pipeline.Report.mergeQuantileSketches(
       graft.pipeline.Report.binsToSketch(
-        spark.table("wqs_lin")
+        sink2
           .select(F.unix_timestamp(F.col("window.start")).as("h"),
             F.col("bin"), F.col("n")),
         0.0, 512.0, 64, groupCols = Seq("h"))).head()
@@ -314,10 +301,9 @@ class StreamingSpec extends AnyFunSuite {
     val stream = Streams.readParquetStream(spark, dir.toString, schema)
     val agg = Streams.windowedAgg(stream, "ts", "value",
       "1 hour", "1 hour", "10 minutes", "event_type")
-    val q = Streams.runToMemory(agg, "win_counts", outputMode = "append")
-    q.stop()
+    val sink = StreamStage.runToMemory(agg, "win_counts", "append")
 
-    val got = spark.table("win_counts")
+    val got = sink
       .select(F.col("window.start").as("ws"), F.col("event_type"), F.col("n"))
     val expected = batch
       .groupBy(F.window(F.col("ts"), "1 hour").as("window"), F.col("event_type"))
@@ -349,9 +335,7 @@ class StreamingSpec extends AnyFunSuite {
       F.col("c_user") === F.col("v_user"),
       "c_ts", "v_ts", before = "12 HOURS", after = "0 SECONDS",
       watermark = "60 days")
-    val q = Streams.runToMemory(j.select("click_id", "view_id"), "ssj_out")
-    q.stop()
-    val got = spark.table("ssj_out").collect()
+    val got = StreamStage.runToMemory(j.select("click_id", "view_id"), "ssj_out", "append").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exp = batch.where(F.col("event_type") === "click")
       .select(F.col("user_id").as("u"), F.col("ts").as("cts"), F.col("event_id").as("cid"))
@@ -406,9 +390,8 @@ class StreamingSpec extends AnyFunSuite {
         F.col("c_user") === F.col("v_user"),
         "c_ts", "v_ts", before = "12 HOURS", after = "0 SECONDS",
         watermark = "1 minute", joinType = joinType)
-      val q = Streams.runToMemory(j.select("click_id", "view_id"), s"oij_$joinType")
-      q.stop()
-      spark.table(s"oij_$joinType").collect()
+      val sink = StreamStage.runToMemory(j.select("click_id", "view_id"), s"oij_$joinType", "append")
+      sink.collect()
         .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
           Option(r.get(1)).map(_.asInstanceOf[Long])))
         .filter(p => !p._1.contains(999L) && !p._2.contains(998L)).toSet
@@ -439,8 +422,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val stream = Streams.readParquetStream(spark, dir.toString, schema)
     val sess = Streams.sessionAgg(stream, "ts", "30 minutes", "1 hour", "user_id")
-    val q = Streams.runToMemory(sess, "sess_stream", outputMode = "append")
-    q.stop()
+    val sink = StreamStage.runToMemory(sess, "sess_stream", "append")
 
     val expected = batch
       .groupBy(F.col("user_id"), F.session_window(F.col("ts"), "30 minutes"))
@@ -449,7 +431,7 @@ class StreamingSpec extends AnyFunSuite {
         F.col("last_ts"), F.col("n_events"))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3))).toSet
-    val got = rows(spark.table("sess_stream"))
+    val got = rows(sink)
     val exp = rows(expected)
     // append mode finalizes sessions as the watermark passes; everything
     // emitted must be a batch session, and nearly all sessions must emit
@@ -467,10 +449,9 @@ class StreamingSpec extends AnyFunSuite {
     store.write("c", "t", Seq((3L, "c")).toDF("id", "v"))
     val stream = Streams.tableStream(store, "c", "t")
       .select("id", "v")
-    val q = Streams.runToMemory(stream, "store_stream")
-    q.stop()
+    val sink = StreamStage.runToMemory(stream, "store_stream", "append")
     // both committed versions' rows arrive through the stream
-    assert(spark.table("store_stream").count() == 3)
+    assert(sink.count() == 3)
   }
 
   test("streaming decontamination flags equal the batch computation exactly") {
@@ -483,11 +464,10 @@ class StreamingSpec extends AnyFunSuite {
     val stream = Streams.readParquetStream(spark, dir.toString, schema,
       maxFilesPerTrigger = 1) // several micro-batches, not one
     val flags = Streams.decontaminateStream(stream, evals, "text", "doc_id", "text", n = 3)
-    val q = Streams.runToMemory(flags, "decon_stream", outputMode = "append")
-    q.stop()
+    val sink = StreamStage.runToMemory(flags, "decon_stream", "append")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getBoolean(1))).toSet
-    val got = rows(spark.table("decon_stream").select("id", "contaminated"))
+    val got = rows(sink.select("id", "contaminated"))
     val exp = rows(graft.pipeline.Decontaminate
       .overlapFlags(docs, "text", "doc_id", evals, "text", n = 3))
     assert(got == exp)
@@ -541,11 +521,10 @@ class StreamingSpec extends AnyFunSuite {
       toDs(Streams.readParquetStream(spark, dir, schema,
         maxFilesPerTrigger = 1)),
       mu = 50.0, slack = 5.0, threshold = 100.0)
-    val q = Streams.runToMemory(stream.toDF(), "scusum", "append")
-    q.stop()
+    val sink = StreamStage.runToMemory(stream.toDF(), "scusum", "append")
     // LAST emission per key (max n) == the batch fold over all rows,
     // because part 1's event_ids all precede part 2's (stageOrdered)
-    val streamed = spark.table("scusum").collect()
+    val streamed = sink.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getBoolean(4)))
       .groupBy(_._1).map { case (k, rows) => k -> rows.maxBy(_._2) }
@@ -593,9 +572,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = Streams.statefulEwma(
       toDs(Streams.readParquetStream(spark, dir, schema,
         maxFilesPerTrigger = 1)), alpha = 0.25)
-    val q = Streams.runToMemory(stream.toDF(), "sewma", "append")
-    q.stop()
-    val streamed = spark.table("sewma").collect()
+    val streamed = StreamStage.runToMemory(stream.toDF(), "sewma", "append").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(3)))
       .groupBy(_._1).map { case (k, rows) => k -> rows.maxBy(_._2)._3 }
     val batch = Streams.statefulEwma(toDs(ev), alpha = 0.25)
@@ -631,9 +608,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = Streams.statefulSprt(
       Streams.readParquetStream(spark, dir, schema, maxFilesPerTrigger = 1)
         .as[(String, Long, Boolean)], p0 = 0.2d, p1 = 0.8d)
-    val q = Streams.runToMemory(stream.toDF(), "ssprt", "append")
-    q.stop()
-    val last = spark.table("ssprt").collect()
+    val last = StreamStage.runToMemory(stream.toDF(), "ssprt", "append").collect()
       .map(r => (r.getLong(1), r.getString(4), r.get(5)))
       .maxBy(_._1)
     assert(last._1 == 13L && last._2 == "accept_h1" && last._3 == 2L,
@@ -679,9 +654,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = Streams.statefulMoments(
       toDs(Streams.readParquetStream(spark, dir, schema,
         maxFilesPerTrigger = 1)))
-    val q = Streams.runToMemory(stream.toDF(), "smoments", "append")
-    q.stop()
-    val streamed = spark.table("smoments").collect()
+    val streamed = StreamStage.runToMemory(stream.toDF(), "smoments", "append").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(3),
         r.getDouble(4)))
       .groupBy(_._1).map { case (k, rows) => k -> rows.maxBy(_._2) }
@@ -899,9 +872,8 @@ class StreamingSpec extends AnyFunSuite {
     val stream = Streams.readParquetStream(spark, dir.toString, schema)
     val verdicts = Streams.nearDupVerdicts(
       Streams.nearDupHits(stream, "text", "doc_id"), minEst = 0.5)
-    val q = Streams.runToMemory(verdicts, "ndup_verdicts", "complete")
-    q.stop()
-    val got = spark.table("ndup_verdicts").collect()
+    val sink = StreamStage.runToMemory(verdicts, "ndup_verdicts", "complete")
+    val got = sink.collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2), r.getBoolean(3))).toMap
     // doc 0 is the canonical: clean. Exact copy 3 matches it at est 1.0.
     assert(got(0L) == ((-1L, 0.0, false)))
@@ -995,11 +967,10 @@ class StreamingSpec extends AnyFunSuite {
     val stream = Streams.readParquetStream(spark, dir.toString, docSchema, maxFilesPerTrigger = 1)
     val verdicts = Streams.nearDupVerdicts(
       Streams.nearDupHits(stream, "text", "doc_id"), minEst = 0.5)
-    val q = Streams.runToMemory(verdicts, "ndup_diff", "complete")
-    q.stop()
+    val sink = StreamStage.runToMemory(verdicts, "ndup_diff", "complete")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3))).toSet
-    val got = rows(spark.table("ndup_diff"))
+    val got = rows(sink)
     val exp = rows(Streams.nearDupVerdicts(
       Streams.nearDupHitsReplay(corpus.toDF("doc_id", "text"), "text", "doc_id")
         .as[Streams.BandHit], minEst = 0.5))
@@ -1025,11 +996,10 @@ class StreamingSpec extends AnyFunSuite {
     val verdicts = Streams.nearDupVerdicts(
       Streams.nearDupHitsSeeded(stream, hist.toDF("doc_id", "text"),
         "text", "doc_id"), minEst = 0.5)
-    val q = Streams.runToMemory(verdicts, "ndup_seeded", "complete")
-    q.stop()
+    val sink = StreamStage.runToMemory(verdicts, "ndup_seeded", "complete")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3))).toSet
-    val got = rows(spark.table("ndup_seeded"))
+    val got = rows(sink)
     // must equal the replay over history ∪ stream, restricted to the
     // streamed ids — i.e. the stream behaves as if it had ingested all of
     // history first
