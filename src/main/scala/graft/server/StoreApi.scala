@@ -2,9 +2,8 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import com.fasterxml.jackson.databind.node.ArrayNode
@@ -280,24 +279,21 @@ final class StoreApi(store: TableStore, engine: Option[FlowEngine] = None,
     Using.resource(ex.getResponseBody)(_.write(bytes))
   }
 
-  /** `df` as one parquet file from a single-task Spark write into a temp
-    * dir: the whole table streams through one task and never gathers on
-    * the driver as rows. */
+  /** `df` as one parquet file, written by one task into a temp dir
+    * ([[Bridge.writeParquet]], no committer): the whole table streams
+    * through that task and never gathers on the driver as rows. */
   private def singleFileParquet(df: DataFrame): Array[Byte] = {
     val tmp = Files.createTempDirectory("graft-api-parquet")
     try {
-      val out = tmp.resolve("out").toString
-      df.coalesce(1).write.parquet(out)
-      val part = Using.resource(Files.list(Path.of(out)))(
-        _.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")))
+      val part = Bridge.writeParquet(df.coalesce(1), tmp.toString, Nil).files.headOption
         .getOrElse(throw new IllegalStateException("no parquet part written"))
-      Files.readAllBytes(part)
+      Files.readAllBytes(tmp.resolve(part))
     } finally TableStore.deleteTree(tmp)
   }
 
   /** A 200 response whose body is one parquet file: `sample` encodes it
     * in one Spark task ([[Bridge.sliceParquet]]), `download` reads it back
-    * from a single-file Spark write ([[singleFileParquet]]). */
+    * from a one-task write ([[singleFileParquet]]). */
   private def respondParquet(ex: HttpExchange, bytes: Array[Byte]): Unit = {
     ex.getResponseHeaders.set("Content-Type", "application/vnd.apache.parquet")
     ex.sendResponseHeaders(200, bytes.length)

@@ -278,7 +278,14 @@ final case class JdbcSource(
 }
 
 /** File destination (reference: _io/outputs/file_outputs.py — local + cloud
-  * variants; jsonl == Spark json lines output). */
+  * variants; jsonl == Spark json lines output).
+  *
+  * Its parquet, csv, json and orc writes keep Spark's writer (`df.write`),
+  * unlike the store's versions ([[graft.store.TableStore]]): an external
+  * path has no staging dir and atomic move of ours to publish it, so its
+  * readers rely on Spark's commit protocol (`_temporary`, then the job
+  * commit and `_SUCCESS`), and its write modes (overwrite, append, ignore,
+  * error) act on what is already there. */
 final case class FileSink(
     path: String,
     format: String = "parquet",

@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.Bridge
 
 import graft.core.{SysCtx, SystemColumns, TableFrame}
 import graft.expressions.UuidV7
@@ -54,6 +55,12 @@ final case class VersionEntry(
   * a transaction marker committed by atomic rename — versions belonging to
   * uncommitted transactions are invisible to readers (mirrors the
   * all-or-nothing publication of ta-execution/src/transaction.rs:24-90).
+  *
+  * Commit: a version's tasks write their part files straight into a
+  * hidden staging dir, and the transaction commit's atomic move of that
+  * dir is the only commit (see [[staged]]). There is no output committer,
+  * so a version dir holds part files only, never `_SUCCESS` or
+  * `_temporary`.
   *
   * Scale note: the *data* path is pure distributed Parquet I/O; only the
   * tiny metadata log is driver-side. On a real deployment the same layout
@@ -248,11 +255,12 @@ final class TableStore(val root: String, spark: SparkSession) {
   }
 
   // ---- write path ----
-  /** Stage a new version's data (distributed parquet write). Invisible until
-    * its transaction commits. Returns the log entry to commit.
-    * `partitionBy` produces hive-style partition directories inside the
-    * version, so downstream scans get static partition pruning on those
-    * columns — the knob that matters once a table is 100s of TB. */
+  /** Stage a new version's data (distributed parquet write; [[staged]]
+    * says how it commits). Invisible until its transaction commits.
+    * Returns the log entry to commit. `partitionBy` produces hive-style
+    * partition directories inside the version, so downstream scans get
+    * static partition pruning on those columns — the knob that matters
+    * once a table is 100s of TB. */
   def stageWrite(coll: String, table: String, df: DataFrame, ctx: SysCtx,
       partitionBy: Seq[String] = Nil): VersionEntry =
     stageWrite(coll, table, df, ctx, partitionBy, appendLogEntry = true)
@@ -270,29 +278,28 @@ final class TableStore(val root: String, spark: SparkSession) {
     }
   }
 
-  /** The one staging path: write `data` as version `ctx.version` under a
-    * dot-prefixed dir (hidden from Spark listings until the transaction
-    * commit moves it into place), make its log entry from the row count
-    * observed during the write, then register the move and append the
-    * entry. `entry` may reject the count by throwing: a failed write or a
+  /** The one staging path and the only commit. `data` is written as
+    * version `ctx.version` by one Spark job ([[Bridge.writeParquet]]) whose
+    * tasks put their part files straight into a dot-prefixed staging dir
+    * (hidden from Spark listings) and report them with their row counts.
+    * There is no output committer, no `_temporary` and no `_SUCCESS`: every
+    * staged file no committed task reported (a failed or duplicate attempt's)
+    * is deleted here, and the transaction commit's atomic move of the dir
+    * is what publishes the version. `entry` makes the log entry from the
+    * reported row count and may reject it by throwing: a failed write or a
     * rejected count deletes the staging dir before any move is registered,
     * so neither commit nor abort ever sees it. */
   private def staged(coll: String, table: String, data: DataFrame, ctx: SysCtx,
       partitionBy: Seq[String], appendLogEntry: Boolean)(
       entry: Long => VersionEntry): VersionEntry = {
     val dir = tableDir(coll, table).resolve(".staging").resolve(ctx.version)
-    // row count observed DURING the write job (CollectMetrics rides the
-    // plan) — the pre-r18 shape re-read the whole staged directory just to
-    // count it, a full extra scan per version write
-    val obs = org.apache.spark.sql.Observation()
-    val writer = data
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-      .write.mode("overwrite")
     val e = try {
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-        .parquet(dir.toString)
-      entry(obs.get("n").asInstanceOf[Long])
+      // a retried version (writeIdempotent) replaces what a crash left
+      if (Files.exists(dir)) TableStore.deleteTree(dir)
+      Files.createDirectories(dir)
+      val written = Bridge.writeParquet(data, dir.toString, partitionBy)
+      TableStore.keepOnly(dir, written.files)
+      entry(written.rows)
     } catch { case ex: Throwable =>
       if (Files.exists(dir)) TableStore.deleteTree(dir)
       throw ex
@@ -480,8 +487,8 @@ final class TableStore(val root: String, spark: SparkSession) {
     * max(1, ceil(bytes/targetBytes)) files via a narrow `coalesce` (no
     * shuffle), committed as a NEW version through the same staged-write
     * transaction as any publish; the old layout stays addressable at
-    * `@HEAD~1` until [[vacuum]] prunes it. The row count observed during
-    * the rewrite is checked against the source entry — a mismatch aborts
+    * `@HEAD~1` until [[vacuum]] prunes it. The row count the rewrite's
+    * tasks report is checked against the source entry — a mismatch aborts
     * loudly before commit and leaves nothing staged.
     * Returns None when HEAD is already within the file budget.
     * Hive-partitioned versions are refused (their file budget is
@@ -783,6 +790,22 @@ object TableStore {
     if (s == null || !SafeName.matcher(s).matches())
       throw new IllegalArgumentException(
         s"invalid $kind name '$s': must match ${SafeName.pattern}")
+
+  /** Deletes every file under `dir` that is neither one of `files` (paths
+    * relative to `dir`) nor the checksum sidecar (`.<name>.crc`) Hadoop's
+    * local file system writes beside it, then every dir left empty. */
+  private def keepOnly(dir: Path, files: Seq[String]): Unit = {
+    val keep = files.flatMap { f =>
+      val p = dir.resolve(f)
+      Seq(p, p.resolveSibling(s".${p.getFileName}.crc"))
+    }.toSet
+    Using.resource(Files.walk(dir))(_.sorted(java.util.Comparator.reverseOrder())
+      .iterator().asScala.toVector).foreach { p =>
+      if (Files.isDirectory(p)) {
+        if (p != dir && Using.resource(Files.list(p))(!_.findAny().isPresent)) Files.delete(p)
+      } else if (!keep(p)) Files.delete(p)
+    }
+  }
 
   /** Recursive delete, depth-first, stream closed — the one tree-removal
     * used by staging cleanup, transaction aborts, and table drops. */

@@ -1024,6 +1024,167 @@ class StoreFlowSpec extends AnyFunSuite {
     assert(store.versions("c", "t").map(_.id) == Seq(head.id))
   }
 
+  /** Every file under `dir`, relative to it, sorted. */
+  private def filesUnder(dir: java.nio.file.Path): Seq[String] =
+    scala.util.Using.resource(Files.walk(dir))(_.iterator().asScala
+      .filter(Files.isRegularFile(_)).map(p => dir.relativize(p).toString).toVector.sorted)
+
+  /** The part files under `dir`, keyed by partition dir and split
+    * (`p=1/part-00000`), whatever uuid names them. */
+  private def partsBySplit(dir: java.nio.file.Path): Map[String, Array[Byte]] =
+    filesUnder(dir).filter(_.endsWith(".parquet")).map { f =>
+      val i = f.lastIndexOf("part-")
+      f.substring(0, i + 10) -> Files.readAllBytes(dir.resolve(f))
+    }.toMap
+
+  test("stage: an unpartitioned write is one job of small tasks, published by the move alone") {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.storage.BroadcastBlockId
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val group = s"storeflow-stage-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    // the serialized (rdd, func) closure Spark broadcasts for each stage of
+    // this thread's jobs, as stored (compressed) in broadcast pieces
+    val binaries = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      @volatile private var open = 0
+      private def groupOf(e: SparkListenerJobStart) =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+      private val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      override def onJobStart(e: SparkListenerJobStart): Unit = groupOf(e) match {
+        case Some(`group`) => jobs.incrementAndGet(); mine.add(e.jobId); open += 1
+        case Some(`marker`) => mine.add(-e.jobId - 1)
+        case _ =>
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+        if (mine.contains(e.jobId)) open -= 1
+        if (mine.contains(-e.jobId - 1)) markerDone.countDown()
+      }
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId match {
+          case b: BroadcastBlockId if open > 0 && b.field.startsWith("piece") =>
+            binaries.add(e.blockUpdatedInfo.memSize + e.blockUpdatedInfo.diskSize)
+          case _ =>
+        }
+    }
+    val store = freshStore()
+    val df = (1L to 2000L).map(i => (i, s"v$i")).toDF("id", "v")
+    sc.addSparkListener(listener)
+    val e = try {
+      sc.setJobGroup(group, "stageWrite under test")
+      val ctx = graft.core.SysCtx.fresh()
+      val staged = store.stageWrite("c", "t", df, ctx)
+      sc.setJobGroup(marker, "listener marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      store.commitTransaction(ctx.transaction)
+      staged
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 1, s"jobs: ${jobs.get}")
+    val largest = binaries.asScala.maxOption.getOrElse(0L)
+    info(s"task binary: $largest bytes")
+    assert(binaries.size >= 1 && largest < 16 * 1024,
+      s"task binary pieces (bytes): ${binaries.asScala.mkString(", ")}")
+    val dir = java.nio.file.Paths.get(store.pathOf("c", "t", e))
+    val files = filesUnder(dir)
+    assert(!files.exists(f => f.contains("_SUCCESS") || f.contains("_temporary")), files)
+    assert(files.filterNot(_.startsWith(".")).forall(_.endsWith(".parquet")), files)
+    assert(e.rows == 2000 && store.scan("c/t").get.df.count() == 2000)
+    assert(store.fsck(verifyCounts = true).isEmpty)
+  }
+
+  test("stage: an empty frame commits one schema-only part file") {
+    import spark.implicits._
+    val store = freshStore()
+    val e = store.write("c", "t", Seq.empty[(Long, String)].toDF("id", "v"))
+    val dir = java.nio.file.Paths.get(store.pathOf("c", "t", e))
+    assert(filesUnder(dir).count(_.endsWith(".parquet")) == 1, filesUnder(dir))
+    assert(e.rows == 0)
+    val back = store.scan("c/t").get.df
+    assert(back.count() == 0 && back.columns.take(2).toSeq == Seq("id", "v"))
+    assert(spark.read.parquet(dir.toString).columns.toSet == back.columns.toSet)
+    assert(store.fsck(verifyCounts = true).isEmpty)
+  }
+
+  test("stage: partitionBy keeps hive dirs, typed values and the NULL partition") {
+    import spark.implicits._
+    val store = freshStore()
+    val df = Seq[(Long, Option[Int], String)]((1L, Some(1), "a"), (2L, Some(2), ""),
+      (3L, None, "b"), (4L, Some(1), null), (5L, Some(2), "a")).toDF("id", "p", "s")
+    val ctx = graft.core.SysCtx.fresh()
+    val e = store.stageWrite("c", "t", df, ctx, partitionBy = Seq("p", "s"))
+    store.commitTransaction(ctx.transaction)
+    val ref = Files.createTempDirectory("graft-stage-ref").resolve("out")
+    df.write.partitionBy("p", "s").parquet(ref.toString)
+    def dirs(d: java.nio.file.Path) = filesUnder(d).filter(_.endsWith(".parquet"))
+      .map(f => f.substring(0, f.lastIndexOf('/'))).distinct
+    val dir = java.nio.file.Paths.get(store.pathOf("c", "t", e))
+    assert(dirs(dir) == dirs(ref), s"${dirs(dir)} vs ${dirs(ref)}")
+    assert(dirs(dir).contains("p=__HIVE_DEFAULT_PARTITION__/s=b"))
+    assert(dirs(dir).contains("p=2/s=__HIVE_DEFAULT_PARTITION__"))
+    val back = store.scan("c/t").get.df
+    assert(back.schema("p").dataType == org.apache.spark.sql.types.IntegerType)
+    val rows = back.select("id", "p", "s").orderBy("id").collect()
+      .map(r => (r.getLong(0), Option(r.get(1)), Option(r.getString(2)))).toSeq
+    assert(rows == Seq((1L, Some(1), Some("a")), (2L, Some(2), None), (3L, None, Some("b")),
+      (4L, Some(1), None), (5L, Some(2), Some("a"))), rows)
+    assert(e.rows == 5 && store.fsck(verifyCounts = true).isEmpty)
+  }
+
+  test("stage: a staged file no committed task reported never reaches the version") {
+    import spark.implicits._
+    val store = freshStore()
+    val v1 = store.write("c", "t", Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1))
+    val tdir = java.nio.file.Paths.get(store.pathOf("c", "t", v1)).getParent
+    val part = filesUnder(tdir.resolve(v1.id)).find(_.endsWith(".parquet")).get
+    val ctx = graft.core.SysCtx.fresh()
+    val stray = tdir.resolve(".staging").resolve(ctx.version).resolve(s"p=9/part-99999-stray.parquet")
+    val src = tdir.resolve(v1.id).resolve(part).toString
+    val strayPath = stray.toString
+    // a task that leaves a whole parquet file in the staging dir, as a
+    // failed or duplicate attempt would
+    val leave = F.udf { (id: Long) =>
+      if (id == 3L) {
+        Files.createDirectories(java.nio.file.Paths.get(strayPath).getParent)
+        Files.copy(java.nio.file.Paths.get(src), java.nio.file.Paths.get(strayPath),
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      }
+      id
+    }
+    val df = spark.range(3L, 5L).select(leave(F.col("id")).as("id"),
+      F.concat(F.lit("v"), F.col("id")).as("v"))
+    val e = store.stageWrite("c", "t", df, ctx)
+    store.commitTransaction(ctx.transaction)
+    val dir = tdir.resolve(e.id)
+    assert(!filesUnder(dir).exists(_.contains("stray")) && !Files.exists(dir.resolve("p=9")),
+      filesUnder(dir))
+    assert(store.scan("c/t").get.df.count() == 2 && e.rows == 2)
+    assert(store.fsck(verifyCounts = true).isEmpty)
+  }
+
+  test("stage: part files are byte-identical to df.write.parquet's") {
+    import org.apache.spark.sql.graftshim.Bridge
+    import spark.implicits._
+    val df = (1L to 300L).map(i => (i, s"v$i", if (i % 7 == 0) None else Some(i * 0.5),
+      (i % 3).toInt)).toDF("id", "v", "x", "p").coalesce(2)
+    for (partitionBy <- Seq(Nil, Seq("p"))) {
+      val ours = Files.createTempDirectory("graft-stage-ours")
+      val theirs = Files.createTempDirectory("graft-stage-theirs").resolve("out")
+      val written = Bridge.writeParquet(df, ours.toString, partitionBy)
+      df.write.partitionBy(partitionBy: _*).parquet(theirs.toString)
+      val (a, b) = (partsBySplit(ours), partsBySplit(theirs))
+      assert(written.rows == 300 && written.files.size == a.size)
+      assert(a.keySet == b.keySet && a.size >= 2, s"${a.keySet} vs ${b.keySet}")
+      a.foreach { case (k, bytes) => assert(bytes.sameElements(b(k)), s"$k ($partitionBy)") }
+    }
+  }
+
   test("version history: runs split on change, absence, and reappearance") {
     import graft.store.VersionDiff
     import spark.implicits._
